@@ -3,7 +3,8 @@
 
 Runs the headline queries from ``__spark_entry__.queries()`` at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line.
+``local[$SPARK_GRAFT_CPUS]`` (default: the CPUs this process may run on)
+and prints ONE JSON line.
 
 Method mirrors the reference's FPS measurement — wall time over a full
 materialization, docs / total_time (tools/infer/text/predict_system.py:174-177)
@@ -25,7 +26,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
 REPL = int(os.environ.get("SPARK_GRAFT_BENCH_REPL", "8"))
 
 # Every queries() entry is timed — a query missing from the bench can

@@ -4,26 +4,31 @@ names ("packaged for spark-submit --py-files") exercised for real.
 The reference ships a deployment packaging step and smoke-runs the full
 CLI pipeline in its system tests (tests/st/test_train_eval_dummy.py runs
 tools/train.py as a subprocess); this is the analog for our submit
-artifact: build webx.zip with scripts/package.sh, launch a REAL
+artifact: build webx.zip with scripts/package.sh once, launch one REAL
 `spark-submit --py-files webx.zip jobs/extract.py` subprocess from a cwd
 where `webx` is NOT importable from the filesystem (so every import —
 driver and executor side, including the C-kernel source compiled from
-zip resources via importlib, webx/ctokenize.py:63) must come from the
-zip, and assert the job's output is byte-identical to the in-process
-extraction over the same synth corpus.
+zip resources via importlib, webx/ctokenize.py:63 — must come from the
+zip), and assert the job's output is byte-identical to the in-process
+extraction over the same synth corpus, with one lineage row per logical
+partition. Each Python task of that job also starts through the
+zip-importer cache in webx/__init__.py with webx itself shipped as a zip.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import subprocess
 import zipfile
 
 import pytest
 
+from tests.conftest import SF_SMALL
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-SF = "/root/testdata/sf0.001"
+N_PARTITIONS = 8
 
 
 @pytest.fixture(scope="module")
@@ -35,17 +40,16 @@ def webx_zip(tmp_path_factory):
         text=True,
         check=True,
     )
-    return res.stdout.strip()
+    path = res.stdout.strip()
+    assert path.endswith("webx.zip")
+    return path
 
 
 def test_zip_contents(webx_zip):
     names = set(zipfile.ZipFile(webx_zip).namelist())
     # every runtime module, the C-kernel SOURCE (compiled per-host from
     # zip resources), and nothing host-specific (no .so) or test-only
-    assert "webx/extract.py" in names
-    assert "webx/pipeline.py" in names
-    assert "webx/lineage.py" in names
-    assert "webx/synth.py" in names
+    assert "webx/__init__.py" in names
     assert "webx/_ctok.c" in names
     assert not any(n.endswith(".so") for n in names)
     assert not any(n.startswith("tests/") for n in names)
@@ -57,9 +61,11 @@ def test_zip_contents(webx_zip):
     assert py_on_disk <= names, py_on_disk - names
 
 
+@pytest.mark.skipif(shutil.which("spark-submit") is None,
+                    reason="spark-submit not on PATH")
 def test_spark_submit_extract_job(webx_zip, tmp_path, spark):
     """End-to-end: zip → spark-submit subprocess → parquet output
-    byte-identical to the in-process run."""
+    byte-identical to the in-process run, plus its lineage rows."""
     outdir = tmp_path / "out"
     ckpt = tmp_path / "ckpt"
     env = dict(os.environ)
@@ -68,20 +74,24 @@ def test_spark_submit_extract_job(webx_zip, tmp_path, spark):
         [
             "spark-submit",
             "--master",
-            "local[2]",
+            "local[4]",
+            "--conf",
+            "spark.sql.shuffle.partitions=4",
             "--py-files",
             webx_zip,
             os.path.join(REPO, "jobs", "extract.py"),
             "--synth",
-            SF,
+            SF_SMALL,
             "--output",
             str(outdir),
             "--checkpoint",
             str(ckpt),
             "--run-id",
             "pkg-smoke",
+            "--snapshot-id",
+            "s1",
             "--n-partitions",
-            "8",
+            str(N_PARTITIONS),
             "--chunk-size",
             "4",
         ],
@@ -94,23 +104,29 @@ def test_spark_submit_extract_job(webx_zip, tmp_path, spark):
     assert res.returncode == 0, res.stderr[-4000:]
     summary = json.loads(res.stdout.strip().splitlines()[-1])
     assert summary["run_id"] == "pkg-smoke"
-    assert summary["partitions_processed"] == 8
+    assert summary["partitions_processed"] == N_PARTITIONS
     assert summary["err_total"] == 0
     assert summary["rows_total"] > 0
+
+    import duckdb
+
+    out_rows = spark.read.parquet(str(outdir)).select("url", "text").collect()
+    lineage = duckdb.sql(
+        f"SELECT count(*), sum(row_count) FROM '{ckpt}/*.parquet'"
+    ).fetchone()
+    assert lineage[0] == N_PARTITIONS  # one lineage row per logical partition
+    assert lineage[1] == len(out_rows)
 
     from webx import synth
     from webx.config import ExtractConfig
     from webx.pipeline import run_extraction
 
-    got = {
-        (r["url"], r["text"])
-        for r in spark.read.parquet(str(outdir)).select("url", "text").collect()
-    }
+    got = {(r["url"], r["text"]) for r in out_rows}
     want = {
         (r["url"], r["text"])
-        for r in run_extraction(synth.synth_pages(spark, SF), ExtractConfig())
+        for r in run_extraction(synth.synth_pages(spark, SF_SMALL), ExtractConfig())
         .select("url", "text")
         .collect()
     }
-    assert len(got) == summary["rows_total"]
+    assert len(got) == len(out_rows) == summary["rows_total"]
     assert got == want  # byte-identical extracted text per url
