@@ -4,29 +4,23 @@ scripts/package.sh, then run the checkpointed extraction job via a real
 ``spark-submit --py-files`` subprocess from a NEUTRAL cwd — so the
 ``import webx`` inside jobs/extract.py must resolve from the zip, not
 from the repo checkout — and assert the output table and per-partition
-lineage rows landed."""
+lineage rows landed.
+
+The zip and the submitted job are the session fixtures ``webx_zip`` and
+``submitted_extract`` in conftest.py, shared with test_submit_package.py,
+so the suite builds once and submits once."""
 
 from __future__ import annotations
 
-import os
 import shutil
-import subprocess
 import zipfile
 
 import pytest
 
-from tests.conftest import SF_SMALL
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def test_package_script_contents(tmp_path):
-    out = subprocess.run(
-        [os.path.join(REPO, "scripts", "package.sh"), str(tmp_path)],
-        check=True, capture_output=True, text=True,
-    ).stdout.strip()
-    assert out.endswith("webx.zip")
-    names = zipfile.ZipFile(out).namelist()
+def test_package_script_contents(webx_zip):
+    assert webx_zip.endswith("webx.zip")
+    names = zipfile.ZipFile(webx_zip).namelist()
     assert "webx/__init__.py" in names
     assert "webx/extract.py" in names
     assert "webx/_ctok.c" in names  # the kernel source ships; compiled on import
@@ -35,43 +29,17 @@ def test_package_script_contents(tmp_path):
 
 @pytest.mark.skipif(shutil.which("spark-submit") is None,
                     reason="spark-submit not on PATH")
-def test_spark_submit_py_files_end_to_end(tmp_path):
-    zip_path = subprocess.run(
-        [os.path.join(REPO, "scripts", "package.sh"), str(tmp_path)],
-        check=True, capture_output=True, text=True,
-    ).stdout.strip()
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
-    run = subprocess.run(
-        [
-            "spark-submit", "--master", "local[4]",
-            "--conf", "spark.sql.shuffle.partitions=4",
-            "--py-files", zip_path,
-            os.path.join(REPO, "jobs", "extract.py"),
-            "--synth", SF_SMALL,
-            "--output", out_dir,
-            "--checkpoint", ckpt,
-            "--run-id", "submit-smoke",
-            "--snapshot-id", "s1",
-            "--n-partitions", "4",
-            "--chunk-size", "4",
-        ],
-        cwd=str(tmp_path),  # neutral cwd: webx must come from the zip
-        env=env,
-        capture_output=True,
-        text=True,
-        timeout=420,
-    )
-    assert run.returncode == 0, run.stderr[-4000:]
+def test_spark_submit_py_files_end_to_end(submitted_extract):
+    job = submitted_extract
+    assert job.proc.returncode == 0, job.proc.stderr[-4000:]
     import duckdb
 
     n_out = duckdb.sql(
-        f"SELECT count(*) FROM '{out_dir}/**/*.parquet'"
+        f"SELECT count(*) FROM '{job.outdir}/**/*.parquet'"
     ).fetchone()[0]
     lineage = duckdb.sql(
-        f"SELECT count(*), sum(row_count) FROM '{ckpt}/*.parquet'"
+        f"SELECT count(*), sum(row_count) FROM '{job.ckpt}/*.parquet'"
     ).fetchone()
     assert n_out > 0
-    assert lineage[0] == 4  # one lineage row per logical partition
+    assert lineage[0] == job.n_partitions  # one lineage row per logical partition
     assert lineage[1] == n_out

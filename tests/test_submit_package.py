@@ -4,15 +4,17 @@ names ("packaged for spark-submit --py-files") exercised for real.
 The reference ships a deployment packaging step and smoke-runs the full
 CLI pipeline in its system tests (tests/st/test_train_eval_dummy.py runs
 tools/train.py as a subprocess); this is the analog for our submit
-artifact: build webx.zip with scripts/package.sh once, launch one REAL
-`spark-submit --py-files webx.zip jobs/extract.py` subprocess from a cwd
-where `webx` is NOT importable from the filesystem (so every import —
-driver and executor side, including the C-kernel source compiled from
-zip resources via importlib, webx/ctokenize.py:63 — must come from the
-zip), and assert the job's output is byte-identical to the in-process
-extraction over the same synth corpus, with one lineage row per logical
-partition. Each Python task of that job also starts through the
-zip-importer cache in webx/__init__.py with webx itself shipped as a zip.
+artifact. webx.zip is built once and `spark-submit --py-files webx.zip
+jobs/extract.py` runs once (session fixtures `webx_zip` and
+`submitted_extract` in conftest.py, shared with test_package_submit.py)
+from a cwd where `webx` is NOT importable from the filesystem, so every
+import — driver and executor side, including the C-kernel source
+compiled from zip resources via importlib, webx/ctokenize.py:63 — must
+come from the zip. The job's output must be byte-identical to the
+in-process extraction over the same synth corpus, with one lineage row
+per logical partition. Each Python task of that job also starts through
+the zip-importer cache in webx/__init__.py with webx itself shipped as a
+zip.
 """
 
 from __future__ import annotations
@@ -20,7 +22,6 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import subprocess
 import zipfile
 
 import pytest
@@ -28,24 +29,10 @@ import pytest
 from tests.conftest import SF_SMALL
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-N_PARTITIONS = 8
-
-
-@pytest.fixture(scope="module")
-def webx_zip(tmp_path_factory):
-    out = tmp_path_factory.mktemp("pkg")
-    res = subprocess.run(
-        [os.path.join(REPO, "scripts", "package.sh"), str(out)],
-        capture_output=True,
-        text=True,
-        check=True,
-    )
-    path = res.stdout.strip()
-    assert path.endswith("webx.zip")
-    return path
 
 
 def test_zip_contents(webx_zip):
+    assert webx_zip.endswith("webx.zip")
     names = set(zipfile.ZipFile(webx_zip).namelist())
     # every runtime module, the C-kernel SOURCE (compiled per-host from
     # zip resources), and nothing host-specific (no .so) or test-only
@@ -63,58 +50,25 @@ def test_zip_contents(webx_zip):
 
 @pytest.mark.skipif(shutil.which("spark-submit") is None,
                     reason="spark-submit not on PATH")
-def test_spark_submit_extract_job(webx_zip, tmp_path, spark):
+def test_spark_submit_extract_job(submitted_extract, spark):
     """End-to-end: zip → spark-submit subprocess → parquet output
     byte-identical to the in-process run, plus its lineage rows."""
-    outdir = tmp_path / "out"
-    ckpt = tmp_path / "ckpt"
-    env = dict(os.environ)
-    env.pop("PYTHONPATH", None)  # webx must resolve from --py-files only
-    res = subprocess.run(
-        [
-            "spark-submit",
-            "--master",
-            "local[4]",
-            "--conf",
-            "spark.sql.shuffle.partitions=4",
-            "--py-files",
-            webx_zip,
-            os.path.join(REPO, "jobs", "extract.py"),
-            "--synth",
-            SF_SMALL,
-            "--output",
-            str(outdir),
-            "--checkpoint",
-            str(ckpt),
-            "--run-id",
-            "pkg-smoke",
-            "--snapshot-id",
-            "s1",
-            "--n-partitions",
-            str(N_PARTITIONS),
-            "--chunk-size",
-            "4",
-        ],
-        capture_output=True,
-        text=True,
-        cwd=str(tmp_path),  # NOT the repo: filesystem webx is invisible
-        env=env,
-        timeout=600,
-    )
+    job = submitted_extract
+    res = job.proc
     assert res.returncode == 0, res.stderr[-4000:]
     summary = json.loads(res.stdout.strip().splitlines()[-1])
     assert summary["run_id"] == "pkg-smoke"
-    assert summary["partitions_processed"] == N_PARTITIONS
+    assert summary["partitions_processed"] == job.n_partitions
     assert summary["err_total"] == 0
     assert summary["rows_total"] > 0
 
     import duckdb
 
-    out_rows = spark.read.parquet(str(outdir)).select("url", "text").collect()
+    out_rows = spark.read.parquet(str(job.outdir)).select("url", "text").collect()
     lineage = duckdb.sql(
-        f"SELECT count(*), sum(row_count) FROM '{ckpt}/*.parquet'"
+        f"SELECT count(*), sum(row_count) FROM '{job.ckpt}/*.parquet'"
     ).fetchone()
-    assert lineage[0] == N_PARTITIONS  # one lineage row per logical partition
+    assert lineage[0] == job.n_partitions  # one lineage row per logical partition
     assert lineage[1] == len(out_rows)
 
     from webx import synth
