@@ -102,7 +102,7 @@ def test_config_preset_registry():
     assert create_config("default") == ExtractConfig()
     assert create_config("strict").drop_score == 0.7
     assert create_config({"box_thresh": 0.9}).box_thresh == 0.9
-    same = ExtractConfig(merge_gap=2)
+    same = ExtractConfig(tag_weight=4.0)
     assert create_config(same) is same
     with _pt.raises(ValueError, match="crawl.*default.*recall|supported"):
         create_config("nope")

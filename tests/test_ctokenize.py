@@ -265,8 +265,8 @@ def test_detect_fused_corners_identical(html):
 def test_detect_fused_fuzz_differential(parts):
     """Span lists (including exact float scores — namedtuple equality
     compares the doubles bitwise-equal-or-not) must match the Python
-    reference on fragment soup; multi-block runs keep np.dot on BOTH
-    paths so summation order can never drift."""
+    reference on fragment soup; both paths score a run with the same
+    webx.detect.weighted_mean fold, so summation order can never drift."""
     from webx.config import ExtractConfig
 
     html = b"".join(parts)
@@ -285,7 +285,8 @@ def test_detect_fused_fuzz_raw_bytes(html):
 
 def test_detect_fused_multiblock_runs():
     """Force a multi-block candidate run (adjacent non-block-separated
-    text segments via comments) so the np.dot path is exercised."""
+    text segments via comments) so the multi-term score fold is
+    exercised."""
     from webx.config import ExtractConfig
 
     cfg = ExtractConfig()
@@ -296,38 +297,28 @@ def test_detect_fused_multiblock_runs():
 
 
 def test_detect_fused_gap_mode_falls_back(monkeypatch):
-    """merge_gap > 0 must route to the decomposed path — the fused C
-    kernel implements only gap=0 run semantics. Asserted at the actual
-    routing site (_extract_doc_stage1): with a gap config the fused
-    resolver is never consulted, and the output matches the decomposed
-    gap>0 computation."""
+    """With the kernel loaded, a page whose candidate run spans >= 3
+    blocks finishes stage 1 in the one C call: the Python run merge and
+    finalization are never consulted, and the spans equal the
+    ckernels='off' reference bit for bit."""
     import webx.extract as ex
     from webx.config import ExtractConfig
 
-    assert ex.resolve_detect_table("off") is None
-    assert ex.resolve_detect_table("auto") is not None  # kernel built
+    assert ex.resolve_detect_final("off") is None
+    assert ex.resolve_detect_final("auto") is not None  # kernel built
 
-    html = (b"<div>" + b"alpha beta gamma delta epsilon zeta " * 4
-            + b"</div><nav>a b</nav><p>"
-            + b"eta theta iota kappa lambda mu nu xi " * 4 + b"</p>")
-    cfg0 = ExtractConfig()
-    cfg_gap = ExtractConfig(merge_gap=2)
+    seg = b"lorem ipsum dolor sit amet consectetur adipiscing elit " * 3
+    html = (b"<div>" + seg + b"</div>") * 4  # 4 adjacent candidate blocks
+    _, ref, _ = ex._extract_doc_stage1(html, ExtractConfig(ckernels="off"))
+    assert any(s.last_block - s.first_block >= 2 for s in ref)
 
-    def boom(mode):
-        raise AssertionError("fused kernel consulted despite merge_gap > 0")
+    def boom(*args, **kwargs):
+        raise AssertionError("Python finalization ran on the C path")
 
-    monkeypatch.setattr(ex, "resolve_detect_final", boom)
-    _, spans_gap, _ = ex._extract_doc_stage1(html, cfg_gap)
-    monkeypatch.undo()
-
-    # gap semantics actually differ on this input (guard is load-bearing)
-    _, spans0, _ = ex._extract_doc_stage1(html, cfg0)
-    assert spans_gap != spans0
-
-    # and the gap>0 result equals the decomposed reference with the same cfg
-    cfg_gap_off = ExtractConfig(merge_gap=2, ckernels="off")
-    _, spans_ref, _ = ex._extract_doc_stage1(html, cfg_gap_off)
-    assert spans_gap == spans_ref
+    monkeypatch.setattr(ex, "merge_runs_table", boom)
+    _, spans, _ = ex._extract_doc_stage1(html, ExtractConfig())
+    assert spans == ref
+    assert [s.score.hex() for s in spans] == [s.score.hex() for s in ref]
 
 
 # ---- fully-fused stage-1 (wx_detect_final): + finalize/expand/validate
@@ -363,8 +354,8 @@ def test_detect_final_corners_identical(html):
 @given(st.lists(_FRAGMENTS, max_size=40))
 def test_detect_final_fuzz_differential(parts):
     """Span lists from the FULLY-fused kernel (finalize + expand +
-    validate in C for runs <= 2 blocks, scalar dot proven sequential)
-    must equal the pure-Python reference bitwise — scores included."""
+    validate in C, the weighted_mean fold for runs of any length) must
+    equal the pure-Python reference bitwise — scores included."""
     from webx.config import ExtractConfig
 
     html = b"".join(parts)
@@ -382,10 +373,10 @@ def test_detect_final_fuzz_raw_bytes(html):
 
 
 def test_detect_final_long_run_falls_back_to_raw():
-    """A candidate run of >= 3 blocks must return mode='raw' (np.dot's
-    vectorized accumulation differs from the sequential scalar dot from
-    n = 3 — measured, not assumed), and the routed result still equals
-    the Python reference."""
+    """A candidate run of >= 3 blocks finalizes in C too (mode
+    'final'), and its spans equal the ckernels='off' spans bit for bit,
+    scores included."""
+    import webx.extract as ex
     from webx.config import ExtractConfig
     from webx.ctokenize import detect_final
 
@@ -397,8 +388,12 @@ def test_detect_final_long_run_falls_back_to_raw():
         cfg.box_thresh, cfg.min_span_chars, cfg.max_candidates,
         cfg.expand_ratio, cfg.rescue_thresh, cfg.rescue_max_chars,
     )
-    assert res[0] == "raw"
-    assert _stage1_final_c(html, cfg) == _stage1_final_ref(html, cfg)
+    assert res[0] == "final"
+    assert list(zip(res[4], res[5])) == [(0, 3)]  # one 4-block run
+    spans = _stage1_final_c(html, cfg)
+    _, ref, _ = ex._extract_doc_stage1(html, ExtractConfig(ckernels="off"))
+    assert spans == ref == _stage1_final_ref(html, cfg)
+    assert [s.score.hex() for s in spans] == [s.score.hex() for s in ref]
 
 
 def test_detect_final_single_and_pair_runs_finalize_in_c():
@@ -433,18 +428,19 @@ def test_detect_final_single_and_pair_runs_finalize_in_c():
     )
 )
 def test_scalar_dot_matches_npdot_for_n_le_2(pairs):
-    """The bit-identity premise of the C finalization: for n <= 2,
-    sequential scalar mul/add equals np.dot (BLAS ddot) exactly. (From
-    n = 3 ddot's accumulation order diverges — that is why longer runs
-    fall back to the Python np.dot path.)"""
+    """For n <= 2 the weighted_mean fold equals the np.dot (BLAS ddot)
+    weighted mean bit for bit: pages whose runs and span lists are at
+    most 2 long (all synth flagship and curate pages) keep the scores
+    and conf an np.dot mean gives them."""
     import numpy as np
 
-    sc = np.array([p[0] for p in pairs], dtype=np.float64)
-    w = np.array([float(p[1]) for p in pairs], dtype=np.float64)
-    acc = 0.0
-    for i in range(len(pairs)):
-        acc += float(sc[i]) * float(w[i])
-    assert acc == np.dot(sc, w)
+    from webx.detect import weighted_mean
+
+    sc = [p[0] for p in pairs]
+    w = [p[1] for p in pairs]
+    wf = np.array(w, dtype=np.float64)
+    ref = float(np.dot(np.array(sc, dtype=np.float64), wf) / max(wf.sum(), 1.0))
+    assert weighted_mean(sc, w).hex() == ref.hex()
 
 
 # ---- fused stage-2 strip+normalize (wx_strip_norm)

@@ -5,6 +5,7 @@ tests/ut/test_metrics.py:28-63)."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from webx.config import ExtractConfig
 from webx.detect import Span, block_scores, detect, merge_runs, validate_spans
@@ -68,18 +69,18 @@ def test_merge_runs_respects_min_span_chars():
 
 
 def test_merge_gap_bridges_noncandidates():
+    """Runs never bridge a non-candidate block: the link-only paragraph
+    keeps the two paragraphs apart, and there is no knob to change
+    that (``merge_gap`` is not a config key)."""
     html = (
         b"<p>First long candidate paragraph with enough text body.</p>"
         b"<p><a href='/x'>pure link</a></p>"
         b"<p>Second long candidate paragraph with enough text body.</p>"
     )
-    blocks = tokenize(html)
-    cfg0 = ExtractConfig(merge_gap=0)
-    cfg1 = ExtractConfig(merge_gap=1)
-    assert len(detect(blocks, cfg0)) == 2
-    spans = detect(blocks, cfg1)
-    assert len(spans) == 1
-    assert spans[0].first_block == 0 and spans[0].last_block == 2
+    spans = detect(tokenize(html), CFG)
+    assert [(s.first_block, s.last_block) for s in spans] == [(0, 0), (2, 2)]
+    with pytest.raises(ValueError, match="unknown config keys"):
+        ExtractConfig.from_dict({"merge_gap": 1})
 
 
 def test_max_candidates_cap():
@@ -88,7 +89,7 @@ def test_max_candidates_cap():
         for i in range(10)
     ) + b"<div><a href='/'>" + b"x" * 5 + b"</a></div>" * 1
     blocks = tokenize(html)
-    cfg = ExtractConfig(max_candidates=3, merge_gap=0)
+    cfg = ExtractConfig(max_candidates=3)
     # each <p> is its own span (separated only by block tags, no gap blocks)
     spans = detect(blocks, cfg)
     assert len(spans) <= 3

@@ -42,28 +42,62 @@ def test_corpus_is_committed():
     assert len(PAGES) >= 24
 
 
-@pytest.mark.parametrize("name", PAGES)
-def test_gnarly_fixture_golden(name):
+def _read(name: str):
     with open(os.path.join(FIXDIR, f"{name}.html"), "rb") as fh:
         html = fh.read()
     with open(os.path.join(FIXDIR, f"{name}.txt"), encoding="utf-8") as fh:
-        golden = fh.read()
+        return html, fh.read()
+
+
+@pytest.mark.parametrize("name", PAGES)
+def test_gnarly_fixture_golden(name):
+    html, golden = _read(name)
     assert _extract(html) == golden
+
+
+def _bits(row):
+    return (
+        row["text"],
+        [(s["start"], s["end"], s["kind"], s["score"].hex()) for s in row["spans"]],
+        row["conf"].hex(),
+    )
 
 
 @pytest.mark.parametrize("name", PAGES)
 def test_gnarly_fixture_python_kernel_parity(name):
     """The pure-Python reference path must produce the same goldens as
-    the default (C-kernel) path on the whole messy corpus."""
-    with open(os.path.join(FIXDIR, f"{name}.html"), "rb") as fh:
-        html = fh.read()
-    with open(os.path.join(FIXDIR, f"{name}.txt"), encoding="utf-8") as fh:
-        golden = fh.read()
-    out = extract_batch(
-        pd.DataFrame({"url": ["u"], "html": [html]}),
-        ExtractConfig(ckernels="off"),
-    )
-    assert out.iloc[0]["text"] == golden
+    the default (C-kernel) path on the whole messy corpus — and the same
+    spans (bounds, kind, score bits) and conf bits, so the C kernel
+    finalizes runs of every length exactly like the reference."""
+    html, golden = _read(name)
+    df = pd.DataFrame({"url": ["u"], "html": [html]})
+    off = extract_batch(df, ExtractConfig(ckernels="off")).iloc[0]
+    assert off["text"] == golden
+    assert _bits(extract_batch(df, CFG).iloc[0]) == _bits(off)
+
+
+@pytest.mark.parametrize("ckernels", ["auto", "off"])
+def test_gnarly_scoring_uses_no_blas_reduction(monkeypatch, ckernels):
+    """Span scores and conf come from an explicit left-to-right fold,
+    never from a BLAS reduction whose order depends on the CPU: with
+    numpy.dot disabled, extraction still reproduces every golden and
+    the markdown lane renders exactly what it renders with it."""
+    import numpy
+
+    from webx.markdown import render_markdown_batch
+
+    pages = [_read(name) for name in PAGES]
+    df = pd.DataFrame({"url": PAGES, "html": [h for h, _ in pages]})
+    cfg = ExtractConfig(ckernels=ckernels)
+    md = render_markdown_batch(df, cfg)
+
+    def no_dot(*args, **kwargs):
+        raise AssertionError("numpy.dot called while scoring")
+
+    monkeypatch.setattr(numpy, "dot", no_dot)
+    out = extract_batch(df, cfg)
+    assert out["text"].tolist() == [golden for _, golden in pages]
+    pd.testing.assert_frame_equal(render_markdown_batch(df, cfg), md)
 
 
 # ------------------------------------------------- synth template anatomy

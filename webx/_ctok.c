@@ -736,9 +736,9 @@ void wx_free(int64_t* p) {
  * round trips (block_scores' elementwise ufuncs and the run walk in
  * webx/detect.py). Float arithmetic is the EXACT elementwise
  * expression of detect.block_scores — same operations in the same
- * order on IEEE doubles, so results are bit-identical; the per-run
- * weighted score (np.dot) deliberately STAYS in Python so its
- * summation order is untouched.
+ * order on IEEE doubles, so results are bit-identical. The per-run
+ * weighted score is left to the caller: wx_detect_final below, or
+ * webx/detect.py _finalize_runs over this raw layout.
  *
  * ABI (single packed buffer, ONE copy out on the Python side):
  *   int64_t* wx_detect(const uint8_t* html, long n,
@@ -824,28 +824,24 @@ int64_t* wx_detect(const uint8_t* html, long n,
 
 /* ====================================================================
  * Fully-fused stage-1: wx_detect + per-run score finalization +
- * whitespace expansion + span validation in ONE call — the remaining
- * per-document Python cost of the fused path collapses to one ctypes
- * call and one buffer copy. The scalar 2-term dot below is
- * bit-identical to np.dot ONLY for runs of length <= 2 (BLAS ddot
- * accumulates sequentially at n <= 2 but vectorizes from n = 3 —
- * differential-fuzzed in tests/test_ctokenize.py; the build pins
- * -ffp-contract=off so gcc cannot fuse the mul+add either). Documents
- * containing any longer candidate run return the UNMODIFIED wx_detect
- * layout with *mode = 1 and Python finalizes exactly as before, so
- * behavior is invariant for every input.
+ * whitespace expansion + span validation in ONE call — the whole
+ * per-document stage 1 is one ctypes call and one buffer copy. A run's
+ * score is the left-to-right fold of webx/detect.py weighted_mean
+ * (acc += score * tlen in block order, then / max(sum tlen, 1)); the
+ * build pins -ffp-contract=off so gcc cannot fuse the mul+add, and the
+ * result is bit-identical to the Python reference for runs of any
+ * length.
  *
  * ABI:
  *   int64_t* wx_detect_final(const uint8_t* html, long n,
  *       double tag_weight, double binary_thresh, long min_block_chars,
  *       double box_thresh, long min_span_chars, long max_candidates,
  *       double expand_ratio, double rescue_thresh,
- *       long rescue_max_chars, long* out_len, long* mode);
- *     mode = 1: buffer/out_len are exactly wx_detect's (fallback).
- *     mode = 0: finalized spans, packed:
+ *       long rescue_max_chars, long* out_len);
+ *     returns finalized spans, packed (column stride cap >= m):
  *       [0]           m (span count)
  *       [1]           k (block count, for extraction metadata)
- *       [2 .. 2+5m)   span columns start, end, first, last, head_all
+ *       [2 .. 2+5cap) span columns start, end, first, last, head_all
  *       [.. +m)       span scores, double bit patterns
  *     NULL only on malloc failure. Free with wx_free.
  * ==================================================================== */
@@ -856,8 +852,7 @@ int64_t* wx_detect_final(const uint8_t* html, long n,
                          double box_thresh, long min_span_chars,
                          long max_candidates, double expand_ratio,
                          double rescue_thresh, long rescue_max_chars,
-                         long* out_len, long* mode) {
-    *mode = 1;
+                         long* out_len) {
     int64_t* buf = wx_detect(html, n, tag_weight, binary_thresh,
                              min_block_chars, rescue_thresh,
                              rescue_max_chars, out_len);
@@ -870,34 +865,25 @@ int64_t* wx_detect_final(const uint8_t* html, long n,
     const int64_t* col_head = col_tlen + k;
     const int64_t* runs = col_head + k;
     const double* scores = (const double*)(runs + 2 * r);
-    for (long j = 0; j < r; j++) {
-        if (runs[j * 2 + 1] - runs[j * 2] > 1) return buf; /* mode=1 */
-    }
     long cap = r < max_candidates ? r : max_candidates;
     long flen = 2 + 6 * (cap > 0 ? cap : 1);
     int64_t* fin = (int64_t*)malloc((size_t)flen * sizeof(int64_t));
     if (!fin) { free(buf); *out_len = 0; return NULL; }
     long m = 0;
-    /* finalize (webx/detect.py _finalize_runs, len<=2 runs only) */
+    /* finalize (webx/detect.py _finalize_runs) */
     long* f_start = (long*)(fin + 2);
     for (long j = 0; j < r && m < max_candidates; j++) {
         long i = runs[j * 2], last = runs[j * 2 + 1];
-        double sc;
-        long span_tlen;
-        int head_all;
-        if (last == i) {
-            double w1 = (double)col_tlen[i];
-            sc = scores[i] * w1 / (w1 > 1.0 ? w1 : 1.0);
-            span_tlen = (long)w1;
-            head_all = col_head[i] != 0;
-        } else { /* last == i + 1 */
-            double w0 = (double)col_tlen[i], w1 = (double)col_tlen[last];
-            double ws = w0 + w1;
-            double dot = scores[i] * w0 + scores[last] * w1;
-            sc = dot / (ws > 1.0 ? ws : 1.0);
-            span_tlen = (long)ws;
-            head_all = col_head[i] && col_head[last];
+        double acc = 0.0;
+        long span_tlen = 0;
+        int head_all = 1;
+        for (long b = i; b <= last; b++) {
+            acc += scores[b] * (double)col_tlen[b];
+            span_tlen += col_tlen[b];
+            head_all = head_all && col_head[b] != 0;
         }
+        double ws = (double)span_tlen;
+        double sc = acc / (ws > 1.0 ? ws : 1.0);
         if (sc >= box_thresh && span_tlen >= min_span_chars) {
             f_start[m] = col_start[i];
             f_start[cap + m] = col_end[last];
@@ -951,7 +937,6 @@ int64_t* wx_detect_final(const uint8_t* html, long n,
     fin[0] = m;
     fin[1] = k;
     *out_len = flen;
-    *mode = 0;
     return fin;
 }
 

@@ -24,7 +24,6 @@ class ExtractConfig:
     min_block_chars: int = 2         # _min_size analog (det_postprocess.py:72-74)
     min_span_chars: int = 25         # span-level min size filter
     max_candidates: int = 1000       # cap spans considered (det_postprocess.py:60)
-    merge_gap: int = 0               # max non-candidate blocks bridged when merging runs
     tag_weight: float = 8.0          # weight of a markup tag vs one text char in density
     expand_ratio: float = 0.0        # unclip analog: widen span into surrounding whitespace
     # Heading rescue (the boilerpipe/readability "short headline directly

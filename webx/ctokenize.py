@@ -36,9 +36,9 @@ _SO = os.path.join(_DIR, "_ctok.so")
 def _compile(src: str, so: str) -> str:
     tmp = f"{so}.tmp.{os.getpid()}"
     subprocess.run(
-        # -ffp-contract=off pins a*b+c*d to mulsd/addsd (no FMA fusion):
-        # wx_detect_final's 2-term dot must reproduce BLAS ddot's exact
-        # rounding (verified sequential for n<=2, tests/test_ctokenize.py)
+        # -ffp-contract=off pins acc += a*b to mulsd/addsd (no FMA
+        # fusion): wx_detect_final's span-score fold must round exactly
+        # like webx.detect.weighted_mean's separate multiply and add
         ["gcc", "-O2", "-ffp-contract=off", "-fPIC", "-shared", "-o", tmp, src],
         check=True,
         capture_output=True,
@@ -130,7 +130,6 @@ try:
         ctypes.c_double,                    # rescue_thresh
         ctypes.c_long,                      # rescue_max_chars
         ctypes.POINTER(ctypes.c_long),
-        ctypes.POINTER(ctypes.c_long),
     ]
     _i32p = ctypes.POINTER(ctypes.c_int32)
     _lib.wx_ac_find.restype = ctypes.c_long
@@ -215,10 +214,9 @@ def detect_table(
     """Fused stage-1: tokenize + block scores + candidate-run boundaries
     in ONE C call and ONE copy out (packed int64 buffer → frombuffer →
     views). Returns (start, end, tlen, heading, scores, runs) numpy
-    views; runs is (r, 2) (first, last) block indices — the per-run
-    weighted-score finalization stays in Python
-    (webx.detect._finalize_runs) so np.dot's summation order, and with
-    it bit-identity to the Python reference path, is untouched."""
+    views; runs is (r, 2) (first, last) block indices for
+    webx.detect._finalize_runs. The extractor itself runs
+    ``detect_final``, which also finalizes in C."""
     import numpy as np
 
     out_len = ctypes.c_long()
@@ -258,50 +256,23 @@ def detect_final(
     rescue_max_chars: int = 0,
 ):
     """FULLY-fused stage-1 (wx_detect_final): detect + finalize +
-    expand + validate in one C call when every candidate run has
-    length <= 2 (the only shapes whose np.dot is sequential — see the
-    kernel comment). Returns either
+    expand + validate in one C call, for every document. Returns
 
       ("final", n_blocks, start, end, first, last, head_all, score)
-        — finalized span columns (numpy views over one copied buffer)
 
-      ("raw", (start, end, tlen, heading, scores, runs))
-        — exactly detect_table's output; the caller finalizes in
-          Python (webx.detect._finalize_runs), preserving np.dot's
-          summation order for runs of length >= 3.
-
-    The "final" columns are plain Python lists (spans per document are
-    few — ctypes bulk slicing beats a bytes->numpy round trip by ~4 µs
-    per call); the "raw" fallback unpacks through numpy exactly like
-    detect_table."""
+    where the span columns are plain Python lists (spans per document
+    are few — ctypes bulk slicing beats a bytes->numpy round trip by
+    ~4 µs per call). Span scores are bit-identical to the Python
+    reference (webx.detect._finalize_runs): both run the
+    ``weighted_mean`` fold."""
     out_len = ctypes.c_long()
-    mode = ctypes.c_long()
     ptr = _lib.wx_detect_final(
         html, len(html), tag_weight, binary_thresh, min_block_chars,
         box_thresh, min_span_chars, max_candidates, expand_ratio,
-        rescue_thresh, rescue_max_chars,
-        ctypes.byref(out_len), ctypes.byref(mode),
+        rescue_thresh, rescue_max_chars, ctypes.byref(out_len),
     )
     if not ptr:
         raise MemoryError("wx_detect_final allocation failure")
-    if mode.value == 1:  # wx_detect layout: unpack like detect_table
-        import numpy as np
-
-        try:
-            a = np.frombuffer(
-                ctypes.string_at(ptr, out_len.value * 8), dtype=np.int64
-            )
-        finally:
-            _lib.wx_free(ptr)
-        k = int(a[0])
-        r = int(a[1])
-        start = a[2 : 2 + k]
-        end = a[2 + k : 2 + 2 * k]
-        tlen = a[2 + 2 * k : 2 + 3 * k]
-        heading = a[2 + 3 * k : 2 + 4 * k] != 0
-        runs = a[2 + 4 * k : 2 + 4 * k + 2 * r].reshape(r, 2)
-        scores = a[2 + 4 * k + 2 * r :].view(np.float64)
-        return "raw", (start, end, tlen, heading, scores, runs)
     try:
         m = ptr[0]
         n_blocks = ptr[1]

@@ -14,7 +14,8 @@ block table:
 Scoring is numpy-vectorized over the *flattened block table of an entire
 Arrow batch* (all documents at once); only run-merging walks per-document
 boundaries. Deterministic: pure float arithmetic with fixed tie-breaking
-(block order = byte order).
+(block order = byte order); span scores are one left-to-right fold
+(``weighted_mean``), never a BLAS reduction.
 """
 
 from __future__ import annotations
@@ -52,6 +53,23 @@ def block_scores(
     return score
 
 
+def weighted_mean(scores: Sequence[float], weights: Sequence[float]) -> float:
+    """Weight-averaged score: a span's text-length-weighted mean block
+    score (_calc_score, det_postprocess.py:137-145) and a document's
+    span-length-weighted ``conf``. One left-to-right fold,
+    ``acc += score * weight`` in the given order, then one divide by
+    ``max(sum(weights), 1.0)``. The C kernel (webx/_ctok.c
+    wx_detect_final, built with -ffp-contract=off) runs the identical
+    IEEE operations, so no result depends on a BLAS reduction order.
+    Weights are integer counts, so their sum is exact in any order."""
+    acc = 0.0
+    total = 0.0
+    for s, w in zip(scores, weights):
+        acc += s * w
+        total += w
+    return acc / max(total, 1.0)
+
+
 def merge_runs(
     blocks: Sequence[Block],
     scores: np.ndarray,
@@ -72,34 +90,6 @@ def merge_runs(
     return merge_runs_table(start, end, tlen, heading, scores, cfg, link=link)
 
 
-def _gap_runs(cand: np.ndarray, merge_gap: int) -> list:
-    """(first, last) candidate runs bridging up to merge_gap holes —
-    the original per-block walk, kept for the merge_gap > 0 path."""
-    n = len(cand)
-    out = []
-    i = 0
-    while i < n:
-        if not cand[i]:
-            i += 1
-            continue
-        j = i
-        last = i
-        while j + 1 < n:
-            k = j + 1
-            gap = 0
-            while k < n and not cand[k] and gap < merge_gap:
-                k += 1
-                gap += 1
-            if k < n and cand[k]:
-                j = k
-                last = k
-            else:
-                break
-        out.append((i, last))
-        i = last + 1
-    return out
-
-
 def merge_runs_table(
     start: np.ndarray,
     end: np.ndarray,
@@ -109,10 +99,9 @@ def merge_runs_table(
     cfg: ExtractConfig,
     link: np.ndarray | None = None,
 ) -> List[Span]:
-    """Array-native merge: run boundaries found with one vectorized diff
-    (merge_gap=0, the default) instead of a per-block Python walk; the
-    per-run score arithmetic is the EXACT expressions of the original
-    loop, so results are bit-identical.
+    """Merge one document's consecutive candidate blocks into scored
+    spans: a list walk finds the (first, last) candidate runs and
+    ``_finalize_runs`` scores them.
 
     Heading rescue (FROZEN RULE — the C kernel `wx_detect` and the synth
     oracle arithmetic implement the identical predicate): with
@@ -152,29 +141,20 @@ def merge_runs_table(
         if resc.any():
             cand = cand.copy()
             cand[:-1] |= resc
-    if cfg.merge_gap == 0:
-        if n < 64:
-            # typical pages have O(10) blocks: a list walk beats numpy's
-            # per-call overhead (np.diff costs more than the whole doc)
-            cl = cand.tolist()
-            pairs = []
-            i = 0
-            while i < n:
-                if cl[i]:
-                    j = i
-                    while j + 1 < n and cl[j + 1]:
-                        j += 1
-                    pairs.append((i, j))
-                    i = j + 1
-                else:
-                    i += 1
+    # typical pages have O(10) blocks: a list walk beats numpy's
+    # per-call overhead
+    cl = cand.tolist()
+    pairs = []
+    i = 0
+    while i < n:
+        if cl[i]:
+            j = i
+            while j + 1 < n and cl[j + 1]:
+                j += 1
+            pairs.append((i, j))
+            i = j + 1
         else:
-            c = cand.astype(np.int8)
-            run_starts = np.nonzero(np.diff(c, prepend=np.int8(0)) == 1)[0]
-            run_ends = np.nonzero(np.diff(c, append=np.int8(0)) == -1)[0]
-            pairs = zip(run_starts.tolist(), run_ends.tolist())
-    else:
-        pairs = _gap_runs(cand, cfg.merge_gap)
+            i += 1
 
     return _finalize_runs(start, end, tlen, heading, scores, pairs, cfg)
 
@@ -188,30 +168,19 @@ def _finalize_runs(
     pairs,
     cfg: ExtractConfig,
 ) -> List[Span]:
-    """Per-run weighted-score finalization — the one float reduction in
-    stage 1 (np.dot), shared by the Python run walk and the fused C
-    candidate-run path (webx/ctokenize.detect_table) so both produce
-    bit-identical span scores."""
+    """Per-run score + size + kind filter over (first, last) block runs —
+    the Python twin of the finalization inside the fused C kernel
+    (webx/_ctok.c wx_detect_final); both score a run with the same
+    ``weighted_mean`` fold, so their span scores are bit-identical."""
+    sl = scores.tolist()
+    tl = tlen.tolist()
+    hd = heading.tolist()
     spans: List[Span] = []
     for i, last in pairs:
-        if last == i:
-            # single-block run (the common case): np.dot of a 1-element
-            # pair IS the scalar product, and w.sum() IS w — the two
-            # IEEE ops below are the identical operations, so this path
-            # is bit-identical to the array path by construction
-            w1 = float(tlen[i])
-            sc = float(scores[i]) * w1 / max(w1, 1.0)
-            span_tlen = int(w1)
-            head_all = bool(heading[i])
-        else:
-            run = slice(i, last + 1)
-            w = tlen[run].astype(np.float64)
-            ws = w.sum()
-            sc = float(np.dot(scores[run], w) / max(ws, 1.0))
-            span_tlen = int(ws)
-            head_all = bool(heading[run].all())
-        if sc >= cfg.box_thresh and span_tlen >= cfg.min_span_chars:
-            kind = "heading" if head_all else "content"
+        run = slice(i, last + 1)
+        sc = weighted_mean(sl[run], tl[run])
+        if sc >= cfg.box_thresh and sum(tl[run]) >= cfg.min_span_chars:
+            kind = "heading" if all(hd[run]) else "content"
             spans.append(
                 Span(int(start[i]), int(end[last]), sc, kind, int(i), int(last))
             )

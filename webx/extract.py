@@ -29,13 +29,17 @@ from webx.charset import (
     sniff_charset,
 )
 from webx.config import ExtractConfig
-from webx.detect import (
+# _finalize_runs is reached only through merge_runs_table here; it stays
+# importable from this module because perfbench/spans.py traces the
+# stage-1 layers by name on webx.extract.
+from webx.detect import (  # noqa: F401
     Span,
     _finalize_runs,
     block_scores,
     expand_spans,
     merge_runs_table,
     validate_spans,
+    weighted_mean,
 )
 from webx.recognize import (
     decode_span,
@@ -46,7 +50,7 @@ from webx.recognize import (
     is_ascii_compatible,
     pre_regions,
 )
-from webx.tokenize import Block, tokenize
+from webx.tokenize import tokenize
 
 
 def _resolve_kernel(mode: str, py_fn, c_name: str):
@@ -109,12 +113,9 @@ def resolve_strip(mode: str):
 @lru_cache(maxsize=4)
 def resolve_detect_final(mode: str):
     """The FULLY-fused stage-1 kernel (tokenize + scores + runs +
-    finalize + expand + validate in one C call) or None. Only documents
-    whose candidate runs all have length <= 2 finalize in C — the
-    kernel itself falls back to the raw detect layout otherwise, and
-    the caller runs the reference Python finalization (np.dot order
-    preserved for longer runs). No Python twin: None routes to the
-    decomposed reference composition."""
+    finalize + expand + validate in one C call, every document) or
+    None. No Python twin: None routes to the decomposed reference
+    composition, which computes the same bits."""
     if mode == "off":
         return None
     return _resolve_kernel(mode, None, "detect_final")
@@ -137,8 +138,7 @@ def resolve_detect_table(mode: str):
     """The FUSED stage-1 kernel (tokenize + scores + candidate runs in
     one C call) or None for the decomposed path. Unlike the other
     resolvers there is no Python twin — None routes to the reference
-    composition (tokenize_table → block_scores → merge_runs_table),
-    which is also the merge_gap > 0 path."""
+    composition (tokenize_table → block_scores → merge_runs_table)."""
     if mode == "off":
         return None
     fn = _resolve_kernel(mode, None, "detect_table")
@@ -147,7 +147,7 @@ def resolve_detect_table(mode: str):
 
 def _extract_doc_stage1(
     html: Optional[bytes], cfg: ExtractConfig
-) -> Tuple[List[Block], List[Span], dict]:
+) -> Tuple[int, List[Span], dict]:
     """Tokenize + detect one document. Returns (n_blocks, spans, meta)."""
     if html is None:
         html = b""
@@ -159,11 +159,11 @@ def _extract_doc_stage1(
         html = html[: cfg.limit_side_len]
         truncated = True
     charset = sniff_charset(html, cfg.default_charset)
-    fused = resolve_detect_final(cfg.ckernels) if cfg.merge_gap == 0 else None
+    fused = resolve_detect_final(cfg.ckernels)
     if fused is not None:
-        # one C call: tokenize + scores + runs + (when every run is
-        # <= 2 blocks) finalize + expand + validate — the whole stage
-        res = fused(
+        # one C call: tokenize + scores + runs + finalize + expand +
+        # validate — the whole stage; plain-list span columns
+        _, n_blocks, f_start, f_end, f_first, f_last, f_head, f_sc = fused(
             html,
             cfg.tag_weight,
             cfg.binary_thresh,
@@ -175,31 +175,12 @@ def _extract_doc_stage1(
             cfg.rescue_thresh,
             cfg.rescue_max_chars,
         )
-        if res[0] == "final":
-            # plain-list span columns (see ctokenize.detect_final)
-            _, n_blocks, f_start, f_end, f_first, f_last, f_head, f_sc = res
-            spans = [
-                Span(s, e, sc, "heading" if h else "content", fi, la)
-                for s, e, sc, h, fi, la in zip(
-                    f_start, f_end, f_sc, f_head, f_first, f_last
-                )
-            ]
-        else:
-            # a run of >= 3 blocks: reference finalization (np.dot order)
-            start, end, tlen, heading, scores, runs = res[1]
-            n_blocks = len(tlen)
-            spans = (
-                validate_spans(
-                    expand_spans(
-                        html,
-                        _finalize_runs(start, end, tlen, heading, scores, runs, cfg),
-                        cfg.expand_ratio,
-                    ),
-                    len(html),
-                )
-                if n_blocks
-                else []
+        spans = [
+            Span(s, e, sc, "heading" if h else "content", fi, la)
+            for s, e, sc, h, fi, la in zip(
+                f_start, f_end, f_sc, f_head, f_first, f_last
             )
+        ]
     else:
         # columnar block table straight from the tokenizer (the C kernel
         # fills numpy columns directly; the Python path transposes once)
@@ -232,13 +213,12 @@ def _extract_doc_stage1(
 
 def _decode_spans(
     html: bytes, spans: List[Span], charset: str, cfg: ExtractConfig
-) -> Tuple[List[dict], str, float, str]:
+) -> Tuple[List[dict], str, float]:
     """Stage 2 over one document's surviving spans.
 
-    Returns (span_rows, joined_text, conf, status)."""
-    status = "ok"
+    Returns (span_rows, joined_text, conf); conf is the text-length
+    weighted mean span score."""
     rows: List[dict] = []
-    weights: List[int] = []
     strip_norm = (
         resolve_strip_norm(cfg.ckernels) if is_ascii_compatible(charset) else None
     )
@@ -284,21 +264,34 @@ def _decode_spans(
                 "text": text,
             }
         )
-        weights.append(len(text))
     joined = cfg.join_sep.join(r["text"] for r in rows)
-    if not weights:
-        conf = 0.0
-    elif len(weights) == 1:
-        # one span (the common page): dot of a 1-element pair is the
-        # scalar product and w.sum() is w — same IEEE ops as the array
-        # path, bit-identical by construction
-        w1 = float(weights[0])
-        conf = rows[0]["score"] * w1 / w1
-    else:
-        w = np.asarray(weights, dtype=np.float64)
-        sc = np.asarray([r["score"] for r in rows], dtype=np.float64)
-        conf = float(np.dot(sc, w) / w.sum())
-    return rows, joined, conf, status
+    conf = weighted_mean([r["score"] for r in rows], [len(r["text"]) for r in rows])
+    return rows, joined, conf
+
+
+def _extract_doc(
+    raw: bytes, hint, cfg: ExtractConfig
+) -> Tuple[bytes, List[Span], dict, str]:
+    """Per-document front of both stages, shared by the batch ops:
+    input normalization, stage 1, charset resolution and one strict
+    decode. ``hint`` is the row's HTTP-header charset or None (see
+    extract_batch for precedence). Returns (truncated html, spans, meta,
+    charset status); ``meta["charset"]`` is the EFFECTIVE codec the
+    spans decode with."""
+    had_bom = raw[:2] in (b"\xff\xfe", b"\xfe\xff") or raw[:3] == b"\xef\xbb\xbf"
+    html = normalize_input_bytes(raw)
+    _, spans, meta = _extract_doc_stage1(html, cfg)
+    if hint and not had_bom:
+        hinted = normalize_charset_name(hint)
+        if hinted is not None:
+            meta["charset"] = hinted
+    trunc_html = html[: cfg.limit_side_len]
+    # one strict decode establishes status + the EFFECTIVE codec; spans
+    # decode with that codec (a misdeclared page must not produce
+    # mojibake while status says fallback)
+    _, cs_status, codec = decode_bytes(trunc_html, meta["charset"])
+    meta["charset"] = codec
+    return trunc_html, spans, meta, cs_status
 
 
 def extract_batch(
@@ -337,26 +330,14 @@ def extract_batch(
                 {"html_bytes": 0, "n_blocks": 0, "truncated": False, "charset": cfg.default_charset}
             )
             continue
-        raw = bytes(html)
-        had_bom = raw[:2] in (b"\xff\xfe", b"\xfe\xff") or raw[:3] == b"\xef\xbb\xbf"
-        html = normalize_input_bytes(raw)
-        _, spans, meta = _extract_doc_stage1(html, cfg)
-        if hints is not None and not had_bom and hints[i]:
-            # HTTP-header charset outranks the sniffed meta declaration
-            hinted = normalize_charset_name(hints[i])
-            if hinted is not None:
-                meta["charset"] = hinted
-        trunc_html = html[: cfg.limit_side_len]
-        # one strict decode establishes status + the EFFECTIVE codec;
-        # spans decode with that codec (a misdeclared page must not
-        # produce mojibake while status says fallback)
-        _, cs_status, codec = decode_bytes(trunc_html, meta["charset"])
-        meta["charset"] = codec
-        rows, joined, conf, _ = _decode_spans(trunc_html, spans, codec, cfg)
+        trunc_html, spans, meta, cs_status = _extract_doc(
+            bytes(html), hints[i] if hints is not None else None, cfg
+        )
+        rows, joined, conf = _decode_spans(trunc_html, spans, meta["charset"], cfg)
         out["text"].append(joined)
         out["spans"].append(rows)
         out["conf"].append(conf)
-        out["status"].append(cs_status if cs_status != "ok" else "ok")
+        out["status"].append(cs_status)
         out["meta"].append(meta)
     res = pd.DataFrame(out)
     for col in passthrough:
@@ -443,17 +424,11 @@ def interleave_batch(
     for i, (url, html) in enumerate(zip(pdf["url"].tolist(), pdf["html"].tolist())):
         if html is None or len(html) == 0:
             continue
-        raw = bytes(html)
-        had_bom = raw[:2] in (b"\xff\xfe", b"\xfe\xff") or raw[:3] == b"\xef\xbb\xbf"
-        html = normalize_input_bytes(raw)
-        _, spans, meta = _extract_doc_stage1(html, cfg)
-        if hints is not None and not had_bom and hints[i]:
-            hinted = normalize_charset_name(hints[i])
-            if hinted is not None:
-                meta["charset"] = hinted
-        trunc = html[: cfg.limit_side_len]
-        _, _, codec = decode_bytes(trunc, meta["charset"])
-        rows, _, _, _ = _decode_spans(trunc, spans, codec, cfg)
+        trunc, spans, meta, _ = _extract_doc(
+            bytes(html), hints[i] if hints is not None else None, cfg
+        )
+        codec = meta["charset"]
+        rows, _, _ = _decode_spans(trunc, spans, codec, cfg)
         items: List[tuple] = [(r["start"], "text", r["text"], None, None) for r in rows]
         for m in _IMG_TAG_RE.finditer(trunc):
             attrs = m.group(1)

@@ -33,11 +33,15 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
-import numpy as np
-
 from webx.charset import sniff_charset
 from webx.config import ExtractConfig
-from webx.detect import Span, block_scores, expand_spans, validate_spans
+from webx.detect import (
+    Span,
+    block_scores,
+    expand_spans,
+    validate_spans,
+    weighted_mean,
+)
 from webx.extract import _decode_spans, resolve_tokenize_table
 
 _H_TAG_RE = re.compile(rb"<[hH]([1-6])[^>]*>")
@@ -78,6 +82,8 @@ def _structured_spans(html: bytes, cfg: ExtractConfig):
         return html, [], charset, truncated
     scores = block_scores(tlen, link, tags, boiler, cfg)
     cand = (scores >= cfg.binary_thresh) & (tlen >= cfg.min_block_chars)
+    sl = scores.tolist()
+    tl = tlen.tolist()
     spans = []
     i = 0
     while i < n:
@@ -88,9 +94,8 @@ def _structured_spans(html: bytes, cfg: ExtractConfig):
         while j + 1 < n and cand[j + 1] and heading[j + 1] == heading[i]:
             j += 1
         run = slice(i, j + 1)
-        w = tlen[run].astype(np.float64)
-        sc = float(np.dot(scores[run], w) / max(w.sum(), 1.0))
-        span_tlen = int(w.sum())
+        sc = weighted_mean(sl[run], tl[run])
+        span_tlen = sum(tl[run])
         is_heading = bool(heading[i])
         if sc >= cfg.box_thresh and (
             is_heading or span_tlen >= cfg.min_span_chars
@@ -124,7 +129,7 @@ def render_markdown_batch(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame
             continue
         html = bytes(html)
         html, spans, charset, _ = _structured_spans(html, cfg)
-        rows, _, _, status = _decode_spans(html, spans, charset, cfg)
+        rows, _, _ = _decode_spans(html, spans, charset, cfg)
         parts = []
         n_headings = 0
         for r in rows:
@@ -138,7 +143,7 @@ def render_markdown_batch(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame
                 parts.append(r["text"])
         out["markdown"].append("\n\n".join(parts))
         out["n_headings"].append(n_headings)
-        out["status"].append(status)
+        out["status"].append("ok")
     return pd.DataFrame(out)
 
 
