@@ -342,6 +342,35 @@ def test_dedup_clusters_components(spark):
     assert survivors == {1, 10, 20, 99}  # min of each cluster + untouched doc
 
 
+def test_dedup_clusters_components_without_count(spark, monkeypatch):
+    """The convergence test and the broadcast gate read their counts from
+    the checkpoint's observation: with ``DataFrame.count`` unusable,
+    dedup_clusters, keep_list and keep_best still give the components of
+    test_dedup_clusters_components."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from webx.dedup import dedup_clusters, keep_best, keep_list
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (20, 21), (20, 22)],
+        "id_a long, id_b long",
+    )
+    docs = spark.createDataFrame(
+        [(i, 1.0) for i in [1, 2, 3, 4, 5, 10, 11, 20, 21, 22, 99]],
+        "doc_id long, score double",
+    )
+
+    def no_count(self):
+        raise AssertionError("DataFrame.count called")
+
+    monkeypatch.setattr(DataFrame, "count", no_count)
+    got = {r["doc_id"]: r["cluster_id"] for r in dedup_clusters(pairs).collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
+    for op in (keep_list, keep_best):
+        survivors = {r["doc_id"] for r in op(docs, pairs).collect() if r["keep"]}
+        assert survivors == {1, 10, 20, 99}, op.__name__
+
+
 def test_duplicate_spans_hand_case(spark):
     from webx.dedup import duplicate_spans
 

@@ -89,6 +89,44 @@ def test_decontaminate_corpus_never_shuffles(spark, queries):
     assert "SortMergeJoin" not in plan
 
 
+def _lambda_bodies(plan: str) -> list:
+    """The argument text of every ``lambdafunction(...)`` in a plan."""
+    out = []
+    for m in re.finditer(r"lambdafunction\(", plan):
+        depth, i = 1, m.end()
+        while depth and i < len(plan):
+            depth += {"(": 1, ")": -1}.get(plan[i], 0)
+            i += 1
+        out.append(plan[m.end() : i - 1])
+    return out
+
+
+def test_word_grams_have_no_slice_per_gram(spark):
+    """Decontamination and Jaccard verification cut their word grams in
+    the linear-time Python kernel: no Catalyst lambda slices the token
+    array once per gram (a cost that grows with document length)."""
+    import pyspark.sql.functions as F
+
+    from webx.curate import contaminated_ids
+    from webx.dedup import jaccard_verify
+
+    docs = spark.range(0, 50).select(
+        F.col("id").alias("doc_id"),
+        F.concat_ws(" ", F.lit("w"), F.col("id").cast("string")).alias("text"),
+    )
+    pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
+    plans = {
+        "contaminated_ids": plan_of(contaminated_ids(docs, docs.select("text"))),
+        "contaminated_ids(hashed)": plan_of(
+            contaminated_ids(docs, docs.select("text"), hashed=True)
+        ),
+        "jaccard_verify": plan_of(jaccard_verify(docs, pairs)),
+    }
+    for name, plan in plans.items():
+        assert "MapInPandas" in plan, name
+        assert not [b for b in _lambda_bodies(plan) if "slice(" in b], name
+
+
 def test_c4_clean_is_exchange_free(spark, queries):
     """C4 line filtering is one row-local projection — any Exchange in
     this plan is a regression."""

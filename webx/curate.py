@@ -1,7 +1,8 @@
 """Corpus-curation operators a crawl→training-data pipeline needs beyond
 dedup: test-set decontamination, per-host volume caps, and sequence
-packing. All pure pyspark.sql (codegen; the one grouped walk is an
-Arrow-batched applyInPandas) — no driver-side loops.
+packing. pyspark.sql throughout (codegen; the word grams are cut by the
+Arrow-batched ``word_ngrams`` kernel and the one grouped walk is an
+applyInPandas) — no driver-side loops.
 
 Scale shapes:
 * decontamination — the benchmark side is small by definition (eval
@@ -21,35 +22,20 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from webx.dedup import word_ngrams
 from webx.textstats import WS_SPLIT
 
 
-def _word_ngrams(col: str, n: int, lower: bool = True):
-    """Word n-gram strings of ``col`` (deterministic, JVM-side);
-    documents shorter than n words yield their whole token join."""
-    toks = F.split(F.trim(F.col(col)), WS_SPLIT)
-    if lower:
-        toks = F.transform(toks, lambda t: F.lower(t))
-    cnt = F.size(toks)
-    idx = F.sequence(F.lit(0), F.greatest(cnt - n, F.lit(0)))
-    return F.when(
-        cnt >= n,
-        F.array_distinct(
-            F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)))
-        ),
-    ).otherwise(F.array(F.concat_ws(" ", toks)))
-
-
-def _word_ngram_hashes(col: str, n: int, lower: bool = True):
-    """64-bit xxhash64 of each word n-gram of ``col``: the gram string
-    is built exactly as in ``_word_ngrams`` then hashed, so the match
-    set equals the string variant's up to 2^-64-scale collisions while
-    the join/broadcast keys shrink from ~100-byte strings to 8-byte
-    longs. (A token-hash fold that avoids building the strings was
-    A/B'd and LOST at n=13 — thirteen per-slot ``element_at`` lookups
-    per gram cost more in the Catalyst expression tree than one
-    ``concat_ws`` memcpy; see PLANS.md.)"""
-    return F.transform(_word_ngrams(col, n, lower), lambda g: F.xxhash64(g))
+def _word_ngram_hashes(grams: DataFrame) -> DataFrame:
+    """``grams`` with each gram string replaced by its 64-bit xxhash64,
+    computed JVM-side from the strings ``word_ngrams`` built, so the
+    match set equals the string variant's up to 2^-64-scale collisions
+    while the join/broadcast keys shrink from ~100-byte strings to 8-byte
+    longs. (A Catalyst fold over the n per-token hashes, which avoids
+    building the strings, was A/B'd and LOST at n=13: like the Catalyst
+    string builder of that time, it built each gram inside a lambda whose
+    cost per gram grows with the document's token count; see PLANS.md.)"""
+    return grams.withColumn("grams", F.transform("grams", lambda g: F.xxhash64(g)))
 
 
 def contaminated_ids(
@@ -75,11 +61,15 @@ def contaminated_ids(
     all shrink to one long per gram. Same answer up to 2^-64-scale hash
     collisions (differentially tested against the string variant); the
     oracle-gated driver query uses the exact string form."""
-    expr = (lambda c: _word_ngram_hashes(c, n)) if hashed else (
-        lambda c: _word_ngrams(c, n)
-    )
-    bench_sh = benchmark.select(F.explode(expr(bench_text)).alias("ng")).distinct()
-    doc_sh = docs.select("doc_id", F.explode(expr(doc_text)).alias("ng"))
+
+    def ngrams(df: DataFrame, text_col: str, keep: tuple) -> DataFrame:
+        grams = word_ngrams(df, n, text_col, lower=True, keep=keep)
+        if hashed:
+            grams = _word_ngram_hashes(grams)
+        return grams.select(*keep, F.explode("grams").alias("ng"))
+
+    bench_sh = ngrams(benchmark, bench_text, ()).distinct()
+    doc_sh = ngrams(docs, doc_text, ("doc_id",))
     return (
         doc_sh.join(F.broadcast(bench_sh), "ng", "left_semi")
         .select("doc_id")

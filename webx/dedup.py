@@ -1,8 +1,10 @@
 """Deduplication operators for training-data pipelines.
 
-All signature computation is built-in JVM expressions (xxhash64 /
-higher-order array functions) — no Python UDFs; the only shuffles are the
-ones the algorithms require (groupBy fingerprint / band bucket).
+Tokens are split and hashed by built-in JVM expressions (xxhash64 /
+higher-order array functions); the per-document loops Catalyst lambdas
+run slowly (the MinHash slot fold, word-gram windows) are Arrow-batched
+``mapInPandas`` kernels. The only shuffles are the ones the algorithms
+require (groupBy fingerprint / band bucket).
 
 Scale notes:
 * exact dedup = one hash-aggregate shuffle on the fingerprint.
@@ -20,6 +22,8 @@ Scale notes:
 
 from __future__ import annotations
 
+import itertools
+import weakref
 
 from pyspark.sql import DataFrame, Observation, functions as F
 
@@ -78,14 +82,59 @@ def exact_dedup(docs: DataFrame, key: str = "text") -> DataFrame:
     )
 
 
-def _shingles(col="text", k: int = 3):
-    """Word k-gram shingles as strings (deterministic, JVM-side)."""
-    toks = F.split(F.trim(F.col(col)), WS_SPLIT)
-    n = F.size(toks)
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-    return F.when(n >= k, F.array_distinct(
-        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k)))
-    )).otherwise(F.array(F.concat_ws(" ", toks)))
+def word_ngrams(
+    df: DataFrame,
+    n: int,
+    text_col: str = "text",
+    lower: bool = False,
+    keep: tuple = ("doc_id",),
+) -> DataFrame:
+    """``keep`` columns plus ``grams``: the distinct word n-grams of
+    ``text_col`` as strings, in first-occurrence order. A document with
+    fewer than n tokens yields its whole token join; NULL text yields
+    ``[""]``.
+
+    Tokens are split (and, with ``lower``, lowercased) JVM-side, so every
+    gram string is the one Spark's ``split``/``lower`` produce. The grams
+    are then cut in one ``mapInPandas`` pass: each document's tokens are
+    joined once and every gram is a slice of that join, so the work is
+    linear in the document's length. The ``transform``/``slice`` lambda
+    this replaces paid a per-gram cost that grew with the document's
+    token count (PLANS.md, "Word n-grams in one linear pass")."""
+    from pyspark.sql import types as T
+
+    toks = F.split(F.trim(F.col(text_col)), WS_SPLIT)
+    if lower:
+        toks = F.transform(toks, lambda t: F.lower(t))
+    schema = T.StructType(
+        [df.schema[c] for c in keep]
+        + [T.StructField("grams", T.ArrayType(T.StringType()))]
+    )
+
+    def fn(batches):
+        for p in batches:
+            p["_toks"] = [_window_joins(t, n) for t in p["_toks"]]
+            yield p.rename(columns={"_toks": "grams"})
+
+    return df.select(*keep, toks.alias("_toks")).mapInPandas(fn, schema=schema)
+
+
+def _window_joins(toks, n: int) -> list:
+    """Distinct ``" ".join`` of every n-token window of ``toks``, first
+    occurrence first; ``[" ".join(toks)]`` below n tokens, ``[""]`` for
+    NULL. Window i is the slice of the full join from token i's start to
+    token i+n-1's end."""
+    if toks is None:
+        return [""]
+    text = " ".join(toks)
+    if len(toks) < n:
+        return [text]
+    starts = [0, *itertools.accumulate(len(t) + 1 for t in toks)]
+    return list(
+        dict.fromkeys(
+            text[starts[i] : starts[i + n] - 1] for i in range(len(toks) - n + 1)
+        )
+    )
 
 
 def _shingle_hashes(col="text", k: int = 3):
@@ -345,7 +394,7 @@ def jaccard_verify(
         .distinct()
     )
     needed = docs.join(ids, "doc_id", "left_semi")
-    sh = needed.select("doc_id", _shingles(k=shingle_k).alias("sh"))
+    sh = word_ngrams(needed, shingle_k).withColumnRenamed("grams", "sh")
     j = (
         pairs.join(sh.withColumnRenamed("doc_id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
         .join(sh.withColumnRenamed("doc_id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
@@ -389,9 +438,9 @@ def jaccard_join(
     so hot keys are structurally absent), then verify on the candidate
     set only. The oracle is the naive all-pairs Jaccard — equality is
     the prefix-filter completeness theorem re-proven per driver run."""
-    sized = docs.select(
-        "doc_id", _shingles(k=shingle_k).alias("sh")
-    ).withColumn("sz", F.size("sh"))
+    sized = word_ngrams(docs, shingle_k).select(
+        "doc_id", F.col("grams").alias("sh"), F.size("grams").alias("sz")
+    )
     tok = sized.select("doc_id", "sz", F.explode("sh").alias("g"))
     freq = tok.groupBy("g").agg(F.count("*").alias("df"))
     from pyspark.sql import Window as _W
@@ -427,11 +476,16 @@ def minhash_neardup(
     The candidate-pair set is tiny relative to the corpus but its lineage
     contains the whole signature+banding computation; the verify stage
     references it twice (id prefilter + join input), so by default it is
-    materialized once via ``localCheckpoint`` — blocks are released by the
-    ContextCleaner when the DataFrame is garbage-collected, so long-lived
-    drivers running many queries don't accumulate pinned cache. (On a
-    real cluster where executor loss must be survivable, callers should
-    instead persist to a reliable store and own the unpersist lifecycle.)"""
+    materialized once via ``localCheckpoint(eager=False)``. That call is
+    not lazy under AQE: building the checkpoint's RDD finalizes the
+    adaptive plan, which runs every upstream shuffle stage right away (in
+    the curate funnel: 6 Spark jobs, which also materialize the funnel's
+    persisted input); only the last stage waits for the first action.
+    Blocks are released by the ContextCleaner when the DataFrame is
+    garbage-collected, so long-lived drivers running many queries don't
+    accumulate pinned cache. (On a real cluster where executor loss must
+    be survivable, callers should instead persist to a reliable store
+    and own the unpersist lifecycle.)"""
     rows_per_band = n_hashes // bands
     sigs = minhash_signatures(docs, n_hashes, shingle_k, impl)
     pairs = lsh_candidate_pairs(sigs, bands, rows_per_band, max_bucket)
@@ -590,6 +644,18 @@ def simhash_neardup(
     )
 
 
+#: dedup_clusters output → its row count (the node count), recorded by
+#: the same observation that checks convergence; read by the callers that
+#: size-gate a broadcast of the cluster frame or a frame derived from it.
+_cluster_rows: "weakref.WeakKeyDictionary[DataFrame, int]" = weakref.WeakKeyDictionary()
+
+
+def cluster_rows(clusters: DataFrame) -> "int | None":
+    """Row count of a ``dedup_clusters`` result, known without a Spark
+    action; None for any other frame."""
+    return _cluster_rows.get(clusters)
+
+
 def dedup_clusters(pairs: DataFrame, max_iters: int = 25) -> DataFrame:
     """Near-duplicate pairs → connected components: (doc_id, cluster_id)
     with cluster_id = the component's minimum doc_id — the step after
@@ -598,42 +664,59 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 25) -> DataFrame:
     driver loop of relational iterations (converges in O(component
     diameter) rounds — near-dup clusters are shallow; each round is one
     shuffle on the edge key over the PAIR set, which is tiny relative to
-    the corpus). Deterministic: the min label is unique."""
+    the corpus). Deterministic: the min label is unique.
+
+    One Spark action per round: the round's eager ``localCheckpoint``.
+    Round 1 reads the edges alone (a node's first label is the least of
+    itself and its neighbours), and an ``Observation`` on each checkpoint
+    counts the changed labels and the nodes in that same action, so the
+    convergence test needs no extra job and the node count is known
+    afterwards (``cluster_rows``)."""
     edges = pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
     sym = edges.unionByName(
         edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).localCheckpoint()
-    labels = (
-        sym.select(F.col("a").alias("node")).distinct()
-        .select("node", F.col("node").alias("label"))
-        .localCheckpoint()
+    labels = sym.select(F.col("a").alias("node")).distinct().select(
+        "node", F.col("node").alias("label")
     )
-    for _ in range(max_iters):
-        neigh = (
-            sym.join(
-                labels.select(
-                    F.col("node").alias("b"), F.col("label").alias("nl")
-                ),
-                "b",
+    nodes = None
+    for i in range(max_iters):
+        if i == 0:  # round 1 needs no label frame
+            stepped = sym.groupBy("a").agg(
+                F.least("a", F.min("b")).alias("label")
+            ).select(F.col("a").alias("node"), "label", F.col("a").alias("prev"))
+        else:
+            neigh = (
+                sym.join(
+                    labels.select(
+                        F.col("node").alias("b"), F.col("label").alias("nl")
+                    ),
+                    "b",
+                )
+                .groupBy("a")
+                .agg(F.min("nl").alias("minn"))
+                .select(F.col("a").alias("node"), "minn")
             )
-            .groupBy("a")
-            .agg(F.min("nl").alias("minn"))
-            .select(F.col("a").alias("node"), "minn")
-        )
-        # Checkpoint FIRST with the previous label carried along, then
-        # derive the convergence check from the materialized frame —
-        # one job per iteration instead of two (the old changed-count
-        # recomputed the whole new-label DAG the checkpoint was about
-        # to run again).
-        stepped = labels.join(neigh, "node").select(
-            "node",
-            F.least("label", "minn").alias("label"),
-            F.col("label").alias("prev"),
+            stepped = labels.join(neigh, "node").select(
+                "node",
+                F.least("label", "minn").alias("label"),
+                F.col("label").alias("prev"),
+            )
+        obs = Observation()
+        stepped = stepped.observe(
+            obs,
+            F.count("*").alias("nodes"),
+            F.count(F.when(F.col("label") != F.col("prev"), 1)).alias("changed"),
         ).localCheckpoint()
         labels = stepped.select("node", "label")
-        if stepped.filter(F.col("label") != F.col("prev")).limit(1).count() == 0:
+        got = obs.get
+        nodes = got["nodes"]
+        if got["changed"] == 0:
             break
-    return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
+    out = labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
+    if nodes is not None:
+        _cluster_rows[out] = nodes
+    return out
 
 
 # Row bound under which a cluster/keep/drop frame may be HINTED as the
@@ -647,18 +730,24 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 25) -> DataFrame:
 BROADCAST_ROW_BOUND = 1_000_000
 
 
-def gated_broadcast(df: DataFrame, bound: "int | None" = None) -> DataFrame:
+def gated_broadcast(
+    df: DataFrame, bound: "int | None" = None, rows: "int | None" = None
+) -> DataFrame:
     """Size-gated broadcast hint (the ``dedup_against`` pattern made
-    automatic): probe the frame with a LIMIT bound+1 count and hint
-    ``F.broadcast`` only when it fits; otherwise return it unhinted so
-    the join degrades to shuffle. Callers pass frames derived from a
-    localCheckpoint (dedup_clusters output), so the probe is a cheap
-    early-exit scan of materialized partitions, not a lineage replay."""
+    automatic): hint ``F.broadcast`` only when the frame has at most
+    ``bound`` rows; otherwise return it unhinted so the join degrades to
+    shuffle. ``rows`` is an upper bound on the frame's row count when the
+    caller already knows one (a ``dedup_clusters`` node count bounds the
+    cluster frame and every frame filtered from it): the decision then
+    needs no Spark action. Without it the frame is probed with a LIMIT
+    bound+1 count; callers pass frames derived from a localCheckpoint,
+    so the probe is a cheap early-exit scan of materialized partitions,
+    not a lineage replay."""
     if bound is None:
         bound = BROADCAST_ROW_BOUND
-    if df.limit(bound + 1).count() <= bound:
-        return F.broadcast(df)
-    return df
+    if rows is None:
+        rows = df.limit(bound + 1).count()
+    return F.broadcast(df) if rows <= bound else df
 
 
 def keep_list(docs: DataFrame, pairs: DataFrame) -> DataFrame:
@@ -670,7 +759,9 @@ def keep_list(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     clusters = dedup_clusters(pairs)
     drop = clusters.filter(F.col("doc_id") != F.col("cluster_id")).select("doc_id")
     return docs.select("doc_id").join(
-        gated_broadcast(drop.withColumn("k", F.lit(False))), "doc_id", "left"
+        gated_broadcast(drop.withColumn("k", F.lit(False)), rows=cluster_rows(clusters)),
+        "doc_id",
+        "left",
     ).select("doc_id", F.coalesce("k", F.lit(True)).alias("keep"))
 
 
@@ -875,7 +966,9 @@ def keep_best(
     from pyspark.sql import Window
 
     clusters = dedup_clusters(pairs)
-    labeled = docs.join(gated_broadcast(clusters), "doc_id", "left").select(
+    labeled = docs.join(
+        gated_broadcast(clusters, rows=cluster_rows(clusters)), "doc_id", "left"
+    ).select(
         "doc_id",
         F.coalesce("cluster_id", "doc_id").alias("cid"),
         F.col(score_col).alias("_s"),

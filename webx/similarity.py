@@ -611,7 +611,7 @@ def semdedup(
     through the size gate (``gated_broadcast``) — at SemDeDup's own
     design point the paper prunes up to 50% of the corpus, so the drop
     frame can be corpus-scale and must be allowed to shuffle."""
-    from webx.dedup import dedup_clusters, gated_broadcast
+    from webx.dedup import cluster_rows, dedup_clusters, gated_broadcast
 
     spark = emb.sparkSession
     cent = spark.createDataFrame(
@@ -647,7 +647,13 @@ def semdedup(
     )
     return (
         emb.select("vec_id")
-        .join(gated_broadcast(drop.withColumn("k", F.lit(False))), "vec_id", "left")
+        .join(
+            gated_broadcast(
+                drop.withColumn("k", F.lit(False)), rows=cluster_rows(clusters)
+            ),
+            "vec_id",
+            "left",
+        )
         .select("vec_id", F.coalesce("k", F.lit(True)).alias("keep"))
     )
 
