@@ -14,6 +14,10 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SUBMIT_PARTITIONS = 8
 
 
+def pytest_configure(config):
+    config.addinivalue_line("markers", "slow: a long-running end-to-end check")
+
+
 @pytest.fixture(scope="session")
 def spark():
     from pyspark.sql import SparkSession

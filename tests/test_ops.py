@@ -385,6 +385,10 @@ def test_duplicate_spans_hand_case(spark):
             # doc 4: internal repeat "m n o ... m n o" duplicates itself
             (4, "m n o gap1 gap2 m n o"),
             (5, "tiny doc"),  # < k tokens
+            (6, None),  # NULL text reads as "": no windows
+            # upper-cased copy of the shared run: tokens are lowercased,
+            # so all 4 windows are duplicates of docs 1 and 2
+            (7, "A B C D E F"),
         ],
         "doc_id long, text string",
     )
@@ -395,6 +399,8 @@ def test_duplicate_spans_hand_case(spark):
     assert got[3]["n_dup_grams"] == 0 and got[3]["n_dup_spans"] == 0
     assert got[4]["n_dup_grams"] == 2 and got[4]["n_dup_spans"] == 2
     assert got[5]["n_grams"] == 0 and got[5]["n_dup_spans"] == 0
+    assert tuple(got[6])[1:] == (0, 0, 0)
+    assert tuple(got[7])[1:] == (4, 4, 1)
 
 
 def test_duplicate_spans_hashed_matches_string_variant(spark):
@@ -419,6 +425,8 @@ def test_remove_duplicate_spans_keep_first(spark):
             (3, "solo x y z w"),             # untouched
             (4, "t"),                        # < k tokens
             (5, ""),                         # empty
+            (6, None),                       # NULL reads as empty
+            (7, "A B C D E tail7"),          # lowercased: a third occurrence
         ],
         "doc_id long, text string",
     )
@@ -429,6 +437,8 @@ def test_remove_duplicate_spans_keep_first(spark):
     assert got[3]["text"] == "solo x y z w" and got[3]["n_removed"] == 0
     assert got[4]["text"] == "t" and got[4]["n_tokens"] == 1
     assert got[5]["text"] == "" and got[5]["n_tokens"] == 0
+    assert tuple(got[6])[1:] == ("", 0, 0)
+    assert got[7]["text"] == "tail7" and got[7]["n_removed"] == 5
 
 
 def test_remove_duplicate_spans_intra_doc_repeat(spark):

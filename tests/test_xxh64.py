@@ -1,5 +1,6 @@
 """Bit-identity of webx.xxh64 (pure Python + numpy) vs Spark's xxhash64,
-and equality of the two minhash_signatures implementations.
+and of the MinHash/SimHash numpy kernels vs a plain-Python reference
+built only from the scalar webx.xxh64 functions.
 
 The whole exact-oracle story for the hash-based dedup queries rests on
 these invariants: the DuckDB SQL port (webx/oracle_xxh64.py) is itself
@@ -9,12 +10,16 @@ the JVM here — so Spark, numpy, and DuckDB all compute the same bits.
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
+from tests.test_word_ngrams import _py_word_ngrams
 from webx import xxh64 as X
+from webx.textstats import WS_SPLIT
 
 STRS = [
     "",
@@ -100,8 +105,74 @@ def test_minhash_slots_np():
             assert int(mat[r, i]) == X.hash_int(i, inner)
 
 
+def _py_token_hashes(text) -> list:
+    """Spark's ``xxhash64`` of each ``split(trim(text), WS_SPLIT)`` token
+    (trim strips spaces only); NULL text has no tokens."""
+    if text is None:
+        return []
+    return [X.hash_bytes(t.encode("utf-8")) for t in re.split(WS_SPLIT, text.strip(" "))]
+
+
+def _fold(values, seed: int = X.SPARK_SEED) -> int:
+    """Spark's multi-argument / array ``xxhash64``: a seed-42 chain of
+    hash_long over the values."""
+    for v in values:
+        seed = X.hash_long(v & X.M64, seed)
+    return seed
+
+
+def _py_minhash(text, n_hashes: int, k: int = 3) -> list:
+    th = _py_token_hashes(text)
+    if len(th) >= k:
+        shingles = [_fold(th[i : i + k]) for i in range(len(th) - k + 1)]
+    else:
+        shingles = [_fold(th)]
+    return [
+        min(X.to_signed(X.hash_int(i, X.hash_long(h))) for h in shingles)
+        for i in range(n_hashes)
+    ]
+
+
+def _py_simhash(text) -> int:
+    th = _py_token_hashes(text)
+    bits = sum(
+        1 << b
+        for b in range(64)
+        if sum(1 if (h >> b) & 1 else -1 for h in th) > 0
+    )
+    return X.to_signed(bits)
+
+
+def _py_minhash_neardup(rows, threshold: float, n_hashes=64, bands=16, k=3) -> dict:
+    """MinHash → banded LSH → exact Jaccard verify, in plain Python:
+    {(id_a, id_b): jaccard}."""
+    rpb = n_hashes // bands
+    buckets: dict = {}
+    for doc_id, text in rows:
+        sig = _py_minhash(text, n_hashes, k)
+        for b in range(bands):
+            bh = X.hash_int(b, _fold(sig[b * rpb : (b + 1) * rpb]))
+            buckets.setdefault((b, bh), set()).add(doc_id)
+    cand = {
+        (a, b)
+        for ids in buckets.values()
+        for a in ids
+        for b in ids
+        if a < b
+    }
+    text_of = dict(rows)
+    out = {}
+    for a, b in cand:
+        ga, gb = (set(_py_word_ngrams(text_of[i], k, lower=False)) for i in (a, b))
+        j = len(ga & gb) / len(ga | gb)
+        if j >= threshold:
+            out[(a, b)] = j
+    return out
+
+
 @pytest.mark.parametrize("n_hashes", [16, 64])
 def test_minhash_impls_identical(spark, n_hashes):
+    """The numpy signature kernel equals the plain-Python reference."""
     from webx.dedup import minhash_signatures
 
     texts = [
@@ -110,24 +181,20 @@ def test_minhash_impls_identical(spark, n_hashes):
         (2, "the quick brown fox jumps over the lazy dog again and"),
         (3, "short"),
         (4, ""),
-        (5, None),  # NULL text: both impls hash the empty token fold
+        (5, None),  # NULL text: the empty token fold
+        (6, "\tleading tab  then\r\nmixed whitespace "),
+        (7, "two words"),  # fewer than k tokens
     ]
     docs = spark.createDataFrame(texts, "doc_id long, text string")
-    a = {
-        r["doc_id"]: r["sig"]
-        for r in minhash_signatures(docs, n_hashes, impl="numpy").collect()
-    }
-    b = {
-        r["doc_id"]: r["sig"]
-        for r in minhash_signatures(docs, n_hashes, impl="sql").collect()
-    }
-    assert a == b
-    assert len(a) == len(texts)
+    got = {r["doc_id"]: r["sig"] for r in minhash_signatures(docs, n_hashes).collect()}
+    assert got == {i: _py_minhash(t, n_hashes) for i, t in texts}
 
 
 def test_minhash_neardup_identical_pairs(spark):
-    """Full pipeline: numpy and sql signature impls produce the same
-    verified near-dup pairs."""
+    """Full pipeline: the same verified near-dup pairs and Jaccard values
+    as the plain-Python MinHash → LSH → verify reference. Every pair of
+    the 30 base docs sits exactly at the 0.5 threshold, so which of them
+    survive depends on each band hash."""
     from webx.dedup import minhash_neardup
 
     rows = []
@@ -137,19 +204,16 @@ def test_minhash_neardup_identical_pairs(spark):
     rows.append((100, rows[3][1]))  # exact dup of doc 3
     rows.append((101, rows[5][1] + " extra"))  # near dup of doc 5
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    a = sorted(
-        (r["id_a"], r["id_b"])
-        for r in minhash_neardup(docs, threshold=0.5, impl="numpy").collect()
-    )
-    b = sorted(
-        (r["id_a"], r["id_b"])
-        for r in minhash_neardup(docs, threshold=0.5, impl="sql").collect()
-    )
-    assert a == b
-    assert (3, 100) in a and (5, 101) in a
+    got = {
+        (r["id_a"], r["id_b"]): r["jaccard"]
+        for r in minhash_neardup(docs, threshold=0.5).collect()
+    }
+    assert got == _py_minhash_neardup(rows, threshold=0.5)
+    assert (3, 100) in got and (5, 101) in got
 
 
 def test_simhash_impls_identical(spark):
+    """The numpy SimHash kernel equals the plain-Python reference."""
     from webx.dedup import simhash
 
     texts = [
@@ -159,8 +223,9 @@ def test_simhash_impls_identical(spark):
         (3, "x"),
         (4, ""),
         (5, None),
+        (6, "\tleading tab  then\r\nmixed whitespace "),
     ]
     docs = spark.createDataFrame(texts, "doc_id long, text string")
-    a = {r["doc_id"]: r["simhash"] for r in simhash(docs, impl="numpy").collect()}
-    b = {r["doc_id"]: r["simhash"] for r in simhash(docs, impl="sql").collect()}
-    assert a == b and len(a) == len(texts)
+    got = {r["doc_id"]: r["simhash"] for r in simhash(docs).collect()}
+    assert got == {i: _py_simhash(t) for i, t in texts}
+    assert got[5] == 0

@@ -8,11 +8,11 @@ require (groupBy fingerprint / band bucket).
 
 Scale notes:
 * exact dedup = one hash-aggregate shuffle on the fingerprint.
-* MinHash = ONE expensive pass per row (shingle + hash each shingle once);
-  the 64 signature slots are cheap two-long rehashes ``xxhash64(h, i)``
-  folded over the shingle-hash array with a single ``aggregate`` whose
-  first argument is evaluated once — never nest the expensive array inside
-  a per-seed lambda, or Catalyst re-evaluates it per seed.
+* MinHash and SimHash = ONE narrow JVM projection per row (the per-token
+  ``xxhash64``, ``_token_hashes``); the shingle folds, the 64 slot
+  rehashes with their signed min, and the SimHash bit counters run as
+  vectorized uint64 numpy kernels over each Arrow batch (webx/xxh64.py
+  mirrors Spark's XXH64 bit for bit).
 * LSH candidates come from ``groupBy(band, band_hash)`` + per-bucket pair
   expansion — signatures are computed once (no self-join recompute), cost
   is bounded by bucket sizes, not corpus²; ``max_bucket`` caps pathological
@@ -28,8 +28,6 @@ import weakref
 from pyspark.sql import DataFrame, Observation, functions as F
 
 from webx.textstats import WS_SPLIT
-
-_MAX_LONG = (1 << 63) - 1
 
 #: Default cap on LSH bucket size. A bucket of n ids expands to n(n-1)/2
 #: candidate pairs inside ONE task; at crawl scale boilerplate-identical
@@ -137,52 +135,31 @@ def _window_joins(toks, n: int) -> list:
     )
 
 
-def _shingle_hashes(col="text", k: int = 3):
-    """64-bit k-gram shingle hashes WITHOUT building shingle strings:
-    each token is string-hashed once (``xxhash64(tok)``), a shingle hash
-    is the seed-42 fold of its k token hashes (``xxhash64(th_i, …,
-    th_{i+k-1})``). Cheaper than hashing concatenated shingle strings
-    (tokens ≪ shingles bytes-wise) and — the real point — exactly
-    mirrorable in the DuckDB oracle as flat 64-bit arithmetic
-    (webx/oracles.py) instead of per-byte string hashing per shingle.
-    Duplicate shingles are NOT removed: the signature aggregate is a
-    min, which duplicates cannot change. Docs with fewer than k tokens
-    hash the whole token-hash array (``xxhash64(th)`` folds array
-    elements with the same seed-42 chain)."""
-    toks = F.split(F.trim(F.col(col)), WS_SPLIT)
-    th = F.transform(toks, lambda t: F.xxhash64(t))
-    n = F.size(th)
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))  # guard: n<k rows take the otherwise-branch
-    win = F.transform(
-        idx,
-        lambda i: F.xxhash64(*[F.element_at(th, i + j + 1) for j in range(k)]),
+def _token_hashes(col: str = "text"):
+    """Per-token ``xxhash64`` of ``split(trim(col), WS_SPLIT)``: the one
+    JVM-side projection MinHash and SimHash share, so strings never cross
+    into Python. NULL text gives a NULL array."""
+    return F.transform(
+        F.split(F.trim(F.col(col)), WS_SPLIT), lambda t: F.xxhash64(t)
     )
-    return F.when(n >= k, win).otherwise(F.array(F.xxhash64(th)))
 
 
 def minhash_signatures(
-    docs: DataFrame, n_hashes: int = 64, shingle_k: int = 3, impl: str = "numpy"
+    docs: DataFrame, n_hashes: int = 64, shingle_k: int = 3
 ) -> DataFrame:
     """(doc_id, sig: array<bigint>) — sig[i] = min over shingles s of
-    ``xxhash64(xxhash64(s), i)`` (signed-long min, matching ``least``).
+    ``xxhash64(h(s), i)`` (signed-long min, matching ``least``), where
+    h(s) is the seed-42 ``xxhash64`` fold of the shingle's k token hashes.
+    A document with fewer than k tokens is one shingle: the fold of all
+    its token hashes (NULL text folds none).
 
-    Two bit-identical implementations (equality covered in
-    tests/test_xxh64.py):
-
-    * ``numpy`` (default): the shingle string hash stays JVM-side (one
-      narrow ``transform``/``xxhash64`` projection — strings never cross
-      into Python), and the n_hashes-slot rehash+min fold runs as one
-      vectorized uint64 matrix op per Arrow batch inside ``mapInPandas``
-      (webx/xxh64.py mirrors Spark's XXH64 bit-for-bit). The Catalyst
-      fold this replaces was the bench's biggest line item (15.4s of
-      48.5s at sf0.1) — the interpreted per-shingle×per-slot lambda is
-      ~10× slower than the batched kernel.
-    * ``sql``: the original pure-Catalyst ``aggregate``/``zip_with``
-      fold — zero Python, kept for A/B and as the no-Arrow fallback.
-
-    Either way: one narrow pass, no shuffle."""
-    if impl == "sql":
-        return _minhash_signatures_sql(docs, n_hashes, shingle_k)
+    The token hashes are one narrow JVM projection (``_token_hashes``);
+    the shingle folds and the n_hashes-slot rehash+min fold run as one
+    vectorized uint64 matrix op per Arrow batch inside ``mapInPandas``.
+    The Catalyst ``aggregate`` fold this replaced was the bench's biggest
+    line item (15.4s of 48.5s at sf0.1); the kernel is checked against a
+    plain-Python reference built on the scalar webx.xxh64 functions
+    (tests/test_xxh64.py). One narrow pass, no shuffle."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
@@ -195,9 +172,7 @@ def minhash_signatures(
     # warms up — a one-shot query pays 5-8× (measured: 15-20s vs 2.7s at
     # sf0.1 for the first three invocations). The numpy kernel has no
     # warm-up cliff.
-    toks = F.split(F.trim(F.col("text")), WS_SPLIT)
-    th = F.transform(toks, lambda t: F.xxhash64(t))
-    src = docs.select("doc_id", th.alias("th"))
+    src = docs.select("doc_id", _token_hashes().alias("th"))
     schema = T.StructType(
         [
             T.StructField("doc_id", T.LongType()),
@@ -209,8 +184,7 @@ def minhash_signatures(
     def fn(batches):
         for p in batches:
             # NULL text → NULL token array from Arrow; treat as token-less
-            # (signature = the empty-fold shingle, matching the sql impl's
-            # null-skipping xxhash64 fold — covered in test_xxh64)
+            # (signature = the empty-fold shingle — covered in test_xxh64)
             arrs = [
                 np.asarray(a if a is not None else [], dtype=np.int64)
                 for a in p["th"]
@@ -233,10 +207,13 @@ def minhash_signatures(
 
 
 def _shingle_hashes_np(arrs, k: int):
-    """Vectorized _shingle_hashes: per-row token-hash arrays → one flat
-    uint64 array of shingle hashes, k-window seed-42 folds computed as k
-    chained hash_long_np passes over ALL windows at once. Rows with < k
-    tokens contribute one whole-array fold (tiny Python loop, rare)."""
+    """Per-row token-hash arrays → one flat uint64 array of shingle
+    hashes, k-window seed-42 folds computed as k chained hash_long_np
+    passes over ALL windows at once. Rows with < k tokens contribute one
+    whole-array fold (tiny Python loop, rare). Folding token hashes
+    rather than hashing shingle strings keeps the DuckDB oracle
+    (webx/oracles.py) flat 64-bit arithmetic. Duplicate shingles are
+    kept: the signature is a min, which duplicates cannot change."""
     import numpy as np
 
     from webx import xxh64 as X
@@ -274,26 +251,6 @@ def _shingle_hashes_np(arrs, k: int):
     return out
 
 
-def _minhash_signatures_sql(
-    docs: DataFrame, n_hashes: int = 64, shingle_k: int = 3
-) -> DataFrame:
-    """Pure-Catalyst signature fold: each shingle hashed ONCE (token-hash
-    fold, see ``_shingle_hashes``), the per-slot rehash is a cheap
-    two-long rehash folded with a single ``aggregate`` whose input array
-    is evaluated once per row."""
-    h0 = _shingle_hashes(k=shingle_k)
-    seeds = F.sequence(F.lit(0), F.lit(n_hashes - 1))  # constant-folded
-    init = F.array_repeat(F.lit(_MAX_LONG).cast("long"), n_hashes)
-    sig = F.aggregate(
-        h0,
-        init,
-        lambda acc, h: F.zip_with(
-            acc, seeds, lambda m, i: F.least(m, F.xxhash64(h, i))
-        ),
-    )
-    return docs.select("doc_id", sig.alias("sig"))
-
-
 def _observe_drops(buckets: DataFrame, max_bucket: int, name: str) -> DataFrame:
     """Attach an Observation counting over-cap buckets/ids, then filter
     them out. The CollectMetrics node sits above the groupBy and below
@@ -320,11 +277,15 @@ def bucket_pairs(
 ) -> DataFrame:
     """Shared LSH bucket→candidate-pair expansion: group ``df`` by
     ``bucket_cols``, expand the ordered (id_a < id_b) pairs within each
-    bucket, distinct across buckets. Buckets larger than ``max_bucket``
-    (default ``DEFAULT_MAX_BUCKET``; ``None`` disables) are dropped and
-    counted — read the count with ``dropped_bucket_metrics(
-    drop_metrics_name)`` after the first action. Used by the MinHash
-    banding here and the embedding near-dup tables (webx/similarity.py)."""
+    bucket, distinct across buckets. ``id_col`` may be a struct whose
+    first field is the id and whose other fields are a payload the pair
+    needs (SimHash carries its signature this way); pairs are then
+    ordered by the id first and come out as ``id_a``/``id_b`` structs.
+    Buckets larger than ``max_bucket`` (default ``DEFAULT_MAX_BUCKET``;
+    ``None`` disables) are dropped and counted — read the count with
+    ``dropped_bucket_metrics(drop_metrics_name)`` after the first action.
+    Used by the MinHash banding and SimHash chunks here and the embedding
+    near-dup tables (webx/similarity.py)."""
     buckets = (
         df.groupBy(*bucket_cols)
         .agg(F.sort_array(F.collect_set(id_col)).alias("ids"))
@@ -469,7 +430,6 @@ def minhash_neardup(
     threshold: float = 0.7,
     max_bucket: int | None = DEFAULT_MAX_BUCKET,
     persist_candidates: bool = True,
-    impl: str = "numpy",
 ) -> DataFrame:
     """Full MinHash→LSH→verify pipeline → (id_a, id_b, jaccard).
 
@@ -487,59 +447,27 @@ def minhash_neardup(
     be survivable, callers should instead persist to a reliable store
     and own the unpersist lifecycle.)"""
     rows_per_band = n_hashes // bands
-    sigs = minhash_signatures(docs, n_hashes, shingle_k, impl)
+    sigs = minhash_signatures(docs, n_hashes, shingle_k)
     pairs = lsh_candidate_pairs(sigs, bands, rows_per_band, max_bucket)
     if persist_candidates:
         pairs = pairs.localCheckpoint(eager=False)
     return jaccard_verify(docs, pairs, shingle_k, threshold)
 
 
-def simhash(docs: DataFrame, col: str = "text", impl: str = "numpy") -> DataFrame:
+def simhash(docs: DataFrame, col: str = "text") -> DataFrame:
     """64-bit SimHash over whitespace tokens → (doc_id, simhash: bigint).
 
-    bit i set ⇔ sum over tokens of ±1 (sign of token-hash bit i) > 0.
-    Default ``numpy`` impl: per-token xxhash64 stays JVM-side, the 64
-    per-bit counters run as one vectorized bit-matrix reduction per Arrow
-    batch (the Catalyst 64-counter fold, kept as ``impl="sql"``, suffers
-    the same one-shot JIT-warm-up cliff as the MinHash fold)."""
-    if impl == "numpy":
-        return _simhash_np(docs, col)
-    toks = F.split(F.trim(F.col(col)), WS_SPLIT)
-    th = F.transform(toks, lambda t: F.xxhash64(t))
-    # bit masks 2^0..2^62, then the sign bit as min-long (two's complement)
-    masks = [1 << i for i in range(63)] + [-(1 << 63)]
-    mask_arr = F.array(*[F.lit(m).cast("long") for m in masks])
-    zeros = F.array_repeat(F.lit(0), 64)
-    counts = F.aggregate(
-        th,
-        zeros,
-        lambda acc, h: F.zip_with(
-            acc,
-            mask_arr,
-            lambda c, p: c + F.when(h.bitwiseAND(p) != 0, 1).otherwise(-1),
-        ),
-    )
-    val = F.aggregate(
-        F.zip_with(
-            counts,
-            mask_arr,
-            lambda c, p: F.when(c > 0, p).otherwise(F.lit(0).cast("long")),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    # NULL text folds to NULL; define it as simhash 0 (the no-token doc)
-    return docs.select("doc_id", F.coalesce(val, F.lit(0)).alias("simhash"))
-
-
-def _simhash_np(docs: DataFrame, col: str = "text") -> DataFrame:
+    bit i set ⇔ sum over tokens of ±1 (sign of token-hash bit i) > 0;
+    NULL text is the no-token document, simhash 0. The per-token
+    xxhash64 stays JVM-side (``_token_hashes``); the 64 per-bit counters
+    run as one vectorized bit-matrix reduction per Arrow batch (a
+    Catalyst 64-counter fold suffers the same one-shot JIT warm-up cliff
+    as the MinHash fold)."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
 
-    toks = F.split(F.trim(F.col(col)), WS_SPLIT)
-    th = F.transform(toks, lambda t: F.xxhash64(t))
-    src = docs.select("doc_id", th.alias("th"))
+    src = docs.select("doc_id", _token_hashes(col).alias("th"))
     schema = T.StructType(
         [
             T.StructField("doc_id", T.LongType()),
@@ -587,13 +515,12 @@ def simhash_neardup(
     """Band 64-bit simhash into 4×16-bit chunks (pigeonhole: hamming ≤ 3 ⇒
     some chunk equal) → bucket by chunk value → exact hamming filter.
 
-    Like LSH above, signatures are computed once and pairs come from a
-    groupBy bucket expansion, not a self-join; over-cap buckets are
+    Like LSH above, signatures are computed once and pairs come from the
+    shared ``bucket_pairs`` expansion, not a self-join; each id carries
+    its simhash as payload for the Hamming filter. Over-cap buckets are
     dropped and counted (``dropped_bucket_metrics("simhash")``)."""
-    sh = simhash(docs)
-    chunks = sh.select(
-        "doc_id",
-        "simhash",
+    chunks = simhash(docs).select(
+        F.struct(F.col("doc_id").alias("id"), F.col("simhash").alias("sh")).alias("doc"),
         F.explode(
             F.array(
                 *[
@@ -607,41 +534,14 @@ def simhash_neardup(
                 ]
             )
         ).alias("e"),
-    ).select("doc_id", "simhash", "e.chunk", "e.cv")
-    buckets = (
-        chunks.groupBy("chunk", "cv")
-        .agg(
-            F.sort_array(
-                F.collect_set(F.struct(F.col("doc_id").alias("id"), F.col("simhash").alias("sh")))
-            ).alias("ids")
-        )
-        .filter(F.size("ids") >= 2)
+    ).select("doc", "e.chunk", "e.cv")
+    cand = bucket_pairs(
+        chunks, ["chunk", "cv"], "doc", max_bucket, drop_metrics_name="simhash"
     )
-    if max_bucket is not None:
-        buckets = _observe_drops(buckets, max_bucket, "simhash")
-    pairs = F.flatten(
-        F.transform(
-            "ids",
-            lambda x, i: F.transform(
-                F.slice("ids", i + 2, F.size("ids")),
-                lambda y: F.struct(
-                    x["id"].alias("id_a"),
-                    y["id"].alias("id_b"),
-                    x["sh"].alias("sh_a"),
-                    y["sh"].alias("sh_b"),
-                ),
-            ),
-        )
-    )
-    cand = (
-        buckets.select(F.explode(pairs).alias("p"))
-        .select("p.id_a", "p.id_b", "p.sh_a", "p.sh_b")
-        .distinct()
-    )
-    ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    return cand.select("id_a", "id_b", ham.alias("hamming")).filter(
-        F.col("hamming") <= max_hamming
-    )
+    ham = F.bit_count(F.col("id_a.sh").bitwiseXOR(F.col("id_b.sh")))
+    return cand.select(
+        F.col("id_a.id").alias("id_a"), F.col("id_b.id").alias("id_b"), ham.alias("hamming")
+    ).filter(F.col("hamming") <= max_hamming)
 
 
 #: dedup_clusters output → its row count (the node count), recorded by
@@ -765,6 +665,42 @@ def keep_list(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     ).select("doc_id", F.coalesce("k", F.lit(True)).alias("keep"))
 
 
+def _span_tokens(text_col: str):
+    """Lowercased whitespace tokens of ``text_col``, NULL read as ""."""
+    return F.transform(
+        F.split(F.trim(F.coalesce(F.col(text_col), F.lit(""))), WS_SPLIT),
+        lambda t: F.lower(t),
+    )
+
+
+def _span_windows(
+    docs: DataFrame, k: int, text_col: str, hashed: bool = False
+) -> DataFrame:
+    """(doc_id, pos, g): one row per k-token window of ``_span_tokens``,
+    ``pos`` 1-based, ``g`` the window's single-space join (its xxhash64
+    with ``hashed``). Documents under k tokens give no rows. Shared by
+    ``duplicate_spans`` and ``remove_duplicate_spans``, which shuffle it
+    on ``g``."""
+    toks = _span_tokens(text_col)
+    cnt = F.size(toks)
+    win = lambda i: F.concat_ws(" ", F.slice(toks, i, k))
+    mk = (lambda i: F.xxhash64(win(i))) if hashed else win
+    wins = F.when(
+        cnt >= k,
+        F.transform(
+            F.sequence(F.lit(1), cnt - k + 1),
+            lambda i: F.struct(i.alias("pos"), mk(i).alias("g")),
+        ),
+    ).otherwise(
+        F.array().cast(
+            "array<struct<pos:int,g:" + ("bigint" if hashed else "string") + ">>"
+        )
+    )
+    return docs.select("doc_id", F.explode(wins).alias("p")).select(
+        "doc_id", "p.pos", "p.g"
+    )
+
+
 def duplicate_spans(
     docs: DataFrame,
     k: int = 13,
@@ -792,27 +728,7 @@ def duplicate_spans(
     uses the exact string form."""
     from pyspark.sql import Window
 
-    toks = F.transform(
-        F.split(F.trim(F.coalesce(F.col(text_col), F.lit(""))), WS_SPLIT),
-        lambda t: F.lower(t),
-    )
-    cnt = F.size(toks)
-    win = lambda i: F.concat_ws(" ", F.slice(toks, i, k))
-    mk = (lambda i: F.xxhash64(win(i))) if hashed else win
-    wins = F.when(
-        cnt >= k,
-        F.transform(
-            F.sequence(F.lit(1), cnt - k + 1),
-            lambda i: F.struct(i.alias("pos"), mk(i).alias("g")),
-        ),
-    ).otherwise(
-        F.array().cast(
-            "array<struct<pos:int,g:" + ("bigint" if hashed else "string") + ">>"
-        )
-    )
-    frame = docs.select("doc_id", F.explode(wins).alias("p")).select(
-        "doc_id", "p.pos", "p.g"
-    )
+    frame = _span_windows(docs, k, text_col, hashed)
     counts = frame.groupBy("g").agg(F.count("*").alias("c"))
     flagged = frame.join(counts, "g").select(
         "doc_id", "pos", (F.col("c") > 1).alias("dup")
@@ -862,34 +778,19 @@ def remove_duplicate_spans(
     fraction) → anti-join token positions → per-doc ordered rebuild."""
     from pyspark.sql import Window
 
-    toks = F.transform(
-        F.split(F.trim(F.coalesce(F.col(text_col), F.lit(""))), WS_SPLIT),
-        lambda t: F.lower(t),
-    )
-    cnt = F.size(toks)
-    wins = F.when(
-        cnt >= k,
-        F.transform(
-            F.sequence(F.lit(1), cnt - k + 1),
-            lambda i: F.struct(
-                i.alias("pos"), F.concat_ws(" ", F.slice(toks, i, k)).alias("g")
-            ),
-        ),
-    ).otherwise(F.array().cast("array<struct<pos:int,g:string>>"))
-    frame = docs.select("doc_id", F.explode(wins).alias("p")).select(
-        "doc_id", "p.pos", "p.g"
-    )
+    frame = _span_windows(docs, k, text_col)
     w = Window.partitionBy("g").orderBy("doc_id", "pos")
     later = frame.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") > 1)
     covered = later.select(
         "doc_id", F.explode(F.sequence("pos", F.col("pos") + (k - 1))).alias("tpos")
     ).distinct()
 
+    toks = _span_tokens(text_col)
+    nonblank = F.length(F.trim(F.coalesce(F.col(text_col), F.lit("")))) > 0
     tok_pos = docs.select(
         "doc_id",
         F.posexplode(
-            F.when(F.length(F.trim(F.coalesce(F.col(text_col), F.lit("")))) > 0, toks)
-            .otherwise(F.array().cast("array<string>"))
+            F.when(nonblank, toks).otherwise(F.array().cast("array<string>"))
         ).alias("tpos0", "tok"),
     ).select("doc_id", (F.col("tpos0") + 1).alias("tpos"), "tok")
     kept = tok_pos.join(covered, ["doc_id", "tpos"], "left_anti")
@@ -905,11 +806,7 @@ def remove_duplicate_spans(
     )
     totals = docs.select(
         "doc_id",
-        F.when(
-            F.length(F.trim(F.coalesce(F.col(text_col), F.lit("")))) > 0, F.size(toks)
-        )
-        .otherwise(F.lit(0))
-        .alias("n_tokens"),
+        F.when(nonblank, F.size(toks)).otherwise(F.lit(0)).alias("n_tokens"),
     )
     return totals.join(rebuilt, "doc_id", "left").select(
         "doc_id",
