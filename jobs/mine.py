@@ -14,9 +14,11 @@ non-text corpora — each an independent output table under --output:
     tables/       data-table cells, exact lane (tables.run_table_extraction)
     comments/     main vs user-comment text split (comments.split_comments)
 
-All lanes except interleaved and tables are pure whole-stage codegen and fuse into
-the page scan; each lane writes independently, so a failed lane re-runs
-alone (outputs are keyed by lane directory, overwrite is idempotent).
+The interleaved, contexts, tables and comments lanes each run one Arrow
+mapInPandas over the page scan; the other lanes are pure whole-stage
+codegen and fuse into it. Each lane writes independently, so a failed
+lane re-runs alone (outputs are keyed by lane directory, overwrite is
+idempotent).
 The scan is shared via an explicit .cache() only when --cache-pages is
 set — at crawl scale re-scanning parquet is usually cheaper than
 materializing pages in memory, so the default is re-scan (each lane's
@@ -64,7 +66,6 @@ def parse_args(argv):
                    help=f"comma list of {','.join(ALL_LANES)} or 'all'")
     p.add_argument("--cache-pages", action="store_true",
                    help="materialize pages once instead of re-scanning per lane")
-    p.add_argument("--require-alt", action="store_true", default=True)
     return p.parse_args(argv)
 
 
@@ -110,7 +111,7 @@ def main(argv=None) -> int:
         if lane == "captions":
             from webx.urls import image_captions
 
-            df = image_captions(pages, require_alt=args.require_alt)
+            df = image_captions(pages)
         elif lane == "interleaved":
             from webx.pipeline import run_interleave
 

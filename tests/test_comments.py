@@ -203,9 +203,9 @@ def test_editorial_review_pos_override():
 
 
 def test_pre_page_main_text_matches_flagship():
-    # r5 ADVICE fix: parts now go through the flagship decode dispatch —
-    # a page with a <pre> block (and no comment regions) must produce the
-    # exact flagship text, whitespace preserved
+    # parts decode through the flagship's _decode_spans — a page with a
+    # <pre> block (and no comment regions) must produce the exact
+    # flagship text, whitespace preserved
     from webx.extract import extract_batch
 
     html = (
@@ -246,3 +246,25 @@ def test_pre_inside_comment_region_preserved():
     text, com, _ = _split(html)
     assert "$ run --flag\n    out  put" in com
     assert "out  put" not in text
+
+
+def test_gnarly_main_text_matches_flagship():
+    # every lane decodes through the one document front: on a page with
+    # no comment region the main text IS the flagship text, including
+    # the effective codec of a charset-fallback page (fixture 40)
+    from webx.extract import extract_batch
+
+    fixdir = os.path.join(os.path.dirname(__file__), "fixtures", "gnarly")
+    pages = {}
+    for name in sorted(os.listdir(fixdir)):
+        if name.endswith(".html"):
+            with open(os.path.join(fixdir, name), "rb") as fh:
+                html = fh.read()
+            if not comment_regions(html):
+                pages[name] = html
+    assert len(pages) == 48 and "40_late_charset_decl.html" in pages
+    df = pd.DataFrame({"url": list(pages), "html": list(pages.values())})
+    got = split_comments_batch(df, CFG)
+    flag = extract_batch(df, CFG)
+    assert got["text"].tolist() == flag["text"].tolist()
+    assert got["comment_text"].tolist() == [""] * len(pages)

@@ -309,14 +309,14 @@ def test_detect_fused_gap_mode_falls_back(monkeypatch):
 
     seg = b"lorem ipsum dolor sit amet consectetur adipiscing elit " * 3
     html = (b"<div>" + seg + b"</div>") * 4  # 4 adjacent candidate blocks
-    _, ref, _ = ex._extract_doc_stage1(html, ExtractConfig(ckernels="off"))
+    _, ref = ex._extract_doc_stage1(html, ExtractConfig(ckernels="off"))
     assert any(s.last_block - s.first_block >= 2 for s in ref)
 
     def boom(*args, **kwargs):
         raise AssertionError("Python finalization ran on the C path")
 
     monkeypatch.setattr(ex, "merge_runs_table", boom)
-    _, spans, _ = ex._extract_doc_stage1(html, ExtractConfig())
+    _, spans = ex._extract_doc_stage1(html, ExtractConfig())
     assert spans == ref
     assert [s.score.hex() for s in spans] == [s.score.hex() for s in ref]
 
@@ -338,7 +338,7 @@ def _stage1_final_c(html: bytes, cfg):
     """The routing under test: _extract_doc_stage1's fused branch."""
     import webx.extract as ex
 
-    _, spans, _ = ex._extract_doc_stage1(html, cfg)
+    _, spans = ex._extract_doc_stage1(html, cfg)
     return spans
 
 
@@ -391,7 +391,7 @@ def test_detect_final_long_run_falls_back_to_raw():
     assert res[0] == "final"
     assert list(zip(res[4], res[5])) == [(0, 3)]  # one 4-block run
     spans = _stage1_final_c(html, cfg)
-    _, ref, _ = ex._extract_doc_stage1(html, ExtractConfig(ckernels="off"))
+    _, ref = ex._extract_doc_stage1(html, ExtractConfig(ckernels="off"))
     assert spans == ref == _stage1_final_ref(html, cfg)
     assert [s.score.hex() for s in spans] == [s.score.hex() for s in ref]
 

@@ -76,6 +76,19 @@ def test_gnarly_fixture_python_kernel_parity(name):
     assert _bits(extract_batch(df, CFG).iloc[0]) == _bits(off)
 
 
+def test_detect_meta_matches_extract():
+    """detect_batch and extract_batch share the document front, so their
+    meta agree row for row: html_bytes, n_blocks, truncated and the
+    EFFECTIVE codec (fixture 40 falls back to latin-1 in both)."""
+    from webx.extract import detect_batch
+
+    pages = [_read(name)[0] for name in PAGES]
+    df = pd.DataFrame({"url": PAGES, "html": pages})
+    meta = extract_batch(df, CFG)["meta"].tolist()
+    assert detect_batch(df, CFG)["meta"].tolist() == meta
+    assert meta[PAGES.index("40_late_charset_decl")]["charset"] == "latin-1"
+
+
 @pytest.mark.parametrize("ckernels", ["auto", "off"])
 def test_gnarly_scoring_uses_no_blas_reduction(monkeypatch, ckernels):
     """Span scores and conf come from an explicit left-to-right fold,

@@ -147,6 +147,13 @@ def test_charset_decodes_cells():
     )
     assert pdf["cell"].tolist() == ["Caf\xe9", "d\xe9tail"]
     assert pdf["header"].tolist() == [True, False]
+    # declared utf-8 but holding latin-1 bytes: cells decode with the
+    # effective codec of the document front, as the flagship text does
+    misdeclared = html.replace(b"iso-8859-1", b"utf-8")
+    pdf = tables_batch(
+        pd.DataFrame({"url": ["u"], "html": [misdeclared]}), ExtractConfig()
+    )
+    assert pdf["cell"].tolist() == ["Caf\xe9", "d\xe9tail"]
 
 
 def test_batch_emits_indices_in_order():

@@ -19,22 +19,23 @@ same split WITHOUT changing the flagship contract:
   close at the matching tag, not the first one; comment/CDATA and
   script/style/textarea islands hide opens, closes and depth changes
   (lexer precedence).
-* stage 1 + stage 2 run EXACTLY as the flagship; each surviving span
-  is then PARTITIONED against the regions by byte intersection (the
-  decode_span_pre shape): outside parts decode into ``text``, inside
-  parts into ``comment_text``. A span straddling the region boundary
-  contributes to both, split at the boundary — span granularity never
-  leaks chrome into either stream.
+* the document goes through the flagship's own front and stage 1
+  (webx/extract.py ``_extract_doc``: normalized, truncated bytes, the
+  EFFECTIVE codec, the same spans). Each surviving span is then
+  PARTITIONED against the regions by byte intersection: a part is a
+  ``Span`` with its parent's score and kind, and all parts of a page
+  decode in one flagship ``_decode_spans`` call — rawkept literal text,
+  ``<pre>``/``<listing>`` whitespace preservation, NFC, all of it.
+  Outside parts join into ``text``, inside parts into
+  ``comment_text``. A span straddling a region boundary contributes
+  to both, split at the boundary — span granularity never leaks chrome
+  into either stream.
 
 FROZEN: nested comment regions coalesce into the outermost range;
 unclosed containers run to EOF; self-closed opens create no region.
-Every part (main OR comment) decodes through the flagship's dispatch —
-``<xmp>``/``<plaintext>`` rawkept literal decode, ``<pre>``/``<listing>``
-whitespace preservation, else the collapse path — so on any span that
-does NOT straddle a comment region (one part = the whole span) the
-``text`` stream is byte-identical to the flagship, including rawkept
-and pre pages. A straddling span partitions at region boundaries and
-each part decodes by the same rules.
+On a span that does NOT straddle a comment region the one part IS the
+span, so on a page without comment regions ``text`` equals the
+flagship text.
 
 Scale shape: same narrow plan as run_extraction — pruned (url, html)
 scan, one Arrow mapInPandas, no shuffle; the region scan runs only on
@@ -44,22 +45,13 @@ documents whose bytes probe positive for the vocabulary.
 from __future__ import annotations
 
 import re
-import unicodedata as _unicodedata
 from typing import Iterable, Iterator, List, Optional, Tuple
 
 import pandas as pd
 
-from webx.charset import normalize_input_bytes, sniff_charset
 from webx.config import ExtractConfig
-from webx.extract import _extract_doc_stage1, resolve_strip
-from webx.recognize import (
-    decode_span_pre,
-    decode_span_rawkept,
-    decode_stripped,
-    has_rawkept,
-    pre_regions,
-    strip_markup,
-)
+from webx.detect import Span
+from webx.extract import _decode_spans, _extract_doc
 
 COMMENT_TOKENS = frozenset(
     b"comment comments review reviews discussion replies responses".split()
@@ -217,72 +209,35 @@ def comment_regions(html: bytes) -> Tuple[Tuple[int, int], ...]:
     return tuple(out)
 
 
-def _decode_part(
-    raw_doc: bytes, lo: int, hi: int, charset: str, preserved, strip, nfc: bool
-) -> str:
-    """One span part through the flagship's decode dispatch
-    (webx/extract.py _decode_spans): rawkept literal text, then
-    pre/listing whitespace preservation, else strip + collapse, then the
-    same NFC step. Keeps comment-lane parts byte-identical to flagship
-    span decodes."""
-    raw = raw_doc[lo:hi]
-    if has_rawkept(raw):
-        text = decode_span_rawkept(raw, charset)
-    elif preserved and any(rs < hi and re_ > lo for rs, re_ in preserved):
-        text = decode_span_pre(raw, charset, lo, preserved, strip)
-    else:
-        text = decode_stripped(strip(raw), charset)
-    if nfc and text and not text.isascii():  # ASCII is NFC-invariant
-        text = _unicodedata.normalize("NFC", text)
-    return text
-
-
 def split_comments_batch(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
-    out = {"url": [], "text": [], "comment_text": [], "n_comment_spans": []}
-    strip = resolve_strip(cfg.ckernels) or strip_markup
-    for url, html in zip(pdf["url"].tolist(), pdf["html"].tolist()):
-        main_parts: List[str] = []
-        com_parts: List[str] = []
-        n_com = 0
-        if html is not None and len(html) > 0:
-            raw_doc = normalize_input_bytes(bytes(html))[: cfg.limit_side_len]
-            charset = sniff_charset(raw_doc, cfg.default_charset)
-            regions = comment_regions(raw_doc)
-            preserved = pre_regions(raw_doc)
-            _, spans, _ = _extract_doc_stage1(raw_doc, cfg)
-            for s in spans:
-                if s.score < cfg.drop_score:
+    out = {
+        "url": pdf["url"].tolist(), "text": [], "comment_text": [], "n_comment_spans": [],
+    }
+    for raw in pdf["html"].tolist():
+        html, spans, meta, _ = _extract_doc(raw, None, cfg)
+        regions = comment_regions(html)
+        parts: List[Span] = []
+        inside = {}  # (start, end) of a comment part -> its span's index
+        for k, s in enumerate(spans):
+            seg = s.start
+            for rs, re_ in regions:
+                lo = max(rs, s.start)
+                hi = min(re_, s.end)
+                if hi <= lo:
                     continue
-                seg = s.start
-                hit = False
-                for rs, re_ in regions:
-                    lo = max(rs, s.start)
-                    hi = min(re_, s.end)
-                    if hi <= lo:
-                        continue
-                    if lo > seg:
-                        t = _decode_part(
-                            raw_doc, seg, lo, charset, preserved, strip, cfg.nfc
-                        )
-                        if t:
-                            main_parts.append(t)
-                    t = _decode_part(raw_doc, lo, hi, charset, preserved, strip, cfg.nfc)
-                    if t:
-                        com_parts.append(t)
-                        hit = True
-                    seg = hi
-                if seg < s.end:
-                    t = _decode_part(
-                        raw_doc, seg, s.end, charset, preserved, strip, cfg.nfc
-                    )
-                    if t:
-                        main_parts.append(t)
-                if hit:
-                    n_com += 1
-        out["url"].append(url)
-        out["text"].append(cfg.join_sep.join(main_parts))
-        out["comment_text"].append(cfg.join_sep.join(com_parts))
-        out["n_comment_spans"].append(n_com)
+                if lo > seg:
+                    parts.append(s._replace(start=seg, end=lo))
+                parts.append(s._replace(start=lo, end=hi))
+                inside[(lo, hi)] = k
+                seg = hi
+            if seg < s.end:
+                parts.append(s._replace(start=seg, end=s.end))
+        rows, _, _ = _decode_spans(html, parts, meta["charset"], cfg)
+        main = [r["text"] for r in rows if (r["start"], r["end"]) not in inside]
+        com = [r for r in rows if (r["start"], r["end"]) in inside]
+        out["text"].append(cfg.join_sep.join(main))
+        out["comment_text"].append(cfg.join_sep.join(r["text"] for r in com))
+        out["n_comment_spans"].append(len({inside[r["start"], r["end"]] for r in com}))
     return pd.DataFrame(out)
 
 

@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import re as _re
 import unicodedata as _unicodedata
-from typing import Iterable, Iterator, List, Optional, Tuple
+from typing import Iterable, Iterator, List, Tuple
 
 import numpy as np
 import pandas as pd
@@ -145,20 +145,9 @@ def resolve_detect_table(mode: str):
     return fn  # None when the kernel is unavailable in "auto"
 
 
-def _extract_doc_stage1(
-    html: Optional[bytes], cfg: ExtractConfig
-) -> Tuple[int, List[Span], dict]:
-    """Tokenize + detect one document. Returns (n_blocks, spans, meta)."""
-    if html is None:
-        html = b""
-    nbytes = len(html)
-    truncated = False
-    if nbytes > cfg.limit_side_len:
-        # DetResize limit_type=max analog (det_transforms.py:185-310):
-        # cap work per document, record the truncation in metadata.
-        html = html[: cfg.limit_side_len]
-        truncated = True
-    charset = sniff_charset(html, cfg.default_charset)
+def _extract_doc_stage1(html: bytes, cfg: ExtractConfig) -> Tuple[int, List[Span]]:
+    """Tokenize + detect one document's front bytes (``_doc_front``).
+    Returns (n_blocks, spans)."""
     fused = resolve_detect_final(cfg.ckernels)
     if fused is not None:
         # one C call: tokenize + scores + runs + finalize + expand +
@@ -181,34 +170,25 @@ def _extract_doc_stage1(
                 f_start, f_end, f_sc, f_head, f_first, f_last
             )
         ]
-    else:
-        # columnar block table straight from the tokenizer (the C kernel
-        # fills numpy columns directly; the Python path transposes once)
-        start, end, tlen, link, tags, heading, boiler = resolve_tokenize_table(
-            cfg.ckernels
-        )(html)
-        n_blocks = len(tlen)
-        if n_blocks:
-            scores = block_scores(tlen, link, tags, boiler, cfg)
-            spans = validate_spans(
-                expand_spans(
-                    html,
-                    merge_runs_table(
-                        start, end, tlen, heading, scores, cfg, link=link
-                    ),
-                    cfg.expand_ratio,
-                ),
-                len(html),
-            )
-        else:
-            spans = []
-    meta = {
-        "html_bytes": nbytes,
-        "n_blocks": n_blocks,
-        "truncated": truncated,
-        "charset": charset,
-    }
-    return n_blocks, spans, meta
+        return n_blocks, spans
+    # columnar block table straight from the tokenizer (the C kernel
+    # fills numpy columns directly; the Python path transposes once)
+    start, end, tlen, link, tags, heading, boiler = resolve_tokenize_table(
+        cfg.ckernels
+    )(html)
+    n_blocks = len(tlen)
+    if not n_blocks:
+        return 0, []
+    scores = block_scores(tlen, link, tags, boiler, cfg)
+    spans = validate_spans(
+        expand_spans(
+            html,
+            merge_runs_table(start, end, tlen, heading, scores, cfg, link=link),
+            cfg.expand_ratio,
+        ),
+        len(html),
+    )
+    return n_blocks, spans
 
 
 def _decode_spans(
@@ -269,29 +249,52 @@ def _decode_spans(
     return rows, joined, conf
 
 
-def _extract_doc(
-    raw: bytes, hint, cfg: ExtractConfig
-) -> Tuple[bytes, List[Span], dict, str]:
-    """Per-document front of both stages, shared by the batch ops:
-    input normalization, stage 1, charset resolution and one strict
+def _doc_front(raw, hint, cfg: ExtractConfig) -> Tuple[bytes, dict, str]:
+    """The one per-document front of every HTML lane (flagship,
+    interleave, detect, comments, markdown, tables): input
+    normalization, truncation, charset sniff, header hint and one strict
     decode. ``hint`` is the row's HTTP-header charset or None (see
-    extract_batch for precedence). Returns (truncated html, spans, meta,
-    charset status); ``meta["charset"]`` is the EFFECTIVE codec the
-    spans decode with."""
+    extract_batch for precedence). Returns (html, meta, charset status):
+    ``html`` is the normalized, truncated bytes every span offset
+    indexes, ``meta["charset"]`` is the EFFECTIVE codec — the one spans
+    decode with, so a misdeclared page cannot decode as mojibake while
+    its status says fallback — and ``meta["n_blocks"]`` is left for
+    stage 1. A NULL or empty page is status ``empty``."""
+    if raw is None or len(raw) == 0:
+        meta = {"html_bytes": 0, "n_blocks": 0, "truncated": False,
+                "charset": cfg.default_charset}
+        return b"", meta, "empty"
+    raw = bytes(raw)
     had_bom = raw[:2] in (b"\xff\xfe", b"\xfe\xff") or raw[:3] == b"\xef\xbb\xbf"
     html = normalize_input_bytes(raw)
-    _, spans, meta = _extract_doc_stage1(html, cfg)
+    nbytes = len(html)
+    # DetResize limit_type=max analog (det_transforms.py:185-310): cap
+    # work per document, record the truncation in metadata
+    html = html[: cfg.limit_side_len]
+    charset = sniff_charset(html, cfg.default_charset)
     if hint and not had_bom:
-        hinted = normalize_charset_name(hint)
-        if hinted is not None:
-            meta["charset"] = hinted
-    trunc_html = html[: cfg.limit_side_len]
-    # one strict decode establishes status + the EFFECTIVE codec; spans
-    # decode with that codec (a misdeclared page must not produce
-    # mojibake while status says fallback)
-    _, cs_status, codec = decode_bytes(trunc_html, meta["charset"])
-    meta["charset"] = codec
-    return trunc_html, spans, meta, cs_status
+        charset = normalize_charset_name(hint) or charset
+    _, cs_status, codec = decode_bytes(html, charset)
+    meta = {
+        "html_bytes": nbytes,
+        "n_blocks": 0,
+        "truncated": nbytes > cfg.limit_side_len,
+        "charset": codec,
+    }
+    return html, meta, cs_status
+
+
+def _extract_doc(raw, hint, cfg: ExtractConfig) -> Tuple[bytes, List[Span], dict, str]:
+    """The front, then stage 1 → (html, spans, meta, charset status)."""
+    html, meta, cs_status = _doc_front(raw, hint, cfg)
+    meta["n_blocks"], spans = _extract_doc_stage1(html, cfg)
+    return html, spans, meta, cs_status
+
+
+def _hints(pdf: pd.DataFrame, charset_col: "str | None"):
+    if charset_col and charset_col in pdf.columns:
+        return pdf[charset_col].tolist()
+    return [None] * len(pdf)
 
 
 def extract_batch(
@@ -305,35 +308,17 @@ def extract_batch(
     ``charset_col`` names a per-row HTTP-header charset hint column
     (e.g. read_warc(with_charset=True)); WHATWG precedence applies —
     a BOM wins, then the header hint, then the in-document meta."""
-    urls = pdf["url"].tolist()
-    htmls = pdf["html"].tolist()
-    hints = (
-        pdf[charset_col].tolist()
-        if charset_col and charset_col in pdf.columns
-        else None
-    )
     out = {
-        "url": urls,
+        "url": pdf["url"].tolist(),
         "text": [],
         "spans": [],
         "conf": [],
         "status": [],
         "meta": [],
     }
-    for i, html in enumerate(htmls):
-        if html is None or len(html) == 0:
-            out["text"].append("")
-            out["spans"].append([])
-            out["conf"].append(0.0)
-            out["status"].append("empty")
-            out["meta"].append(
-                {"html_bytes": 0, "n_blocks": 0, "truncated": False, "charset": cfg.default_charset}
-            )
-            continue
-        trunc_html, spans, meta, cs_status = _extract_doc(
-            bytes(html), hints[i] if hints is not None else None, cfg
-        )
-        rows, joined, conf = _decode_spans(trunc_html, spans, meta["charset"], cfg)
+    for raw, hint in zip(pdf["html"].tolist(), _hints(pdf, charset_col)):
+        html, spans, meta, cs_status = _extract_doc(raw, hint, cfg)
+        rows, joined, conf = _decode_spans(html, spans, meta["charset"], cfg)
         out["text"].append(joined)
         out["spans"].append(rows)
         out["conf"].append(conf)
@@ -360,16 +345,11 @@ def make_extract_fn(
 
 
 def detect_batch(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
-    """Stage-1-only batch op → (url, spans[start,end,score,kind], meta)."""
+    """Stage-1-only batch op → (url, spans[start,end,score,kind], meta);
+    ``meta`` equals extract_batch's for the same row."""
     out = {"url": pdf["url"].tolist(), "spans": [], "meta": []}
-    for html in pdf["html"].tolist():
-        if html is None or len(html) == 0:
-            out["spans"].append([])
-            out["meta"].append(
-                {"html_bytes": 0, "n_blocks": 0, "truncated": False, "charset": cfg.default_charset}
-            )
-            continue
-        _, spans, meta = _extract_doc_stage1(normalize_input_bytes(bytes(html)), cfg)
+    for raw in pdf["html"].tolist():
+        _, spans, meta, _ = _extract_doc(raw, None, cfg)
         out["spans"].append(
             [{"start": s.start, "end": s.end, "score": s.score, "kind": s.kind} for s in spans]
         )
@@ -416,17 +396,10 @@ def interleave_batch(
     boilerplate — link farms, nav — keep spans separate, so the
     common figure-between-sections layout interleaves exactly)."""
     out = {"url": [], "seq": [], "kind": [], "text": [], "src": [], "alt": []}
-    hints = (
-        pdf[charset_col].tolist()
-        if charset_col and charset_col in pdf.columns
-        else None
-    )
-    for i, (url, html) in enumerate(zip(pdf["url"].tolist(), pdf["html"].tolist())):
-        if html is None or len(html) == 0:
-            continue
-        trunc, spans, meta, _ = _extract_doc(
-            bytes(html), hints[i] if hints is not None else None, cfg
-        )
+    for url, raw, hint in zip(
+        pdf["url"].tolist(), pdf["html"].tolist(), _hints(pdf, charset_col)
+    ):
+        trunc, spans, meta, _ = _extract_doc(raw, hint, cfg)
         codec = meta["charset"]
         rows, _, _ = _decode_spans(trunc, spans, codec, cfg)
         items: List[tuple] = [(r["start"], "text", r["text"], None, None) for r in rows]

@@ -4,9 +4,9 @@ The flagship extractor flattens a page to plain text; training corpora
 increasingly keep lightweight STRUCTURE (headings as ``#`` prefixes,
 paragraph breaks as blank lines — what every "HTML to markdown" crawl
 pipeline emits, e.g. the markdown variants of RefinedWeb/FineWeb
-pipelines). This lane reuses the exact same two-stage machinery
-(tokenize → detect → decode; webx/extract.py) and renders the surviving
-spans instead of joining them:
+pipelines). This lane reuses the flagship's machinery (the shared
+document front, tokenize → detect → decode; webx/extract.py) and renders
+the surviving spans instead of joining them:
 
 * heading spans get ``'#' * level + ' '`` — the level sniffed from the
   opening ``<h1>``-``<h6>`` tag immediately preceding the span in the
@@ -27,13 +27,12 @@ shape `save_res` (tools/infer/text/predict_system.py:119-137).
 from __future__ import annotations
 
 import re
-from typing import Iterable, Iterator, Optional, Tuple
+from typing import Iterable, Iterator, Optional
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
-from webx.charset import sniff_charset
 from webx.config import ExtractConfig
 from webx.detect import (
     Span,
@@ -42,7 +41,7 @@ from webx.detect import (
     validate_spans,
     weighted_mean,
 )
-from webx.extract import _decode_spans, resolve_tokenize_table
+from webx.extract import _decode_spans, _doc_front, resolve_tokenize_table
 
 _H_TAG_RE = re.compile(rb"<[hH]([1-6])[^>]*>")
 _LOOKBACK = 80  # bytes: expand_spans only widens into whitespace, so the
@@ -62,24 +61,20 @@ def _heading_level(html: bytes, start: int) -> Optional[int]:
 
 
 def _structured_spans(html: bytes, cfg: ExtractConfig):
-    """Stage 1 with STRUCTURE kept: identical tokenize/score/threshold
-    arithmetic to the flagship (webx/extract.py:_extract_doc_stage1),
-    but candidate runs BREAK at heading↔content transitions instead of
-    merging across them, so each heading becomes its own span. Heading
-    spans are exempt from ``min_span_chars`` (an ``<h1>`` is naturally
-    short; a structure-preserving renderer must not drop it), content
-    spans keep the flagship floor."""
-    truncated = False
-    if len(html) > cfg.limit_side_len:
-        html = html[: cfg.limit_side_len]
-        truncated = True
-    charset = sniff_charset(html, cfg.default_charset)
+    """Stage 1 with STRUCTURE kept, over the bytes the shared document
+    front (webx/extract.py ``_doc_front``) hands every HTML lane: the
+    flagship's tokenize/score/threshold arithmetic, with ONE different
+    run rule — candidate runs BREAK at heading↔content transitions
+    instead of merging across them, so each heading becomes its own
+    span. Heading spans are exempt from ``min_span_chars`` (an ``<h1>``
+    is naturally short; a structure-preserving renderer must not drop
+    it), content spans keep the flagship floor."""
     start, end, tlen, link, tags, heading, boiler = resolve_tokenize_table(
         cfg.ckernels
     )(html)
     n = len(tlen)
     if n == 0:
-        return html, [], charset, truncated
+        return []
     scores = block_scores(tlen, link, tags, boiler, cfg)
     cand = (scores >= cfg.binary_thresh) & (tlen >= cfg.min_block_chars)
     sl = scores.tolist()
@@ -113,23 +108,17 @@ def _structured_spans(html: bytes, cfg: ExtractConfig):
         i = j + 1
     if len(spans) > cfg.max_candidates:
         spans = spans[: cfg.max_candidates]
-    spans = validate_spans(
+    return validate_spans(
         expand_spans(html, spans, cfg.expand_ratio), len(html)
     )
-    return html, spans, charset, truncated
 
 
 def render_markdown_batch(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
     out = {"url": pdf["url"].tolist(), "markdown": [], "n_headings": [], "status": []}
-    for html in pdf["html"].tolist():
-        if html is None or len(html) == 0:
-            out["markdown"].append("")
-            out["n_headings"].append(0)
-            out["status"].append("empty")
-            continue
-        html = bytes(html)
-        html, spans, charset, _ = _structured_spans(html, cfg)
-        rows, _, _ = _decode_spans(html, spans, charset, cfg)
+    for raw in pdf["html"].tolist():
+        html, meta, cs_status = _doc_front(raw, None, cfg)
+        spans = _structured_spans(html, cfg)
+        rows, _, _ = _decode_spans(html, spans, meta["charset"], cfg)
         parts = []
         n_headings = 0
         for r in rows:
@@ -143,7 +132,7 @@ def render_markdown_batch(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame
                 parts.append(r["text"])
         out["markdown"].append("\n\n".join(parts))
         out["n_headings"].append(n_headings)
-        out["status"].append("ok")
+        out["status"].append(cs_status)
     return pd.DataFrame(out)
 
 

@@ -179,14 +179,3 @@ def write_extracted_bucketed(
         .format("parquet")
         .saveAsTable(table_name)
     )
-
-
-def write_extracted(extracted: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Sink analog of save_res (predict_system.py:119-137): one output
-    table; Spark handles the per-partition single-writer discipline that
-    CollectNode hand-rolls (collect_node.py:67-98)."""
-    (
-        extracted.select(
-            "url", "text", "conf", "status", F.to_json("spans").alias("spans_json")
-        ).write.mode(mode).parquet(path)
-    )

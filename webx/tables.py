@@ -65,8 +65,8 @@ from typing import Iterable, Iterator, List, Optional, Tuple
 
 import pandas as pd
 
-from webx.charset import normalize_input_bytes, sniff_charset
 from webx.config import ExtractConfig
+from webx.extract import _doc_front
 from webx.recognize import _COMMENT_RE, _RAWTEXT_RE, decode_span
 
 # quote-aware structural tag (the _BLOCKTAG_RE attr grammar): a quoted
@@ -251,12 +251,9 @@ def tables_batch(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
         "url": [], "table_idx": [], "row_idx": [], "col_idx": [],
         "header": [], "cell": [], "caption": [],
     }
-    for url, html in zip(pdf["url"].tolist(), pdf["html"].tolist()):
-        if html is None or len(html) == 0:
-            continue
-        raw = normalize_input_bytes(bytes(html))[: cfg.limit_side_len]
-        charset = sniff_charset(raw, cfg.default_charset)
-        for t_idx, tab in enumerate(parse_tables(raw, charset)):
+    for url, raw in zip(pdf["url"].tolist(), pdf["html"].tolist()):
+        html, meta, _ = _doc_front(raw, None, cfg)
+        for t_idx, tab in enumerate(parse_tables(html, meta["charset"])):
             for r_idx, row in enumerate(tab["rows"]):
                 for c_idx, (is_th, cell) in enumerate(row):
                     out["url"].append(url)
