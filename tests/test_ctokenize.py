@@ -548,3 +548,183 @@ def test_decode_spans_fallback_charsets(spark):
         a = extract_batch(pdf, ExtractConfig())
         b = extract_batch(pdf, ExtractConfig(ckernels="off"))
         assert a.equals(b)
+
+
+# ---- the batch entry (wx_extract_batch): one C call per Arrow batch
+
+
+def _bits(v):
+    """v with every float replaced by its bit pattern (float.hex)."""
+    if isinstance(v, float):
+        return v.hex()
+    if isinstance(v, dict):
+        return {k: _bits(x) for k, x in v.items()}
+    if isinstance(v, (list, tuple)):
+        return [_bits(x) for x in v]
+    return v
+
+
+def _assert_batch_equals_reference(pdf, cfg, charset_col=None):
+    """extract_batch through the batch kernel equals ckernels='off' row
+    for row, span scores and conf compared bit for bit."""
+    import dataclasses
+
+    from webx.extract import extract_batch
+
+    got = extract_batch(pdf, cfg, charset_col=charset_col)
+    ref = extract_batch(
+        pdf, dataclasses.replace(cfg, ckernels="off"), charset_col=charset_col
+    )
+    assert list(got.columns) == list(ref.columns)
+    assert len(got) == len(ref) == len(pdf)
+    for a, b in zip(got.itertuples(index=False), ref.itertuples(index=False)):
+        assert _bits(list(a)) == _bits(list(b))
+
+
+_ART = b"<p>" + b"alpha beta gamma delta epsilon zeta eta theta " * 4 + b"</p>"
+
+_MIXED_BATCH = [
+    None,
+    b"",
+    "﻿<html><body><p>a UTF-16 page with enough words to keep as "
+    "content</p></body></html>".encode("utf-16"),
+    b'<html><head><meta charset="x-user-defined"></head><body>' + _ART
+    + b"<p>caf\xe9 \xe9t\xe9 and more words to make a long content block</p>"
+    b"</body></html>",
+    # declared utf-8, invalid utf-8: charset_fallback to latin-1
+    b'<html><head><meta charset="utf-8"></head><body><p>caf\xe9 na\xefve '
+    b"r\xe9sum\xe9 words that make a long content block of text</p></body></html>",
+    b"<html><body>" + _ART + b"<pre>  code   line\n    indented  </pre>"
+    + _ART + b"</body></html>",
+    b"<html><body>" + _ART + b"<p>raw <xmp><b>kept</b>   as   text</xmp> "
+    b"and a tail of words to make the block long</p></body></html>",
+    b"<html><body><p>fish &amp; chips &lt;tag&gt; &eacute;t&eacute; &#8212; "
+    b"an entity-heavy paragraph of text</p></body></html>",
+    "<html><body><p>Новости дня: длинный абзац текста на русском языке</p>"
+    "<p>日本語の文章もここにあります。十分な長さのテキストです。</p>"
+    "</body></html>".encode("utf-8"),
+    b"<html><body>" + _ART * 60 + b"</body></html>",  # cut at limit_side_len
+    b"<html><body>" + b"".join(  # more runs than max_candidates
+        _ART + b"<nav><a href='/x'>link</a></nav>" for _ in range(12)
+    ) + b"</body></html>",
+    b'<html><head><meta charset="utf-16le"></head><body>' + _ART
+    + b"</body></html>",  # not ASCII-compatible: stage 1 only in C
+    b"<html><body><listing>  a   b\n  c </listing>" + _ART
+    + b"<plaintext>" + _ART,
+    b"\r\n\t<p>a\r\nb\t\tc\x0bd\x0ce    " + b"word " * 30 + b"</p>",
+]
+
+
+@pytest.mark.parametrize("hinted", [False, True])
+def test_batch_kernel_mixed_batch_matches_reference(hinted):
+    """One batch mixing NULL, empty, BOM, x-user-defined, fallback,
+    pre/xmp/listing/plaintext, entity and non-ASCII pages, a page cut
+    at limit_side_len and one with more runs than max_candidates."""
+    import pandas as pd
+
+    from webx.config import ExtractConfig
+
+    n = len(_MIXED_BATCH)
+    pdf = pd.DataFrame({"url": [f"u{i}" for i in range(n)], "html": _MIXED_BATCH})
+    col = None
+    if hinted:
+        hints = [None, "utf-8", "windows-1251", "latin-1", "x-user-defined", "bogus"]
+        pdf["http_charset"] = [hints[i % len(hints)] for i in range(n)]
+        col = "http_charset"
+    for cfg in (
+        ExtractConfig(),
+        ExtractConfig(max_candidates=3, limit_side_len=1500),
+        ExtractConfig(drop_score=0.0, nfc=True, expand_ratio=0.4),
+    ):
+        _assert_batch_equals_reference(pdf, cfg, col)
+
+
+_BATCH_FRAGMENTS = st.one_of(
+    _FRAGMENTS,
+    st.sampled_from([
+        b"<pre>", b"</pre>", b"<PRE class=x>", b"&eacute;", b"&#8212;",
+        b'<meta charset="x-user-defined">', b'<meta charset="latin-1">',
+        b'<meta charset="utf-16">', b'<img src="a.png" alt="b">',
+        b"alpha beta gamma delta epsilon zeta eta theta " * 2,
+    ]),
+)
+_BATCH_DOCS = st.one_of(
+    st.none(),
+    st.lists(_BATCH_FRAGMENTS, max_size=30).map(b"".join),
+    st.binary(max_size=200),
+)
+
+
+@settings(max_examples=100, deadline=None)
+@given(st.lists(_BATCH_DOCS, max_size=64))
+def test_batch_kernel_fuzz_random_batches(docs):
+    import pandas as pd
+
+    from webx.config import ExtractConfig
+
+    pdf = pd.DataFrame(
+        {"url": [str(i) for i in range(len(docs))], "html": pd.Series(docs, dtype=object)}
+    )
+    _assert_batch_equals_reference(pdf, ExtractConfig())
+    _assert_batch_equals_reference(pdf, ExtractConfig(drop_score=0.0, max_candidates=2))
+
+
+def _flagship_pages(n: int) -> list:
+    """Pages of the synth flagship template (webx.synth)."""
+    from webx import synth
+
+    words = "spark window merge table column vector stream value data small".split()
+    out = []
+    for i in range(n):
+        did = f"Doc {i}"
+        text = " ".join(words[(i * 7 + k) % len(words)] for k in range(30 + i % 50))
+        out.append(
+            (synth.P_HEAD_UTF8 + did + synth.P_CHROME + did + synth.P_MID
+             + text + synth.P_TAIL).encode()
+        )
+    return out
+
+
+class _CountingLib:
+    """Stands in for ctokenize._lib and counts every C call."""
+
+    def __init__(self, lib):
+        from collections import Counter
+
+        self._real = lib
+        self.calls = Counter()
+
+    def __getattr__(self, name):
+        fn = getattr(self._real, name)
+
+        def call(*args):
+            self.calls[name] += 1
+            return fn(*args)
+
+        return call
+
+
+def test_batch_kernel_constant_c_calls_per_batch(monkeypatch):
+    """extract_batch crosses ctypes a constant number of times per
+    batch, not once per document or span: 1,000 flagship documents
+    take exactly the calls 10 do, and one of them is the batch entry."""
+    import pandas as pd
+
+    import webx.ctokenize as ck
+    from webx.config import ExtractConfig
+    from webx.extract import extract_batch
+
+    cfg = ExtractConfig()
+    counts = {}
+    for n in (10, 1000):
+        pages = _flagship_pages(n)
+        pdf = pd.DataFrame({"url": [str(i) for i in range(n)], "html": pages})
+        lib = _CountingLib(ck._lib)
+        monkeypatch.setattr(ck, "_lib", lib)
+        out = extract_batch(pdf, cfg)
+        monkeypatch.setattr(ck, "_lib", lib._real)
+        assert out["text"].str.startswith("Doc ").all()
+        counts[n] = dict(lib.calls)
+    assert counts[1000] == counts[10]
+    assert counts[1000]["wx_extract_batch"] == 1
+    assert sum(counts[1000].values()) <= 3

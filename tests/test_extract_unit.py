@@ -165,6 +165,27 @@ def test_interleave_batch_dom_order():
     assert out["seq"].tolist() == [0, 1, 2, 3]
 
 
+def test_interleave_x_user_defined_page():
+    """A page whose effective codec is x-user-defined (no stdlib codec)
+    decodes its <img> src/alt through the extractor's charset decoder
+    (bytes 0x80-0xFF map to U+F780-U+F7FF) instead of failing the whole
+    batch with LookupError."""
+    from webx.extract import interleave_batch
+
+    art = b"alpha beta gamma delta epsilon zeta eta theta " * 6
+    html = (
+        b'<html><head><meta charset="x-user-defined"></head><body>'
+        b"<article><p>" + art + b"</p></article>"
+        b'<img src="/caf\xe9.png" alt="  an \xff\n image ">'
+        b"</body></html>"
+    )
+    out = interleave_batch(pd.DataFrame({"url": ["u"], "html": [html]}), CFG)
+    assert out["kind"].tolist() == ["text", "image"]
+    assert out["text"].tolist()[0] == art.decode().strip()
+    assert out["src"].tolist()[1] == "/caf\uf7e9.png"
+    assert out["alt"].tolist()[1] == "an \uf7ff image"
+
+
 def test_http_charset_hint_precedence():
     """WHATWG precedence: the HTTP-header charset outranks a LYING
     in-document meta (cp1252 smart quotes vs latin-1 control chars);

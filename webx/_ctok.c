@@ -122,14 +122,30 @@ static const tagent TAGS[] = {
     {NULL, 0},
 };
 
-/* first-letter buckets over TAGS (lazy-built; idempotent writes, so a
- * racing second thread is benign). Unknown names — the majority on
- * real pages: span/img/meta/em/strong/... — scan only their letter's
- * few entries instead of the whole table. */
-static signed char tag_bucket[26][12];
-static int tag_bucket_built = 0;
+/* a tag name (<= 10 bytes, never NUL) lowercased and zero-padded into
+ * two words: two names are equal iff their keys are */
+typedef struct { uint64_t a, b; } tagkey;
 
-static void build_tag_buckets(void) {
+static inline tagkey tag_key(const uint8_t* s, long len) {
+    uint8_t buf[16] = {0};
+    for (long i = 0; i < len; i++) buf[i] = lo(s[i]);
+    tagkey k;
+    memcpy(&k.a, buf, 8);
+    memcpy(&k.b, buf + 8, 8);
+    return k;
+}
+
+/* first-letter buckets over TAGS, with each entry's key, built once
+ * when the library is loaded (before any call can read them). Unknown
+ * names — the majority on real pages: span/img/meta/em/strong/... —
+ * compare against only their letter's few entries. */
+static signed char tag_bucket[26][12];
+static tagkey tag_keys[sizeof(TAGS) / sizeof(TAGS[0])];
+
+__attribute__((constructor)) static void build_tag_buckets(void) {
+    for (int t = 0; TAGS[t].name; t++)
+        tag_keys[t] = tag_key((const uint8_t*)TAGS[t].name,
+                              (long)strlen(TAGS[t].name));
     for (int c = 0; c < 26; c++) {
         int k = 0;
         for (int t = 0; TAGS[t].name; t++) {
@@ -137,19 +153,16 @@ static void build_tag_buckets(void) {
         }
         tag_bucket[c][k] = -1;
     }
-    tag_bucket_built = 1;
 }
 
 static int classify(const uint8_t* name, long len) {
     if (len <= 0 || len > 10) return 0;
-    char buf[12];
-    for (long i = 0; i < len; i++) buf[i] = (char)lo(name[i]);
-    buf[len] = 0;
-    if (buf[0] < 'a' || buf[0] > 'z') return 0;
-    if (!tag_bucket_built) build_tag_buckets();
-    for (const signed char* ip = tag_bucket[buf[0] - 'a']; *ip >= 0; ip++) {
-        const tagent* t = &TAGS[(int)*ip];
-        if (strcmp(t->name, buf) == 0) return t->flags;
+    uint8_t c0 = lo(name[0]);
+    if (c0 < 'a' || c0 > 'z') return 0;
+    tagkey k = tag_key(name, len);
+    for (const signed char* ip = tag_bucket[c0 - 'a']; *ip >= 0; ip++) {
+        const tagkey* e = &tag_keys[(int)*ip];
+        if (e->a == k.a && e->b == k.b) return TAGS[(int)*ip].flags;
     }
     return 0;
 }
@@ -737,7 +750,7 @@ void wx_free(int64_t* p) {
  * webx/detect.py). Float arithmetic is the EXACT elementwise
  * expression of detect.block_scores — same operations in the same
  * order on IEEE doubles, so results are bit-identical. The per-run
- * weighted score is left to the caller: wx_detect_final below, or
+ * weighted score is left to the caller: detect_final_doc below, or
  * webx/detect.py _finalize_runs over this raw layout.
  *
  * ABI (single packed buffer, ONE copy out on the Python side):
@@ -824,39 +837,60 @@ int64_t* wx_detect(const uint8_t* html, long n,
 
 /* ====================================================================
  * Fully-fused stage-1: wx_detect + per-run score finalization +
- * whitespace expansion + span validation in ONE call — the whole
- * per-document stage 1 is one ctypes call and one buffer copy. A run's
- * score is the left-to-right fold of webx/detect.py weighted_mean
- * (acc += score * tlen in block order, then / max(sum tlen, 1)); the
- * build pins -ffp-contract=off so gcc cannot fuse the mul+add, and the
- * result is bit-identical to the Python reference for runs of any
- * length.
- *
- * ABI:
- *   int64_t* wx_detect_final(const uint8_t* html, long n,
- *       double tag_weight, double binary_thresh, long min_block_chars,
- *       double box_thresh, long min_span_chars, long max_candidates,
- *       double expand_ratio, double rescue_thresh,
- *       long rescue_max_chars, long* out_len);
- *     returns finalized spans, packed (column stride cap >= m):
- *       [0]           m (span count)
- *       [1]           k (block count, for extraction metadata)
- *       [2 .. 2+5cap) span columns start, end, first, last, head_all
- *       [.. +m)       span scores, double bit patterns
- *     NULL only on malloc failure. Free with wx_free.
+ * whitespace expansion + span validation — the whole per-document
+ * stage 1. A run's score is the left-to-right fold of webx/detect.py
+ * weighted_mean (acc += score * tlen in block order, then
+ * / max(sum tlen, 1)); the build pins -ffp-contract=off so gcc cannot
+ * fuse the mul+add, and the result is bit-identical to the Python
+ * reference for runs of any length. Reached through wx_extract_batch
+ * (end of file), which runs it once per document of a batch.
  * ==================================================================== */
 
-int64_t* wx_detect_final(const uint8_t* html, long n,
-                         double tag_weight, double binary_thresh,
-                         long min_block_chars,
-                         double box_thresh, long min_span_chars,
-                         long max_candidates, double expand_ratio,
-                         double rescue_thresh, long rescue_max_chars,
-                         long* out_len) {
-    int64_t* buf = wx_detect(html, n, tag_weight, binary_thresh,
-                             min_block_chars, rescue_thresh,
-                             rescue_max_chars, out_len);
-    if (!buf) return NULL;
+/* the extraction parameters (webx.config.ExtractConfig); mirrored by
+ * webx/ctokenize.py _Params */
+typedef struct {
+    double tag_weight, binary_thresh;
+    long min_block_chars;
+    double box_thresh;
+    long min_span_chars, max_candidates;
+    double expand_ratio, rescue_thresh;
+    long rescue_max_chars;
+    double drop_score;
+} wxparams;
+
+/* one finalized span; code/text_len are stage 2's (0 until it runs) */
+typedef struct {
+    int64_t start, end, first, last, head;
+    double score;
+    int64_t code, text_len;
+} wxspan;
+
+typedef struct {
+    wxspan* data;
+    long count;
+    long cap;
+} spanbuf;
+
+static int spanbuf_reserve(spanbuf* b, long extra) {
+    if (b->count + extra <= b->cap) return 1;
+    long nc = b->cap ? b->cap * 2 : 256;
+    while (nc < b->count + extra) nc *= 2;
+    wxspan* nd = (wxspan*)realloc(b->data, (size_t)nc * sizeof(wxspan));
+    if (!nd) return 0;
+    b->data = nd;
+    b->cap = nc;
+    return 1;
+}
+
+/* Stage 1 over one document: appends its finalized, expanded, validated
+ * spans to *sp. Returns the block count, -1 on malloc failure. */
+static long detect_final_doc(const uint8_t* html, long n, const wxparams* p,
+                             spanbuf* sp) {
+    long len;
+    int64_t* buf = wx_detect(html, n, p->tag_weight, p->binary_thresh,
+                             p->min_block_chars, p->rescue_thresh,
+                             p->rescue_max_chars, &len);
+    if (!buf) return -1;
     long k = buf[0];
     long r = buf[1];
     const int64_t* col_start = buf + 2;
@@ -865,14 +899,12 @@ int64_t* wx_detect_final(const uint8_t* html, long n,
     const int64_t* col_head = col_tlen + k;
     const int64_t* runs = col_head + k;
     const double* scores = (const double*)(runs + 2 * r);
-    long cap = r < max_candidates ? r : max_candidates;
-    long flen = 2 + 6 * (cap > 0 ? cap : 1);
-    int64_t* fin = (int64_t*)malloc((size_t)flen * sizeof(int64_t));
-    if (!fin) { free(buf); *out_len = 0; return NULL; }
+    long cap = r < p->max_candidates ? r : p->max_candidates;
+    if (!spanbuf_reserve(sp, cap > 0 ? cap : 0)) { free(buf); return -1; }
+    wxspan* f = sp->data + sp->count;
     long m = 0;
     /* finalize (webx/detect.py _finalize_runs) */
-    long* f_start = (long*)(fin + 2);
-    for (long j = 0; j < r && m < max_candidates; j++) {
+    for (long j = 0; j < r && m < p->max_candidates; j++) {
         long i = runs[j * 2], last = runs[j * 2 + 1];
         double acc = 0.0;
         long span_tlen = 0;
@@ -884,33 +916,26 @@ int64_t* wx_detect_final(const uint8_t* html, long n,
         }
         double ws = (double)span_tlen;
         double sc = acc / (ws > 1.0 ? ws : 1.0);
-        if (sc >= box_thresh && span_tlen >= min_span_chars) {
-            f_start[m] = col_start[i];
-            f_start[cap + m] = col_end[last];
-            f_start[2 * cap + m] = i;
-            f_start[3 * cap + m] = last;
-            f_start[4 * cap + m] = head_all;
-            ((double*)(f_start + 5 * cap))[m] = sc;
-            m++;
+        if (sc >= p->box_thresh && span_tlen >= p->min_span_chars) {
+            wxspan s = {col_start[i], col_end[last], i, last, head_all, sc, 0, 0};
+            f[m++] = s;
         }
     }
     /* expand into surrounding whitespace (webx/detect.py expand_spans):
      * budget per side, never past the previous EXPANDED end or the next
      * span's ORIGINAL start */
-    if (expand_ratio > 0.0 && m > 0) {
+    if (p->expand_ratio > 0.0 && m > 0) {
         long prev_end = 0;
-        long orig_next_start;
         for (long j = 0; j < m; j++) {
-            long s0 = f_start[j], e0 = f_start[cap + j];
-            long budget = (long)((double)(e0 - s0) * expand_ratio);
-            orig_next_start = (j + 1 < m) ? f_start[j + 1] : n;
+            long s0 = f[j].start, e0 = f[j].end;
+            long budget = (long)((double)(e0 - s0) * p->expand_ratio);
+            long hi = (j + 1 < m) ? f[j + 1].start : n;
             long s = s0, e = e0, b = budget;
             while (s > prev_end && b > 0 && is_ws(html[s - 1])) { s--; b--; }
-            long hi = orig_next_start;
             b = budget;
             while (e < hi && b > 0 && is_ws(html[e])) { e++; b--; }
-            f_start[j] = s;
-            f_start[cap + j] = e;
+            f[j].start = s;
+            f[j].end = e;
             prev_end = e;
         }
     }
@@ -918,26 +943,19 @@ int64_t* wx_detect_final(const uint8_t* html, long n,
      * (webx/detect.py validate_spans) */
     long w = 0;
     for (long j = 0; j < m; j++) {
-        long s = f_start[j], e = f_start[cap + j];
+        long s = f[j].start, e = f[j].end;
         if (s < 0) s = 0; if (s > n) s = n;
         if (e < 0) e = 0; if (e > n) e = n;
         if (e > s) {
-            f_start[w] = s;
-            f_start[cap + w] = e;
-            f_start[2 * cap + w] = f_start[2 * cap + j];
-            f_start[3 * cap + w] = f_start[3 * cap + j];
-            f_start[4 * cap + w] = f_start[4 * cap + j];
-            ((double*)(f_start + 5 * cap))[w] =
-                ((double*)(f_start + 5 * cap))[j];
+            f[w] = f[j];
+            f[w].start = s;
+            f[w].end = e;
             w++;
         }
     }
-    m = w;
+    sp->count += w;
     free(buf);
-    fin[0] = m;
-    fin[1] = k;
-    *out_len = flen;
-    return fin;
+    return k;
 }
 
 /* ====================================================================
@@ -1308,21 +1326,26 @@ static long pass_anytag(const uint8_t* in, long n, uint8_t* out) {
     return o;
 }
 
-/* All five passes chained. Returns a malloc'd buffer (never longer than
- * n; at least 1 byte so free() is uniform); *out_n gets the length. */
+/* All five passes chained over caller buffers a and b (each >= n
+ * bytes): the result lands in a; returns its length. */
+static long strip_passes(const uint8_t* in, long n, uint8_t* a, uint8_t* b) {
+    long la = pass_rawtext(in, n, a);
+    long lb = pass_comment(a, la, b);
+    la = pass_drop(b, lb, a);
+    lb = pass_blocktag(a, la, b);
+    return pass_anytag(b, lb, a);
+}
+
+/* Returns a malloc'd buffer (never longer than n; at least 1 byte so
+ * free() is uniform); *out_n gets the length. */
 uint8_t* wx_strip(const uint8_t* in, long n, long* out_n) {
     *out_n = 0;
     size_t cap = (size_t)(n > 0 ? n : 1);
     uint8_t* a = (uint8_t*)malloc(cap);
     uint8_t* b = (uint8_t*)malloc(cap);
     if (!a || !b) { free(a); free(b); return NULL; }
-    long la = pass_rawtext(in, n, a);
-    long lb = pass_comment(a, la, b);
-    la = pass_drop(b, lb, a);
-    lb = pass_blocktag(a, la, b);
-    la = pass_anytag(b, lb, a);
+    *out_n = strip_passes(in, n, a, b);
     free(b);
-    *out_n = la;
     return a;
 }
 
@@ -1345,11 +1368,10 @@ uint8_t* wx_strip(const uint8_t* in, long n, long* out_n) {
  * collapse only ' ' and \x1c-\x1f can remain at line edges, but the
  * full set is trimmed for faithfulness.
  *
- * ABI: uint8_t* wx_strip_norm(const uint8_t* in, long n,
- *                             long* out_n, long* ok);
- *   *ok = 1: buffer is the FINAL normalized text bytes (ASCII).
- *   *ok = 0: buffer is wx_strip's output, untouched.
- *   NULL only on malloc failure. Free with wx_free_bytes.
+ * norm_fast runs on wx_strip's output in place: it returns the new
+ * length and sets *ok = 1 when the bytes are the FINAL normalized text
+ * (ASCII), else leaves them untouched with *ok = 0. wx_extract_batch
+ * (end of file) runs the strip passes and this over each kept span.
  * ==================================================================== */
 
 static inline int is_pystrip_ws(uint8_t c) {
@@ -1372,11 +1394,8 @@ static long wx_find_dblspace(const uint8_t* s, long i, long m) {
     return m;
 }
 
-uint8_t* wx_strip_norm(const uint8_t* in, long n, long* out_n, long* ok) {
+static long norm_fast(uint8_t* s, long m, int* ok) {
     *ok = 0;
-    uint8_t* s = wx_strip(in, n, out_n);
-    if (!s) return NULL;
-    long m = *out_n;
     /* one word-scan: bail on >= 0x80 / '&' (Python path), flag the
      * rare normalization bytes (\r \t \f \v \0) and double spaces */
     int rare = 0, dbl = 0;
@@ -1385,8 +1404,8 @@ uint8_t* wx_strip_norm(const uint8_t* in, long n, long* out_n, long* ok) {
         long i = 0;
         for (; i + 8 <= m; i += 8) {
             uint64_t w = wx_load64(s + i);
-            if (w & WX_HIGH) return s;
-            if (wx_eqmask(w, '&')) return s;
+            if (w & WX_HIGH) return m;
+            if (wx_eqmask(w, '&')) return m;
             uint64_t sp = wx_eqmask(w, ' ');
             if ((sp & (sp >> 8)) || (prev_sp7 && (sp & 0x80ULL))) dbl = 1;
             prev_sp7 = sp & 0x8000000000000000ULL;
@@ -1396,7 +1415,7 @@ uint8_t* wx_strip_norm(const uint8_t* in, long n, long* out_n, long* ok) {
         }
         for (; i < m; i++) {
             uint8_t c = s[i];
-            if (c >= 0x80 || c == '&') return s;
+            if (c >= 0x80 || c == '&') return m;
             if (c == '\r' || c == '\t' || c == '\f' || c == 0x0b ||
                 c == 0x00) rare = 1;
             if (c == ' ' && i > 0 && s[i - 1] == ' ') dbl = 1;
@@ -1462,11 +1481,199 @@ uint8_t* wx_strip_norm(const uint8_t* in, long n, long* out_n, long* ok) {
         }
         i = e + 1;
     }
-    *out_n = o;
     *ok = 1;
-    return s;
+    return o;
 }
 
 void wx_free_bytes(uint8_t* p) {
     free(p);
+}
+
+/* ====================================================================
+ * The batch entry: stage 1 and the stage-2 fast path over every
+ * document of an Arrow batch in ONE call (the batch is the reference's
+ * tensor batch, mindocr/data/builder.py:154-161). The documents are the
+ * caller's own buffers (a pointer/length array: no copy). Per document,
+ * modes[d] picks the work:
+ *   WX_S1     stage 1 only;
+ *   WX_S1_S2  stage 1, then strip_passes + norm_fast over each kept
+ *             span (score >= drop_score) unless the span holds an
+ *             <xmp>/<plaintext> open or the document a <pre>/<listing>
+ *             open (those decode on the Python path: code 0);
+ *   WX_S2     no stage 1: the whole document is one span through
+ *             strip_passes + norm_fast (the per-span strip_norm_c).
+ * A span's code is 0 (stage 2 not run), 1 (text is the final
+ * normalized ASCII text) or 2 (text is strip_passes' output; the
+ * caller finishes decoding it).
+ *
+ * ABI:
+ *   uint8_t* wx_extract_batch(const uint8_t* const* docs,
+ *       const long* lens, const uint8_t* modes, long n_docs,
+ *       const wxparams* p, long* out_bytes);
+ *     returns ONE malloc'd buffer of *out_bytes bytes, read with one
+ *     copy on the Python side (D = n_docs, S = span count; int64
+ *     slots, then doubles, then bytes):
+ *       [0] S   [1] stage-2 text bytes
+ *       [2 .. 2+D)     n_blocks per document
+ *       [.. +D+1)      span offsets: document d owns spans
+ *                      [off[d], off[d+1])
+ *       [.. +6S)       span columns start, end, first, last, head, code
+ *       [.. +S+1)      text offsets, in bytes from the buffer start:
+ *                      span j's text is [toff[j], toff[j+1]) (empty
+ *                      when code is 0)
+ *       [.. +S)        span scores (doubles)
+ *       then the stage-2 text bytes.
+ *     NULL only on malloc failure. Free with wx_free_bytes.
+ * ==================================================================== */
+
+#define WX_S1 0
+#define WX_S1_S2 1
+#define WX_S2 2
+
+/* an open tag of one of names (lowercase): '<' + name, any case, then
+ * [\s/>] — the probes of recognize.pre_regions and has_rawkept */
+typedef struct { const char* name; long len; } tagname;
+
+static int open_tag_at(const uint8_t* h, long n, long i, const tagname* names) {
+    uint8_t c1 = lo(h[i + 1]);
+    for (const tagname* t = names; t->name; t++) {
+        long nl = t->len, k = 1;
+        if (c1 != (uint8_t)t->name[0] || i + 1 + nl >= n) continue;
+        while (k < nl && lo(h[i + 1 + k]) == (uint8_t)t->name[k]) k++;
+        uint8_t c = h[i + 1 + nl];
+        if (k == nl && (is_ws(c) || c == '/' || c == '>')) return 1;
+    }
+    return 0;
+}
+
+/* names holds two entries. Word scan: a word is looked at byte by byte
+ * only where a '<' is followed by either name's first letter (any case:
+ * b | 0x20 equals a lowercase letter only for that letter and its
+ * uppercase) — a memchr per tag costs more on tag-dense pages. */
+static int has_open_tag(const uint8_t* h, long n, const tagname* names) {
+    uint8_t f0 = (uint8_t)names[0].name[0], f1 = (uint8_t)names[1].name[0];
+    long i = 0;
+    for (; i + 9 <= n; i += 8) {
+        uint64_t nx = wx_load64(h + i + 1) | (WX_ONES * 0x20);
+        if (!(wx_eqmask(wx_load64(h + i), '<') &
+              (wx_eqmask(nx, f0) | wx_eqmask(nx, f1))))
+            continue;
+        for (long k = i; k < i + 8; k++)
+            if (h[k] == '<' && open_tag_at(h, n, k, names)) return 1;
+    }
+    for (; i + 1 < n; i++)
+        if (h[i] == '<' && open_tag_at(h, n, i, names)) return 1;
+    return 0;
+}
+
+static const tagname PRE_NAMES[] = {{"pre", 3}, {"listing", 7}, {NULL, 0}};
+static const tagname RAWKEPT_NAMES[] = {{"xmp", 3}, {"plaintext", 9}, {NULL, 0}};
+
+typedef struct {
+    uint8_t* data;
+    long len;
+    long cap;
+} bytebuf;
+
+static int bytebuf_reserve(bytebuf* b, long extra) {
+    if (b->len + extra <= b->cap) return 1;
+    long nc = b->cap ? b->cap * 2 : 4096;
+    while (nc < b->len + extra) nc *= 2;
+    uint8_t* nd = (uint8_t*)realloc(b->data, (size_t)nc);
+    if (!nd) return 0;
+    b->data = nd;
+    b->cap = nc;
+    return 1;
+}
+
+/* stage-2 fast path over in[0:n): strip straight into text, normalize
+ * in place; scratch is the strip passes' second buffer */
+static int strip_norm_span(const uint8_t* in, long n, bytebuf* text,
+                           bytebuf* scratch, wxspan* s) {
+    long need = n > 0 ? n : 1;
+    if (!bytebuf_reserve(text, need) || !bytebuf_reserve(scratch, need))
+        return 0;
+    uint8_t* a = text->data + text->len;
+    int ok;
+    long m = norm_fast(a, strip_passes(in, n, a, scratch->data), &ok);
+    s->code = ok ? 1 : 2;
+    s->text_len = m;
+    text->len += m;
+    return 1;
+}
+
+uint8_t* wx_extract_batch(const uint8_t* const* docs, const long* lens,
+                          const uint8_t* modes, long n_docs,
+                          const wxparams* p, long* out_bytes) {
+    spanbuf sp = {0, 0, 0};
+    bytebuf text = {0, 0, 0}, scratch = {0, 0, 0};
+    uint8_t* out = NULL;
+    long D = n_docs > 0 ? n_docs : 0;
+    int64_t* head = (int64_t*)malloc((size_t)(2 * D + 1) * sizeof(int64_t));
+    *out_bytes = 0;
+    if (!head || !bytebuf_reserve(&text, 1)) goto done;
+    int64_t* nblk = head;
+    int64_t* soff = head + D;
+    for (long d = 0; d < D; d++) {
+        const uint8_t* h = docs[d];
+        long n = lens[d];
+        soff[d] = sp.count;
+        if (modes[d] == WX_S2) {
+            if (!spanbuf_reserve(&sp, 1)) goto done;
+            wxspan* s = &sp.data[sp.count++];
+            wxspan whole = {0, n, 0, 0, 0, 0.0, 0, 0};
+            *s = whole;
+            nblk[d] = 0;
+            if (!strip_norm_span(h, n, &text, &scratch, s)) goto done;
+            continue;
+        }
+        long k = detect_final_doc(h, n, p, &sp);
+        if (k < 0) goto done;
+        nblk[d] = k;
+        if (modes[d] != WX_S1_S2 || sp.count == soff[d]) continue;
+        if (has_open_tag(h, n, PRE_NAMES)) continue;
+        for (long j = soff[d]; j < sp.count; j++) {
+            wxspan* s = &sp.data[j];
+            long a = s->start, len = s->end - s->start;
+            if (s->score < p->drop_score) continue;
+            if (has_open_tag(h + a, len, RAWKEPT_NAMES)) continue;
+            if (!strip_norm_span(h + a, len, &text, &scratch, s)) goto done;
+        }
+    }
+    soff[D] = sp.count;
+    long S = sp.count;
+    long n_ints = 2 + 2 * D + 1 + 7 * S + 1;
+    long base = (n_ints + S) * (long)sizeof(int64_t);
+    /* slide the text up behind the header room in its own buffer (a
+     * large block grows by remapping), so it is never held twice */
+    out = (uint8_t*)realloc(text.data, (size_t)(base + text.len));
+    if (!out) goto done;
+    text.data = NULL;
+    memmove(out + base, out, (size_t)text.len);
+    int64_t* hdr = (int64_t*)out;
+    hdr[0] = S;
+    hdr[1] = text.len;
+    memcpy(hdr + 2, head, (size_t)(2 * D + 1) * sizeof(int64_t));
+    int64_t* col = hdr + 2 + 2 * D + 1;
+    int64_t* toff = col + 6 * S;
+    double* score = (double*)(toff + S + 1);
+    toff[0] = base;
+    for (long j = 0; j < S; j++) {
+        const wxspan* s = &sp.data[j];
+        col[j] = s->start;
+        col[S + j] = s->end;
+        col[2 * S + j] = s->first;
+        col[3 * S + j] = s->last;
+        col[4 * S + j] = s->head;
+        col[5 * S + j] = s->code;
+        toff[j + 1] = toff[j] + s->text_len;
+        score[j] = s->score;
+    }
+    *out_bytes = base + text.len;
+done:
+    free(head);
+    free(sp.data);
+    free(scratch.data);
+    free(text.data);
+    return out;
 }

@@ -1,11 +1,21 @@
-"""ctypes loader for the compiled tokenizer kernel (webx/_ctok.c).
+"""ctypes loader for the compiled extraction kernels (webx/_ctok.c).
 
 The reference ships a compiled kernel for its one hot post-process loop
 (mindocr/postprocess/pse/pse.pyx — Cython, built on first use); this is
-the same move for our hot loop: the per-tag HTML lexer, ~60% of
-extractor CPU at the CPython floor (PLANS.md). The C kernel mirrors
-webx/tokenize.py bit-for-bit (tests/test_ctokenize.py fuzzes the two
-against each other); ``tokenize_c`` returns the same ``Block`` list.
+the same move for our hot loops: the per-tag HTML lexer, the stage-1
+span finalization and the stage-2 markup strip + normalization. Each
+mirrors its Python reference bit for bit (tests/test_ctokenize.py fuzzes
+them against each other).
+
+The extractor crosses ctypes once per Arrow batch, not per document:
+``extract_spans`` (wx_extract_batch) takes every document of the batch
+as one pointer/length array over the documents' own bytes, runs stage 1
+for each and the stage-2 fast path over each kept span, and hands back
+flat columns read once — span bounds, scores, kinds, first/last block,
+``n_blocks`` per document, the stage-2 bytes with their offsets and a
+done code per span. ``detect_final`` and ``strip_norm_c``, the
+per-document and per-span forms the other lanes use, are batches of one
+through the same entry, so C holds one implementation of each stage.
 
 Build: compiled from source with gcc at import time when the shipped
 ``_ctok.so`` is missing or older than ``_ctok.c`` (each process compiles
@@ -23,8 +33,10 @@ from __future__ import annotations
 
 import ctypes
 import os
+import struct
 import subprocess
-from typing import List, Optional
+from functools import lru_cache
+from typing import List, NamedTuple, Optional
 
 from webx.tokenize import Block
 
@@ -37,7 +49,7 @@ def _compile(src: str, so: str) -> str:
     tmp = f"{so}.tmp.{os.getpid()}"
     subprocess.run(
         # -ffp-contract=off pins acc += a*b to mulsd/addsd (no FMA
-        # fusion): wx_detect_final's span-score fold must round exactly
+        # fusion): detect_final_doc's span-score fold must round exactly
         # like webx.detect.weighted_mean's separate multiply and add
         ["gcc", "-O2", "-ffp-contract=off", "-fPIC", "-shared", "-o", tmp, src],
         check=True,
@@ -79,6 +91,24 @@ def _ensure_built() -> str:
     return _compile(src, so)
 
 
+class _Params(ctypes.Structure):
+    """webx/_ctok.c wxparams: the extraction parameters, passed by
+    pointer (one argument instead of ten converted on every call)."""
+
+    _fields_ = [
+        ("tag_weight", ctypes.c_double),
+        ("binary_thresh", ctypes.c_double),
+        ("min_block_chars", ctypes.c_long),
+        ("box_thresh", ctypes.c_double),
+        ("min_span_chars", ctypes.c_long),
+        ("max_candidates", ctypes.c_long),
+        ("expand_ratio", ctypes.c_double),
+        ("rescue_thresh", ctypes.c_double),
+        ("rescue_max_chars", ctypes.c_long),
+        ("drop_score", ctypes.c_double),
+    ]
+
+
 _lib: Optional[ctypes.CDLL] = None
 try:
     _lib = ctypes.CDLL(_ensure_built())
@@ -97,7 +127,11 @@ try:
         ctypes.POINTER(ctypes.c_long),
     ]
     _lib.wx_free_bytes.restype = None
-    _lib.wx_free_bytes.argtypes = [ctypes.POINTER(ctypes.c_uint8)]
+    _lib.wx_free_bytes.argtypes = [ctypes.c_void_p]
+    # a read-only memoryview over the kernel's output, no copy
+    _view = ctypes.pythonapi.PyMemoryView_FromMemory
+    _view.restype = ctypes.py_object
+    _view.argtypes = [ctypes.c_void_p, ctypes.c_ssize_t, ctypes.c_int]
     _lib.wx_detect.restype = ctypes.POINTER(ctypes.c_int64)
     _lib.wx_detect.argtypes = [
         ctypes.c_char_p,
@@ -109,27 +143,16 @@ try:
         ctypes.c_long,                      # rescue_max_chars
         ctypes.POINTER(ctypes.c_long),
     ]
-    _lib.wx_strip_norm.restype = ctypes.POINTER(ctypes.c_uint8)
-    _lib.wx_strip_norm.argtypes = [
-        ctypes.c_char_p,
-        ctypes.c_long,
-        ctypes.POINTER(ctypes.c_long),
-        ctypes.POINTER(ctypes.c_long),
-    ]
-    _lib.wx_detect_final.restype = ctypes.POINTER(ctypes.c_int64)
-    _lib.wx_detect_final.argtypes = [
-        ctypes.c_char_p,
-        ctypes.c_long,
-        ctypes.c_double,
-        ctypes.c_double,
-        ctypes.c_long,
-        ctypes.c_double,
-        ctypes.c_long,
-        ctypes.c_long,
-        ctypes.c_double,
-        ctypes.c_double,                    # rescue_thresh
-        ctypes.c_long,                      # rescue_max_chars
-        ctypes.POINTER(ctypes.c_long),
+    _lib.wx_extract_batch.restype = ctypes.c_void_p
+    # void* for the arrays and the parameter block: the cheapest
+    # conversions ctypes makes (a batch of one pays them per span)
+    _lib.wx_extract_batch.argtypes = [
+        ctypes.c_void_p,                    # docs: c_char_p array
+        ctypes.c_void_p,                    # lens: c_long array
+        ctypes.c_char_p,                    # modes
+        ctypes.c_long,                      # n_docs
+        ctypes.c_void_p,                    # byref(_Params)
+        ctypes.POINTER(ctypes.c_long),      # out_bytes
     ]
     _i32p = ctypes.POINTER(ctypes.c_int32)
     _lib.wx_ac_find.restype = ctypes.c_long
@@ -243,6 +266,109 @@ def detect_table(
     return start, end, tlen, heading, scores, runs
 
 
+# the per-document work wx_extract_batch does (webx/_ctok.c)
+S1, S1_S2, S2 = 0, 1, 2
+# a span's stage-2 outcome (0: not run): final text, stripped bytes only
+DONE, STRIPPED = 1, 2
+# S2 runs no stage 1: its parameters are never read
+_S2 = _Params()
+
+
+class BatchSpans(NamedTuple):
+    """wx_extract_batch's flat columns, read once per batch. Document
+    ``d`` owns spans ``span_off[d]:span_off[d + 1]``; ``text[j]`` is
+    span ``j``'s stage-2 output: the final text (str) when ``code[j]``
+    is DONE, strip_markup's output (bytes) when STRIPPED, else None."""
+
+    n_blocks: list
+    span_off: list
+    start: list
+    end: list
+    first: list
+    last: list
+    head: list
+    code: list
+    score: list
+    text: list
+
+
+@lru_cache(maxsize=16)
+def params(*values) -> _Params:
+    """The parameter block extract_spans takes, from values in
+    ``_Params`` field order (built once per parameter set)."""
+    return _Params(*values)
+
+
+_PYBUF_READ = 0x100  # CPython's PyBUF_READ: the view is read-only
+
+
+def _run(htmls, modes: bytes, p: _Params, read):
+    """One wx_extract_batch call. ``read(view)`` builds Python objects
+    from the output buffer (see webx/_ctok.c); ``view`` is a memoryview
+    over the kernel's memory, valid only while ``read`` runs."""
+    n = len(htmls)
+    size = ctypes.c_long()
+    addr = _lib.wx_extract_batch(
+        (ctypes.c_char_p * n)(*htmls), (ctypes.c_long * n)(*map(len, htmls)),
+        modes, n, ctypes.byref(p), ctypes.byref(size),
+    )
+    if not addr:
+        raise MemoryError("wx_extract_batch allocation failure")
+    try:
+        view = _view(addr, size.value, _PYBUF_READ)
+        try:
+            return read(view)
+        finally:
+            view.release()  # BufferError if a slice of it escaped
+    finally:
+        _lib.wx_free_bytes(addr)
+
+
+def _columns(view: memoryview, n: int):
+    """(int slots, span scores) of an n-document output buffer."""
+    m = view[:8].cast("q")[0]
+    n_ints = 4 + 2 * n + 7 * m
+    return (
+        view[: 8 * n_ints].cast("q").tolist(),
+        view[8 * n_ints : 8 * (n_ints + m)].cast("d").tolist(),
+    )
+
+
+def extract_spans(htmls, modes: bytes, p: _Params) -> BatchSpans:
+    """Stage 1 and the stage-2 fast path over a whole batch in ONE C
+    call (wx_extract_batch). ``htmls`` are bytes objects, passed as one
+    pointer/length array (the kernel reads their own buffers);
+    ``modes[d]`` is S1, S1_S2 or S2 for document ``d``; ``p`` comes from
+    ``params``. Span scores are bit-identical to the Python reference
+    (webx.detect._finalize_runs): both run the ``weighted_mean`` fold."""
+    n = len(htmls)
+
+    def read(view):
+        ints, scores = _columns(view, n)
+        m = len(scores)
+        c = 3 + 2 * n  # first span column
+        cols = [ints[c + i * m : c + (i + 1) * m] for i in range(6)]
+        toff = ints[c + 6 * m :]
+        text = [
+            str(view[a:b], "ascii") if k == DONE
+            else bytes(view[a:b]) if k == STRIPPED else None
+            for k, a, b in zip(cols[5], toff, toff[1:])
+        ]
+        return BatchSpans(ints[2 : 2 + n], ints[2 + n : c], *cols, scores, text)
+
+    return _run(htmls, modes, p, read)
+
+
+_ONE_S1, _ONE_S2 = bytes((S1,)), bytes((S2,))
+# a one-document, one-span output: code, text start, text end (slots 10-12)
+_ONE_SPAN = struct.Struct("=3q")
+
+
+def _one_span(view: memoryview):
+    code, a, b = _ONE_SPAN.unpack_from(view, 80)
+    return bytes(view[a:b]), code == DONE
+
+
 def detect_final(
     html: bytes,
     tag_weight: float,
@@ -255,64 +381,32 @@ def detect_final(
     rescue_thresh: float = 0.0,
     rescue_max_chars: int = 0,
 ):
-    """FULLY-fused stage-1 (wx_detect_final): detect + finalize +
-    expand + validate in one C call, for every document. Returns
+    """Stage 1 of one document: a batch of one through wx_extract_batch
+    (detect + finalize + expand + validate). Returns
 
       ("final", n_blocks, start, end, first, last, head_all, score)
 
-    where the span columns are plain Python lists (spans per document
-    are few — ctypes bulk slicing beats a bytes->numpy round trip by
-    ~4 µs per call). Span scores are bit-identical to the Python
-    reference (webx.detect._finalize_runs): both run the
-    ``weighted_mean`` fold."""
-    out_len = ctypes.c_long()
-    ptr = _lib.wx_detect_final(
-        html, len(html), tag_weight, binary_thresh, min_block_chars,
-        box_thresh, min_span_chars, max_candidates, expand_ratio,
-        rescue_thresh, rescue_max_chars, ctypes.byref(out_len),
-    )
-    if not ptr:
-        raise MemoryError("wx_detect_final allocation failure")
-    try:
-        m = ptr[0]
-        n_blocks = ptr[1]
-        if m == 0:
-            return "final", n_blocks, (), (), (), (), (), ()
-        cap = (out_len.value - 2) // 6  # column stride (>= m)
-        cols = ptr[2 : 2 + 5 * cap]  # one bulk int read of 5 columns
-        scores = ctypes.cast(ptr, ctypes.POINTER(ctypes.c_double))[
-            2 + 5 * cap : 2 + 5 * cap + m
-        ]
-    finally:
-        _lib.wx_free(ptr)
-    return (
-        "final",
-        n_blocks,
-        cols[:m],
-        cols[cap : cap + m],
-        cols[2 * cap : 2 * cap + m],
-        cols[3 * cap : 3 * cap + m],
-        cols[4 * cap : 4 * cap + m],
-        scores,
-    )
+    with the span columns as plain lists."""
+    ints, scores = _run((html,), _ONE_S1, params(
+        tag_weight, binary_thresh, min_block_chars, box_thresh,
+        min_span_chars, max_candidates, expand_ratio, rescue_thresh,
+        rescue_max_chars, 0.0,
+    ), lambda view: _columns(view, 1))
+    m = len(scores)
+    return ("final", ints[2], ints[5 : 5 + m], ints[5 + m : 5 + 2 * m],
+            ints[5 + 2 * m : 5 + 3 * m], ints[5 + 3 * m : 5 + 4 * m],
+            ints[5 + 4 * m : 5 + 5 * m], scores)
 
 
 def strip_norm_c(raw: bytes):
-    """Fused stage-2 strip + full text normalization (wx_strip_norm).
-    Returns (out_bytes, ok): ok=True means out_bytes IS the final
-    normalized text (pure-ASCII, entity-free span — decode with any
-    ASCII-compatible charset and you have decode_span's result); ok=False
-    means out_bytes is exactly strip_markup's output and the caller
-    finishes with the reference Python normalization."""
-    out_n = ctypes.c_long()
-    ok = ctypes.c_long()
-    ptr = _lib.wx_strip_norm(raw, len(raw), ctypes.byref(out_n), ctypes.byref(ok))
-    if not ptr:
-        raise MemoryError("wx_strip_norm allocation failure")
-    try:
-        return ctypes.string_at(ptr, out_n.value), bool(ok.value)
-    finally:
-        _lib.wx_free_bytes(ptr)
+    """Stage-2 fast path over one span: a batch of one through
+    wx_extract_batch, the span being the whole input. Returns
+    (out_bytes, ok): ok=True means out_bytes IS the final normalized
+    text (pure-ASCII, entity-free span — decode with any
+    ASCII-compatible charset and you have decode_span's result);
+    ok=False means out_bytes is exactly strip_markup's output and the
+    caller finishes with the reference Python normalization."""
+    return _run((raw,), _ONE_S2, _S2, _one_span)
 
 
 def strip_markup_c(raw: bytes) -> bytes:

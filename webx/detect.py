@@ -59,7 +59,7 @@ def weighted_mean(scores: Sequence[float], weights: Sequence[float]) -> float:
     span-length-weighted ``conf``. One left-to-right fold,
     ``acc += score * weight`` in the given order, then one divide by
     ``max(sum(weights), 1.0)``. The C kernel (webx/_ctok.c
-    wx_detect_final, built with -ffp-contract=off) runs the identical
+    detect_final_doc, built with -ffp-contract=off) runs the identical
     IEEE operations, so no result depends on a BLAS reduction order.
     Weights are integer counts, so their sum is exact in any order."""
     acc = 0.0
@@ -170,7 +170,7 @@ def _finalize_runs(
 ) -> List[Span]:
     """Per-run score + size + kind filter over (first, last) block runs —
     the Python twin of the finalization inside the fused C kernel
-    (webx/_ctok.c wx_detect_final); both score a run with the same
+    (webx/_ctok.c detect_final_doc); both score a run with the same
     ``weighted_mean`` fold, so their span scores are bit-identical."""
     sl = scores.tolist()
     tl = tlen.tolist()

@@ -1,10 +1,13 @@
 """The fused two-stage extractor as an Arrow-batched ``mapInPandas`` op.
 
-One pass over each Arrow batch: tokenize every document, score ALL blocks
-of the batch in one numpy call (the batch = the reference's tensor batch,
-mindocr/data/builder.py:154-161), merge runs per document, decode spans.
-Stage boundaries are columnar hand-offs inside the same batch — the Spark
-recast of predict_system.py's det → crop → rec → merge loop
+One pass over each Arrow batch: every document's front (normalize,
+truncate, sniff, decode), then ONE C call (webx/_ctok.c wx_extract_batch)
+that runs stage 1 — tokenize, block scores, runs, finalize, expand,
+validate — for every document of the batch and the stage-2 fast path
+over each kept span (the batch = the reference's tensor batch,
+mindocr/data/builder.py:154-161), then the span decode the kernel left
+to Python. Stage boundaries are columnar hand-offs inside the same batch
+— the Spark recast of predict_system.py's det → crop → rec → merge loop
 (tools/infer/text/predict_system.py:45-117).
 
 Also exposes the stages separately (``detect_batch`` / parity with
@@ -42,6 +45,7 @@ from webx.detect import (  # noqa: F401
     weighted_mean,
 )
 from webx.recognize import (
+    _charset_decode,
     decode_span,
     decode_span_pre,
     decode_span_rawkept,
@@ -123,7 +127,8 @@ def resolve_detect_final(mode: str):
 
 @lru_cache(maxsize=4)
 def resolve_strip_norm(mode: str):
-    """Fused stage-2 strip + normalize kernel (wx_strip_norm) or None.
+    """Fused stage-2 strip + normalize kernel for one span
+    (ck.strip_norm_c, a batch of one through wx_extract_batch) or None.
     Only pure-ASCII, entity-free spans normalize fully in C (the byte
     ops commute with any ASCII-compatible decode); other spans come
     back merely stripped with ok=False and finish on the reference
@@ -131,6 +136,17 @@ def resolve_strip_norm(mode: str):
     if mode == "off":
         return None
     return _resolve_kernel(mode, None, "strip_norm_c")
+
+
+@lru_cache(maxsize=4)
+def resolve_extract_spans(mode: str):
+    """The batch kernel (wx_extract_batch: stage 1 and the stage-2 fast
+    path over every document of a batch in one C call) or None. No
+    Python twin: None routes extract_batch to the per-document
+    reference composition, which computes the same bits."""
+    if mode == "off":
+        return None
+    return _resolve_kernel(mode, None, "extract_spans")
 
 
 @lru_cache(maxsize=4)
@@ -191,13 +207,58 @@ def _extract_doc_stage1(html: bytes, cfg: ExtractConfig) -> Tuple[int, List[Span
     return n_blocks, spans
 
 
+def _span_text(
+    html: bytes, start: int, end: int, charset: str, cfg: ExtractConfig,
+    preserved, strip_norm, strip,
+) -> str:
+    """Stage 2 of one span on the per-span path. ``preserved`` is the
+    document's pre_regions; ``strip_norm`` the fused strip + normalize
+    kernel (None unless the charset is ASCII-compatible and the C kernel
+    is on), else ``strip`` strips before the Python decode."""
+    raw = html[start:end]
+    if has_rawkept(raw):
+        # <xmp>/<plaintext> region inside the span (1996-era rare):
+        # literal-text decode on the reference Python path
+        return decode_span_rawkept(raw, charset)
+    if preserved and any(rs < end and re_ > start for rs, re_ in preserved):
+        return decode_span_pre(
+            raw, charset, start, preserved, resolve_strip(cfg.ckernels)
+        )
+    if strip_norm is not None:
+        out, done = strip_norm(raw)
+        # done: out IS the normalized text — pure-ASCII bytes, and the
+        # charset passed the ASCII-compatibility probe, so decoding as
+        # ASCII is exact (also covers x-user-defined, which has no
+        # stdlib codec); else out is the stripped bytes — finish on the
+        # reference Python path
+        return out.decode("ascii") if done else decode_stripped(out, charset)
+    return decode_span(raw, charset, strip)
+
+
+def _add_row(rows: List[dict], start, end, score, kind, text, cfg) -> None:
+    if not text:
+        return
+    if cfg.nfc and not text.isascii():  # ASCII is NFC-invariant
+        text = _unicodedata.normalize("NFC", text)
+    rows.append(
+        {"start": start, "end": end, "score": score, "kind": kind, "text": text}
+    )
+
+
+def _fold(rows: List[dict], cfg: ExtractConfig) -> Tuple[List[dict], str, float]:
+    """(rows, joined text, conf); conf is the text-length weighted mean
+    span score."""
+    texts = [r["text"] for r in rows]
+    conf = weighted_mean([r["score"] for r in rows], list(map(len, texts)))
+    return rows, cfg.join_sep.join(texts), conf
+
+
 def _decode_spans(
     html: bytes, spans: List[Span], charset: str, cfg: ExtractConfig
 ) -> Tuple[List[dict], str, float]:
     """Stage 2 over one document's surviving spans.
 
-    Returns (span_rows, joined_text, conf); conf is the text-length
-    weighted mean span score."""
+    Returns (span_rows, joined_text, conf)."""
     rows: List[dict] = []
     strip_norm = (
         resolve_strip_norm(cfg.ckernels) if is_ascii_compatible(charset) else None
@@ -209,44 +270,73 @@ def _decode_spans(
     for s in spans:
         if s.score < cfg.drop_score:  # drop_score filter (predict_system.py:92-100)
             continue
-        raw = html[s.start : s.end]
-        if has_rawkept(raw):
-            # <xmp>/<plaintext> region inside the span (1996-era rare):
-            # literal-text decode on the reference Python path
-            text = decode_span_rawkept(raw, charset)
-        elif preserved and any(
-            rs < s.end and re_ > s.start for rs, re_ in preserved
-        ):
-            text = decode_span_pre(
-                raw, charset, s.start, preserved,
-                resolve_strip(cfg.ckernels),
-            )
-        elif strip_norm is not None:
-            out, done = strip_norm(raw)
-            # done: out IS the normalized text — pure-ASCII bytes, and
-            # the charset passed the ASCII-compatibility probe, so
-            # decoding as ASCII is exact (also covers x-user-defined,
-            # which has no stdlib codec); else out is the stripped
-            # bytes — finish on the reference Python path
-            text = out.decode("ascii") if done else decode_stripped(out, charset)
-        else:
-            text = decode_span(raw, charset, strip)
-        if not text:
-            continue
-        if cfg.nfc and not text.isascii():  # ASCII is NFC-invariant
-            text = _unicodedata.normalize("NFC", text)
-        rows.append(
-            {
-                "start": s.start,
-                "end": s.end,
-                "score": s.score,
-                "kind": s.kind,
-                "text": text,
-            }
+        text = _span_text(
+            html, s.start, s.end, charset, cfg, preserved, strip_norm, strip
         )
-    joined = cfg.join_sep.join(r["text"] for r in rows)
-    conf = weighted_mean([r["score"] for r in rows], [len(r["text"]) for r in rows])
-    return rows, joined, conf
+        _add_row(rows, s.start, s.end, s.score, s.kind, text, cfg)
+    return _fold(rows, cfg)
+
+
+def _kernel_params(cfg: ExtractConfig):
+    from webx.ctokenize import params
+
+    return params(
+        cfg.tag_weight, cfg.binary_thresh, cfg.min_block_chars,
+        cfg.box_thresh, cfg.min_span_chars, cfg.max_candidates,
+        cfg.expand_ratio, cfg.rescue_thresh, cfg.rescue_max_chars,
+        cfg.drop_score,
+    )
+
+
+def _decode_batch(fronts: list, kernel, cfg: ExtractConfig) -> list:
+    """Stage 1 and stage 2 over every document front of a batch: ONE
+    kernel call (ck.extract_spans) runs stage 1 for all of them and the
+    stage-2 fast path over each kept span of an ASCII-compatible page.
+    Spans it does not finish take the per-span path (``_span_text``);
+    the drop_score filter, NFC and the conf fold are ``_decode_spans``'s.
+    Fills each front's ``meta["n_blocks"]``; returns one
+    ``(rows, joined, conf)`` per document."""
+    from webx.ctokenize import DONE, S1, S1_S2, STRIPPED
+
+    fast = [is_ascii_compatible(meta["charset"]) for _, meta, _ in fronts]
+    b = kernel(
+        [html for html, _, _ in fronts],
+        bytes(S1_S2 if ok else S1 for ok in fast),
+        _kernel_params(cfg),
+    )
+    start, end, head, code, score, out = (
+        b.start, b.end, b.head, b.code, b.score, b.text
+    )
+    strip = resolve_strip(cfg.ckernels)
+    strip_norm = resolve_strip_norm(cfg.ckernels)
+    drop = cfg.drop_score
+    res = []
+    for (html, meta, _), ok, n_blocks, j0, j1 in zip(
+        fronts, fast, b.n_blocks, b.span_off, b.span_off[1:]
+    ):
+        meta["n_blocks"] = n_blocks
+        charset = meta["charset"]
+        rows: List[dict] = []
+        preserved = None
+        for j in range(j0, j1):
+            if score[j] < drop:
+                continue
+            c = code[j]
+            if c == DONE:
+                text = out[j]
+            elif c == STRIPPED:
+                text = decode_stripped(out[j], charset)
+            else:
+                if preserved is None:
+                    preserved = pre_regions(html)
+                text = _span_text(
+                    html, start[j], end[j], charset, cfg, preserved,
+                    strip_norm if ok else None, strip,
+                )
+            _add_row(rows, start[j], end[j], score[j],
+                     "heading" if head[j] else "content", text, cfg)
+        res.append(_fold(rows, cfg))
+    return res
 
 
 def _doc_front(raw, hint, cfg: ExtractConfig) -> Tuple[bytes, dict, str]:
@@ -297,6 +387,24 @@ def _hints(pdf: pd.DataFrame, charset_col: "str | None"):
     return [None] * len(pdf)
 
 
+def _extract_docs(pdf: pd.DataFrame, cfg: ExtractConfig, charset_col):
+    """Both stages over a batch's documents → (fronts, decoded): per
+    document ``_doc_front``'s (html, meta, charset status) and
+    ``(rows, joined, conf)``. With the C kernel that is one
+    ``_decode_batch``; without it, the per-document reference path."""
+    pairs = zip(pdf["html"].tolist(), _hints(pdf, charset_col))
+    kernel = resolve_extract_spans(cfg.ckernels)
+    if kernel is not None:
+        fronts = [_doc_front(raw, hint, cfg) for raw, hint in pairs]
+        return fronts, _decode_batch(fronts, kernel, cfg)
+    fronts, decoded = [], []
+    for raw, hint in pairs:
+        html, spans, meta, cs_status = _extract_doc(raw, hint, cfg)
+        fronts.append((html, meta, cs_status))
+        decoded.append(_decode_spans(html, spans, meta["charset"], cfg))
+    return fronts, decoded
+
+
 def extract_batch(
     pdf: pd.DataFrame,
     cfg: ExtractConfig,
@@ -308,22 +416,15 @@ def extract_batch(
     ``charset_col`` names a per-row HTTP-header charset hint column
     (e.g. read_warc(with_charset=True)); WHATWG precedence applies —
     a BOM wins, then the header hint, then the in-document meta."""
+    fronts, decoded = _extract_docs(pdf, cfg, charset_col)
     out = {
         "url": pdf["url"].tolist(),
-        "text": [],
-        "spans": [],
-        "conf": [],
-        "status": [],
-        "meta": [],
+        "text": [joined for _, joined, _ in decoded],
+        "spans": [rows for rows, _, _ in decoded],
+        "conf": [conf for _, _, conf in decoded],
+        "status": [cs_status for _, _, cs_status in fronts],
+        "meta": [meta for _, meta, _ in fronts],
     }
-    for raw, hint in zip(pdf["html"].tolist(), _hints(pdf, charset_col)):
-        html, spans, meta, cs_status = _extract_doc(raw, hint, cfg)
-        rows, joined, conf = _decode_spans(html, spans, meta["charset"], cfg)
-        out["text"].append(joined)
-        out["spans"].append(rows)
-        out["conf"].append(conf)
-        out["status"].append(cs_status)
-        out["meta"].append(meta)
     res = pd.DataFrame(out)
     for col in passthrough:
         res[col] = pdf[col].values
@@ -347,14 +448,35 @@ def make_extract_fn(
 def detect_batch(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
     """Stage-1-only batch op → (url, spans[start,end,score,kind], meta);
     ``meta`` equals extract_batch's for the same row."""
-    out = {"url": pdf["url"].tolist(), "spans": [], "meta": []}
-    for raw in pdf["html"].tolist():
-        _, spans, meta, _ = _extract_doc(raw, None, cfg)
-        out["spans"].append(
-            [{"start": s.start, "end": s.end, "score": s.score, "kind": s.kind} for s in spans]
-        )
-        out["meta"].append(meta)
-    return pd.DataFrame(out)
+    fronts = [_doc_front(raw, None, cfg) for raw in pdf["html"].tolist()]
+    kernel = resolve_extract_spans(cfg.ckernels)
+    if kernel is not None:  # stage 1 of every document in one C call
+        from webx.ctokenize import S1
+
+        b = kernel([html for html, _, _ in fronts], bytes([S1]) * len(fronts),
+                   _kernel_params(cfg))
+        for (_, meta, _), n_blocks in zip(fronts, b.n_blocks):
+            meta["n_blocks"] = n_blocks
+        spans = [
+            [Span(b.start[j], b.end[j], b.score[j],
+                  "heading" if b.head[j] else "content", b.first[j], b.last[j])
+             for j in range(j0, j1)]
+            for j0, j1 in zip(b.span_off, b.span_off[1:])
+        ]
+    else:
+        spans = []
+        for html, meta, _ in fronts:
+            meta["n_blocks"], doc_spans = _extract_doc_stage1(html, cfg)
+            spans.append(doc_spans)
+    return pd.DataFrame({
+        "url": pdf["url"].tolist(),
+        "spans": [
+            [{"start": s.start, "end": s.end, "score": s.score, "kind": s.kind}
+             for s in doc_spans]
+            for doc_spans in spans
+        ],
+        "meta": [meta for _, meta, _ in fronts],
+    })
 
 
 def make_detect_fn(cfg: ExtractConfig):
@@ -396,12 +518,11 @@ def interleave_batch(
     boilerplate — link farms, nav — keep spans separate, so the
     common figure-between-sections layout interleaves exactly)."""
     out = {"url": [], "seq": [], "kind": [], "text": [], "src": [], "alt": []}
-    for url, raw, hint in zip(
-        pdf["url"].tolist(), pdf["html"].tolist(), _hints(pdf, charset_col)
+    fronts, decoded = _extract_docs(pdf, cfg, charset_col)
+    for url, (trunc, meta, _), (rows, _, _) in zip(
+        pdf["url"].tolist(), fronts, decoded
     ):
-        trunc, spans, meta, _ = _extract_doc(raw, hint, cfg)
         codec = meta["charset"]
-        rows, _, _ = _decode_spans(trunc, spans, codec, cfg)
         items: List[tuple] = [(r["start"], "text", r["text"], None, None) for r in rows]
         for m in _IMG_TAG_RE.finditer(trunc):
             attrs = m.group(1)
@@ -409,9 +530,9 @@ def interleave_batch(
             if not sm:
                 continue
             am = _IMG_ALT_RE.search(attrs)
-            src = sm.group(1).decode(codec, errors="replace")
+            src = _charset_decode(sm.group(1), codec)
             alt = _WS_RE.sub(
-                " ", am.group(1).decode(codec, errors="replace")
+                " ", _charset_decode(am.group(1), codec)
             ).strip() if am else ""
             items.append((m.start(), "image", None, src, alt))
         items.sort(key=lambda t: t[0])

@@ -175,7 +175,7 @@ def _charset_decode(raw: bytes, charset: str) -> str:
 # segmentation hint (the common corpus-cleaning trade, chosen here).
 # These code points are never pure ASCII bytes and &shy;-style entities
 # carry '&', so text containing them can never take the fused C
-# byte-path (wx_strip_norm bails on both) — this Python pass is the
+# byte-path (webx/_ctok.c norm_fast bails on both) — this Python pass is the
 # only normalize kernel that ever sees them; no C twin needed.
 _INVIS_RE = re.compile(
     "[\u00ad\u200b\u200e\u200f\u202a-\u202e\u2060\u2066-\u2069\ufeff]"
@@ -423,7 +423,7 @@ _ASCII_COMPAT_MEMO: dict = {}
 def is_ascii_compatible(charset: str) -> bool:
     """True when ``charset`` decodes every pure-ASCII byte string
     exactly like ASCII — the precondition for the fused byte-level
-    normalization kernel (webx/_ctok.c wx_strip_norm). Probed by
+    normalization kernel (webx/_ctok.c norm_fast). Probed by
     strict-decoding all 128 ASCII bytes plus an adversarial string of
     shift/escape sequences (see _ASCII_PROBE2): stateful or escape-
     interpreting codecs either raise or produce different text and are
