@@ -43,7 +43,7 @@ def parse_args(argv):
                         "listing (lineage.snapshot_id_for_path) so a "
                         "regenerated input reads as a NEW snapshot")
     p.add_argument("--arrow-batch-rows", type=int, default=1024,
-                   help="Arrow records per mapInPandas batch. Spark has "
+                   help="Arrow records per mapInArrow batch. Spark has "
                         "no byte-based cap, so this bounds Python-worker "
                         "memory BY ROW COUNT: size it to ~64 MB of html "
                         "per batch (1024 rows x ~64 KB average page; the "

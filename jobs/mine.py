@@ -104,6 +104,9 @@ def main(argv=None) -> int:
     if args.cache_pages:
         pages = pages.cache()
 
+    # the per-row HTTP-header charset (read_warc(with_charset=True))
+    # reaches every HTML lane's document front
+    hint = "http_charset" if "http_charset" in pages.columns else None
     counts = {}
     t0 = time.time()
     for lane in lanes:
@@ -115,11 +118,11 @@ def main(argv=None) -> int:
         elif lane == "interleaved":
             from webx.pipeline import run_interleave
 
-            df = run_interleave(pages)
+            df = run_interleave(pages, charset_col=hint)
         elif lane == "contexts":
             from webx.pipeline import image_contexts, run_interleave
 
-            df = image_contexts(run_interleave(pages))
+            df = image_contexts(run_interleave(pages, charset_col=hint))
         elif lane == "media":
             from webx.urls import media_sources
 
@@ -137,13 +140,13 @@ def main(argv=None) -> int:
 
             # the exact lane (nesting, implicit closures, data/layout
             # classifier) — one Arrow mapInPandas like interleaved
-            df = run_table_extraction(pages)
+            df = run_table_extraction(pages, charset_col=hint)
         elif lane == "comments":
             from webx.comments import split_comments
 
             # main text vs user-comment text (trafilatura's comments
             # field analog) — one Arrow mapInPandas
-            df = split_comments(pages)
+            df = split_comments(pages, charset_col=hint)
         else:  # bitext
             from pyspark.sql import functions as F
 

@@ -77,6 +77,9 @@ def main(argv) -> int:
             # Python objects from plain malloc: the documents' own bytes
             # get ASan redzones too
             PYTHONMALLOC="malloc",
+            # and Arrow buffers (the html columns the kernel reads in
+            # place) from the system allocator, for the same reason
+            ARROW_DEFAULT_MEMORY_POOL="system",
             UBSAN_OPTIONS="print_stacktrace=1:halt_on_error=1",
             PYTHONDONTWRITEBYTECODE="1",
         )

@@ -268,3 +268,33 @@ def test_gnarly_main_text_matches_flagship():
     flag = extract_batch(df, CFG)
     assert got["text"].tolist() == flag["text"].tolist()
     assert got["comment_text"].tolist() == [""] * len(pages)
+
+
+def test_header_charset_reaches_every_html_lane():
+    """A cp1251 page whose meta says utf-8, served with an HTTP-header
+    charset of windows-1251: the header wins in every HTML lane, so the
+    comments lane's main text equals the flagship text (Cyrillic, not
+    latin-1 mojibake), and markdown and table cells decode the same."""
+    from webx.extract import extract_batch
+    from webx.markdown import render_markdown_batch
+    from webx.tables import tables_batch
+
+    page = (
+        '<html><head><meta charset="utf-8"></head><body><article>'
+        "<h1>Новости дня</h1><p>Новости дня: сегодня в городе открылась "
+        "новая библиотека, и жители пришли посмотреть на неё.</p>"
+        "<table><tr><th>Город</th><th>Число</th></tr>"
+        "<tr><td>Новости дня</td><td>12</td></tr></table>"
+        "</article></body></html>"
+    ).encode("cp1251")
+    pdf = pd.DataFrame(
+        {"url": ["u"], "html": [page], "http_charset": ["windows-1251"]}
+    )
+    flag = extract_batch(pdf, CFG, charset_col="http_charset")
+    assert "Новости дня" in flag["text"][0]
+    com = split_comments_batch(pdf, CFG, charset_col="http_charset")
+    assert com["text"][0] == flag["text"][0]
+    md = render_markdown_batch(pdf, CFG, charset_col="http_charset")
+    assert "# Новости дня" in md["markdown"][0]
+    cells = tables_batch(pdf, CFG, charset_col="http_charset")["cell"].tolist()
+    assert "Новости дня" in cells and "Город" in cells

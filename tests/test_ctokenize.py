@@ -728,3 +728,241 @@ def test_batch_kernel_constant_c_calls_per_batch(monkeypatch):
     assert counts[1000] == counts[10]
     assert counts[1000]["wx_extract_batch"] == 1
     assert sum(counts[1000].values()) <= 3
+
+
+# ---- the WX_ROW front and final row (Arrow in, Arrow out)
+
+_BOMS = (b"\xef\xbb\xbf", b"\xff\xfe", b"\xfe\xff")
+
+
+def _front_fast_ref(raw: bytes, cfg) -> bool:
+    """Whether a page qualifies for the kernel's document front, from
+    the reference: no BOM, no NUL in bytes 0-3, not truncated, resolved
+    to utf-8 by sniff_charset's fast paths alone (the full prescan is
+    stubbed out) and strictly valid UTF-8. A qualifying page leaves
+    ``_doc_front`` unchanged, with status ok and codec utf-8."""
+    from unittest import mock
+
+    import webx.charset as cs
+    from webx.extract import _doc_front
+
+    if not raw or len(raw) > cfg.limit_side_len or b"\x00" in raw[:4]:
+        return False
+    if raw[:3] == _BOMS[0] or raw[:2] in _BOMS[1:]:
+        return False
+    with mock.patch.object(cs, "_sniff_prescan", lambda head, default: None):
+        if cs.sniff_charset(raw, cfg.default_charset) != "utf-8":
+            return False
+    try:
+        raw.decode("utf-8")
+    except UnicodeDecodeError:
+        return False
+    html, meta, status = _doc_front(raw, None, cfg)
+    assert (html, status) == (raw, "ok")
+    assert meta == {"html_bytes": len(raw), "n_blocks": 0, "truncated": False,
+                    "charset": "utf-8"}
+    return True
+
+
+def _front_fast_c(pages: list, cfg) -> list:
+    """The kernel's front verdict per page: with drop_score above every
+    score no span is kept, so a page's row is final exactly when it
+    passes the front."""
+    import dataclasses
+
+    import pyarrow as pa
+
+    from webx.ctokenize import extract_rows
+    from webx.extract import _doc_buffers, _kernel_params
+
+    html = pa.array(pages, pa.binary())
+    addrs, lens = _doc_buffers(html, None)
+    r = extract_rows(addrs, lens, _kernel_params(dataclasses.replace(cfg, drop_score=2.0)))
+    return r.done.tolist()
+
+
+_FRONT_FRAGMENTS = st.sampled_from([
+    b'<meta charset="utf-8">', b'<META CHARSET="UTF-8">', b'<Meta Charset="Utf-8">',
+    b'<meta charset="utf-8"/>', b'<meta charset="utf-8" />', b'<meta charset="utf-8"',
+    b"<meta charset='utf-8'>", b'<meta charset = "utf-8">', b'<meta  charset="utf-8">',
+    b'<meta charset="utf8">', b'<meta charset="latin-1">', b'<meta charset="utf-16">',
+    b'<meta http-equiv="Content-Type" content="text/html; charset=utf-8">',
+    b"<meta name=x>", b"<meta", b"<me", b"ta", b"<!--", b"-->", b"<!-- c -->",
+    b"<html>", b"<head>", b"<title>t</title>", b"<p>", b"words ", b" ", b"/", b">",
+    b"\x00", b"<\x00", b"\xc3\xa9", b"\xe2\x86\x92", b"\xf0\x9f\x98\x80",
+    b"\xc0\xaf", b"\xc1\xbf", b"\xe0\x80\xaf", b"\xe0\x9f\xbf", b"\xed\xa0\x80",
+    b"\xed\xbf\xbf", b"\xf0\x8f\xbf\xbf", b"\xf4\x90\x80\x80", b"\xf5\x80\x80\x80",
+    b"\x80", b"\xbf", b"\xe2\x82", b"\xf0\x9f\x98", b"\xc3", b"\xff", b"\xfe",
+])
+
+
+@st.composite
+def _front_pages(draw):
+    lead = draw(st.sampled_from([b"", *_BOMS, b"\x00<", b"<\x00", b"a\x00", b"ab\x00"]))
+    # filler that moves the fragments across the 1,024-byte head edge
+    fill = b"a" * draw(st.integers(0, 1040))
+    parts = draw(st.lists(_FRONT_FRAGMENTS, max_size=12))
+    cut = draw(st.integers(0, len(parts)))
+    return lead + b"".join(parts[:cut]) + fill + b"".join(parts[cut:])
+
+
+@settings(max_examples=400, deadline=None)
+@given(st.lists(_front_pages(), min_size=1, max_size=8),
+       st.sampled_from(["utf-8", "windows-1252", "UTF-8"]),
+       st.sampled_from([4_000_000, 1030]))
+def test_row_front_matches_doc_front(pages, default_charset, limit):
+    """The kernel's document front (front_utf8) against _doc_front:
+    meta case and spacing, <!-- before or after the meta, the meta
+    straddling byte 1,024 and '/>' cut at the head edge, BOMs, NULs in
+    bytes 0-3, overlong/surrogate/truncated UTF-8 and a default charset
+    other than utf-8."""
+    from webx.config import ExtractConfig
+
+    cfg = ExtractConfig(default_charset=default_charset, limit_side_len=limit)
+    assert _front_fast_c(pages, cfg) == [_front_fast_ref(p, cfg) for p in pages]
+
+
+def test_row_front_head_edge():
+    """The canonical meta whose '>' or '/>' falls just inside or just
+    outside the first 1,024 bytes."""
+    from webx.config import ExtractConfig
+
+    cfg = ExtractConfig()
+    meta = b'<meta charset="utf-8"'
+    pages = [b"a" * (1024 - len(meta) - k) + meta + tail + b"<p>x</p>"
+             for k in range(-1, 3) for tail in (b">", b"/>")]
+    assert _front_fast_c(pages, cfg) == [_front_fast_ref(p, cfg) for p in pages]
+    assert any(_front_fast_c(pages, cfg)) and not all(_front_fast_c(pages, cfg))
+
+
+_UTF8_EDGES = [
+    b"\xc3\xa9", b"\xe2\x86\x92", b"\xf0\x9f\x98\x80", b"\xed\x9f\xbf",
+    b"\xee\x80\x80", b"\xf4\x8f\xbf\xbf", b"\xc2\x80", b"\xdf\xbf",
+    b"\xc0\xaf", b"\xc1\xbf", b"\xe0\x80\xaf", b"\xe0\x9f\xbf",
+    b"\xed\xa0\x80", b"\xed\xbf\xbf", b"\xf0\x8f\xbf\xbf", b"\xf4\x90\x80\x80",
+    b"\xf5\x80\x80\x80", b"\xf8\x88\x80\x80\x80", b"\xff", b"\x80", b"\xbf",
+    b"\xe2\x82", b"\xf0\x9f\x98", b"\xc3", b"\xe2\x28\xa1", b"\xc3\x28",
+]
+
+
+def test_row_front_utf8_edges():
+    """Each well-formed and ill-formed UTF-8 edge, mid-page and at the
+    very end of the page, judged as CPython's strict decoder does."""
+    from webx.config import ExtractConfig
+
+    cfg = ExtractConfig()
+    pages = [p for seq in _UTF8_EDGES
+             for p in (b"<p>" + seq + b" text</p>", b"<p>words " * 3 + seq)]
+    got = _front_fast_c(pages, cfg)
+    assert got == [_front_fast_ref(p, cfg) for p in pages]
+    assert any(got) and not all(got)
+
+
+def _arrow_rows(batch, cfg, passthrough=(), charset_col=None) -> list:
+    from webx.extract import make_extract_fn
+
+    out = list(make_extract_fn(cfg, passthrough, charset_col)([batch]))
+    for b in out:
+        b.validate(full=True)
+    return [_bits(row) for b in out for row in b.to_pylist()]
+
+
+def test_arrow_batch_matches_reference():
+    """The mapInArrow body against ckernels='off', row for row with
+    float bits, on a sliced RecordBatch with NULL html, a header-charset
+    column, timestamp and string passthrough, a page over
+    limit_side_len, a non-ASCII join_sep and a span scoring exactly
+    drop_score."""
+    import dataclasses
+    import datetime
+
+    import pandas as pd
+    import pyarrow as pa
+
+    from webx.config import ExtractConfig
+    from webx.extract import detect_batch
+
+    pages = _flagship_pages(40) + _MIXED_BATCH + [
+        b"<html><body>" + _ART * 3 + b"<p>" + b"x" * 900 + b"</p></body></html>"
+    ]
+    n = len(pages)
+    # a span score of the batch's first page, to drop at exactly it
+    spans = detect_batch(pd.DataFrame({"url": ["u"], "html": pages[3:4]}),
+                         ExtractConfig())["spans"][0]
+    edge = max(s["score"] for s in spans)
+    ts = [datetime.datetime(2024, 1, 1, tzinfo=datetime.timezone.utc)
+          + datetime.timedelta(seconds=i) for i in range(n)]
+    hints = [None if i % 4 else ("windows-1251", "utf-8", "bogus")[i // 4 % 3]
+             for i in range(n)]
+    batch = pa.RecordBatch.from_pydict({
+        "url": [f"u{i}" for i in range(n)],
+        "html": pa.array(pages, pa.binary()),
+        "ts": pa.array(ts, pa.timestamp("us", tz="UTC")),
+        "lang": [None if i % 5 == 0 else "en" for i in range(n)],
+        "http_charset": pa.array(hints, pa.string()),
+    }).slice(3, n - 5)
+    assert batch.column("html").offset == 3
+    for cfg in (
+        ExtractConfig(),
+        ExtractConfig(limit_side_len=1500, join_sep=" ¶ ", nfc=True),
+        ExtractConfig(drop_score=edge, expand_ratio=0.4),
+    ):
+        off = dataclasses.replace(cfg, ckernels="off")
+        for args in ((("ts", "lang"), "http_charset"), (("lang",), None), ((), None)):
+            got = _arrow_rows(batch, cfg, *args)
+            assert got == _arrow_rows(batch, off, *args)
+            assert len(got) == batch.num_rows
+    # the edge span is kept (score >= drop_score) on the C path
+    row = _arrow_rows(batch.slice(0, 1), ExtractConfig(drop_score=edge))[0]
+    assert edge.hex() in [s["score"] for s in row["spans"]]
+
+
+def test_flagship_batch_skips_the_python_front(monkeypatch):
+    """A 10,000-document flagship batch runs no _doc_front and crosses
+    ctypes a constant number of times: the calls 10 documents make."""
+    import pyarrow as pa
+
+    import webx.ctokenize as ck
+    import webx.extract as ex
+    from webx.config import ExtractConfig
+
+    fronts = []
+    real_front = ex._doc_front
+    monkeypatch.setattr(
+        ex, "_doc_front", lambda *a: fronts.append(1) or real_front(*a)
+    )
+    counts = {}
+    for n in (10, 10_000):
+        batch = pa.RecordBatch.from_pydict({
+            "url": [str(i) for i in range(n)],
+            "html": pa.array(_flagship_pages(n), pa.binary()),
+        })
+        lib = _CountingLib(ck._lib)
+        monkeypatch.setattr(ck, "_lib", lib)
+        out = list(ex.make_extract_fn(ExtractConfig())([batch]))
+        del out
+        monkeypatch.setattr(ck, "_lib", lib._real)
+        counts[n] = dict(lib.calls)
+    assert fronts == []
+    assert counts[10_000] == counts[10]
+    assert counts[10_000]["wx_extract_batch"] == 1
+
+
+def test_arrow_batch_splits_past_int32_offsets(monkeypatch):
+    """A batch whose kernel columns would overflow int32 Arrow offsets
+    comes out as several output batches, with the same rows."""
+    import pyarrow as pa
+
+    import webx.extract as ex
+    from webx.config import ExtractConfig
+
+    n = 64
+    batch = pa.RecordBatch.from_pydict({
+        "url": [str(i) for i in range(n)],
+        "html": pa.array(_flagship_pages(n), pa.binary()),
+    })
+    whole = list(ex.make_extract_fn(ExtractConfig())([batch]))
+    monkeypatch.setattr(ex, "_I32_MAX", 3000)
+    parts = list(ex.make_extract_fn(ExtractConfig())([batch]))
+    assert len(whole) == 1 and len(parts) > 1
+    assert [r for b in parts for r in b.to_pylist()] == whole[0].to_pylist()

@@ -36,12 +36,12 @@ def queries():
 
 def test_flagship_extraction_zero_shuffle_but_explicit_repartition(spark, queries):
     """scan → project → ONE explicit round-robin exchange (the
-    cfg.repartition story) → MapInPandas → no other shuffle."""
+    cfg.repartition story) → MapInArrow → no other shuffle."""
     plan = plan_of(queries["q_extract"](spark, SF))
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
     assert nodes(plan, "Exchange") == 1  # only the explicit _par repartition
-    # shape: Scan -> Project -> Exchange -> MapInPandas -> Project, nothing else
-    assert nodes(plan, "Scan") == 1 and nodes(plan, "MapInPandas") == 1
+    # shape: Scan -> Project -> Exchange -> MapInArrow -> Project, nothing else
+    assert nodes(plan, "Scan") == 1 and nodes(plan, "MapInArrow") == 1
 
 
 def test_textstats_scan_is_exchange_free_and_pruned(spark, queries):

@@ -856,6 +856,12 @@ typedef struct {
     double expand_ratio, rescue_thresh;
     long rescue_max_chars;
     double drop_score;
+    /* the WX_ROW document front and final row (webx/extract.py
+     * _doc_front, _fold): the truncation cap, whether default_charset
+     * is "utf-8", and join_sep as UTF-8 bytes */
+    long limit_side_len, default_utf8;
+    const uint8_t* join_sep;
+    long join_len;
 } wxparams;
 
 /* one finalized span; code/text_len are stage 2's (0 until it runs) */
@@ -1493,15 +1499,20 @@ void wx_free_bytes(uint8_t* p) {
  * The batch entry: stage 1 and the stage-2 fast path over every
  * document of an Arrow batch in ONE call (the batch is the reference's
  * tensor batch, mindocr/data/builder.py:154-161). The documents are the
- * caller's own buffers (a pointer/length array: no copy). Per document,
- * modes[d] picks the work:
+ * caller's own buffers (a pointer/length array over the Arrow column's
+ * data or the bytes objects: no copy). Per document, modes[d] picks the
+ * work:
  *   WX_S1     stage 1 only;
  *   WX_S1_S2  stage 1, then strip_passes + norm_fast over each kept
  *             span (score >= drop_score) unless the span holds an
  *             <xmp>/<plaintext> open or the document a <pre>/<listing>
  *             open (those decode on the Python path: code 0);
  *   WX_S2     no stage 1: the whole document is one span through
- *             strip_passes + norm_fast (the per-span strip_norm_c).
+ *             strip_passes + norm_fast (the per-span strip_norm_c);
+ *   WX_ROW    the raw page: the document front (front_utf8), then
+ *             WX_S1_S2, then the final row (finish_row). A page that
+ *             fails the front, or has a kept span that is not DONE,
+ *             is left to the Python path: done[d] = 0 and no spans.
  * A span's code is 0 (stage 2 not run), 1 (text is the final
  * normalized ASCII text) or 2 (text is strip_passes' output; the
  * caller finishes decoding it).
@@ -1510,9 +1521,9 @@ void wx_free_bytes(uint8_t* p) {
  *   uint8_t* wx_extract_batch(const uint8_t* const* docs,
  *       const long* lens, const uint8_t* modes, long n_docs,
  *       const wxparams* p, long* out_bytes);
- *     returns ONE malloc'd buffer of *out_bytes bytes, read with one
- *     copy on the Python side (D = n_docs, S = span count; int64
- *     slots, then doubles, then bytes):
+ *     returns ONE malloc'd buffer of *out_bytes bytes, read in place on
+ *     the Python side (D = n_docs, S = span count; int64 slots, then
+ *     doubles, then int64 slots, then bytes):
  *       [0] S   [1] stage-2 text bytes
  *       [2 .. 2+D)     n_blocks per document
  *       [.. +D+1)      span offsets: document d owns spans
@@ -1522,13 +1533,20 @@ void wx_free_bytes(uint8_t* p) {
  *                      span j's text is [toff[j], toff[j+1]) (empty
  *                      when code is 0)
  *       [.. +S)        span scores (doubles)
- *       then the stage-2 text bytes.
+ *       [.. +D)        conf per document (doubles; WX_ROW only)
+ *       [.. +D)        done per document: 1 when a WX_ROW document's
+ *                      row is final; its spans are then exactly its
+ *                      output rows
+ *       [.. +D+1)      joined-text offsets, in bytes from the buffer
+ *                      start (empty unless done)
+ *       then the stage-2 text bytes, then the joined texts.
  *     NULL only on malloc failure. Free with wx_free_bytes.
  * ==================================================================== */
 
 #define WX_S1 0
 #define WX_S1_S2 1
 #define WX_S2 2
+#define WX_ROW 3
 
 /* an open tag of one of names (lowercase): '<' + name, any case, then
  * [\s/>] — the probes of recognize.pre_regions and has_rawkept */
@@ -1602,54 +1620,195 @@ static int strip_norm_span(const uint8_t* in, long n, bytebuf* text,
     return 1;
 }
 
+/* the stage-2 fast path over document h[0:n)'s spans [j0, sp->count):
+ * each kept span (score >= drop_score) runs strip_norm_span unless it
+ * holds an <xmp>/<plaintext> open or the document a <pre>/<listing>
+ * open. 0 on malloc failure. */
+static int stage2_doc(const uint8_t* h, long n, const wxparams* p,
+                      spanbuf* sp, long j0, bytebuf* text, bytebuf* scratch) {
+    if (sp->count == j0 || has_open_tag(h, n, PRE_NAMES)) return 1;
+    for (long j = j0; j < sp->count; j++) {
+        wxspan* s = &sp->data[j];
+        long a = s->start, len = s->end - s->start;
+        if (s->score < p->drop_score) continue;
+        if (has_open_tag(h + a, len, RAWKEPT_NAMES)) continue;
+        if (!strip_norm_span(h + a, len, text, scratch, s)) return 0;
+    }
+    return 1;
+}
+
+/* first index of lit (lowercase, k bytes) in h[0:m) compared
+ * ASCII-case-insensitively (bytes.lower().find), or -1 */
+static long find_lower(const uint8_t* h, long m, const char* lit, long k) {
+    for (long i = 0; i + k <= m; i++) {
+        const uint8_t* q = (const uint8_t*)memchr(h + i, lit[0], (size_t)(m - i));
+        if (!q) return -1;
+        i = q - h;
+        long j = 1;
+        while (j < k && i + j < m && lo(h[i + j]) == (uint8_t)lit[j]) j++;
+        if (j == k) return i;
+    }
+    return -1;
+}
+
+/* webx/charset.py sniff_charset's two fast paths over the page head
+ * (its first 1,024 bytes): 1 when they resolve the page to utf-8 — no
+ * "<meta" and default_charset is "utf-8", or the first "<meta" is the
+ * canonical <meta charset="utf-8"> (then '>' or "/>" inside the head)
+ * with no "<!--" before it. 0 leaves the page to the full prescan. */
+static int sniff_utf8(const uint8_t* h, long n, long default_utf8) {
+    static const char FAST[] = "<meta charset=\"utf-8\"";
+    long m = n < 1024 ? n : 1024, k = (long)sizeof(FAST) - 1;
+    long q = find_lower(h, m, "<meta", 5);
+    if (q < 0) return default_utf8 != 0;
+    if (find_lower(h, q, "<!--", 4) >= 0 || q + k > m) return 0;
+    for (long j = 0; j < k; j++)
+        if (lo(h[q + j]) != (uint8_t)FAST[j]) return 0;
+    if (q + k < m && h[q + k] == '>') return 1;
+    return q + k + 2 <= m && h[q + k] == '/' && h[q + k + 1] == '>';
+}
+
+/* CPython's strict UTF-8 decoder's verdict on s[0:n): well-formed per
+ * Unicode Table 3-7 — no overlong form, surrogate, code point past
+ * U+10FFFF or truncated sequence. */
+static int utf8_valid(const uint8_t* s, long n) {
+    long i = 0;
+    while (i < n) {
+        if (i + 8 <= n && !(wx_load64(s + i) & WX_HIGH)) { i += 8; continue; }
+        uint8_t c = s[i];
+        if (c < 0x80) { i++; continue; }
+        long k;
+        uint8_t lo2 = 0x80, hi2 = 0xBF;
+        if (c >= 0xC2 && c <= 0xDF) k = 1;
+        else if (c >= 0xE0 && c <= 0xEF) {
+            k = 2;
+            if (c == 0xE0) lo2 = 0xA0;
+            if (c == 0xED) hi2 = 0x9F;
+        } else if (c >= 0xF0 && c <= 0xF4) {
+            k = 3;
+            if (c == 0xF0) lo2 = 0x90;
+            if (c == 0xF4) hi2 = 0x8F;
+        } else return 0;
+        if (i + k >= n || s[i + 1] < lo2 || s[i + 1] > hi2) return 0;
+        for (long j = 2; j <= k; j++)
+            if ((s[i + j] & 0xC0) != 0x80) return 0;
+        i += k + 1;
+    }
+    return 1;
+}
+
+/* The WX_ROW document front: 1 when webx/extract.py _doc_front keeps
+ * the page's bytes as they are and decodes them as utf-8 with status
+ * ok — non-empty, no BOM and no NUL in bytes 0-3 (the UTF-16
+ * signatures), not longer than limit_side_len, sniffed utf-8 by the
+ * fast paths, strictly valid UTF-8. The caller passes a NULL page, or
+ * one with a header charset hint, as empty. */
+static int front_utf8(const uint8_t* h, long n, const wxparams* p) {
+    if (n <= 0 || n > p->limit_side_len) return 0;
+    if (n >= 2 && ((h[0] == 0xFF && h[1] == 0xFE) || (h[0] == 0xFE && h[1] == 0xFF)))
+        return 0;
+    if (n >= 3 && h[0] == 0xEF && h[1] == 0xBB && h[2] == 0xBF) return 0;
+    for (long i = 0; i < n && i < 4; i++)
+        if (!h[i]) return 0;
+    return sniff_utf8(h, n, p->default_utf8) && utf8_valid(h, n);
+}
+
+/* The final row of a WX_ROW document whose spans are [j0, sp->count),
+ * their stage-2 texts in order from t: keeps the rows webx/extract.py
+ * _add_row keeps (score >= drop_score, non-empty text; ASCII text is
+ * NFC already), folds conf as webx.detect.weighted_mean does over their
+ * scores and text lengths, and appends their texts joined by join_sep
+ * to joined. Returns 0 (nothing written) when a kept span is not DONE,
+ * -1 on malloc failure. */
+static int finish_row(spanbuf* sp, long j0, const uint8_t* t,
+                      const wxparams* p, bytebuf* joined, double* conf) {
+    long need = 0, rows = 0;
+    for (long j = j0; j < sp->count; j++) {
+        const wxspan* s = &sp->data[j];
+        if (s->score < p->drop_score) continue;
+        if (s->code != 1) return 0;
+        if (s->text_len) { need += s->text_len; rows++; }
+    }
+    if (rows > 1) need += (rows - 1) * p->join_len;
+    if (!bytebuf_reserve(joined, need)) return -1;
+    double acc = 0.0, total = 0.0;
+    long w = j0;
+    for (long j = j0; j < sp->count; j++) {
+        wxspan s = sp->data[j];
+        if (s.score < p->drop_score || !s.text_len) continue;
+        if (w > j0 && p->join_len) {
+            memcpy(joined->data + joined->len, p->join_sep, (size_t)p->join_len);
+            joined->len += p->join_len;
+        }
+        memcpy(joined->data + joined->len, t, (size_t)s.text_len);
+        joined->len += s.text_len;
+        t += s.text_len;
+        acc += s.score * (double)s.text_len;
+        total += (double)s.text_len;
+        sp->data[w++] = s;
+    }
+    sp->count = w;
+    *conf = acc / (total > 1.0 ? total : 1.0);
+    return 1;
+}
+
 uint8_t* wx_extract_batch(const uint8_t* const* docs, const long* lens,
                           const uint8_t* modes, long n_docs,
                           const wxparams* p, long* out_bytes) {
     spanbuf sp = {0, 0, 0};
-    bytebuf text = {0, 0, 0}, scratch = {0, 0, 0};
+    bytebuf text = {0, 0, 0}, scratch = {0, 0, 0}, joined = {0, 0, 0};
     uint8_t* out = NULL;
     long D = n_docs > 0 ? n_docs : 0;
-    int64_t* head = (int64_t*)malloc((size_t)(2 * D + 1) * sizeof(int64_t));
+    /* n_blocks [D], span offsets [D+1], done [D], joined offsets [D+1] */
+    int64_t* head = (int64_t*)calloc((size_t)(4 * D + 2), sizeof(int64_t));
+    double* conf = (double*)calloc((size_t)(D + 1), sizeof(double));
     *out_bytes = 0;
-    if (!head || !bytebuf_reserve(&text, 1)) goto done;
+    if (!head || !conf || !bytebuf_reserve(&text, 1)) goto done;
     int64_t* nblk = head;
     int64_t* soff = head + D;
+    int64_t* row = soff + D + 1;
+    int64_t* joff = row + D;
     for (long d = 0; d < D; d++) {
         const uint8_t* h = docs[d];
         long n = lens[d];
         soff[d] = sp.count;
+        joff[d] = joined.len;
         if (modes[d] == WX_S2) {
             if (!spanbuf_reserve(&sp, 1)) goto done;
             wxspan* s = &sp.data[sp.count++];
             wxspan whole = {0, n, 0, 0, 0, 0.0, 0, 0};
             *s = whole;
-            nblk[d] = 0;
             if (!strip_norm_span(h, n, &text, &scratch, s)) goto done;
             continue;
         }
+        if (modes[d] == WX_ROW && !front_utf8(h, n, p)) continue;
+        long t0 = text.len;
         long k = detect_final_doc(h, n, p, &sp);
         if (k < 0) goto done;
         nblk[d] = k;
-        if (modes[d] != WX_S1_S2 || sp.count == soff[d]) continue;
-        if (has_open_tag(h, n, PRE_NAMES)) continue;
-        for (long j = soff[d]; j < sp.count; j++) {
-            wxspan* s = &sp.data[j];
-            long a = s->start, len = s->end - s->start;
-            if (s->score < p->drop_score) continue;
-            if (has_open_tag(h + a, len, RAWKEPT_NAMES)) continue;
-            if (!strip_norm_span(h + a, len, &text, &scratch, s)) goto done;
+        if (modes[d] != WX_S1 &&
+            !stage2_doc(h, n, p, &sp, soff[d], &text, &scratch)) goto done;
+        if (modes[d] != WX_ROW) continue;
+        int r = finish_row(&sp, soff[d], text.data + t0, p, &joined, &conf[d]);
+        if (r < 0) goto done;
+        row[d] = r;
+        if (!r) { /* the Python path redoes this page from its front */
+            sp.count = soff[d];
+            text.len = t0;
         }
     }
     soff[D] = sp.count;
+    joff[D] = joined.len;
     long S = sp.count;
     long n_ints = 2 + 2 * D + 1 + 7 * S + 1;
-    long base = (n_ints + S) * (long)sizeof(int64_t);
+    long base = (n_ints + S + 3 * D + 1) * (long)sizeof(int64_t);
     /* slide the text up behind the header room in its own buffer (a
      * large block grows by remapping), so it is never held twice */
-    out = (uint8_t*)realloc(text.data, (size_t)(base + text.len));
+    out = (uint8_t*)realloc(text.data, (size_t)(base + text.len + joined.len));
     if (!out) goto done;
     text.data = NULL;
     memmove(out + base, out, (size_t)text.len);
+    if (joined.len) memcpy(out + base + text.len, joined.data, (size_t)joined.len);
     int64_t* hdr = (int64_t*)out;
     hdr[0] = S;
     hdr[1] = text.len;
@@ -1657,6 +1816,9 @@ uint8_t* wx_extract_batch(const uint8_t* const* docs, const long* lens,
     int64_t* col = hdr + 2 + 2 * D + 1;
     int64_t* toff = col + 6 * S;
     double* score = (double*)(toff + S + 1);
+    double* cf = score + S;
+    int64_t* done_out = (int64_t*)(cf + D);
+    int64_t* joff_out = done_out + D;
     toff[0] = base;
     for (long j = 0; j < S; j++) {
         const wxspan* s = &sp.data[j];
@@ -1669,11 +1831,18 @@ uint8_t* wx_extract_batch(const uint8_t* const* docs, const long* lens,
         toff[j + 1] = toff[j] + s->text_len;
         score[j] = s->score;
     }
-    *out_bytes = base + text.len;
+    for (long d = 0; d < D; d++) {
+        cf[d] = conf[d];
+        done_out[d] = row[d];
+    }
+    for (long d = 0; d <= D; d++) joff_out[d] = base + text.len + joff[d];
+    *out_bytes = base + text.len + joined.len;
 done:
     free(head);
+    free(conf);
     free(sp.data);
     free(scratch.data);
     free(text.data);
+    free(joined.data);
     return out;
 }

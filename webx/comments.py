@@ -51,7 +51,7 @@ import pandas as pd
 
 from webx.config import ExtractConfig
 from webx.detect import Span
-from webx.extract import _decode_spans, _extract_doc
+from webx.extract import _decode_spans, _extract_doc, _hints, lane_columns
 
 COMMENT_TOKENS = frozenset(
     b"comment comments review reviews discussion replies responses".split()
@@ -209,12 +209,14 @@ def comment_regions(html: bytes) -> Tuple[Tuple[int, int], ...]:
     return tuple(out)
 
 
-def split_comments_batch(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
+def split_comments_batch(
+    pdf: pd.DataFrame, cfg: ExtractConfig, charset_col: "str | None" = None
+) -> pd.DataFrame:
     out = {
         "url": pdf["url"].tolist(), "text": [], "comment_text": [], "n_comment_spans": [],
     }
-    for raw in pdf["html"].tolist():
-        html, spans, meta, _ = _extract_doc(raw, None, cfg)
+    for raw, hint in zip(pdf["html"].tolist(), _hints(pdf, charset_col)):
+        html, spans, meta, _ = _extract_doc(raw, hint, cfg)
         regions = comment_regions(html)
         parts: List[Span] = []
         inside = {}  # (start, end) of a comment part -> its span's index
@@ -241,10 +243,14 @@ def split_comments_batch(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
     return pd.DataFrame(out)
 
 
-def split_comments(pages, cfg: Optional[ExtractConfig] = None):
+def split_comments(
+    pages, cfg: Optional[ExtractConfig] = None, charset_col: Optional[str] = None
+):
     """pages(url, html, …) → (url, text, comment_text, n_comment_spans):
     the flagship extraction with comment-region bytes routed into a
-    separate column. Narrow plan: pruned scan → one Arrow mapInPandas."""
+    separate column. Narrow plan: pruned scan → one Arrow mapInPandas.
+    ``charset_col`` names a per-row HTTP-header charset hint column, as
+    in run_extraction."""
     from pyspark.sql import types as T
 
     cfg = cfg or ExtractConfig()
@@ -257,8 +263,10 @@ def split_comments(pages, cfg: Optional[ExtractConfig] = None):
         ]
     )
 
+    cols, charset_col = lane_columns(pages, charset_col)
+
     def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            yield split_comments_batch(pdf, cfg)
+            yield split_comments_batch(pdf, cfg, charset_col)
 
-    return pages.select("url", "html").mapInPandas(fn, schema=schema)
+    return pages.select(*cols).mapInPandas(fn, schema=schema)

@@ -8,14 +8,18 @@ mirrors its Python reference bit for bit (tests/test_ctokenize.py fuzzes
 them against each other).
 
 The extractor crosses ctypes once per Arrow batch, not per document:
-``extract_spans`` (wx_extract_batch) takes every document of the batch
-as one pointer/length array over the documents' own bytes, runs stage 1
-for each and the stage-2 fast path over each kept span, and hands back
-flat columns read once — span bounds, scores, kinds, first/last block,
-``n_blocks`` per document, the stage-2 bytes with their offsets and a
-done code per span. ``detect_final`` and ``strip_norm_c``, the
-per-document and per-span forms the other lanes use, are batches of one
-through the same entry, so C holds one implementation of each stage.
+wx_extract_batch takes every document of the batch as one
+pointer/length array over the documents' own bytes (an Arrow column's
+data buffer, or bytes objects). ``extract_rows`` runs the document
+front, both stages and the final row of each page and hands back numpy
+views over the kernel's one buffer, which the extractor wraps as Arrow
+arrays without a copy. ``extract_spans`` runs stage 1 and the stage-2
+fast path over each kept span and hands back flat columns read once —
+span bounds, scores, kinds, first/last block, ``n_blocks`` per
+document, the stage-2 bytes with their offsets and a done code per
+span. ``detect_final`` and ``strip_norm_spans``, the per-document forms
+the other lanes use, go through the same entry, so C holds one
+implementation of each stage.
 
 Build: compiled from source with gcc at import time when the shipped
 ``_ctok.so`` is missing or older than ``_ctok.c`` (each process compiles
@@ -33,7 +37,6 @@ from __future__ import annotations
 
 import ctypes
 import os
-import struct
 import subprocess
 from functools import lru_cache
 from typing import List, NamedTuple, Optional
@@ -106,6 +109,10 @@ class _Params(ctypes.Structure):
         ("rescue_thresh", ctypes.c_double),
         ("rescue_max_chars", ctypes.c_long),
         ("drop_score", ctypes.c_double),
+        ("limit_side_len", ctypes.c_long),
+        ("default_utf8", ctypes.c_long),
+        ("join_sep", ctypes.c_char_p),
+        ("join_len", ctypes.c_long),
     ]
 
 
@@ -267,7 +274,7 @@ def detect_table(
 
 
 # the per-document work wx_extract_batch does (webx/_ctok.c)
-S1, S1_S2, S2 = 0, 1, 2
+S1, S1_S2, S2, ROW = 0, 1, 2, 3
 # a span's stage-2 outcome (0: not run): final text, stripped bytes only
 DONE, STRIPPED = 1, 2
 # S2 runs no stage 1: its parameters are never read
@@ -359,14 +366,89 @@ def extract_spans(htmls, modes: bytes, p: _Params) -> BatchSpans:
     return _run(htmls, modes, p, read)
 
 
-_ONE_S1, _ONE_S2 = bytes((S1,)), bytes((S2,))
-# a one-document, one-span output: code, text start, text end (slots 10-12)
-_ONE_SPAN = struct.Struct("=3q")
+class _Owner:
+    """Frees a wx_extract_batch buffer when the last view over it goes."""
+
+    __slots__ = ("addr", "free")
+
+    def __init__(self, addr: int):
+        self.addr, self.free = addr, _lib.wx_free_bytes
+
+    def __del__(self):
+        self.free(self.addr)
 
 
-def _one_span(view: memoryview):
-    code, a, b = _ONE_SPAN.unpack_from(view, 80)
-    return bytes(view[a:b]), code == DONE
+class BatchRows(NamedTuple):
+    """wx_extract_batch's WX_ROW output for n documents: numpy views
+    over the kernel's one buffer, which stays alive while any of them
+    does (nothing is copied). ``done[d]`` marks a document whose row is
+    final; its output rows are spans ``span_off[d]:span_off[d + 1]``, and
+    its joined text ``joined[joff[d] - joff[0]:joff[d + 1] - joff[0]]``.
+    Span ``j``'s text is ``text[toff[j] - toff[0]:toff[j + 1] - toff[0]]``.
+    A document that is not done has no spans and an empty text."""
+
+    done: "np.ndarray"
+    n_blocks: "np.ndarray"
+    span_off: "np.ndarray"
+    start: "np.ndarray"
+    end: "np.ndarray"
+    head: "np.ndarray"
+    score: "np.ndarray"
+    toff: "np.ndarray"
+    text: "np.ndarray"
+    conf: "np.ndarray"
+    joff: "np.ndarray"
+    joined: "np.ndarray"
+
+
+def extract_rows(addrs, lens, p: _Params) -> BatchRows:
+    """The document front, both stages and the final row of every
+    document of a batch in ONE C call (wx_extract_batch, WX_ROW mode).
+    ``addrs``/``lens`` are int64 numpy arrays: each document's address
+    and length (an Arrow binary column's data plus its offsets; length 0
+    for a page the kernel must leave to the Python path)."""
+    import numpy as np
+    import pyarrow as pa
+
+    n = len(lens)
+    size = ctypes.c_long()
+    addr = _lib.wx_extract_batch(
+        addrs.ctypes.data, lens.ctypes.data, bytes((ROW,)) * n, n,
+        ctypes.byref(p), ctypes.byref(size),
+    )
+    if not addr:
+        raise MemoryError("wx_extract_batch allocation failure")
+    buf = np.frombuffer(
+        pa.foreign_buffer(addr, size.value, base=_Owner(addr)), dtype=np.uint8
+    )
+    m = int(buf[:8].view(np.int64)[0])
+    c = 3 + 2 * n  # first span column
+    ints = buf[: 8 * (c + 8 * m + 2 + 3 * n)].view(np.int64)
+    reals = ints.view(np.float64)
+    toff = ints[c + 6 * m : c + 7 * m + 1]
+    s = c + 7 * m + 1  # first double
+    joff = ints[s + m + 2 * n : s + m + 3 * n + 1]
+    return BatchRows(
+        ints[s + m + n : s + m + 2 * n] != 0, ints[2 : 2 + n], ints[2 + n : c],
+        ints[c : c + m], ints[c + m : c + 2 * m], ints[c + 4 * m : c + 5 * m],
+        reals[s : s + m], toff, buf[toff[0] : toff[-1]],
+        reals[s + m : s + m + n], joff, buf[joff[0] : joff[-1]],
+    )
+
+
+_ONE_S1 = bytes((S1,))
+
+
+def _stage2(n: int):
+    """Reader of an S2 batch of n spans: one (out_bytes, ok) per span."""
+    c = 3 + 2 * n  # first span column; under S2 span j is document j
+
+    def read(view):
+        ints = view[8 * (c + 5 * n) : 8 * (c + 7 * n + 1)].cast("q").tolist()
+        return [(bytes(view[a:b]), k == DONE)
+                for k, a, b in zip(ints[:n], ints[n:], ints[n + 1:])]
+
+    return read
 
 
 def detect_final(
@@ -398,15 +480,21 @@ def detect_final(
             ints[5 + 4 * m : 5 + 5 * m], scores)
 
 
+def strip_norm_spans(raws) -> list:
+    """Stage-2 fast path over many spans in ONE wx_extract_batch call,
+    each span a document of its own (S2). Returns one (out_bytes, ok)
+    per span: ok=True means out_bytes IS the final normalized text
+    (pure-ASCII, entity-free span — decode with any ASCII-compatible
+    charset and you have decode_span's result); ok=False means out_bytes
+    is exactly strip_markup's output and the caller finishes with the
+    reference Python normalization."""
+    n = len(raws)
+    return _run(raws, bytes((S2,)) * n, _S2, _stage2(n))
+
+
 def strip_norm_c(raw: bytes):
-    """Stage-2 fast path over one span: a batch of one through
-    wx_extract_batch, the span being the whole input. Returns
-    (out_bytes, ok): ok=True means out_bytes IS the final normalized
-    text (pure-ASCII, entity-free span — decode with any
-    ASCII-compatible charset and you have decode_span's result);
-    ok=False means out_bytes is exactly strip_markup's output and the
-    caller finishes with the reference Python normalization."""
-    return _run((raw,), _ONE_S2, _S2, _one_span)
+    """``strip_norm_spans`` over one span: (out_bytes, ok)."""
+    return strip_norm_spans((raw,))[0]
 
 
 def strip_markup_c(raw: bytes) -> bytes:

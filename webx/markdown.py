@@ -41,7 +41,13 @@ from webx.detect import (
     validate_spans,
     weighted_mean,
 )
-from webx.extract import _decode_spans, _doc_front, resolve_tokenize_table
+from webx.extract import (
+    _decode_spans,
+    _doc_front,
+    _hints,
+    lane_columns,
+    resolve_tokenize_table,
+)
 
 _H_TAG_RE = re.compile(rb"<[hH]([1-6])[^>]*>")
 _LOOKBACK = 80  # bytes: expand_spans only widens into whitespace, so the
@@ -113,10 +119,12 @@ def _structured_spans(html: bytes, cfg: ExtractConfig):
     )
 
 
-def render_markdown_batch(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
+def render_markdown_batch(
+    pdf: pd.DataFrame, cfg: ExtractConfig, charset_col: "str | None" = None
+) -> pd.DataFrame:
     out = {"url": pdf["url"].tolist(), "markdown": [], "n_headings": [], "status": []}
-    for raw in pdf["html"].tolist():
-        html, meta, cs_status = _doc_front(raw, None, cfg)
+    for raw, hint in zip(pdf["html"].tolist(), _hints(pdf, charset_col)):
+        html, meta, cs_status = _doc_front(raw, hint, cfg)
         spans = _structured_spans(html, cfg)
         rows, _, _ = _decode_spans(html, spans, meta["charset"], cfg)
         parts = []
@@ -137,13 +145,18 @@ def render_markdown_batch(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame
 
 
 def run_markdown(
-    pages: DataFrame, cfg: Optional[ExtractConfig] = None
+    pages: DataFrame,
+    cfg: Optional[ExtractConfig] = None,
+    charset_col: Optional[str] = None,
 ) -> DataFrame:
-    """(url, html, …) → (url, markdown, n_headings, status)."""
+    """(url, html, …) → (url, markdown, n_headings, status).
+    ``charset_col`` names a per-row HTTP-header charset hint column, as
+    in run_extraction."""
     cfg = cfg or ExtractConfig()
+    cols, charset_col = lane_columns(pages, charset_col)
 
     def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            yield render_markdown_batch(pdf, cfg)
+            yield render_markdown_batch(pdf, cfg, charset_col)
 
-    return pages.select("url", "html").mapInPandas(fn, MARKDOWN_SCHEMA)
+    return pages.select(*cols).mapInPandas(fn, MARKDOWN_SCHEMA)

@@ -8,7 +8,7 @@ straggler handling; we keep (a) the stage decomposition, (b) explicit
 partitioning/skew control, (c) per-partition metrics (webx.lineage).
 
 Scale notes (the plan this produces at 100 TB):
-* default is a NARROW plan — scan → mapInPandas → sink, no shuffle at
+* default is a NARROW plan — scan → mapInArrow → sink, no shuffle at
   all; Iceberg/parquet split sizing already balances bytes per task, and
   the extractor is embarrassingly per-row.
 * ``cfg.repartition`` adds an explicit url-hash exchange only when the
@@ -18,7 +18,7 @@ Scale notes (the plan this produces at 100 TB):
   the dynamic-gear analog (deploy/py_infer/src/data_process/utils/
   gear_utils.py:9-48) — so giant pages spread across tasks.
 * column pruning: we select only the columns the stage needs before the
-  mapInPandas, so the parquet/Iceberg scan reads url+html (+passthrough),
+  mapInArrow, so the parquet/Iceberg scan reads url+html (+passthrough),
   never the teacher ``text`` column.
 """
 
@@ -68,7 +68,7 @@ def run_extraction(
     df = pages.select(*cols)  # column pruning reaches the scan
     df = partition_for_extraction(df, cfg)
     out_schema = extracted_schema([pages.schema[c] for c in pt])
-    return df.mapInPandas(make_extract_fn(cfg, pt, charset_col), schema=out_schema)
+    return df.mapInArrow(make_extract_fn(cfg, pt, charset_col), schema=out_schema)
 
 
 def run_interleave(
@@ -81,7 +81,7 @@ def run_interleave(
     in DOM order, one row per sequence element (webx/extract.py
     interleave_batch). Same narrow plan as run_extraction: pruned scan →
     one mapInPandas → rows; src resolution stays a downstream column op."""
-    from webx.extract import make_interleave_fn
+    from webx.extract import lane_columns, make_interleave_fn
 
     cfg = cfg or ExtractConfig()
     schema = T.StructType(
@@ -94,11 +94,8 @@ def run_interleave(
             T.StructField("alt", T.StringType()),
         ]
     )
-    if charset_col is not None and charset_col not in pages.columns:
-        charset_col = None
-    cols = ["url", "html"] + ([charset_col] if charset_col else [])
-    df = pages.select(*cols)
-    df = partition_for_extraction(df, cfg)
+    cols, charset_col = lane_columns(pages, charset_col)
+    df = partition_for_extraction(pages.select(*cols), cfg)
     return df.mapInPandas(make_interleave_fn(cfg, charset_col), schema=schema)
 
 

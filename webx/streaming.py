@@ -4,7 +4,7 @@ The reference is batch-only (SURVEY.md §2.10) — its "streaming" is
 bounded producer/consumer queues in the multiprocess runtime
 (deploy/py_infer/src/parallel/framework/module_manager.py:89-93). We add
 the real thing on top of the same stage functions: ``readStream`` over
-the input table → the identical fused ``mapInPandas`` extractor →
+the input table → the identical fused ``mapInArrow`` extractor →
 ``writeStream`` with exactly-once file-sink semantics. Incremental
 ingestion of new crawl files therefore reuses byte-identical extraction
 logic; ``Trigger.AvailableNow`` drains the backlog and stops (the
@@ -36,10 +36,10 @@ def read_pages_stream(
 
 def extract_stream(pages: DataFrame, cfg: Optional[ExtractConfig] = None) -> DataFrame:
     """Same fused extractor as batch ``run_extraction`` on a streaming DF
-    (stateless mapInPandas — no shuffle, no state store)."""
+    (stateless mapInArrow — no shuffle, no state store)."""
     cfg = cfg or ExtractConfig()
     df = pages.select("url", "html")
-    return df.mapInPandas(make_extract_fn(cfg, ()), schema=extracted_schema())
+    return df.mapInArrow(make_extract_fn(cfg, ()), schema=extracted_schema())
 
 
 def run_extraction_stream(

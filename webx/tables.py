@@ -66,7 +66,7 @@ from typing import Iterable, Iterator, List, Optional, Tuple
 import pandas as pd
 
 from webx.config import ExtractConfig
-from webx.extract import _doc_front
+from webx.extract import _doc_front, _hints, lane_columns
 from webx.recognize import _COMMENT_RE, _RAWTEXT_RE, decode_span
 
 # quote-aware structural tag (the _BLOCKTAG_RE attr grammar): a quoted
@@ -246,13 +246,17 @@ def parse_tables(html: bytes, charset: str) -> List[dict]:
     return out
 
 
-def tables_batch(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
+def tables_batch(
+    pdf: pd.DataFrame, cfg: ExtractConfig, charset_col: "str | None" = None
+) -> pd.DataFrame:
     out = {
         "url": [], "table_idx": [], "row_idx": [], "col_idx": [],
         "header": [], "cell": [], "caption": [],
     }
-    for url, raw in zip(pdf["url"].tolist(), pdf["html"].tolist()):
-        html, meta, _ = _doc_front(raw, None, cfg)
+    for url, raw, hint in zip(
+        pdf["url"].tolist(), pdf["html"].tolist(), _hints(pdf, charset_col)
+    ):
+        html, meta, _ = _doc_front(raw, hint, cfg)
         for t_idx, tab in enumerate(parse_tables(html, meta["charset"])):
             for r_idx, row in enumerate(tab["rows"]):
                 for c_idx, (is_th, cell) in enumerate(row):
@@ -266,10 +270,14 @@ def tables_batch(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
     return pd.DataFrame(out)
 
 
-def run_table_extraction(pages, cfg: Optional[ExtractConfig] = None):
+def run_table_extraction(
+    pages, cfg: Optional[ExtractConfig] = None, charset_col: Optional[str] = None
+):
     """pages(url, html, …) → one row per data-table cell:
     (url, table_idx, row_idx, col_idx, header, cell, caption).
-    Narrow plan: pruned two-column scan → one Arrow mapInPandas."""
+    Narrow plan: pruned two-column scan → one Arrow mapInPandas.
+    ``charset_col`` names a per-row HTTP-header charset hint column, as
+    in run_extraction."""
     from pyspark.sql import types as T
 
     cfg = cfg or ExtractConfig()
@@ -285,8 +293,10 @@ def run_table_extraction(pages, cfg: Optional[ExtractConfig] = None):
         ]
     )
 
+    cols, charset_col = lane_columns(pages, charset_col)
+
     def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            yield tables_batch(pdf, cfg)
+            yield tables_batch(pdf, cfg, charset_col)
 
-    return pages.select("url", "html").mapInPandas(fn, schema=schema)
+    return pages.select(*cols).mapInPandas(fn, schema=schema)
