@@ -2167,7 +2167,7 @@ def q_extract_links(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q_base_href(spark: SparkSession, sf: str) -> DataFrame:
-    """``<base href>`` resolution (webx/urls.py effective_base): pages
+    """``<base href>`` resolution (webx/urls.py effective_base_from): pages
     rotate through no-base / absolute / root-relative / document-
     relative base elements; relative hrefs must resolve against the
     declared base, root-relative ones against the BASE's origin (a
@@ -3127,8 +3127,7 @@ def q_sessions(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q_user_rollup(spark: SparkSession, sf: str) -> DataFrame:
-    """Per-user lifetime totals — the batch twin of the stateful
-    streaming counter (webx/streaming.py running_user_counts)."""
+    """Per-user lifetime totals (webx/events.py user_rollup)."""
     from webx.events import user_rollup
 
     return user_rollup(spark.read.parquet(f"{sf}/events.parquet"))
@@ -6528,8 +6527,8 @@ def q_event_sequence(spark: SparkSession, sf: str) -> DataFrame:
     user, how often a view is DIRECTLY followed by a purchase in the
     event sequence — lead(event_type) over (user, ts), then one count.
     The window formulation of sequence patterns; k-step or gapped
-    patterns chain more leads or fall back to stateful streaming
-    (webx/streaming.py sessionize)."""
+    patterns chain more leads or fall back to a sessionized pass
+    (webx/events.py sessionize)."""
     from pyspark.sql import Window
 
     ev = spark.read.parquet(f"{sf}/events.parquet")

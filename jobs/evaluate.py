@@ -132,7 +132,8 @@ def main(argv=None) -> int:
     # AQE on by default: runtime re-planning (skew-join splitting,
     # post-shuffle coalescing) is the 1000-executor safety net; the
     # explicit salting/bucketing paths remain for the deterministic
-    # cases AQE cannot see (spark-submit --conf overrides still win).
+    # cases AQE cannot see. A builder .config beats spark-submit --conf
+    # for the same key, so set only what the job needs.
     b = (SparkSession.builder.appName("webx-evaluate")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

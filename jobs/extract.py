@@ -42,12 +42,6 @@ def parse_args(argv):
                         "Default: derived from the local input's data-file "
                         "listing (lineage.snapshot_id_for_path) so a "
                         "regenerated input reads as a NEW snapshot")
-    p.add_argument("--arrow-batch-rows", type=int, default=1024,
-                   help="Arrow records per mapInArrow batch. Spark has "
-                        "no byte-based cap, so this bounds Python-worker "
-                        "memory BY ROW COUNT: size it to ~64 MB of html "
-                        "per batch (1024 rows x ~64 KB average page; the "
-                        "default 10000 is ~1 GB/worker on crawl data)")
     p.add_argument("--n-partitions", type=int, default=64)
     p.add_argument("--chunk-size", type=int, default=16)
     p.add_argument("--max-chunks", type=int, default=None)
@@ -111,19 +105,13 @@ def main(argv=None) -> int:
     # AQE on by default: runtime re-planning (skew-join splitting,
     # post-shuffle coalescing) is the 1000-executor safety net; the
     # explicit salting/bucketing paths remain for the deterministic
-    # cases AQE cannot see (spark-submit --conf overrides still win).
+    # cases AQE cannot see. A builder .config beats spark-submit --conf
+    # for the same key, so set only what the job needs.
     spark = (
         SparkSession.builder.appName(f"webx-extract-{args.run_id}")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # bound Python-worker memory: an Arrow batch is fully
-        # materialized before the UDF sees it, so the cap must be set
-        # here, not inside the UDF (see --arrow-batch-rows help)
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            str(args.arrow_batch_rows),
-        )
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("WARN")

@@ -49,17 +49,13 @@ def main(argv=None) -> int:
     # AQE on by default: runtime re-planning (skew-join splitting,
     # post-shuffle coalescing) is the 1000-executor safety net; the
     # explicit salting/bucketing paths remain for the deterministic
-    # cases AQE cannot see (spark-submit --conf overrides still win).
+    # cases AQE cannot see. A builder .config beats spark-submit --conf
+    # for the same key, so set only what the job needs.
     spark = (
         SparkSession.builder.appName("webx-incremental")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # bound Python-worker memory on crawl-sized pages: Arrow batches
-        # materialize fully before the UDF runs, and Spark's only cap is
-        # row-count — 1024 rows x ~64 KB average page ~= 64 MB/batch
-        # (the 10000 default is ~1 GB/worker); --conf still overrides
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("WARN")

@@ -97,15 +97,14 @@ def test_det_labels_malformed_line_fails_loudly(spark, tmp_path):
 def test_config_preset_registry():
     import pytest as _pt
 
-    from webx.config import ExtractConfig, create_config
+    from webx.config import PRESETS, ExtractConfig
 
-    assert create_config("default") == ExtractConfig()
-    assert create_config("strict").drop_score == 0.7
-    assert create_config({"box_thresh": 0.9}).box_thresh == 0.9
-    same = ExtractConfig(tag_weight=4.0)
-    assert create_config(same) is same
-    with _pt.raises(ValueError, match="crawl.*default.*recall|supported"):
-        create_config("nope")
+    assert sorted(PRESETS) == ["crawl", "default", "recall", "strict"]
+    assert PRESETS["default"] == ExtractConfig()
+    assert PRESETS["strict"].drop_score == 0.7
+    assert ExtractConfig.from_dict({"box_thresh": 0.9}).box_thresh == 0.9
+    with _pt.raises(ValueError, match="unknown config keys"):
+        ExtractConfig.from_dict({"nope": 1})
 
 
 def test_bulk_arrays_roundtrip_order(spark, tmp_path):

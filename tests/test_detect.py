@@ -7,8 +7,9 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from tests.helpers import detect
 from webx.config import ExtractConfig
-from webx.detect import Span, block_scores, detect, merge_runs, validate_spans
+from webx.detect import Span, block_scores, validate_spans
 from webx.tokenize import tokenize
 
 CFG = ExtractConfig()

@@ -5,8 +5,9 @@ from __future__ import annotations
 
 import pandas as pd
 
+from tests.helpers import detect
 from webx.config import ExtractConfig
-from webx.detect import Span, detect, expand_spans
+from webx.detect import Span, expand_spans
 from webx.extract import extract_batch
 from webx.tokenize import tokenize
 

@@ -13,7 +13,7 @@ import random
 
 from pyspark.sql import functions as F
 
-from webx.fuzzy import deletion_variants, fuzzy_join, fuzzy_self_pairs
+from webx.fuzzy import deletion_variants, fuzzy_self_pairs
 
 
 def _lev(a: str, b: str) -> int:
@@ -92,18 +92,6 @@ def test_deletion_variants_counts(spark):
         "aaa",
         "aa",
     }
-
-
-def test_two_table_join(spark):
-    left = spark.createDataFrame(
-        [(0, "color"), (1, "flavor")], "id long, s string"
-    )
-    right = spark.createDataFrame(
-        [(10, "colour"), (11, "flavour"), (12, "odour")], "id long, s string"
-    )
-    rows = fuzzy_join(left, right, "id", "id", "s", "s", max_dist=1).collect()
-    got = {(r.id_l, r.id_r, r.dist) for r in rows}
-    assert got == {(0, 10, 1), (1, 11, 1)}
 
 
 def test_max_bucket_cap_drops_hot_variant(spark):

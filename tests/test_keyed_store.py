@@ -7,11 +7,8 @@ from __future__ import annotations
 
 import os
 
-from webx.sources import (
-    parse_keyed_shard,
-    read_keyed_store,
-    write_keyed_store,
-)
+from tests.helpers import write_keyed_store
+from webx.sources import parse_keyed_shard, read_keyed_store
 
 
 def _mk_records(n):

@@ -10,7 +10,6 @@ from webx import synth
 from webx.config import ExtractConfig
 from webx.lineage import (
     CheckpointStore,
-    read_extracted,
     run_checkpointed_extraction,
     with_partition_id,
 )
@@ -65,7 +64,7 @@ def test_kill_and_resume_byte_identical(spark, tmp_path):
     assert sorted(first + second) == list(range(NP))
     assert set(first).isdisjoint(second)
     # final output == straight (non-checkpointed) run, byte-identical
-    final = read_extracted(spark, out).select("url", "text")
+    final = spark.read.parquet(out).select("url", "text")
     straight = run_extraction(pages, CFG).select("url", "text")
     assert final.count() == 500
     assert final.exceptAll(straight).count() == 0
@@ -83,29 +82,9 @@ def test_lineage_counts_match_output(spark, tmp_path):
     agg = lineage.agg(
         F.sum("row_count").alias("rows"), F.sum("spans_out").alias("spans")
     ).first()
-    written = read_extracted(spark, out)
+    written = spark.read.parquet(out)
     assert agg["rows"] == written.count() == 500
     assert agg["spans"] == written.agg(F.sum("n_spans")).first()[0] == 400
-
-
-def test_retention_queries(spark, tmp_path):
-    """save_top_k / save_latest_k analogs as lineage-table queries."""
-    from webx.lineage import best_runs, latest_runs
-
-    pages = synth.synth_pages(spark, SF_SMALL)
-    store = CheckpointStore(str(tmp_path / "ckpt"))
-    for i, rid in enumerate(("r1", "r2")):
-        run_checkpointed_extraction(
-            spark, pages, str(tmp_path / f"out{i}"), store, rid, "s", CFG,
-            n_partitions=4, chunk_size=4,
-        )
-    lineage = store.read(spark)
-    latest = latest_runs(lineage, k=1).collect()
-    assert len(latest) == 1 and latest[0]["run_id"] == "r2"
-    assert latest[0]["partitions"] == 4 and latest[0]["rows"] == 500
-    best = best_runs(lineage, k=2).collect()
-    assert {r["run_id"] for r in best} == {"r1", "r2"}
-    assert all(r["err_ratio"] == 0.0 for r in best)
 
 
 def test_salted_partitioning_balances_mega_host(spark):
@@ -145,7 +124,7 @@ def test_partial_garbage_overwritten_on_resume(spark, tmp_path):
     run_checkpointed_extraction(
         spark, pages, str(out), store, "r", "s", CFG, n_partitions=4, chunk_size=4
     )
-    final = read_extracted(spark, str(out))
+    final = spark.read.parquet(str(out))
     assert final.count() == 500  # debris replaced, not merged or fatal
     straight = run_extraction(pages, CFG).select("url", "text")
     assert final.select("url", "text").exceptAll(straight).count() == 0
@@ -157,7 +136,7 @@ def test_checkpointed_pdf_extraction_kill_and_resume(spark, tmp_path):
     resumed output is byte-identical to a direct single-pass extract."""
     from webx import synth
     from webx.lineage import CheckpointStore, run_checkpointed_extraction
-    from webx.pdf import checkpointed_pdf_extract_fn, extract_pdf
+    from webx.pdf import extract_pdf
 
     pdfs = synth.synth_pdfs(spark, "/root/testdata/sf0.001")
     ck = CheckpointStore(str(tmp_path / "ck"))
@@ -165,7 +144,8 @@ def test_checkpointed_pdf_extraction_kill_and_resume(spark, tmp_path):
     common = dict(
         spark=spark, pages=pdfs, output_path=out, checkpoint=ck,
         run_id="pdfrun", snapshot_id="sf0.001", n_partitions=8,
-        chunk_size=2, extract_fn=checkpointed_pdf_extract_fn,
+        chunk_size=2,
+        extract_fn=lambda sub, cfg, pt: extract_pdf(sub, passthrough=tuple(pt)),
     )
     first = run_checkpointed_extraction(max_chunks=2, **common)  # "killed"
     assert len(first) == 4
@@ -186,7 +166,6 @@ def test_snapshot_id_tracks_input_content(tmp_path):
     regenerated data (new bytes/mtime) → NEW id, so resume cannot skip
     partitions completed against other bytes. Spark marker files are
     ignored."""
-    import os
     import time as _time
 
     from webx.lineage import snapshot_id_for_path
@@ -203,86 +182,6 @@ def test_snapshot_id_tracks_input_content(tmp_path):
     _time.sleep(0.01)
     (d / "part-0.parquet").write_bytes(b"bbb!")  # new size+mtime
     assert snapshot_id_for_path(str(d)) != a
-
-
-def test_compact_parquet_shrinks_files_preserves_rows(spark, tmp_path):
-    from webx.lineage import compact_parquet
-
-    p = str(tmp_path / "frag")
-    df = spark.range(5000).selectExpr("id", "concat('x', id % 97) AS s")
-    df.repartition(24).write.parquet(p)
-    import os
-
-    before = len([f for f in os.listdir(p) if f.endswith(".parquet")])
-    assert before >= 20
-    stats = compact_parquet(spark, p, target_file_bytes=10**9)
-    assert stats["files_after"] < before and not stats["skipped"]
-    back = spark.read.parquet(p)
-    assert back.count() == 5000
-    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, df.collect()))
-
-
-def test_compact_parquet_skips_when_already_compact(spark, tmp_path):
-    from webx.lineage import compact_parquet
-
-    p = str(tmp_path / "ok")
-    spark.range(100).coalesce(1).write.parquet(p)
-    stats = compact_parquet(spark, p, target_file_bytes=10**9)
-    assert stats["skipped"] and stats["files_after"] == stats["files_before"]
-
-
-def test_update_agg_state_equals_full_recompute(spark):
-    from pyspark.sql import functions as F
-
-    from webx.lineage import update_agg_state
-
-    def docs(ids):
-        return spark.createDataFrame(
-            [(i, ["en", "de", "fr"][i % 3], 10 + i % 7) for i in ids],
-            "doc_id long, lang string, n_chars long",
-        )
-
-    full = docs(range(100))
-    state = update_agg_state(None, docs(range(60)), None)
-    state = update_agg_state(state, docs(range(60, 100)), None)
-    # delete a slice, add it back, delete another
-    state = update_agg_state(state, None, docs(range(10, 30)))
-    state = update_agg_state(state, docs(range(10, 30)), docs(range(90, 100)))
-    want = (
-        docs(range(90))
-        .groupBy("lang")
-        .agg(F.count("*").alias("n_docs"), F.sum("n_chars").alias("sum_chars"))
-    )
-    assert sorted(map(tuple, state.collect())) == sorted(map(tuple, want.collect()))
-
-
-def test_update_agg_state_drops_emptied_keys(spark):
-    from webx.lineage import update_agg_state
-
-    d = spark.createDataFrame([(1, "xx", 5)], "doc_id long, lang string, n_chars long")
-    state = update_agg_state(None, d, None)
-    state = update_agg_state(state, None, d)
-    assert state.count() == 0
-
-
-def test_compact_parquet_recovers_from_rename_crash_window(spark, tmp_path):
-    """Simulate a crash between the two swap renames (path gone, data
-    under .compact_old): the next compact call must restore and
-    proceed, never losing rows."""
-    import os
-    import shutil
-
-    from webx.lineage import compact_parquet
-
-    p = str(tmp_path / "frag")
-    spark.range(3000).repartition(12).write.parquet(p)
-    os.rename(p, p + ".compact_old")          # the crash window state
-    os.makedirs(p + ".compact_tmp")           # plus a half-written tmp
-    stats = compact_parquet(spark, p, target_file_bytes=10**9)
-    assert not stats["skipped"]
-    assert spark.read.parquet(p).count() == 3000
-    assert not os.path.exists(p + ".compact_old")
-    shutil.rmtree(p + ".compact_tmp", ignore_errors=True)
 
 
 class FakeIcebergCatalog:

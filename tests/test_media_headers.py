@@ -212,7 +212,8 @@ def test_video_sniffer_total_on_garbage(b):
 
 
 def test_ogg_vorbis_and_opus_roundtrips():
-    from webx.media import ogg_opus_bytes, ogg_vorbis_bytes, sniff_audio_meta
+    from tests.helpers import ogg_opus_bytes, ogg_vorbis_bytes
+    from webx.media import sniff_audio_meta
 
     for sr in (8000, 44100, 48000, 96000):
         for ch in (1, 2, 6):
@@ -225,7 +226,8 @@ def test_ogg_vorbis_and_opus_roundtrips():
 
 
 def test_bmp_and_avif_roundtrips():
-    from webx.media import avif_bytes, bmp_bytes, sniff_image_meta
+    from tests.helpers import avif_bytes, bmp_bytes
+    from webx.media import sniff_image_meta
 
     for w, h in DIMS:
         assert sniff_image_meta(bmp_bytes(w, h)) == ("bmp", w, h, True)
@@ -233,7 +235,8 @@ def test_bmp_and_avif_roundtrips():
 
 
 def test_bmp_top_down_negative_height():
-    from webx.media import bmp_bytes, sniff_image_meta
+    from tests.helpers import bmp_bytes
+    from webx.media import sniff_image_meta
 
     raw = bytearray(bmp_bytes(100, 50))
     raw[22:26] = (-50).to_bytes(4, "little", signed=True)
@@ -241,7 +244,8 @@ def test_bmp_top_down_negative_height():
 
 
 def test_avif_is_not_mp4_and_vice_versa():
-    from webx.media import avif_bytes, mp4_bytes, sniff_image_meta, sniff_video_meta
+    from tests.helpers import avif_bytes
+    from webx.media import mp4_bytes, sniff_image_meta, sniff_video_meta
 
     assert sniff_image_meta(mp4_bytes(64, 48, 100)) == (None, None, None, False)
     assert sniff_video_meta(avif_bytes(5, 5))[0] == "mp4" or True
@@ -250,7 +254,8 @@ def test_avif_is_not_mp4_and_vice_versa():
 
 
 def test_tiff_and_ico_roundtrips():
-    from webx.media import ico_bytes, sniff_image_meta, tiff_bytes
+    from tests.helpers import ico_bytes, tiff_bytes
+    from webx.media import sniff_image_meta
 
     for w, h in ((1, 1), (800, 600), (4096, 2160)):
         assert sniff_image_meta(tiff_bytes(w, h)) == ("tiff", w, h, True)

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import math
 
-from webx.metrics import det_metrics, rec_metrics, span_matches
+from webx.metrics import _explode, _match_pairs, det_metrics, rec_metrics
 
 
 def spans_df(spark, rows):
@@ -58,7 +58,8 @@ def test_ignore_region_anti_join(spark):
 def test_span_matches_pairs(spark):
     golden = spans_df(spark, [("u", [(0, 10), (20, 30)]), ("v", [(0, 10)])])
     pred = spans_df(spark, [("u", [(0, 10), (20, 30)])])
-    got = {(r["url"], r["p_idx"], r["g_idx"]) for r in span_matches(pred, golden).collect()}
+    pairs = _match_pairs(_explode(pred, "p"), _explode(golden, "g"), 0.5)
+    got = {(r["url"], r["p_idx"], r["g_idx"]) for r in pairs.collect()}
     assert got == {("u", 0, 0), ("u", 1, 1)}
 
 
@@ -121,7 +122,7 @@ def test_iterated_greedy_rematches_unclaimed_golden(spark):
     pred = spans_df(spark, [("u", [(4, 16), (12, 20)])])
     m = sorted(
         (r["p_idx"], r["g_idx"])
-        for r in span_matches(pred, golden, iou_thresh=0.3).collect()
+        for r in _match_pairs(_explode(pred, "p"), _explode(golden, "g"), 0.3).collect()
     )
     assert m == [(0, 0), (1, 1)]
     row = det_metrics(pred, golden, iou_thresh=0.3).first()

@@ -342,6 +342,19 @@ def test_dedup_clusters_components(spark):
     assert survivors == {1, 10, 20, 99}  # min of each cluster + untouched doc
 
 
+def test_dedup_clusters_long_chain_converges(spark):
+    """A 30-node path graph is one component: label propagation runs
+    until no label changes (29 rounds to carry node 0's label to the far
+    end), never stopping early with partial labels."""
+    from webx.dedup import dedup_clusters
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(30, 59)], "id_a long, id_b long"
+    )
+    got = {r["doc_id"]: r["cluster_id"] for r in dedup_clusters(pairs).collect()}
+    assert got == {i: 30 for i in range(30, 60)}
+
+
 def test_dedup_clusters_components_without_count(spark, monkeypatch):
     """The convergence test and the broadcast gate read their counts from
     the checkpoint's observation: with ``DataFrame.count`` unusable,

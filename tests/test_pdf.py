@@ -7,10 +7,10 @@ import zlib
 
 from webx.pdf import (
     decode_text_object,
-    detect_text_objects,
     extract_pdf,
-    page_content_streams,
+    page_contents_with_fonts,
     parse_pdf,
+    regions_with_fonts,
     write_pdf,
 )
 
@@ -155,14 +155,14 @@ def test_line_moves():
 
 def test_detect_regions():
     content = b"0 0 m BT (x) Tj ET 1 1 l BT (y) Tj ET"
-    regions = detect_text_objects(content)
+    regions = [(a, b) for a, b, _ in regions_with_fonts(content)]
     assert len(regions) == 2
     assert [content[a:b][:2] for a, b in regions] == [b"BT", b"BT"]
 
 
 def test_multiple_content_streams():
     raw = write_pdf("A", "B")
-    streams = page_content_streams(raw)
+    streams = [c for c, _ in page_contents_with_fonts(raw)]
     assert len(streams) == 1 and b"BT" in streams[0]
 
 
@@ -233,7 +233,7 @@ def test_nested_unescaped_parens_in_string():
     assert decode_text_object(region) == "a (b) c"
     # and detection doesn't stop inside the string either
     content = b"BT (x (ET) y) Tj ET BT (z) Tj ET"
-    assert len(detect_text_objects(content)) == 2
+    assert len(regions_with_fonts(content)) == 2
 
 
 def test_hex_string_show():

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import pytest
 
+from tests.helpers import write_pdf_differences
 from webx.pdf import (
     _cmap_decoder,
     _parse_tounicode,
@@ -16,7 +17,6 @@ from webx.pdf import (
     parse_pdf,
     write_pdf,
     write_pdf_cid,
-    write_pdf_differences,
 )
 
 

@@ -136,25 +136,40 @@ def test_passthrough_columns(spark):
     assert out.filter(F.col("lang").isNull()).count() == 0
 
 
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """Co-located join: two tables bucketed by url join with NO shuffle."""
-    from webx.pipeline import write_extracted_bucketed
+def test_unregistered_charset_label_counts_as_absent(spark):
+    """A charset label outside the WHATWG registry is ignored, as a
+    browser ignores it: a ``punycode`` page must not fail the batch and a
+    ``unicode_escape`` page must not have its backslash escapes decoded.
+    Each gets exactly the result of the same page under a label nothing
+    knows (an undeclared page), and the good pages beside them are
+    unchanged."""
+    body = b"Caf\\xe9 au lait and a sentence long enough to score as text. " * 3
 
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        out = run_extraction(synth.synth_pages(spark, SF_SMALL), CFG)
-        write_extracted_bucketed(out, "t_bucketed_a", buckets=4)
-        write_extracted_bucketed(out, "t_bucketed_b", buckets=4)
-        a = spark.table("t_bucketed_a").select("url", "text")
-        b = spark.table("t_bucketed_b").select("url", F.col("conf").alias("conf_b"))
-        joined = a.join(b, "url")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan  # bucketing co-locates both sides
-        assert joined.count() == 500
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS t_bucketed_a")
-        spark.sql("DROP TABLE IF EXISTS t_bucketed_b")
+    def page(label):
+        return (
+            b'<html><head><meta charset="' + label + b'"></head><body>'
+            b"<article><p>" + body + b"</p></article></body></html>"
+        )
+
+    good = synth.synth_pages(spark, SF_SMALL).select("url", "html")
+    odd = spark.createDataFrame(
+        [
+            ("bad/puny", page(b"punycode")),
+            ("bad/esc", page(b"unicode_escape")),
+            ("ref/puny", page(b"x" * len(b"punycode"))),
+            ("ref/esc", page(b"x" * len(b"unicode_escape"))),
+        ],
+        "url string, html binary",
+    )
+    got = {r["url"]: r for r in run_extraction(good.unionByName(odd), CFG).collect()}
+    for kind in ("puny", "esc"):
+        bad, ref = got[f"bad/{kind}"], got[f"ref/{kind}"]
+        assert bad.asDict(recursive=True) | {"url": ""} == ref.asDict(recursive=True) | {"url": ""}
+        assert bad["status"] == "ok" and bad["meta"]["charset"] == "utf-8"
+    assert "Caf\\xe9 au lait" in got["bad/esc"]["text"]
+    alone = run_extraction(good, CFG).collect()
+    assert len(alone) == 500
+    assert all(got[r["url"]] == r for r in alone)
 
 
 def test_extract_job_size_gears_default_policy():

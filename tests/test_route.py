@@ -31,7 +31,8 @@ def test_classify_payload():
     assert classify_payload(b"  \n <html><p>x</p>") == "html"
     assert classify_payload(b"plain prose with no markup") == "other"
     assert classify_payload(b"") == "other"
-    from webx.media import avif_bytes, bmp_bytes, flac_bytes, mp4_bytes, wav_bytes
+    from tests.helpers import avif_bytes, bmp_bytes
+    from webx.media import flac_bytes, mp4_bytes, wav_bytes
 
     assert classify_payload(wav_bytes(8000, 1)) == "audio"
     assert classify_payload(flac_bytes(8000, 1)) == "audio"

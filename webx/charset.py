@@ -25,7 +25,6 @@ column so bad rows are counted, never hidden.
 
 from __future__ import annotations
 
-import codecs
 import re
 from typing import Tuple
 
@@ -235,18 +234,11 @@ def _sniff_prescan(head: bytes, default: str) -> str:
 
 
 def normalize_charset_name(name: str) -> "str | None":
-    """WHATWG-registry-normalize + validate a charset label; None when
-    neither the registry nor Python knows it (callers then fall back to
-    the sniffed declaration)."""
-    label = name.strip().lower()
-    n = _WHATWG_LABELS.get(label)
-    if n is not None:
-        return n
-    try:
-        codecs.lookup(label)
-    except LookupError:
-        return None
-    return label
+    """Resolve a charset label through the WHATWG registry; None for a
+    label the registry does not list, which callers treat as no label
+    at all, as a browser does (so a Python-only codec name such as
+    ``punycode`` or ``unicode_escape`` never decodes a page)."""
+    return _WHATWG_LABELS.get(name.strip().lower())
 
 
 def decode_bytes(raw: bytes, charset: str) -> Tuple[str, str, str]:

@@ -117,21 +117,3 @@ register_preset(
     "crawl",  # production crawl ingest: explicit skew handling on
     ExtractConfig(repartition=4096, size_gears=True),
 )
-
-
-def create_config(name_or_dict) -> ExtractConfig:
-    """By-name or by-dict config creation (``create_model`` analog —
-    mindocr/models/builder.py); unknown names raise with the supported
-    list like the reference registries."""
-    if isinstance(name_or_dict, ExtractConfig):
-        return name_or_dict
-    if isinstance(name_or_dict, dict):
-        return ExtractConfig.from_dict(name_or_dict)
-    # non-str (e.g. a list from a mis-shaped YAML) must hit the
-    # contractual ValueError, not TypeError from the dict lookup
-    if not isinstance(name_or_dict, str) or name_or_dict not in PRESETS:
-        raise ValueError(
-            f"unknown extractor preset {name_or_dict!r}; "
-            f"supported: {sorted(PRESETS)}"
-        )
-    return PRESETS[name_or_dict]

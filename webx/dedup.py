@@ -556,15 +556,17 @@ def cluster_rows(clusters: DataFrame) -> "int | None":
     return _cluster_rows.get(clusters)
 
 
-def dedup_clusters(pairs: DataFrame, max_iters: int = 25) -> DataFrame:
+def dedup_clusters(pairs: DataFrame) -> DataFrame:
     """Near-duplicate pairs → connected components: (doc_id, cluster_id)
     with cluster_id = the component's minimum doc_id — the step after
     pair generation that production dedup actually needs (one SURVIVOR
     per duplicate cluster, not per pair). Min-label propagation as a
-    driver loop of relational iterations (converges in O(component
-    diameter) rounds — near-dup clusters are shallow; each round is one
-    shuffle on the edge key over the PAIR set, which is tiny relative to
-    the corpus). Deterministic: the min label is unique.
+    driver loop of relational iterations, run until no label changes:
+    at most (largest component diameter) + 1 rounds, so the labels
+    returned are always the converged ones. Near-dup clusters are
+    shallow; each round is one shuffle on the edge key over the PAIR
+    set, which is tiny relative to the corpus. Deterministic: the min
+    label is unique.
 
     One Spark action per round: the round's eager ``localCheckpoint``.
     Round 1 reads the edges alone (a node's first label is the least of
@@ -579,8 +581,7 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 25) -> DataFrame:
     labels = sym.select(F.col("a").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
-    nodes = None
-    for i in range(max_iters):
+    for i in itertools.count():
         if i == 0:  # round 1 needs no label frame
             stepped = sym.groupBy("a").agg(
                 F.least("a", F.min("b")).alias("label")
@@ -610,12 +611,10 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 25) -> DataFrame:
         ).localCheckpoint()
         labels = stepped.select("node", "label")
         got = obs.get
-        nodes = got["nodes"]
         if got["changed"] == 0:
             break
     out = labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
-    if nodes is not None:
-        _cluster_rows[out] = nodes
+    _cluster_rows[out] = got["nodes"]
     return out
 
 

@@ -25,7 +25,6 @@ from typing import List, NamedTuple, Sequence
 import numpy as np
 
 from webx.config import ExtractConfig
-from webx.tokenize import Block
 
 
 class Span(NamedTuple):
@@ -68,26 +67,6 @@ def weighted_mean(scores: Sequence[float], weights: Sequence[float]) -> float:
         acc += s * w
         total += w
     return acc / max(total, 1.0)
-
-
-def merge_runs(
-    blocks: Sequence[Block],
-    scores: np.ndarray,
-    cfg: ExtractConfig,
-    tlen: np.ndarray | None = None,
-) -> List[Span]:
-    """Merge consecutive candidate blocks of ONE document into scored
-    spans (Block-list convenience wrapper over merge_runs_table)."""
-    n = len(blocks)
-    if n == 0:
-        return []
-    if tlen is None:
-        tlen = np.fromiter((b.tlen for b in blocks), dtype=np.int64, count=n)
-    start = np.fromiter((b.start for b in blocks), dtype=np.int64, count=n)
-    end = np.fromiter((b.end for b in blocks), dtype=np.int64, count=n)
-    heading = np.fromiter((b.heading for b in blocks), dtype=bool, count=n)
-    link = np.fromiter((b.link_tlen for b in blocks), dtype=np.int64, count=n)
-    return merge_runs_table(start, end, tlen, heading, scores, cfg, link=link)
 
 
 def merge_runs_table(
@@ -188,19 +167,6 @@ def _finalize_runs(
     if len(spans) > cfg.max_candidates:
         spans = spans[: cfg.max_candidates]
     return spans
-
-
-def detect(blocks: Sequence[Block], cfg: ExtractConfig) -> List[Span]:
-    """Single-document convenience wrapper (tests / debug)."""
-    if not blocks:
-        return []
-    n = len(blocks)
-    tlen = np.fromiter((b.tlen for b in blocks), dtype=np.int64, count=n)
-    link = np.fromiter((b.link_tlen for b in blocks), dtype=np.int64, count=n)
-    tags = np.fromiter((b.tag_cnt for b in blocks), dtype=np.int64, count=n)
-    boiler = np.fromiter((b.boiler for b in blocks), dtype=bool, count=n)
-    scores = block_scores(tlen, link, tags, boiler, cfg)
-    return merge_runs(blocks, scores, cfg)
 
 
 _WS_BYTES = frozenset(b" \t\r\n\f\v")

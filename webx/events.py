@@ -46,8 +46,7 @@ def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
 
 
 def user_rollup(events: DataFrame) -> DataFrame:
-    """Per-user lifetime totals (the batch twin of the stateful streaming
-    counter in webx.streaming.running_user_counts)."""
+    """Per-user lifetime totals: event count and summed cents."""
     return events.groupBy("user_id").agg(
         F.count("*").alias("n_events"),
         F.sum(F.floor(F.col("value") * 100).cast("long")).alias("sum_cents"),

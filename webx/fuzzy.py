@@ -119,51 +119,3 @@ def fuzzy_self_pairs(
     return cand.withColumn("dist", F.levenshtein("text_a", "text_b")).filter(
         F.col("dist") <= max_dist
     )
-
-
-def fuzzy_join(
-    left: DataFrame,
-    right: DataFrame,
-    left_id: str,
-    right_id: str,
-    left_text: str,
-    right_text: str,
-    max_dist: int = 1,
-    max_bucket: int = 0,
-) -> DataFrame:
-    """Two-table variant: every (left, right) pair within ``max_dist``.
-
-    Same blocking and exactness argument as ``fuzzy_self_pairs``; the
-    variant join is the single exchange, verified by codegen
-    ``levenshtein``.
-    """
-    lv = deletion_variants(
-        left.select(F.col(left_id).alias("__lid"), F.col(left_text).alias("__lt")),
-        "__lt",
-        k=max_dist,
-    )
-    rv = deletion_variants(
-        right.select(F.col(right_id).alias("__rid"), F.col(right_text).alias("__rt")),
-        "__rt",
-        k=max_dist,
-    )
-    if max_bucket > 0:
-        counts = rv.groupBy("variant").agg(F.count("*").alias("__n"))
-        rv = rv.join(
-            F.broadcast(counts.filter(F.col("__n") > max_bucket)),
-            "variant",
-            "left_anti",
-        )
-    cand = (
-        lv.join(rv, "variant")
-        .select(
-            F.col("__lid").alias("id_l"),
-            F.col("__rid").alias("id_r"),
-            F.col("__lt").alias("text_l"),
-            F.col("__rt").alias("text_r"),
-        )
-        .distinct()
-    )
-    return cand.withColumn("dist", F.levenshtein("text_l", "text_r")).filter(
-        F.col("dist") <= max_dist
-    )

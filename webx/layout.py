@@ -197,38 +197,6 @@ def cluster_by_zorder(
     )
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    key: str,
-    n_buckets: int,
-    sort_by: str | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Persist ``df`` hash-bucketed on ``key`` (``bucketBy`` +
-    ``saveAsTable``): each bucket file holds exactly the keys that hash
-    to it, so a later equi-join or aggregation between two tables
-    bucketed the SAME way runs with ZERO exchange — the shuffle is
-    paid once at write time, then amortized over every downstream join
-    (the co-located-join recipe for fact-fact joins at 100 TB, and the
-    parquet-table analog of Iceberg's bucket partition transform).
-    ``sort_by`` additionally pre-sorts within buckets, upgrading those
-    joins to merge-without-sort."""
-    w = df.write.format("parquet").mode(mode)
-    w = w.bucketBy(n_buckets, key)
-    if sort_by:
-        w = w.sortBy(sort_by)
-    w.saveAsTable(table)
-
-
-def read_bucketed(spark, table: str) -> DataFrame:
-    """Read a :func:`write_bucketed` table with bucketing metadata
-    intact (plain ``spark.table`` — the catalog carries the bucket
-    spec; reading the files directly would silently drop it and
-    re-introduce the shuffle)."""
-    return spark.table(table)
-
-
 def pruning_report(path: str, column: str, lo, hi) -> dict:
     """Measure data-skipping potential from REAL parquet footers: for a
     predicate ``column BETWEEN lo AND hi``, a file whose [min, max]

@@ -163,9 +163,9 @@ def run_checkpointed_extraction(
     hook: simulates a killed run). Returns the partition ids processed.
 
     ``extract_fn(subset, cfg, passthrough) -> DataFrame`` makes the
-    runner lane-generic: the default is the HTML ``run_extraction``; the
-    PDF lane plugs in ``webx.pdf.checkpointed_pdf_extract_fn``. The
-    contract output columns are (url, text, conf, status, spans,
+    runner lane-generic: the default is the HTML ``run_extraction``;
+    mixed corpora plug in ``webx.route.checkpointed_routed_extract_fn``.
+    The contract output columns are (url, text, conf, status, spans,
     meta.html_bytes) plus the passthrough columns."""
     cfg = cfg or ExtractConfig()
     # dynamic overwrite is required for idempotent per-partition retries,
@@ -252,45 +252,6 @@ def _run_checkpointed_chunks(
         checkpoint.append(_chunk_metrics(committed, run_id, snapshot_id))
         processed.extend(chunk)
     return processed
-
-
-def read_extracted(spark: SparkSession, output_path: str, fmt: str = "parquet") -> DataFrame:
-    return spark.read.format(fmt).load(output_path)
-
-
-# ----------------------------------------------------- retention queries
-# The CheckpointManager keep-top-k / keep-latest-k policies
-# (mindocr/utils/checkpoint.py:55-76) become plain queries over the
-# lineage table — no file juggling, the table IS the history.
-
-def latest_runs(lineage: DataFrame, k: int = 5) -> DataFrame:
-    """k most recent runs by last activity → (run_id, last_ts, partitions,
-    rows) — the ``save_latest_k`` analog."""
-    return (
-        lineage.groupBy("run_id")
-        .agg(
-            F.max("ts").alias("last_ts"),
-            F.countDistinct("partition_id").alias("partitions"),
-            F.sum("row_count").alias("rows"),
-        )
-        .orderBy(F.desc("last_ts"))
-        .limit(k)
-    )
-
-
-def best_runs(lineage: DataFrame, k: int = 5) -> DataFrame:
-    """k runs with the lowest error ratio (then most rows) — the
-    ``save_top_k``-by-metric analog."""
-    agg = lineage.groupBy("run_id").agg(
-        F.sum("row_count").alias("rows"),
-        F.sum("err_count").alias("errs"),
-    )
-    ratio = (F.col("errs") / F.greatest(F.col("rows"), F.lit(1))).alias("err_ratio")
-    return (
-        agg.select("run_id", "rows", "errs", ratio)
-        .orderBy(F.asc("err_ratio"), F.desc("rows"))
-        .limit(k)
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -394,99 +355,3 @@ def incremental_extract(
     # the extractor's column order.
     common = [c for c in fresh.columns if c in set(carried.columns)]
     return fresh.select(*common).unionByName(carried.select(*common)), diff
-
-
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    min_files: int = 1,
-) -> dict:
-    """Small-file compaction: rewrite a parquet directory into
-    ``ceil(total_bytes / target_file_bytes)`` files (floor
-    ``min_files``). Long-running incremental pipelines accrete one
-    file per task per run; at 10^5+ files the NameNode/manifest
-    listing and per-file open overhead dominate scan time — periodic
-    compaction is the standard hygiene (Iceberg rewrite_data_files;
-    this is its plain-parquet analog).
-
-    Rewrites via a temp sibling directory + atomic-ish rename swap so
-    a crash mid-compaction never leaves the original truncated; reads
-    see either the old or the new layout. Returns {files_before,
-    files_after, bytes} for lineage records. Coalesce (no shuffle) is
-    used — target counts only ever shrink the file count."""
-    import math
-    import os
-    import shutil
-
-    tmp = path.rstrip("/") + ".compact_tmp"
-    old = path.rstrip("/") + ".compact_old"
-    # crash recovery: a previous run that died between its two renames
-    # leaves the data under .compact_old with `path` missing — restore
-    # before doing anything else (the tmp dir, if any, is incomplete)
-    if not os.path.exists(path) and os.path.exists(old):
-        os.rename(old, path)
-    shutil.rmtree(tmp, ignore_errors=True)
-
-    files = [
-        os.path.join(path, f)
-        for f in os.listdir(path)
-        if f.endswith(".parquet") or f.endswith(".snappy.parquet")
-    ]
-    total = sum(os.path.getsize(f) for f in files)
-    n_out = max(min_files, math.ceil(total / target_file_bytes))
-    if n_out >= len(files):
-        return {"files_before": len(files), "files_after": len(files),
-                "bytes": total, "skipped": True}
-    df = spark.read.parquet(path)
-    df.coalesce(n_out).write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    after = len([f for f in os.listdir(path) if f.endswith(".parquet")])
-    return {"files_before": len(files), "files_after": after,
-            "bytes": total, "skipped": False}
-
-
-def update_agg_state(
-    state: Optional[DataFrame],
-    added: Optional[DataFrame],
-    deleted: Optional[DataFrame],
-    key: str = "lang",
-    chars_col: str = "n_chars",
-) -> DataFrame:
-    """Incremental materialized-view maintenance for the distributive
-    aggregates (count, sum): fold the ADDED and DELETED row deltas into
-    a per-key (n_docs, sum_chars) state without rescanning the corpus —
-    the standard delta rule ΔV = V ⊎ agg(Δ+) ⊎ (−agg(Δ−)). Per update
-    the work is O(delta) + a state-sized merge; a full recompute is
-    O(corpus). Keys whose count reaches zero drop out (so state stays
-    exactly equal to a recompute, not merely equivalent). min/max/
-    distinct are NOT maintainable this way (deletion breaks them) —
-    recompute those or keep a sketch (webx/sketch.py KMV merges for
-    append-only distincts)."""
-    spark_fns = []
-    if state is not None:
-        spark_fns.append(state.select(key, "n_docs", "sum_chars"))
-
-    def delta(df, sign):
-        return df.groupBy(key).agg(
-            (F.count("*") * sign).alias("n_docs"),
-            (F.sum(chars_col) * sign).alias("sum_chars"),
-        )
-
-    if added is not None:
-        spark_fns.append(delta(added, F.lit(1)))
-    if deleted is not None:
-        spark_fns.append(delta(deleted, F.lit(-1)))
-    if not spark_fns:
-        raise ValueError("nothing to merge")
-    allf = spark_fns[0]
-    for f in spark_fns[1:]:
-        allf = allf.unionByName(f)
-    return (
-        allf.groupBy(key)
-        .agg(F.sum("n_docs").alias("n_docs"), F.sum("sum_chars").alias("sum_chars"))
-        .filter(F.col("n_docs") > 0)
-    )

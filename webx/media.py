@@ -8,10 +8,7 @@ through a pure-struct JPEG/PNG/GIF/WebP header parse
 the public specs; no library needed). Only the PIXEL-level codec step is
 stubbed because no image/audio library ships in this container: those ops
 run the clearly-marked DETERMINISTIC FAKE codec (pure byte arithmetic) so
-the pipeline stays oracle-checkable end-to-end. ``_HAVE_PIL`` below only
-*detects* an optional real codec — it is the documented slot-in point for
-a real JPEG/PNG pixel decode inside ``decode_image_bytes``, not a switch
-that is consulted today.
+the pipeline stays oracle-checkable end-to-end.
 
 This mirrors how the reference treats images as opaque bytes until
 ``DecodeImage`` materializes them (mindocr/data/transforms/
@@ -352,47 +349,6 @@ def webp_bytes(w: int, h: int, variant: str = "vp8") -> bytes:
     return b"RIFF" + len(riff).to_bytes(4, "little") + riff
 
 
-def bmp_bytes(w: int, h: int) -> bytes:
-    dib = (
-        (40).to_bytes(4, "little")
-        + w.to_bytes(4, "little") + h.to_bytes(4, "little")
-        + (1).to_bytes(2, "little") + (24).to_bytes(2, "little")
-        + b"\x00" * 24
-    )
-    head = b"BM" + (14 + 40).to_bytes(4, "little") + b"\x00" * 4 + (54).to_bytes(4, "little")
-    return head + dib
-
-
-def avif_bytes(w: int, h: int) -> bytes:
-    ispe = _box(b"ispe", b"\x00" * 4 + w.to_bytes(4, "big") + h.to_bytes(4, "big"))
-    meta = _box(b"meta", b"\x00" * 4 + _box(b"iprp", _box(b"ipco", ispe)))
-    ftyp = _box(b"ftyp", b"avif\x00\x00\x00\x00avifmif1")
-    return ftyp + meta
-
-
-def tiff_bytes(w: int, h: int, big_endian: bool = False) -> bytes:
-    endian = "big" if big_endian else "little"
-    magic = b"MM\x00*" if big_endian else b"II*\x00"
-    out = magic + (8).to_bytes(4, endian)
-    entries = [(256, 3, w), (257, 3, h)]
-    out += len(entries).to_bytes(2, endian)
-    for tag, typ, val in entries:
-        out += (
-            tag.to_bytes(2, endian) + typ.to_bytes(2, endian)
-            + (1).to_bytes(4, endian) + val.to_bytes(2, endian) + b"\x00\x00"
-        )
-    out += (0).to_bytes(4, endian)
-    return out
-
-
-def ico_bytes(w: int, h: int) -> bytes:
-    return (
-        b"\x00\x00\x01\x00\x01\x00"
-        + bytes([w % 256, h % 256])
-        + b"\x00" * 8
-    )
-
-
 IMAGE_META_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
@@ -566,35 +522,6 @@ def mp3_bytes(sr_index: int, mono: bool) -> bytes:
         )
     )
     return hdr + b"\x00" * 64  # a stub frame body
-
-
-def ogg_vorbis_bytes(sample_rate: int, channels: int) -> bytes:
-    """Minimal first Ogg page carrying a Vorbis identification header."""
-    pkt = (
-        b"\x01vorbis" + (0).to_bytes(4, "little")
-        + bytes([channels]) + sample_rate.to_bytes(4, "little")
-        + b"\x00" * 12 + b"\x01"
-    )
-    hdr = (
-        b"OggS\x00\x02" + b"\x00" * 8 + b"\x01\x00\x00\x00"
-        + b"\x00\x00\x00\x00" + b"\x00\x00\x00\x00"
-        + bytes([1, len(pkt)])
-    )
-    return hdr + pkt
-
-
-def ogg_opus_bytes(sample_rate: int, channels: int) -> bytes:
-    """Minimal first Ogg page carrying an OpusHead (RFC 7845)."""
-    pkt = (
-        b"OpusHead\x01" + bytes([channels]) + (312).to_bytes(2, "little")
-        + sample_rate.to_bytes(4, "little") + b"\x00\x00\x00"
-    )
-    hdr = (
-        b"OggS\x00\x02" + b"\x00" * 8 + b"\x02\x00\x00\x00"
-        + b"\x00\x00\x00\x00" + b"\x00\x00\x00\x00"
-        + bytes([1, len(pkt)])
-    )
-    return hdr + pkt
 
 
 AUDIO_META_SCHEMA = T.StructType(
@@ -842,83 +769,6 @@ def video_meta(media: DataFrame, payload_col: str = "payload") -> DataFrame:
 
     return media.select("media_id", payload_col).mapInPandas(
         fn, schema=VIDEO_META_SCHEMA
-    )
-
-
-# ---------------------------------------------------------------- codec stubs
-
-try:  # pragma: no cover - library not present in this container
-    from PIL import Image  # noqa: F401
-
-    _HAVE_PIL = True
-except ImportError:
-    _HAVE_PIL = False
-
-
-def decode_image_bytes(payload: bytes, width: int, height: int) -> np.ndarray:
-    """FAKE codec: interpret raw payload bytes as a row-major grayscale
-    ``height×width`` grid (truncate / zero-pad). A real JPEG/PNG decode
-    slots in here when a codec lib exists (gated below); everything
-    downstream (resample, schema, batching) is format-agnostic."""
-    need = width * height
-    buf = np.frombuffer(payload or b"", dtype=np.uint8)[:need]
-    if buf.size < need:
-        buf = np.concatenate([buf, np.zeros(need - buf.size, dtype=np.uint8)])
-    return buf.reshape(height, width)
-
-
-def resize_image(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Distributed nearest-neighbor resize over image payloads →
-    (media_id, payload, meta) with the resampled grid and updated
-    dimensions. The decode step uses the deterministic fake codec above
-    (real formats need a codec lib — see ``_HAVE_PIL``); the resample
-    itself is real vectorized numpy (index-array gather per image)."""
-
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-            T.StructField(
-                "meta",
-                T.StructType(
-                    [
-                        T.StructField("mime", T.StringType()),
-                        T.StructField("width", T.IntegerType()),
-                        T.StructField("height", T.IntegerType()),
-                    ]
-                ),
-            ),
-        ]
-    )
-
-    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # precomputed gather indices are shared by every image in a batch
-        for pdf in batches:
-            out = {"media_id": [], "payload": [], "meta": []}
-            for mid, payload, w0, h0, mime in zip(
-                pdf["media_id"], pdf["payload"], pdf["width"], pdf["height"], pdf["mime"]
-            ):
-                img = decode_image_bytes(
-                    bytes(payload) if payload is not None else b"", int(w0), int(h0)
-                )
-                ys = (np.arange(height) * img.shape[0] // height).clip(0, img.shape[0] - 1)
-                xs = (np.arange(width) * img.shape[1] // width).clip(0, img.shape[1] - 1)
-                resized = img[np.ix_(ys, xs)]
-                out["media_id"].append(mid)
-                out["payload"].append(resized.tobytes())
-                out["meta"].append({"mime": mime, "width": width, "height": height})
-            yield pd.DataFrame(out)
-
-    return (
-        media.filter(F.col("kind") == "image")
-        .select(
-            "media_id",
-            "payload",
-            F.col("meta.width").alias("width"),
-            F.col("meta.height").alias("height"),
-            F.col("meta.mime").alias("mime"),
-        )
-        .mapInPandas(fn, schema=out_schema)
     )
 
 

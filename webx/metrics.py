@@ -93,13 +93,6 @@ def _match_pairs(
     return matched if matched is not None else pairs.limit(0)
 
 
-def span_matches(
-    pred: DataFrame, golden: DataFrame, iou_thresh: float = 0.5
-) -> DataFrame:
-    """Matched pairs for (url, spans)-shaped inputs."""
-    return _match_pairs(_explode(pred, "p"), _explode(golden, "g"), iou_thresh)
-
-
 def det_metrics(
     pred: DataFrame,
     golden: DataFrame,

@@ -5,7 +5,7 @@ this module is the PDF lane of the same detect→decode design the HTML
 path uses (webx/detect.py + webx/recognize.py, recasting the reference's
 DBNet detect → CRNN decode split):
 
-* stage 1 — ``detect_text_objects``: walk the document structure (classic
+* stage 1 — ``regions_with_fonts``: walk the document structure (classic
   xref table → trailer /Root → page tree → /Contents streams, FlateDecode
   or raw) and locate BT…ET text objects — the "region proposals".
 * stage 2 — ``decode_text_object``: decode each region's show-text
@@ -328,61 +328,6 @@ def write_pdf_cid(
     if extra_simple_font:
         objs.append(b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>")
     return _classic_assemble(objs, header=b"%PDF-1.6\n")
-
-
-def write_pdf_differences(title: str, body: str) -> bytes:
-    """The same document under a SIMPLE (single-byte) font whose
-    /Encoding carries a /Differences array: ASCII shows as itself
-    (WinAnsi base), every non-ASCII character gets a byte ≥ 0x80 mapped
-    by Adobe glyph name. Raises if the text needs a glyph outside the
-    supported name table — fixtures must stay within it."""
-    rev = {v: k for k, v in _AGL.items()}
-    assign: Dict[str, int] = {}
-    diffs: List[bytes] = []
-    state = {"nxt": 0x80}
-
-    def enc(s: str) -> bytes:
-        out = bytearray()
-        for ch in s:
-            if ord(ch) < 0x80:
-                out.append(ord(ch))
-                continue
-            if ch not in assign:
-                name = rev.get(ch) or (
-                    f"uni{ord(ch):04X}" if ord(ch) <= 0xFFFF else None
-                )
-                if name is None:
-                    raise ValueError(f"no glyph name for {ch!r}")
-                if state["nxt"] > 0xFF:
-                    raise ValueError("too many non-ASCII characters for one byte font")
-                assign[ch] = state["nxt"]
-                diffs.append(f"{state['nxt']} /{name}".encode())
-                state["nxt"] += 1
-            out.append(assign[ch])
-        return bytes(out)
-
-    t_enc, b_enc = enc(title), enc(body)
-    content = (
-        b"BT /F1 12 Tf 72 720 Td ("
-        + _esc(t_enc)
-        + b") Tj 0 -14 TD ("
-        + _esc(b_enc)
-        + b") Tj ET"
-    )
-    data = zlib.compress(content)
-    objs = [
-        b"<< /Type /Catalog /Pages 2 0 R >>",
-        b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
-        b"<< /Type /Page /Parent 2 0 R /Contents 4 0 R /MediaBox [0 0 612 792] "
-        b"/Resources << /Font << /F1 5 0 R >> >> >>",
-        b"<< /Length " + str(len(data)).encode() + b" /Filter /FlateDecode >>"
-        b"\nstream\n" + data + b"\nendstream",
-        b"<< /Type /Font /Subtype /Type1 /BaseFont /WebxDiff /Encoding 6 0 R >>",
-        b"<< /Type /Encoding /BaseEncoding /WinAnsiEncoding /Differences ["
-        + b" ".join(diffs)
-        + b"] >>",
-    ]
-    return _classic_assemble(objs)
 
 
 def _png_up_encode(rows: List[bytes], columns: int) -> bytes:
@@ -1328,12 +1273,6 @@ def _font_decoders(raw: bytes, offsets: dict, resources,
     return fonts
 
 
-def page_content_streams(raw: bytes) -> List[bytes]:
-    """Stage-1 structural walk: xref → /Root → page tree → decoded
-    content streams in page order."""
-    return [c for c, _ in page_contents_with_fonts(raw)]
-
-
 def _build_crypt(raw: bytes, offsets: dict, trailer: dict):
     """/Encrypt in the trailer → a verified empty-user-password handler
     (webx/pdfcrypt.py), or None for unencrypted files. Unsupported
@@ -1435,24 +1374,6 @@ def _content_tokens(content: bytes, pos: int = 0, end: Optional[int] = None):
             yield ("num", tok, m.start(), pos)
         else:
             yield ("op", tok, m.start(), pos)
-
-
-def detect_text_objects(content: bytes) -> List[Tuple[int, int]]:
-    """Stage 1 within a content stream: (start, end) byte regions of
-    BT…ET text objects — the region proposals. BT/ET are matched as
-    OPERATOR tokens by the string-aware lexer, so 'BT'/'ET' appearing
-    inside string literals cannot open or close a region."""
-    regions = []
-    start: Optional[int] = None
-    for kind, tok, t0, t1 in _content_tokens(content):
-        if kind != "op":
-            continue
-        if tok == b"BT" and start is None:
-            start = t0
-        elif tok == b"ET" and start is not None:
-            regions.append((start, t1))
-            start = None
-    return regions
 
 
 def regions_with_fonts(
@@ -1650,12 +1571,3 @@ def extract_pdf(
     return pdfs.select(F.col(url_col), F.col(pdf_col), *passthrough).mapInPandas(
         fn, schema=schema
     )
-
-
-def checkpointed_pdf_extract_fn(subset: DataFrame, cfg, passthrough) -> DataFrame:
-    """Adapter matching webx.lineage's ``extract_fn`` contract so PDF
-    corpora get the same partition-granular checkpoint/resume as HTML:
-    input (url, pdf, partition cols…) → lineage-shaped output. ``cfg``
-    is accepted for signature parity (PDF decode has no threshold knobs
-    today)."""
-    return extract_pdf(subset, passthrough=tuple(passthrough))

@@ -156,23 +156,3 @@ def explode_spans(extracted: DataFrame) -> DataFrame:
         F.col("span.kind").alias("kind"),
         F.col("span.text").alias("span_text"),
     )
-
-
-def write_extracted_bucketed(
-    extracted: DataFrame, table_name: str, buckets: int = 64
-) -> None:
-    """Bucketed/sorted-by-url managed table: downstream equi-joins between
-    tables bucketed the same way run WITHOUT an exchange (co-located
-    sort-merge join) — the shuffle-minimization sink for outputs that get
-    re-joined (dedup verdicts, quality scores, per-url metrics). Proven
-    shuffle-free by tests/test_pipeline_e2e.py::test_bucketed_join_has_no_exchange."""
-    (
-        extracted.select(
-            "url", "text", "conf", "status", F.to_json("spans").alias("spans_json")
-        )
-        .write.mode("overwrite")
-        .bucketBy(buckets, "url")
-        .sortBy("url")
-        .format("parquet")
-        .saveAsTable(table_name)
-    )

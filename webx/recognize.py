@@ -24,6 +24,7 @@ All regexes are module-level compiled; per-span work is C-level.
 from __future__ import annotations
 
 import re
+import warnings
 
 from webx.entities import unescape
 
@@ -434,14 +435,18 @@ def is_ascii_compatible(charset: str) -> bool:
     if charset == "x-user-defined":
         ok = True  # ASCII passthrough by definition (only >= 0x80 remap)
     else:
-        try:
-            ok = (
-                _ASCII_PROBE.decode(charset) == _ASCII_PROBE.decode("ascii")
-                and _ASCII_PROBE2.decode(charset)
-                == _ASCII_PROBE2.decode("ascii")
-            )
-        except Exception:
-            ok = False
+        # a codec that warns on ASCII input (unicode_escape's invalid
+        # escapes) counts as incompatible, and the probe stays silent
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")
+            try:
+                ok = (
+                    _ASCII_PROBE.decode(charset) == _ASCII_PROBE.decode("ascii")
+                    and _ASCII_PROBE2.decode(charset)
+                    == _ASCII_PROBE2.decode("ascii")
+                )
+            except Exception:
+                ok = False
     _ASCII_COMPAT_MEMO[charset] = ok
     return ok
 

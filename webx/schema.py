@@ -5,17 +5,6 @@ from __future__ import annotations
 
 from pyspark.sql import types as T
 
-# Input page table (BASELINE.json input_hint, exactly)
-PAGES_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("warc_ts", T.TimestampType()),
-        T.StructField("html", T.BinaryType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-    ]
-)
-
 SPAN_TYPE = T.StructType(
     [
         T.StructField("start", T.LongType()),   # byte offset into html

@@ -3,7 +3,7 @@
 The reference's dataset zoo (DetDataset / LMDBDataset / PredictDataset,
 SURVEY.md §2.1) collapses to "anything that yields the pages schema":
 
-* ``read_pages`` — Iceberg/parquet table (the primary path).
+* an Iceberg/parquet table read with ``spark.read`` (the primary path).
 * ``read_binary_files`` — a directory of raw .html files via Spark's
   ``binaryFile`` source (the PredictDataset analog: unlabeled input dir,
   mindocr/data/predict_dataset.py:66-79).
@@ -495,22 +495,6 @@ def read_binary_files(spark: SparkSession, path: str, glob: str = "*.html") -> D
     )
 
 
-def read_pages(
-    spark: SparkSession,
-    path: str,
-    fmt: str = "parquet",
-    sample_ratio: float = 1.0,
-    seed: int = 42,
-) -> DataFrame:
-    """The canonical table source (parquet here, iceberg in prod).
-    ``sample_ratio`` < 1 is the reference's per-dataset ``sample_ratio``
-    (mindocr/data/det_dataset.py:106-139) as seeded ``df.sample``."""
-    df = spark.read.format(fmt).load(path)
-    if sample_ratio < 1.0:
-        df = df.sample(fraction=sample_ratio, seed=seed)
-    return df
-
-
 # ------------------------------------------------- keyed binary store
 # The LMDBDataset analog (mindocr/data/rec_lmdb_dataset.py:92-155): a
 # key-addressed binary store laid out as sorted shard files, each with a
@@ -535,22 +519,6 @@ KEYED_SCHEMA = T.StructType(
         T.StructField("value", T.BinaryType()),
     ]
 )
-
-
-def write_keyed_store(
-    records: List[Tuple[str, str, bytes]], path: str, shards: int = 8
-) -> None:
-    """Fixture writer: round-robin records into ``shards`` shard files
-    under ``path`` (records keep their given order globally: shard s
-    gets records s, s+shards, …  — so global order = interleave; tests
-    use the parsed ``global_idx`` which is defined by shard-path order,
-    NOT the writer's input order)."""
-    import os
-
-    os.makedirs(path, exist_ok=True)
-    for s in range(shards):
-        with open(os.path.join(path, f"shard-{s:05d}.kvb"), "wb") as f:
-            f.write(encode_keyed_shard(records[s::shards]))
 
 
 def encode_keyed_shard(records: List[Tuple[str, str, bytes]]) -> bytes:

@@ -212,20 +212,11 @@ def effective_base_from(url: Column, bhref: Column) -> Column:
     )
 
 
-def effective_base(url: Column, html_txt: Column) -> Column:
-    """The URL relative hrefs resolve against: the page's first
-    ``<base href>`` if present, else the page url (HTML spec: only the
-    first base element counts). One-shot convenience composing
-    base_href_raw + effective_base_from — lane functions prefer the
-    split form (the raw extract in its own projection)."""
-    return effective_base_from(url, base_href_raw(html_txt))
-
-
 def extract_links(pages: DataFrame, html_col: str = "html") -> DataFrame:
     """Outlink extraction — the link-graph source every web-scale corpus
     needs (PageRank/harmonic centrality inputs, spam-farm detection):
     (url, href, resolved) per anchor, document order preserved. Relative
-    hrefs honor the page's ``<base href>`` (effective_base). Pure
+    hrefs honor the page's ``<base href>`` (effective_base_from). Pure
     codegen: lossy UTF-8 decode (see _lossy_utf8), one ``regexp_extract_all``, one
     explode, string-op resolution. No Python, no shuffle."""
     txt = _lossy_utf8(html_col)
@@ -305,7 +296,7 @@ def extract_anchors(pages: DataFrame, html_col: str = "html") -> DataFrame:
     same pattern (group 1 = href, group 2 = inner markup) keep pairing
     by construction; the inner markup has tags stripped and whitespace
     collapsed. Relative hrefs honor the page's ``<base href>``
-    (effective_base); ``nofollow`` is true when the tag's rel list
+    (effective_base_from); ``nofollow`` is true when the tag's rel list
     carries any link-graph-opt-out token (nofollow/ugc/sponsored) — the
     edge hygiene PageRank-style uses require. Pure codegen: no Python,
     no shuffle, one explode."""
@@ -407,12 +398,6 @@ def robots_flags(pages: DataFrame, html_col: str = "html") -> DataFrame:
         content.rlike(r"(?i)\bnoindex\b").alias("robots_noindex"),
         content.rlike(r"(?i)\bnofollow\b").alias("robots_nofollow"),
     )
-
-
-def drop_noindex(pages: DataFrame, html_col: str = "html") -> DataFrame:
-    """Pages minus those whose robots meta says noindex; original schema."""
-    flagged = robots_flags(pages, html_col)
-    return flagged.filter(~F.col("robots_noindex")).select(*pages.columns)
 
 
 # <link rel=canonical href=...> — rel and href in either order; the
