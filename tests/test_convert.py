@@ -97,11 +97,8 @@ def test_det_labels_malformed_line_fails_loudly(spark, tmp_path):
 def test_config_preset_registry():
     import pytest as _pt
 
-    from webx.config import PRESETS, ExtractConfig
+    from webx.config import ExtractConfig
 
-    assert sorted(PRESETS) == ["crawl", "default", "recall", "strict"]
-    assert PRESETS["default"] == ExtractConfig()
-    assert PRESETS["strict"].drop_score == 0.7
     assert ExtractConfig.from_dict({"box_thresh": 0.9}).box_thresh == 0.9
     with _pt.raises(ValueError, match="unknown config keys"):
         ExtractConfig.from_dict({"nope": 1})

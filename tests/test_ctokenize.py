@@ -304,8 +304,8 @@ def test_detect_fused_gap_mode_falls_back(monkeypatch):
     import webx.extract as ex
     from webx.config import ExtractConfig
 
-    assert ex.resolve_detect_final("off") is None
-    assert ex.resolve_detect_final("auto") is not None  # kernel built
+    assert ex.resolve_extract_spans("off") is None
+    assert ex.resolve_extract_spans("auto") is not None  # kernel built
 
     seg = b"lorem ipsum dolor sit amet consectetur adipiscing elit " * 3
     html = (b"<div>" + seg + b"</div>") * 4  # 4 adjacent candidate blocks
@@ -316,7 +316,7 @@ def test_detect_fused_gap_mode_falls_back(monkeypatch):
         raise AssertionError("Python finalization ran on the C path")
 
     monkeypatch.setattr(ex, "merge_runs_table", boom)
-    _, spans = ex._extract_doc_stage1(html, ExtractConfig())
+    spans = _stage1_final_c(html, ExtractConfig())
     assert spans == ref
     assert [s.score.hex() for s in spans] == [s.score.hex() for s in ref]
 
@@ -335,10 +335,11 @@ def _stage1_final_ref(html: bytes, cfg):
 
 
 def _stage1_final_c(html: bytes, cfg):
-    """The routing under test: _extract_doc_stage1's fused branch."""
+    """The routing under test: the batch stage-1 entry (one
+    wx_extract_batch call) over one document front."""
     import webx.extract as ex
 
-    _, spans = ex._extract_doc_stage1(html, cfg)
+    (spans,), _ = ex._stage1([(html, {"charset": "utf-8"}, "ok")], cfg)
     return spans
 
 
@@ -966,3 +967,140 @@ def test_arrow_batch_splits_past_int32_offsets(monkeypatch):
     parts = list(ex.make_extract_fn(ExtractConfig())([batch]))
     assert len(whole) == 1 and len(parts) > 1
     assert [r for b in parts for r in b.to_pylist()] == whole[0].to_pylist()
+
+
+# ---- every HTML lane on the batch entries
+
+
+# the gnarly pages with <pre>/<xmp> text or comment regions: their spans
+# or parts leave the batch call's stage-2 fast path
+_GNARLY_STAGE2 = ("04", "30", "48", "43", "46", "49")
+
+
+def _gnarly_pages(n: int) -> list:
+    """The committed gnarly corpus cycled to n pages, the pages of
+    ``_GNARLY_STAGE2`` first, so that 10 pages already take every path
+    1,000 do."""
+    import glob
+    import os
+
+    paths = sorted(glob.glob(os.path.join(
+        os.path.dirname(__file__), "fixtures", "gnarly", "*.html")),
+        key=lambda p: (os.path.basename(p)[:2] not in _GNARLY_STAGE2, p))
+    pages = []
+    for p in paths:
+        with open(p, "rb") as fh:
+            pages.append(fh.read())
+    return [pages[i % len(pages)] for i in range(n)]
+
+
+def _lane_fn(lane: str):
+    from webx.comments import split_comments_batch
+    from webx.extract import detect_batch, interleave_batch
+    from webx.markdown import render_markdown_batch
+
+    return {
+        "detect": detect_batch,
+        "interleave": interleave_batch,
+        "comments": split_comments_batch,
+        "markdown": render_markdown_batch,
+    }[lane]
+
+
+@pytest.mark.parametrize("pages", ["flagship", "gnarly"])
+@pytest.mark.parametrize("lane", ["detect", "interleave", "comments", "markdown"])
+def test_lanes_constant_c_calls_per_batch(monkeypatch, lane, pages):
+    """Each HTML lane crosses into the kernel's stages a constant number
+    of times per batch: 1,000 documents make the wx_extract_batch and
+    wx_tokenize calls 10 do, and markdown tokenizes only inside the
+    batch entry."""
+    import pandas as pd
+
+    import webx.ctokenize as ck
+    from webx.config import ExtractConfig
+
+    make = _flagship_pages if pages == "flagship" else _gnarly_pages
+    counts = {}
+    for n in (10, 1000):
+        pdf = pd.DataFrame({"url": [str(i) for i in range(n)], "html": make(n)})
+        lib = _CountingLib(ck._lib)
+        monkeypatch.setattr(ck, "_lib", lib)
+        out = _lane_fn(lane)(pdf, ExtractConfig())
+        monkeypatch.setattr(ck, "_lib", lib._real)
+        assert len(out) >= n if lane == "interleave" else len(out) == n
+        counts[n] = {k: lib.calls[k] for k in ("wx_extract_batch", "wx_tokenize")}
+    assert counts[1000] == counts[10]
+    assert 1 <= counts[1000]["wx_extract_batch"] <= 2
+    if lane == "markdown":
+        assert counts[1000]["wx_tokenize"] == 0
+
+
+def _split_spans(pages: list, cfg) -> list:
+    """markdown's stage 1 (the heading-split run rule) over one batch →
+    per page (n_blocks, [(start, end, kind, score bits, first, last)])."""
+    import pandas as pd
+
+    from webx.extract import _stage1, lane_fronts
+
+    pdf = pd.DataFrame({"url": [str(i) for i in range(len(pages))],
+                        "html": pd.Series(pages, dtype=object)})
+    fronts = lane_fronts(pdf, cfg)
+    spans, _ = _stage1(fronts, cfg, heading_split=True)
+    return [
+        (meta["n_blocks"],
+         [(s.start, s.end, s.kind, s.score.hex(), s.first_block, s.last_block)
+          for s in doc])
+        for (_, meta, _), doc in zip(fronts, spans)
+    ]
+
+
+_SPLIT_CFGS = [
+    {},
+    {"min_span_chars": 200, "max_candidates": 2},
+    {"expand_ratio": 0.4, "rescue_max_chars": 0, "binary_thresh": 0.3},
+]
+
+
+def _assert_split_matches_off(pages: list):
+    """The heading-split rule in C equals the ckernels='off' reference:
+    span bounds, kinds, block indices and the float bits of scores."""
+    from webx.config import ExtractConfig
+
+    for kw in _SPLIT_CFGS:
+        got = _split_spans(pages, ExtractConfig(**kw))
+        assert got == _split_spans(pages, ExtractConfig(ckernels="off", **kw))
+
+
+def test_heading_split_matches_reference_gnarly():
+    from webx.config import ExtractConfig
+
+    pages = _gnarly_pages(50) * 8
+    _assert_split_matches_off(pages)
+    # the rule is live on this corpus: heading spans stand alone
+    assert any(span[2] == "heading"
+               for _, doc in _split_spans(pages[:50], ExtractConfig()) for span in doc)
+
+
+def test_heading_split_matches_reference_synth(spark):
+    from webx import synth
+
+    for name in sorted(n for n in dir(synth) if n.startswith("synth_pages")):
+        rows = getattr(synth, name)(spark, "/root/testdata/sf0.001").select("html").collect()
+        _assert_split_matches_off([None if r.html is None else bytes(r.html) for r in rows])
+
+
+_SPLIT_FRAGMENTS = st.one_of(
+    _FRAGMENTS,
+    st.sampled_from([
+        b"<h2 class='wp-block-heading has-text-align-center'>", b"</h2>",
+        b"<H3>", b"</H3>", b"<h6 id=x>", b"</h6>", b"<title>", b"</title>",
+        b"alpha beta gamma delta epsilon zeta eta theta " * 2,
+        b"short head", b"<p>" + b"lorem ipsum dolor sit amet " * 4 + b"</p>",
+    ]),
+)
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.lists(st.lists(_SPLIT_FRAGMENTS, max_size=40).map(b"".join), max_size=8))
+def test_heading_split_fuzz_matches_reference(pages):
+    _assert_split_matches_off(pages)

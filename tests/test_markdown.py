@@ -86,3 +86,36 @@ def test_charset_front_matches_flagship():
         assert "�" not in t and "�" not in m
     assert "\x93smart quotes\x94" in md["markdown"][0]
     assert md["markdown"][1].startswith("# Grüße aus Köln\n\nDie Straßenbahn")
+
+
+_LONG_H2 = (
+    b'<h2 class="wp-block-heading has-text-align-center has-large-font-size '
+    b'has-custom-color-primary" id="section-one">'
+)
+_BODY = b"<p>" + b"The paragraph under the heading has enough words to keep. " * 3 + b"</p>"
+
+
+def test_heading_level_from_long_open_tag():
+    # the level comes from the heading's own open tag however long its
+    # attributes (or an inline tag inside it) make it; <title> stays out
+    pages = [
+        b"<html><body><article>" + tag + b"Section One Heading</h2>" + _BODY
+        + b"</article></body></html>"
+        for tag in (b'<h2 class="x">', _LONG_H2,
+                    b"<h2><span class='" + b"has-inline-color " * 8 + b"'>")
+    ] + [
+        b"<html><head><title>Page title</title></head><body><article>"
+        + b'<h1 class="' + b"entry-title " * 10 + b'">Top Heading</h1>' + _BODY
+        + _LONG_H2.replace(b"h2", b"h3") + b"Third Level</h3>" + _BODY
+        + b"</article></body></html>"
+    ]
+    df = pd.DataFrame({"url": [str(i) for i in range(len(pages))], "html": pages})
+    for mode in ("auto", "off"):
+        md = render_markdown_batch(df, ExtractConfig(ckernels=mode))
+        for i in range(3):
+            assert md["markdown"][i].startswith("## Section One Heading\n\nThe paragraph")
+            assert md["n_headings"][i] == 1
+        assert md["markdown"][3].startswith("# Top Heading\n\nThe paragraph")
+        assert "\n\n### Third Level\n\nThe paragraph" in md["markdown"][3]
+        assert "Page title" not in md["markdown"][3]
+        assert md["n_headings"][3] == 2

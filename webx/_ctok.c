@@ -862,6 +862,10 @@ typedef struct {
     long limit_side_len, default_utf8;
     const uint8_t* join_sep;
     long join_len;
+    /* the markdown lane's run rule (webx/detect.py merge_runs_table
+     * heading_split): no heading rescue, runs split at each
+     * heading<->content change, heading runs exempt from min_span_chars */
+    long heading_split;
 } wxparams;
 
 /* one finalized span; code/text_len are stage 2's (0 until it runs) */
@@ -895,7 +899,7 @@ static long detect_final_doc(const uint8_t* html, long n, const wxparams* p,
     long len;
     int64_t* buf = wx_detect(html, n, p->tag_weight, p->binary_thresh,
                              p->min_block_chars, p->rescue_thresh,
-                             p->rescue_max_chars, &len);
+                             p->heading_split ? 0 : p->rescue_max_chars, &len);
     if (!buf) return -1;
     long k = buf[0];
     long r = buf[1];
@@ -905,26 +909,36 @@ static long detect_final_doc(const uint8_t* html, long n, const wxparams* p,
     const int64_t* col_head = col_tlen + k;
     const int64_t* runs = col_head + k;
     const double* scores = (const double*)(runs + 2 * r);
-    long cap = r < p->max_candidates ? r : p->max_candidates;
+    long runs_max = p->heading_split ? k : r;  /* split runs: <= 1 per block */
+    long cap = runs_max < p->max_candidates ? runs_max : p->max_candidates;
     if (!spanbuf_reserve(sp, cap > 0 ? cap : 0)) { free(buf); return -1; }
     wxspan* f = sp->data + sp->count;
     long m = 0;
-    /* finalize (webx/detect.py _finalize_runs) */
+    /* finalize (webx/detect.py _finalize_runs); under heading_split each
+     * run is cut where the heading flag changes */
     for (long j = 0; j < r && m < p->max_candidates; j++) {
-        long i = runs[j * 2], last = runs[j * 2 + 1];
-        double acc = 0.0;
-        long span_tlen = 0;
-        int head_all = 1;
-        for (long b = i; b <= last; b++) {
-            acc += scores[b] * (double)col_tlen[b];
-            span_tlen += col_tlen[b];
-            head_all = head_all && col_head[b] != 0;
-        }
-        double ws = (double)span_tlen;
-        double sc = acc / (ws > 1.0 ? ws : 1.0);
-        if (sc >= p->box_thresh && span_tlen >= p->min_span_chars) {
-            wxspan s = {col_start[i], col_end[last], i, last, head_all, sc, 0, 0};
-            f[m++] = s;
+        long i = runs[j * 2], run_last = runs[j * 2 + 1];
+        while (i <= run_last && m < p->max_candidates) {
+            long last = i;
+            while (last < run_last && (!p->heading_split ||
+                   (col_head[last + 1] != 0) == (col_head[i] != 0)))
+                last++;
+            double acc = 0.0;
+            long span_tlen = 0;
+            int head_all = 1;
+            for (long b = i; b <= last; b++) {
+                acc += scores[b] * (double)col_tlen[b];
+                span_tlen += col_tlen[b];
+                head_all = head_all && col_head[b] != 0;
+            }
+            double ws = (double)span_tlen;
+            double sc = acc / (ws > 1.0 ? ws : 1.0);
+            if (sc >= p->box_thresh && (span_tlen >= p->min_span_chars ||
+                                        (p->heading_split && head_all))) {
+                wxspan s = {col_start[i], col_end[last], i, last, head_all, sc, 0, 0};
+                f[m++] = s;
+            }
+            i = last + 1;
         }
     }
     /* expand into surrounding whitespace (webx/detect.py expand_spans):
@@ -1508,7 +1522,8 @@ void wx_free_bytes(uint8_t* p) {
  *             <xmp>/<plaintext> open or the document a <pre>/<listing>
  *             open (those decode on the Python path: code 0);
  *   WX_S2     no stage 1: the whole document is one span through
- *             strip_passes + norm_fast (the per-span strip_norm_c);
+ *             strip_passes + norm_fast (ctokenize.strip_norm_spans: a
+ *             batch of spans, each its own document);
  *   WX_ROW    the raw page: the document front (front_utf8), then
  *             WX_S1_S2, then the final row (finish_row). A page that
  *             fails the front, or has a kept span that is not DONE,

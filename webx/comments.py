@@ -19,17 +19,19 @@ same split WITHOUT changing the flagship contract:
   close at the matching tag, not the first one; comment/CDATA and
   script/style/textarea islands hide opens, closes and depth changes
   (lexer precedence).
-* the document goes through the flagship's own front and stage 1
-  (webx/extract.py ``_extract_doc``: normalized, truncated bytes, the
-  EFFECTIVE codec, the same spans). Each surviving span is then
-  PARTITIONED against the regions by byte intersection: a part is a
-  ``Span`` with its parent's score and kind, and all parts of a page
-  decode in one flagship ``_decode_spans`` call — rawkept literal text,
-  ``<pre>``/``<listing>`` whitespace preservation, NFC, all of it.
-  Outside parts join into ``text``, inside parts into
-  ``comment_text``. A span straddling a region boundary contributes
-  to both, split at the boundary — span granularity never leaks chrome
-  into either stream.
+* the batch goes through the flagship's own front and batch stage 1
+  (webx/extract.py ``_doc_front`` per page, then one ``_stage1`` call
+  with the stage-2 fast path: normalized, truncated bytes, the
+  EFFECTIVE codec, the same spans and texts). Each surviving span is
+  then PARTITIONED against the regions by byte intersection: a part is
+  a ``Span`` with its parent's score and kind; a span no region cuts is
+  its own one part and keeps the text stage 1 gave it, and all other
+  parts of the batch decode in one flagship ``_decode_spans`` call —
+  rawkept literal text, ``<pre>``/``<listing>`` whitespace
+  preservation, NFC, all of it. Outside parts join into ``text``,
+  inside parts into ``comment_text``. A span straddling a region
+  boundary contributes to both, split at the boundary — span
+  granularity never leaks chrome into either stream.
 
 FROZEN: nested comment regions coalesce into the outermost range;
 unclosed containers run to EOF; self-closed opens create no region.
@@ -51,7 +53,7 @@ import pandas as pd
 
 from webx.config import ExtractConfig
 from webx.detect import Span
-from webx.extract import _decode_spans, _extract_doc, _hints, lane_columns
+from webx.extract import _decode_spans, _stage1, lane_columns, lane_fronts
 
 COMMENT_TOKENS = frozenset(
     b"comment comments review reviews discussion replies responses".split()
@@ -212,15 +214,18 @@ def comment_regions(html: bytes) -> Tuple[Tuple[int, int], ...]:
 def split_comments_batch(
     pdf: pd.DataFrame, cfg: ExtractConfig, charset_col: "str | None" = None
 ) -> pd.DataFrame:
-    out = {
-        "url": pdf["url"].tolist(), "text": [], "comment_text": [], "n_comment_spans": [],
-    }
-    for raw, hint in zip(pdf["html"].tolist(), _hints(pdf, charset_col)):
-        html, spans, meta, _ = _extract_doc(raw, hint, cfg)
+    fronts = lane_fronts(pdf, cfg, charset_col)
+    spans, texts = _stage1(fronts, cfg, decode=True)
+    parts: List[List[Span]] = []
+    part_texts: list = []
+    insides = []  # per page: (start, end) of a comment part -> its span's index
+    for (html, _, _), doc, doc_texts in zip(fronts, spans, texts):
         regions = comment_regions(html)
-        parts: List[Span] = []
-        inside = {}  # (start, end) of a comment part -> its span's index
-        for k, s in enumerate(spans):
+        ps: List[Span] = []
+        ts: list = []
+        inside = {}
+        for k, (s, t) in enumerate(zip(doc, doc_texts)):
+            n0 = len(ps)
             seg = s.start
             for rs, re_ in regions:
                 lo = max(rs, s.start)
@@ -228,13 +233,24 @@ def split_comments_batch(
                 if hi <= lo:
                     continue
                 if lo > seg:
-                    parts.append(s._replace(start=seg, end=lo))
-                parts.append(s._replace(start=lo, end=hi))
+                    ps.append(s._replace(start=seg, end=lo))
+                ps.append(s._replace(start=lo, end=hi))
                 inside[(lo, hi)] = k
                 seg = hi
+            if seg == s.start:  # no region cuts it: the span keeps its text
+                ps.append(s)
+                ts.append(t)
+                continue
             if seg < s.end:
-                parts.append(s._replace(start=seg, end=s.end))
-        rows, _, _ = _decode_spans(html, parts, meta["charset"], cfg)
+                ps.append(s._replace(start=seg, end=s.end))
+            ts.extend([None] * (len(ps) - n0))
+        parts.append(ps)
+        part_texts.append(ts)
+        insides.append(inside)
+    out = {
+        "url": pdf["url"].tolist(), "text": [], "comment_text": [], "n_comment_spans": [],
+    }
+    for (rows, _, _), inside in zip(_decode_spans(fronts, parts, part_texts, cfg), insides):
         main = [r["text"] for r in rows if (r["start"], r["end"]) not in inside]
         com = [r for r in rows if (r["start"], r["end"]) in inside]
         out["text"].append(cfg.join_sep.join(main))

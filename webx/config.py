@@ -85,35 +85,3 @@ class ExtractConfig:
         if "passthrough" in d:
             d["passthrough"] = tuple(d["passthrough"])
         return cls(**d)
-
-
-# ---------------------------------------------------------------- registry
-# The model-registry analog (mindocr/models/_registry.py:21-35
-# `@register_model` + by-name creation in create_model): named extractor
-# presets resolvable from config strings, with the reference's
-# unknown-name error contract. The transform-registry analog
-# (transforms_factory.py:43 name→callable dispatch) is
-# webx.convert.CONVERTERS.
-
-PRESETS: dict = {}
-
-
-def register_preset(name: str, cfg: ExtractConfig) -> ExtractConfig:
-    PRESETS[name] = cfg
-    return cfg
-
-
-register_preset("default", ExtractConfig())
-register_preset(
-    "strict",  # high-precision: drop low-confidence and short spans
-    ExtractConfig(box_thresh=0.75, drop_score=0.7, min_span_chars=50),
-)
-register_preset(
-    "recall",  # high-recall: keep marginal blocks, small spans
-    ExtractConfig(binary_thresh=0.4, box_thresh=0.45, drop_score=0.3,
-                  min_span_chars=10),
-)
-register_preset(
-    "crawl",  # production crawl ingest: explicit skew handling on
-    ExtractConfig(repartition=4096, size_gears=True),
-)

@@ -17,9 +17,12 @@ arrays without a copy. ``extract_spans`` runs stage 1 and the stage-2
 fast path over each kept span and hands back flat columns read once —
 span bounds, scores, kinds, first/last block, ``n_blocks`` per
 document, the stage-2 bytes with their offsets and a done code per
-span. ``detect_final`` and ``strip_norm_spans``, the per-document forms
-the other lanes use, go through the same entry, so C holds one
-implementation of each stage.
+span; every HTML lane runs its stage 1 through it, once per batch.
+``strip_norm_spans`` runs the stage-2 fast path over all the spans a
+batch left (each span a document of its own), also in one call. C
+holds one implementation of each stage. ``detect_final`` and
+``strip_norm_c`` are batches of one through the same entry that no lane
+calls; perfbench/spans.py traces them by name.
 
 Build: compiled from source with gcc at import time when the shipped
 ``_ctok.so`` is missing or older than ``_ctok.c`` (each process compiles
@@ -113,6 +116,7 @@ class _Params(ctypes.Structure):
         ("default_utf8", ctypes.c_long),
         ("join_sep", ctypes.c_char_p),
         ("join_len", ctypes.c_long),
+        ("heading_split", ctypes.c_long),
     ]
 
 
@@ -152,7 +156,7 @@ try:
     ]
     _lib.wx_extract_batch.restype = ctypes.c_void_p
     # void* for the arrays and the parameter block: the cheapest
-    # conversions ctypes makes (a batch of one pays them per span)
+    # conversions ctypes makes
     _lib.wx_extract_batch.argtypes = [
         ctypes.c_void_p,                    # docs: c_char_p array
         ctypes.c_void_p,                    # lens: c_long array
@@ -246,7 +250,7 @@ def detect_table(
     views). Returns (start, end, tlen, heading, scores, runs) numpy
     views; runs is (r, 2) (first, last) block indices for
     webx.detect._finalize_runs. The extractor itself runs
-    ``detect_final``, which also finalizes in C."""
+    ``extract_spans``, which also finalizes in C."""
     import numpy as np
 
     out_len = ctypes.c_long()

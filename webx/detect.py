@@ -77,10 +77,16 @@ def merge_runs_table(
     scores: np.ndarray,
     cfg: ExtractConfig,
     link: np.ndarray | None = None,
+    heading_split: bool = False,
 ) -> List[Span]:
     """Merge one document's consecutive candidate blocks into scored
     spans: a list walk finds the (first, last) candidate runs and
     ``_finalize_runs`` scores them.
+
+    ``heading_split`` is the markdown lane's run rule: no heading
+    rescue, and each maximal candidate run splits wherever the heading
+    flag changes, so every heading is a span of its own (the C kernel's
+    ``wxparams.heading_split``).
 
     Heading rescue (FROZEN RULE — the C kernel `wx_detect` and the synth
     oracle arithmetic implement the identical predicate): with
@@ -101,13 +107,13 @@ def merge_runs_table(
     recast over the block table: 1990s table/font newsletters express
     headings as ``<font><b>…</b></font><br>`` whose inline-tag density
     fails binary_thresh while the text itself is real content. Rescue is
-    skipped when ``link`` is None (legacy callers) or
-    ``rescue_max_chars == 0``."""
+    skipped when ``link`` is None (legacy callers),
+    ``rescue_max_chars == 0`` or under ``heading_split``."""
     n = len(tlen)
     if n == 0:
         return []
     cand = (scores >= cfg.binary_thresh) & (tlen >= cfg.min_block_chars)
-    if cfg.rescue_max_chars > 0 and link is not None and n > 1:
+    if cfg.rescue_max_chars > 0 and link is not None and n > 1 and not heading_split:
         resc = (
             ~cand[:-1]
             & cand[1:]
@@ -123,19 +129,20 @@ def merge_runs_table(
     # typical pages have O(10) blocks: a list walk beats numpy's
     # per-call overhead
     cl = cand.tolist()
+    hd = heading.tolist() if heading_split else None
     pairs = []
     i = 0
     while i < n:
         if cl[i]:
             j = i
-            while j + 1 < n and cl[j + 1]:
+            while j + 1 < n and cl[j + 1] and (hd is None or hd[j + 1] == hd[i]):
                 j += 1
             pairs.append((i, j))
             i = j + 1
         else:
             i += 1
 
-    return _finalize_runs(start, end, tlen, heading, scores, pairs, cfg)
+    return _finalize_runs(start, end, tlen, heading, scores, pairs, cfg, heading_split)
 
 
 def _finalize_runs(
@@ -146,11 +153,14 @@ def _finalize_runs(
     scores: np.ndarray,
     pairs,
     cfg: ExtractConfig,
+    heading_split: bool = False,
 ) -> List[Span]:
     """Per-run score + size + kind filter over (first, last) block runs —
     the Python twin of the finalization inside the fused C kernel
     (webx/_ctok.c detect_final_doc); both score a run with the same
-    ``weighted_mean`` fold, so their span scores are bit-identical."""
+    ``weighted_mean`` fold, so their span scores are bit-identical.
+    Under ``heading_split`` a heading run is exempt from
+    ``min_span_chars`` (an ``<h1>`` is naturally short)."""
     sl = scores.tolist()
     tl = tlen.tolist()
     hd = heading.tolist()
@@ -158,8 +168,11 @@ def _finalize_runs(
     for i, last in pairs:
         run = slice(i, last + 1)
         sc = weighted_mean(sl[run], tl[run])
-        if sc >= cfg.box_thresh and sum(tl[run]) >= cfg.min_span_chars:
-            kind = "heading" if all(hd[run]) else "content"
+        head = all(hd[run])
+        if sc >= cfg.box_thresh and (
+            sum(tl[run]) >= cfg.min_span_chars or (heading_split and head)
+        ):
+            kind = "heading" if head else "content"
             spans.append(
                 Span(int(start[i]), int(end[last]), sc, kind, int(i), int(last))
             )

@@ -7,12 +7,18 @@ runs, finalize, expand, validate — the stage-2 fast path over each kept
 span and the final row (the batch = the reference's tensor batch,
 mindocr/data/builder.py:154-161). A page it finishes whole never becomes
 a Python object: its columns are Arrow arrays over the kernel's buffer.
-Every other page takes the per-document front (normalize, truncate,
-sniff, decode), a second batch call and the span decode the kernel left
-to Python, and its rows merge back in input order. Stage boundaries are
-columnar hand-offs inside the same batch — the Spark recast of
-predict_system.py's det → crop → rec → merge loop
+Stage boundaries are columnar hand-offs inside the same batch — the
+Spark recast of predict_system.py's det → crop → rec → merge loop
 (tools/infer/text/predict_system.py:45-117).
+
+Every other page, and every page of the other HTML lanes (detect,
+interleave, comments, markdown, tables), goes through the same three
+batch steps: ``_doc_front`` per document (normalize, truncate, sniff,
+decode), then ONE stage-1 entry for the whole batch (``_stage1``: one
+kernel call, optionally with the stage-2 fast path) and ONE stage-2
+entry for the spans it left (``_decode_spans``: one kernel call over
+all of them). ``ckernels="off"`` runs the Python reference behind the
+same two entries. The flagship's rows merge back in input order.
 
 Also exposes the stages separately (``detect_batch`` / parity with
 save_det_res / save_rec_res debug sinks, tools/infer/text/predict_det.py:190-201).
@@ -109,11 +115,6 @@ def _tokenize_table_py(html: bytes):
 
 
 @lru_cache(maxsize=4)
-def resolve_tokenize_table(mode: str):
-    return _resolve_kernel(mode, _tokenize_table_py, "tokenize_table")
-
-
-@lru_cache(maxsize=4)
 def resolve_strip(mode: str):
     from webx.recognize import strip_markup
 
@@ -121,19 +122,8 @@ def resolve_strip(mode: str):
 
 
 @lru_cache(maxsize=4)
-def resolve_detect_final(mode: str):
-    """The FULLY-fused stage-1 kernel (tokenize + scores + runs +
-    finalize + expand + validate in one C call, every document) or
-    None. No Python twin: None routes to the decomposed reference
-    composition, which computes the same bits."""
-    if mode == "off":
-        return None
-    return _resolve_kernel(mode, None, "detect_final")
-
-
-@lru_cache(maxsize=4)
 def resolve_strip_norm(mode: str):
-    """Fused stage-2 strip + normalize kernel over a document's spans
+    """Fused stage-2 strip + normalize kernel over a batch's spans
     (ck.strip_norm_spans: one wx_extract_batch call, each span a
     document of its own) or None. Only pure-ASCII, entity-free spans
     normalize fully in C (the byte ops commute with any
@@ -149,107 +139,93 @@ def resolve_strip_norm(mode: str):
 def resolve_extract_spans(mode: str):
     """The batch kernel (wx_extract_batch: stage 1 and the stage-2 fast
     path over every document of a batch in one C call) or None. No
-    Python twin: None routes extract_batch to the per-document
-    reference composition, which computes the same bits."""
+    Python twin: None routes ``_stage1`` to the per-document reference
+    composition (``_extract_doc_stage1``), which computes the same
+    bits."""
     if mode == "off":
         return None
     return _resolve_kernel(mode, None, "extract_spans")
 
 
+# No lane calls these three: every stage runs through the batch entry
+# (resolve_extract_spans). They stay because perfbench/spans.py clears
+# each resolver's cache by name.
+@lru_cache(maxsize=4)
+def resolve_tokenize_table(mode: str):
+    return _resolve_kernel(mode, _tokenize_table_py, "tokenize_table")
+
+
+@lru_cache(maxsize=4)
+def resolve_detect_final(mode: str):
+    return None if mode == "off" else _resolve_kernel(mode, None, "detect_final")
+
+
 @lru_cache(maxsize=4)
 def resolve_detect_table(mode: str):
-    """The FUSED stage-1 kernel (tokenize + scores + candidate runs in
-    one C call) or None for the decomposed path. Unlike the other
-    resolvers there is no Python twin — None routes to the reference
-    composition (tokenize_table → block_scores → merge_runs_table)."""
-    if mode == "off":
-        return None
-    fn = _resolve_kernel(mode, None, "detect_table")
-    return fn  # None when the kernel is unavailable in "auto"
+    return None if mode == "off" else _resolve_kernel(mode, None, "detect_table")
 
 
-def _extract_doc_stage1(html: bytes, cfg: ExtractConfig) -> Tuple[int, List[Span]]:
-    """Tokenize + detect one document's front bytes (``_doc_front``).
-    Returns (n_blocks, spans)."""
-    fused = resolve_detect_final(cfg.ckernels)
-    if fused is not None:
-        # one C call: tokenize + scores + runs + finalize + expand +
-        # validate — the whole stage; plain-list span columns
-        _, n_blocks, f_start, f_end, f_first, f_last, f_head, f_sc = fused(
-            html,
-            cfg.tag_weight,
-            cfg.binary_thresh,
-            cfg.min_block_chars,
-            cfg.box_thresh,
-            cfg.min_span_chars,
-            cfg.max_candidates,
-            cfg.expand_ratio,
-            cfg.rescue_thresh,
-            cfg.rescue_max_chars,
-        )
-        spans = [
-            Span(s, e, sc, "heading" if h else "content", fi, la)
-            for s, e, sc, h, fi, la in zip(
-                f_start, f_end, f_sc, f_head, f_first, f_last
-            )
-        ]
-        return n_blocks, spans
-    # columnar block table straight from the tokenizer (the C kernel
-    # fills numpy columns directly; the Python path transposes once)
-    start, end, tlen, link, tags, heading, boiler = resolve_tokenize_table(
-        cfg.ckernels
-    )(html)
+def _extract_doc_stage1(
+    html: bytes, cfg: ExtractConfig, heading_split: bool = False
+) -> Tuple[int, List[Span]]:
+    """Stage 1 of one document's front bytes (``_doc_front``) on the
+    Python reference path — tokenize, block scores, runs, finalize,
+    expand, validate — which ``_stage1`` runs when the C kernel is off
+    or missing; the kernel computes the same bits. ``heading_split`` is
+    markdown's run rule (webx.detect.merge_runs_table). Returns
+    (n_blocks, spans)."""
+    start, end, tlen, link, tags, heading, boiler = _tokenize_table_py(html)
     n_blocks = len(tlen)
     if not n_blocks:
         return 0, []
     scores = block_scores(tlen, link, tags, boiler, cfg)
-    spans = validate_spans(
-        expand_spans(
-            html,
-            merge_runs_table(start, end, tlen, heading, scores, cfg, link=link),
-            cfg.expand_ratio,
-        ),
-        len(html),
-    )
-    return n_blocks, spans
+    runs = merge_runs_table(start, end, tlen, heading, scores, cfg, link=link,
+                            heading_split=heading_split)
+    return n_blocks, validate_spans(expand_spans(html, runs, cfg.expand_ratio), len(html))
 
 
-def _span_texts(html: bytes, bounds: list, charset: str, cfg: ExtractConfig) -> list:
-    """Stage 2 of one document's spans ``bounds`` [(start, end)] → their
-    texts. A span holding an <xmp>/<plaintext> open, or overlapping a
-    <pre>/<listing> region, decodes on the reference Python path. With
-    the C kernel and an ASCII-compatible charset every other span goes
-    through ONE kernel call over the spans' slices (resolve_strip_norm);
-    otherwise ``strip`` strips before the Python decode."""
-    kernel = (
-        resolve_strip_norm(cfg.ckernels) if is_ascii_compatible(charset) else None
-    )
+def _span_texts(docs: list, cfg: ExtractConfig) -> list:
+    """Stage 2 of a batch's spans: ``docs`` holds per document (html,
+    [(start, end)], charset) → per document the spans' texts. A span
+    holding an <xmp>/<plaintext> open, or overlapping a <pre>/<listing>
+    region, decodes on the reference Python path. With the C kernel,
+    every other span of an ASCII-compatible page goes through ONE
+    kernel call for the whole batch (resolve_strip_norm); otherwise
+    ``strip`` strips before the Python decode."""
+    kernel = resolve_strip_norm(cfg.ckernels)
     strip = resolve_strip(cfg.ckernels)
-    # <pre>/<listing> content ranges, once per document (cheap probe
-    # inside): spans overlapping one preserve its whitespace
-    preserved = pre_regions(html)
-    texts: list = [None] * len(bounds)
-    fast = []
-    for i, (start, end) in enumerate(bounds):
-        raw = html[start:end]
-        if has_rawkept(raw):
-            # <xmp>/<plaintext> region inside the span (1996-era rare):
-            # literal-text decode on the reference Python path
-            texts[i] = decode_span_rawkept(raw, charset)
-        elif preserved and any(rs < end and re_ > start for rs, re_ in preserved):
-            texts[i] = decode_span_pre(raw, charset, start, preserved, strip)
-        elif kernel is None:
-            texts[i] = decode_span(raw, charset, strip)
-        else:
-            fast.append((i, raw))
+    out, fast = [], []
+    for html, bounds, charset in docs:
+        texts: list = [None] * len(bounds)
+        out.append(texts)
+        if not bounds:
+            continue
+        c_ok = kernel is not None and is_ascii_compatible(charset)
+        # <pre>/<listing> content ranges, once per document (cheap probe
+        # inside): spans overlapping one preserve its whitespace
+        preserved = pre_regions(html)
+        for i, (start, end) in enumerate(bounds):
+            raw = html[start:end]
+            if has_rawkept(raw):
+                # <xmp>/<plaintext> region inside the span (1996-era rare):
+                # literal-text decode on the reference Python path
+                texts[i] = decode_span_rawkept(raw, charset)
+            elif preserved and any(rs < end and re_ > start for rs, re_ in preserved):
+                texts[i] = decode_span_pre(raw, charset, start, preserved, strip)
+            elif c_ok:
+                fast.append((texts, i, charset, raw))
+            else:
+                texts[i] = decode_span(raw, charset, strip)
     if fast:
-        for (i, _), (out, done) in zip(fast, kernel([raw for _, raw in fast])):
-            # done: out IS the normalized text (pure ASCII under an
+        for (texts, i, charset, _), (o, done) in zip(
+            fast, kernel([raw for _, _, _, raw in fast])
+        ):
+            # done: o IS the normalized text (pure ASCII under an
             # ASCII-compatible charset — also x-user-defined, which has
-            # no stdlib codec); else out is the stripped bytes — finish
-            # on the reference Python path
-            texts[i] = out.decode("ascii") if done else decode_stripped(out, charset)
-    return texts
+            # no stdlib codec); else o is the stripped bytes — finish on
+            # the reference Python path
+            texts[i] = o.decode("ascii") if done else decode_stripped(o, charset)
+    return out
 
 
 def _add_row(rows: List[dict], start, end, score, kind, text, cfg) -> None:
@@ -271,21 +247,36 @@ def _fold(rows: List[dict], cfg: ExtractConfig) -> Tuple[List[dict], str, float]
 
 
 def _decode_spans(
-    html: bytes, spans: List[Span], charset: str, cfg: ExtractConfig
-) -> Tuple[List[dict], str, float]:
-    """Stage 2 over one document's surviving spans (``_span_texts``).
+    fronts: list, spans: list, texts: list, cfg: ExtractConfig
+) -> List[Tuple[List[dict], str, float]]:
+    """Stage 2 of a batch, the one every HTML lane calls: per document
+    (``fronts[d]`` from ``_doc_front``), the spans ``spans[d]`` with
+    score >= drop_score (predict_system.py:92-100) become rows. A span
+    whose text stage 1 already finished (``texts[d][j]``, see
+    ``_stage1``) keeps it; the rest decode through ONE ``_span_texts``
+    call for the whole batch. Returns one (span_rows, joined_text, conf)
+    per document."""
+    drop = cfg.drop_score
+    kept = [
+        [(s, t) for s, t in zip(doc, doc_texts) if s.score >= drop]
+        for doc, doc_texts in zip(spans, texts)
+    ]
+    left = _span_texts([
+        (html, [(s.start, s.end) for s, t in doc if t is None], meta["charset"])
+        for (html, meta, _), doc in zip(fronts, kept)
+    ], cfg)
+    res = []
+    for doc, doc_left in zip(kept, left):
+        doc_left = iter(doc_left)
+        rows: List[dict] = []
+        for s, t in doc:
+            _add_row(rows, s.start, s.end, s.score, s.kind,
+                     next(doc_left) if t is None else t, cfg)
+        res.append(_fold(rows, cfg))
+    return res
 
-    Returns (span_rows, joined_text, conf)."""
-    # drop_score filter (predict_system.py:92-100)
-    kept = [s for s in spans if s.score >= cfg.drop_score]
-    texts = _span_texts(html, [(s.start, s.end) for s in kept], charset, cfg)
-    rows: List[dict] = []
-    for s, text in zip(kept, texts):
-        _add_row(rows, s.start, s.end, s.score, s.kind, text, cfg)
-    return _fold(rows, cfg)
 
-
-def _kernel_params(cfg: ExtractConfig):
+def _kernel_params(cfg: ExtractConfig, heading_split: bool = False):
     from webx.ctokenize import params
 
     sep = cfg.join_sep.encode("utf-8")
@@ -294,57 +285,71 @@ def _kernel_params(cfg: ExtractConfig):
         cfg.box_thresh, cfg.min_span_chars, cfg.max_candidates,
         cfg.expand_ratio, cfg.rescue_thresh, cfg.rescue_max_chars,
         cfg.drop_score, cfg.limit_side_len, cfg.default_charset == "utf-8",
-        sep, len(sep),
+        sep, len(sep), heading_split,
     )
 
 
-def _decode_batch(fronts: list, kernel, cfg: ExtractConfig) -> list:
-    """Stage 1 and stage 2 over every document front of a batch: ONE
-    kernel call (ck.extract_spans) runs stage 1 for all of them and the
-    stage-2 fast path over each kept span of an ASCII-compatible page.
-    The spans it leaves (a <pre> page's, an <xmp> span, a page whose
-    charset is not ASCII-compatible) take ``_span_texts``; the
-    drop_score filter, NFC and the conf fold are ``_decode_spans``'s.
-    Fills each front's ``meta["n_blocks"]``; returns one
-    ``(rows, joined, conf)`` per document."""
+def _stage1(
+    fronts: list, cfg: ExtractConfig, decode: bool = False, heading_split: bool = False
+) -> Tuple[List[List[Span]], list]:
+    """Stage 1 of a batch, the one every HTML lane calls: over each
+    document front (``_doc_front``'s (html, meta, status)) → (spans,
+    texts), one list per document, and each front's ``meta["n_blocks"]``
+    filled. With the C kernel it is ONE ck.extract_spans call; under
+    ``decode`` an ASCII-compatible page also runs the stage-2 fast path
+    over its kept spans in that call, and ``texts[d][j]`` is span j's
+    final text, or None where stage 2 is left to ``_decode_spans``.
+    Without the kernel each front runs the reference
+    ``_extract_doc_stage1`` and every text is None. ``heading_split``
+    is markdown's run rule (webx.detect.merge_runs_table)."""
+    spans: List[List[Span]] = []
+    texts: list = []
+    kernel = resolve_extract_spans(cfg.ckernels)
+    if kernel is None:
+        for html, meta, _ in fronts:
+            meta["n_blocks"], doc = _extract_doc_stage1(html, cfg, heading_split)
+            spans.append(doc)
+            texts.append([None] * len(doc))
+        return spans, texts
     from webx.ctokenize import DONE, S1, S1_S2, STRIPPED
 
     b = kernel(
         [html for html, _, _ in fronts],
         bytes(
-            S1_S2 if is_ascii_compatible(meta["charset"]) else S1
+            S1_S2 if decode and is_ascii_compatible(meta["charset"]) else S1
             for _, meta, _ in fronts
         ),
-        _kernel_params(cfg),
+        _kernel_params(cfg, heading_split),
     )
-    start, end, head, code, score, out = (
-        b.start, b.end, b.head, b.code, b.score, b.text
+    start, end, first, last, head, code, score, out = (
+        b.start, b.end, b.first, b.last, b.head, b.code, b.score, b.text
     )
-    drop = cfg.drop_score
-    res = []
-    for (html, meta, _), n_blocks, j0, j1 in zip(
+    for (_, meta, _), n_blocks, j0, j1 in zip(
         fronts, b.n_blocks, b.span_off, b.span_off[1:]
     ):
         meta["n_blocks"] = n_blocks
         charset = meta["charset"]
-        kept = [j for j in range(j0, j1) if score[j] >= drop]
-        left = [j for j in kept if code[j] != DONE and code[j] != STRIPPED]
-        texts = dict(zip(left, _span_texts(
-            html, [(start[j], end[j]) for j in left], charset, cfg
-        ))) if left else {}
-        rows: List[dict] = []
-        for j in kept:
-            c = code[j]
-            if c == DONE:
-                text = out[j]
-            elif c == STRIPPED:
-                text = decode_stripped(out[j], charset)
-            else:
-                text = texts[j]
-            _add_row(rows, start[j], end[j], score[j],
-                     "heading" if head[j] else "content", text, cfg)
-        res.append(_fold(rows, cfg))
-    return res
+        spans.append([
+            Span(start[j], end[j], score[j], "heading" if head[j] else "content",
+                 first[j], last[j])
+            for j in range(j0, j1)
+        ])
+        texts.append([
+            out[j] if code[j] == DONE
+            else decode_stripped(out[j], charset) if code[j] == STRIPPED
+            else None
+            for j in range(j0, j1)
+        ])
+    return spans, texts
+
+
+def _decode_batch(fronts: list, cfg: ExtractConfig, heading_split: bool = False) -> list:
+    """Both stages over every document front of a batch: ``_stage1``
+    with the stage-2 fast path, then ``_decode_spans`` for what it left
+    — a constant number of kernel calls per batch. Returns one
+    ``(rows, joined, conf)`` per document."""
+    spans, texts = _stage1(fronts, cfg, True, heading_split)
+    return _decode_spans(fronts, spans, texts, cfg)
 
 
 def _doc_front(raw, hint, cfg: ExtractConfig) -> Tuple[bytes, dict, str]:
@@ -382,17 +387,18 @@ def _doc_front(raw, hint, cfg: ExtractConfig) -> Tuple[bytes, dict, str]:
     return html, meta, cs_status
 
 
-def _extract_doc(raw, hint, cfg: ExtractConfig) -> Tuple[bytes, List[Span], dict, str]:
-    """The front, then stage 1 → (html, spans, meta, charset status)."""
-    html, meta, cs_status = _doc_front(raw, hint, cfg)
-    meta["n_blocks"], spans = _extract_doc_stage1(html, cfg)
-    return html, spans, meta, cs_status
-
-
 def _hints(pdf: pd.DataFrame, charset_col: "str | None"):
     if charset_col and charset_col in pdf.columns:
         return pdf[charset_col].tolist()
     return [None] * len(pdf)
+
+
+def lane_fronts(pdf: pd.DataFrame, cfg: ExtractConfig, charset_col: "str | None" = None) -> list:
+    """``_doc_front`` of every page of a lane's pandas batch."""
+    return [
+        _doc_front(raw, hint, cfg)
+        for raw, hint in zip(pdf["html"].tolist(), _hints(pdf, charset_col))
+    ]
 
 
 def lane_columns(pages, charset_col: "str | None"):
@@ -407,19 +413,9 @@ def lane_columns(pages, charset_col: "str | None"):
 def _extract_docs(raws: list, hints: list, cfg: ExtractConfig):
     """Both stages over a batch's documents → (fronts, decoded): per
     document ``_doc_front``'s (html, meta, charset status) and
-    ``(rows, joined, conf)``. With the C kernel that is one
-    ``_decode_batch``; without it, the per-document reference path."""
-    kernel = resolve_extract_spans(cfg.ckernels)
-    if kernel is not None:
-        fronts = [_doc_front(raw, hint, cfg) for raw, hint in zip(raws, hints)]
-        return fronts, _decode_batch(fronts, kernel, cfg)
-    fronts, decoded = [], []
-    for raw, hint in zip(raws, hints):
-        html, spans, meta, cs_status = _extract_doc(raw, hint, cfg)
-        fronts.append((html, meta, cs_status))
-        decoded.append(_decode_spans(html, spans, meta["charset"], cfg))
-    return fronts, decoded
-
+    ``_decode_batch``'s ``(rows, joined, conf)``."""
+    fronts = [_doc_front(raw, hint, cfg) for raw, hint in zip(raws, hints)]
+    return fronts, _decode_batch(fronts, cfg)
 
 # the computed output columns, in extracted_schema order after url
 _OUT = ("text", "spans", "conf", "status", "meta")
@@ -530,9 +526,10 @@ def _extract_arrays(html: pa.Array, hints: "pa.Array | None", cfg: ExtractConfig
     and the final row of every page whose result it can produce whole:
     a non-NULL, unhinted, untruncated page that the sniffer's fast paths
     call utf-8, valid utf-8, every kept span finished in C. Its columns
-    are Arrow arrays over the kernel's buffer. Every other page takes
-    the per-document path (``_extract_docs``), and its rows go back in
-    input order with one ``take``."""
+    are Arrow arrays over the kernel's buffer. The other pages take the
+    lanes' batch path (``_extract_docs``: the Python front, then
+    ``_decode_batch``), and their rows go back in input order with one
+    ``take``."""
     n = len(html)
     fast = None
     if resolve_extract_spans(cfg.ckernels) is not None and n:
@@ -640,26 +637,8 @@ def make_extract_fn(
 def detect_batch(pdf: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
     """Stage-1-only batch op → (url, spans[start,end,score,kind], meta);
     ``meta`` equals extract_batch's for the same row."""
-    fronts = [_doc_front(raw, None, cfg) for raw in pdf["html"].tolist()]
-    kernel = resolve_extract_spans(cfg.ckernels)
-    if kernel is not None:  # stage 1 of every document in one C call
-        from webx.ctokenize import S1
-
-        b = kernel([html for html, _, _ in fronts], bytes([S1]) * len(fronts),
-                   _kernel_params(cfg))
-        for (_, meta, _), n_blocks in zip(fronts, b.n_blocks):
-            meta["n_blocks"] = n_blocks
-        spans = [
-            [Span(b.start[j], b.end[j], b.score[j],
-                  "heading" if b.head[j] else "content", b.first[j], b.last[j])
-             for j in range(j0, j1)]
-            for j0, j1 in zip(b.span_off, b.span_off[1:])
-        ]
-    else:
-        spans = []
-        for html, meta, _ in fronts:
-            meta["n_blocks"], doc_spans = _extract_doc_stage1(html, cfg)
-            spans.append(doc_spans)
+    fronts = lane_fronts(pdf, cfg)
+    spans, _ = _stage1(fronts, cfg)
     return pd.DataFrame({
         "url": pdf["url"].tolist(),
         "spans": [
@@ -710,9 +689,8 @@ def interleave_batch(
     boilerplate — link farms, nav — keep spans separate, so the
     common figure-between-sections layout interleaves exactly)."""
     out = {"url": [], "seq": [], "kind": [], "text": [], "src": [], "alt": []}
-    fronts, decoded = _extract_docs(
-        pdf["html"].tolist(), _hints(pdf, charset_col), cfg
-    )
+    fronts = lane_fronts(pdf, cfg, charset_col)
+    decoded = _decode_batch(fronts, cfg)
     for url, (trunc, meta, _), (rows, _, _) in zip(
         pdf["url"].tolist(), fronts, decoded
     ):

@@ -5,14 +5,22 @@ increasingly keep lightweight STRUCTURE (headings as ``#`` prefixes,
 paragraph breaks as blank lines — what every "HTML to markdown" crawl
 pipeline emits, e.g. the markdown variants of RefinedWeb/FineWeb
 pipelines). This lane reuses the flagship's machinery (the shared
-document front, tokenize → detect → decode; webx/extract.py) and renders
-the surviving spans instead of joining them:
+document front, then one ``_decode_batch`` over the batch: stage 1 and
+stage 2 in a constant number of kernel calls; webx/extract.py) and
+renders the surviving spans instead of joining them:
 
-* heading spans get ``'#' * level + ' '`` — the level sniffed from the
-  opening ``<h1>``-``<h6>`` tag immediately preceding the span in the
-  source bytes (the detector's heading flag carries no level; the spans
-  DO carry byte offsets into the page, so the level is recoverable
-  without re-tokenizing);
+* stage 1 runs with ONE different run rule, ``heading_split``
+  (webx/detect.py merge_runs_table, the kernel's
+  ``wxparams.heading_split``): no heading rescue, and candidate runs
+  BREAK at heading↔content transitions instead of merging across them,
+  so each heading becomes its own span; heading spans are exempt from
+  ``min_span_chars`` (an ``<h1>`` is naturally short), content spans
+  keep the flagship floor;
+* heading spans get ``'#' * level + ' '`` — the level read from the
+  ``<h1>``-``<h6>`` open tag of the heading, the nearest one before the
+  span in the source bytes (the detector's heading flag carries no
+  level; the spans DO carry byte offsets into the page, so the level is
+  recoverable without re-tokenizing);
 * spans join with a blank line (``\\n\\n``), the markdown block
   separator.
 
@@ -34,104 +42,51 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from webx.config import ExtractConfig
-from webx.detect import (
-    Span,
-    block_scores,
-    expand_spans,
-    validate_spans,
-    weighted_mean,
-)
-from webx.extract import (
-    _decode_spans,
-    _doc_front,
-    _hints,
-    lane_columns,
-    resolve_tokenize_table,
-)
+from webx.extract import _decode_batch, lane_columns, lane_fronts
 
-_H_TAG_RE = re.compile(rb"<[hH]([1-6])[^>]*>")
-_LOOKBACK = 80  # bytes: expand_spans only widens into whitespace, so the
-# opening heading tag sits within a few bytes of the span start
+# an open tag of a heading element or of <title>, the level in group 1
+_H_OPEN_RE = re.compile(rb"<(?:[hH]([1-6])|[tT][iI][tT][lL][eE])[\s/>]")
 
 MARKDOWN_SCHEMA = "url string, markdown string, n_headings int, status string"
 
 
-def _heading_level(html: bytes, start: int) -> Optional[int]:
-    """Level of the <h1>-<h6> tag opening the heading span, or None when
-    there is no such tag behind it — which is the <title> block (the
-    tokenizer flags it heading too): that's page METADATA, surfaced by
-    urls.page_metadata, not body content, so the renderer drops it."""
-    window = html[max(0, start - _LOOKBACK) : start]
-    matches = _H_TAG_RE.findall(window)
-    return int(matches[-1]) if matches else None
-
-
-def _structured_spans(html: bytes, cfg: ExtractConfig):
-    """Stage 1 with STRUCTURE kept, over the bytes the shared document
-    front (webx/extract.py ``_doc_front``) hands every HTML lane: the
-    flagship's tokenize/score/threshold arithmetic, with ONE different
-    run rule — candidate runs BREAK at heading↔content transitions
-    instead of merging across them, so each heading becomes its own
-    span. Heading spans are exempt from ``min_span_chars`` (an ``<h1>``
-    is naturally short; a structure-preserving renderer must not drop
-    it), content spans keep the flagship floor."""
-    start, end, tlen, link, tags, heading, boiler = resolve_tokenize_table(
-        cfg.ckernels
-    )(html)
-    n = len(tlen)
-    if n == 0:
-        return []
-    scores = block_scores(tlen, link, tags, boiler, cfg)
-    cand = (scores >= cfg.binary_thresh) & (tlen >= cfg.min_block_chars)
-    sl = scores.tolist()
-    tl = tlen.tolist()
-    spans = []
-    i = 0
-    while i < n:
-        if not cand[i]:
-            i += 1
-            continue
-        j = i
-        while j + 1 < n and cand[j + 1] and heading[j + 1] == heading[i]:
-            j += 1
-        run = slice(i, j + 1)
-        sc = weighted_mean(sl[run], tl[run])
-        span_tlen = sum(tl[run])
-        is_heading = bool(heading[i])
-        if sc >= cfg.box_thresh and (
-            is_heading or span_tlen >= cfg.min_span_chars
-        ):
-            spans.append(
-                Span(
-                    int(start[i]),
-                    int(end[j]),
-                    sc,
-                    "heading" if is_heading else "content",
-                    int(i),
-                    int(j),
-                )
-            )
-        i = j + 1
-    if len(spans) > cfg.max_candidates:
-        spans = spans[: cfg.max_candidates]
-    return validate_spans(
-        expand_spans(html, spans, cfg.expand_ratio), len(html)
-    )
+def _heading_level(
+    html: bytes, start: int, stop: int = 0, above: Optional[int] = None
+) -> Optional[int]:
+    """Level of the <h1>-<h6> tag that opens the heading span at byte
+    ``start``: the nearest heading or <title> open tag before it, however
+    long its attributes (the span starts after that tag and any inline
+    tags inside the heading). None when that tag is <title> (the
+    tokenizer flags its block heading too): that's page METADATA,
+    surfaced by urls.page_metadata, not body content, so the renderer
+    drops it. The walk back stops at ``stop``, the previous heading
+    span's start, whose answer ``above`` holds beyond it — so a page's
+    headings cost one pass over its bytes."""
+    pos = start
+    while True:
+        pos = html.rfind(b"<", stop, pos)
+        if pos < 0:
+            return above
+        m = _H_OPEN_RE.match(html, pos)
+        if m:
+            return int(m.group(1)) if m.group(1) else None
 
 
 def render_markdown_batch(
     pdf: pd.DataFrame, cfg: ExtractConfig, charset_col: "str | None" = None
 ) -> pd.DataFrame:
-    out = {"url": pdf["url"].tolist(), "markdown": [], "n_headings": [], "status": []}
-    for raw, hint in zip(pdf["html"].tolist(), _hints(pdf, charset_col)):
-        html, meta, cs_status = _doc_front(raw, hint, cfg)
-        spans = _structured_spans(html, cfg)
-        rows, _, _ = _decode_spans(html, spans, meta["charset"], cfg)
+    fronts = lane_fronts(pdf, cfg, charset_col)
+    out = {"url": pdf["url"].tolist(), "markdown": [], "n_headings": [],
+           "status": [cs_status for _, _, cs_status in fronts]}
+    for (html, _, _), (rows, _, _) in zip(
+        fronts, _decode_batch(fronts, cfg, heading_split=True)
+    ):
         parts = []
         n_headings = 0
+        lvl, prev = None, 0
         for r in rows:
             if r["kind"] == "heading":
-                lvl = _heading_level(html, r["start"])
+                lvl, prev = _heading_level(html, r["start"], prev, lvl), r["start"]
                 if lvl is None:  # <title> block: metadata, not body
                     continue
                 parts.append("#" * lvl + " " + r["text"])
@@ -140,7 +95,6 @@ def render_markdown_batch(
                 parts.append(r["text"])
         out["markdown"].append("\n\n".join(parts))
         out["n_headings"].append(n_headings)
-        out["status"].append(cs_status)
     return pd.DataFrame(out)
 
 

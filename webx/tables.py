@@ -66,7 +66,7 @@ from typing import Iterable, Iterator, List, Optional, Tuple
 import pandas as pd
 
 from webx.config import ExtractConfig
-from webx.extract import _doc_front, _hints, lane_columns
+from webx.extract import lane_columns, lane_fronts
 from webx.recognize import _COMMENT_RE, _RAWTEXT_RE, decode_span
 
 # quote-aware structural tag (the _BLOCKTAG_RE attr grammar): a quoted
@@ -253,10 +253,9 @@ def tables_batch(
         "url": [], "table_idx": [], "row_idx": [], "col_idx": [],
         "header": [], "cell": [], "caption": [],
     }
-    for url, raw, hint in zip(
-        pdf["url"].tolist(), pdf["html"].tolist(), _hints(pdf, charset_col)
+    for url, (html, meta, _) in zip(
+        pdf["url"].tolist(), lane_fronts(pdf, cfg, charset_col)
     ):
-        html, meta, _ = _doc_front(raw, hint, cfg)
         for t_idx, tab in enumerate(parse_tables(html, meta["charset"])):
             for r_idx, row in enumerate(tab["rows"]):
                 for c_idx, (is_th, cell) in enumerate(row):
