@@ -6055,7 +6055,7 @@ def q_curate_pipeline(spark: SparkSession, sf: str) -> DataFrame:
 
     from webx.curate import cap_per_host, contaminated_ids, pack_sequences
     from webx.dedup import keep_best, minhash_neardup
-    from webx.textstats import quality_filter
+    from webx.textstats import quality_cols
 
     pages = _par(_curate_corpus_pages(spark, sf), spark)
     ext = run_extraction(pages, CFG).select("url", "text")
@@ -6069,16 +6069,19 @@ def q_curate_pipeline(spark: SparkSession, sf: str) -> DataFrame:
         "url",
         "text",
     )
-    qf = quality_filter(ids.select("doc_id", "text"), min_tokens=30)
-    q = ids.join(qf.filter("keep").select("doc_id"), "doc_id")
+    # gate in place: doc_id is not unique (a mirror shares its base's
+    # id), and joining the flags back by it would run the extractor twice
+    q = ids.filter(quality_cols(min_tokens=30)["keep"])
     w = Window.partitionBy("text").orderBy("url")
     survivors = (
         q.withColumn("_rn", F.row_number().over(w)).filter("_rn = 1").drop("_rn")
     )
     # the survivor set feeds four independent downstream branches
     # (signatures, keep-best join, decontam corpus + bench, packing) —
-    # persist the boundary or the extractor re-runs once per branch
-    survivors = survivors.persist()
+    # checkpoint the boundary or the extractor re-runs once per branch;
+    # a checkpoint, unlike persist, also cuts the extractor's lineage out
+    # of every later plan
+    survivors = survivors.localCheckpoint()
     pairs = minhash_neardup(
         survivors.select("doc_id", "text"), threshold=0.6
     ).select("id_a", "id_b")

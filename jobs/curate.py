@@ -5,8 +5,9 @@ RefinedWeb / FineWeb): line cleaning, document quality gates, language
 selection, URL + exact + near-dup + substring dedup, test-set
 decontamination, host caps, optional LM-perplexity gating and sequence
 packing. Each stage is one of the library operators (webx/curate.py,
-webx/dedup.py, webx/textstats.py) — this job only sequences them and
-reports the funnel.
+webx/dedup.py, webx/textstats.py) or, for the row-local gates, the
+column expressions those operators are built from — this job only
+sequences them and reports the funnel.
 
 Usage (cluster):
     spark-submit --py-files webx.zip jobs/curate.py \
@@ -21,9 +22,14 @@ Usage (sandbox smoke):
 
 Stages run in the RefinedWeb order (cheap row-local gates first so the
 shuffling stages see the smallest surviving set); every stage is
-optional via its flag. ``--funnel`` materializes per-stage survivor
-counts (one count action per stage, each on a persisted boundary);
-without it the cascade stays one lazy plan into the final write.
+optional via its flag. The row-local gates (C4 lines, Gopher quality,
+duplicate lines, language) filter the frame in place, and URL and exact
+dedup are windows, so the default cascade reads its input once; only
+the near-dup, substring, decontamination, perplexity and packing stages
+join a per-document result back by doc_id. ``--funnel`` materializes
+per-stage survivor counts (one count action per stage, each on a
+persisted boundary); without it the cascade stays one lazy plan into
+the final write.
 """
 
 from __future__ import annotations
@@ -83,18 +89,6 @@ def main(argv=None) -> int:
 
     from pyspark.sql import SparkSession
 
-    from webx import synth
-    from webx.curate import (
-        c4_clean,
-        cap_per_host,
-        contaminated_ids,
-        lm_perplexity,
-        pack_sequences,
-    )
-    from webx.dedup import keep_list, minhash_neardup, remove_duplicate_spans
-    from webx.textstats import fingerprint, lang_id, quality_filter, repetition_stats
-    from webx.urls import host, normalize_url
-
     # AQE on by default: runtime re-planning (skew-join splitting,
     # post-shuffle coalescing) is the 1000-executor safety net; the
     # explicit salting/bucketing paths remain for the deterministic
@@ -108,6 +102,42 @@ def main(argv=None) -> int:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("WARN")
+
+    t_all = time.time()
+    docs, funnel = cascade(spark, args)
+    docs.write.mode("overwrite").parquet(args.output)
+    n_out = spark.read.parquet(args.output).count()
+    report = {
+        "stages": funnel,
+        "output_rows": n_out,
+        "wall_sec": round(time.time() - t_all, 3),
+        "args": {k: v for k, v in vars(args).items()},
+    }
+    line = json.dumps(report)
+    print(line)
+    if args.report:
+        with open(args.report, "w") as f:
+            f.write(line)
+    return 0
+
+
+def cascade(spark, args) -> tuple:
+    """(docs, funnel): the curated frame, lazy unless ``--funnel``
+    materialized its stages, and the per-stage survivor counts (empty
+    without ``--funnel``)."""
+    from pyspark.sql import Window
+
+    from webx import synth
+    from webx.curate import (
+        c4_cols,
+        cap_per_host,
+        contaminated_ids,
+        lm_perplexity,
+        pack_sequences,
+    )
+    from webx.dedup import keep_list, minhash_neardup, remove_duplicate_spans
+    from webx.textstats import dup_line_frac, fingerprint_col, lang_pred, quality_cols
+    from webx.urls import host, normalize_url
 
     if args.synth:
         # synth documents carry no url column; derive the deterministic
@@ -130,7 +160,6 @@ def main(argv=None) -> int:
         docs = docs.select("doc_id", "url", "text")
 
     funnel: list[dict] = []
-    t_all = time.time()
     prev_persisted = None
 
     def stage(name, df):
@@ -147,54 +176,35 @@ def main(argv=None) -> int:
 
     docs = stage("input", docs)
 
+    # row-local gates filter the frame they gate: joining per-document
+    # flags back by doc_id would scan the input once more per gate
     if not args.no_c4:
-        cleaned = c4_clean(docs)
-        docs = (
-            docs.drop("text")
-            .join(cleaned.filter("keep").select("doc_id", "text"), "doc_id")
-        )
+        c4 = c4_cols()
+        docs = docs.filter(c4["keep"]).withColumn("text", c4["text"])
         docs = stage("c4_clean", docs)
 
     if not args.no_quality:
-        q = quality_filter(docs, min_tokens=args.min_tokens)
-        docs = docs.join(q.filter("keep").select("doc_id"), "doc_id", "left_semi")
+        docs = docs.filter(quality_cols(min_tokens=args.min_tokens)["keep"])
         docs = stage("gopher_quality", docs)
-        rep = repetition_stats(docs)
-        ok = rep.filter(F.col("dup_line_frac") <= args.max_rep_line_frac).select(
-            "doc_id"
-        )
-        docs = docs.join(ok, "doc_id", "left_semi")
+        docs = docs.filter(dup_line_frac() <= args.max_rep_line_frac)
         docs = stage("repetition", docs)
 
     if args.langs:
         keep_langs = [x.strip() for x in args.langs.split(",") if x.strip()]
-        pred = lang_id(docs)
-        docs = docs.join(
-            pred.filter(F.col("pred_lang").isin(keep_langs)).select("doc_id"),
-            "doc_id",
-            "left_semi",
-        )
+        docs = docs.filter(lang_pred(F.col("text")).isin(keep_langs))
         docs = stage("lang_id", docs)
 
-    if not args.no_url_dedup:
-        from pyspark.sql import Window
+    def first_per(df, key):
+        # the lowest-doc_id row of each key value
+        w = Window.partitionBy(key).orderBy("doc_id")
+        rk = F.row_number().over(w)
+        return df.withColumn("_rk", rk).filter("_rk = 1").drop("_rk")
 
-        w = Window.partitionBy(normalize_url(F.col("url"))).orderBy("doc_id")
-        docs = (
-            docs.withColumn("_rk", F.row_number().over(w))
-            .filter("_rk = 1")
-            .drop("_rk")
-        )
-        docs = stage("url_dedup", docs)
+    if not args.no_url_dedup:
+        docs = stage("url_dedup", first_per(docs, normalize_url(F.col("url"))))
 
     if not args.no_exact_dedup:
-        from pyspark.sql import Window
-
-        fp = fingerprint(docs)
-        w = Window.partitionBy("fp").orderBy("doc_id")
-        first = fp.withColumn("_rk", F.row_number().over(w)).filter("_rk = 1")
-        docs = docs.join(first.select("doc_id"), "doc_id", "left_semi")
-        docs = stage("exact_dedup", docs)
+        docs = stage("exact_dedup", first_per(docs, fingerprint_col()))
 
     if args.minhash_threshold is not None:
         pairs = minhash_neardup(docs, threshold=args.minhash_threshold)
@@ -253,21 +263,7 @@ def main(argv=None) -> int:
         ).select("doc_id", "n_tokens", "bin")
         docs = docs.join(packed, "doc_id")
 
-    docs.write.mode("overwrite").parquet(args.output)
-    n_out = spark.read.parquet(args.output).count()
-    report = {
-        "stages": funnel,
-        "output_rows": n_out,
-        "wall_sec": round(time.time() - t_all, 3),
-        "args": {k: v for k, v in vars(args).items()},
-    }
-    line = json.dumps(report)
-    print(line)
-    if args.report:
-        with open(args.report, "w") as f:
-            f.write(line)
-    return 0
-
+    return docs, funnel
 
 if __name__ == "__main__":
     raise SystemExit(main())

@@ -154,10 +154,10 @@ def main(argv=None) -> int:
             if "lang" in pages.columns:
                 page_lang = pages.select("url", "lang")
             elif "text" in pages.columns:
-                from webx.textstats import _lang_pred
+                from webx.textstats import lang_pred
 
                 page_lang = pages.select(
-                    "url", _lang_pred(F.col("text")).alias("lang")
+                    "url", lang_pred(F.col("text")).alias("lang")
                 )
             else:
                 page_lang = pages.select("url", F.lit("und").alias("lang"))

@@ -119,6 +119,60 @@ def test_probe_miss_returns_empty():
     assert comment_regions(b"<p>plain page, nothing at all</p>") == ()
 
 
+def test_probe_matches_case_insensitive_regex():
+    """The lowered-substring probe decides what the case-insensitive
+    bytes alternation it replaced decides, on mixed-case ASCII and on
+    non-ASCII bytes (UTF-8, Latin-1, Turkish dotted/dotless I, the
+    Kelvin sign), which neither folds."""
+    import re
+
+    from webx.comments import _mentions_vocab
+
+    regex = re.compile(rb"comment|review|discussion|replies|responses", re.I)
+    pages = [
+        b"<div class=CoMmEnTs>x</div>",
+        b"<p>REVIEWS</p>",
+        b"<p>Discussion</p>",
+        b"<p>rEpLiEs and RESPONSES</p>",
+        b"<p>plain page</p>",
+        b"",
+        "<p>comm\u0130nt</p>".encode(),  # İ is not I: no word
+        "<p>\u0131review</p>".encode(),
+        "<p>COMMENT\u00e9</p>".encode(),
+        "<p>Revi\u00e9w</p>".encode("latin-1"),
+        "<p>\u212aelvin replie\u017f</p>".encode(),  # K sign, long s
+        "<p>DİSCUSSİON</p>".encode(),
+        b"<p>comme\xc3\xa9nt discuss\xffion</p>",
+        "<p>R\u00c9PONSES reSponSes</p>".encode(),
+        b"\xff\xfe" + "comment".encode("utf-16-le"),
+    ]
+    for html in pages:
+        assert _mentions_vocab(html) == (regex.search(html) is not None), html
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    st.lists(
+        st.one_of(
+            st.sampled_from(
+                [b"comment", b"REVIEW", b"DiScUsSiOn", b"replies", b"ResPonses",
+                 b"comm", b"\xc4\xb0", b"\xe2\x84\xaa", b"<div>", b" "]
+            ),
+            st.binary(max_size=6),
+        ),
+        max_size=12,
+    )
+)
+def test_probe_matches_regex_fuzz(parts):
+    import re
+
+    from webx.comments import _mentions_vocab
+
+    html = b"".join(parts)
+    regex = re.compile(rb"comment|review|discussion|replies|responses", re.I)
+    assert _mentions_vocab(html) == (regex.search(html) is not None)
+
+
 def test_review_vocabulary():
     html = (
         _ARTICLE

@@ -127,3 +127,24 @@ def test_curate_job_dup_profile_gate(spark, tmp_path):
     i = names.index("dup_profile")
     assert counts[i] <= counts[i - 1]
     assert rep["output_rows"] == counts[-1] > 0
+
+
+def test_curate_job_default_cascade_scans_input_twice_at_most(spark, tmp_path):
+    """The default cascade's row-local gates (C4, Gopher quality,
+    repetition) and exact dedup filter the frame they gate instead of
+    joining flags back by doc_id, so the final write's plan scans the
+    input at most twice (a join per gate scanned it 16 times)."""
+    sys.path.insert(0, JOBS_DIR)
+    import curate as CJ
+
+    args = CJ.parse_args(
+        [
+            "--synth", "/root/testdata/sf0.001",
+            "--output", str(tmp_path / "curated"),
+            "--max-per-host", "10",
+        ]
+    )
+    docs, funnel = CJ.cascade(spark, args)
+    assert funnel == []
+    plan = docs._jdf.queryExecution().executedPlan().toString()
+    assert 1 <= plan.count("FileScan") <= 2

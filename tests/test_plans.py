@@ -510,3 +510,37 @@ def test_extract_mixed_production_path_zero_shuffle(spark, tmp_path):
     assert nodes(plan, "MapInPandas") == 1
     read = [l for l in plan.splitlines() if "ReadSchema" in l][0]
     assert "payload" in read and "unused_col" not in read
+
+
+def _sql_executions(spark) -> list:
+    """(execution id, physical-plan description) of every SQL execution
+    the status store holds, once the listener bus has delivered the
+    plans of finished ones."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    it = spark._jsparkSession.sharedState().statusStore().executionsList().iterator()
+    out = []
+    while it.hasNext():
+        e = it.next()
+        out.append((e.executionId(), e.physicalPlanDescription()))
+    return out
+
+
+def test_curate_pipeline_extracts_once_without_cache(spark, queries):
+    """Every Spark execution q_curate_pipeline runs, the eager ones its
+    build starts and its action, holds ONE MapInArrow (the extractor)
+    among their final plans: the quality gate filters in place, so no
+    self-join on doc_id runs the extractor twice. The survivor set is a
+    checkpoint, so the action's plan carries neither a cache scan nor
+    the extractor's lineage."""
+    last = max((i for i, _ in _sql_executions(spark)), default=-1)
+    df = queries["q_curate_pipeline"](spark, SF)
+    df.write.format("noop").mode("overwrite").save()
+    final_trees = [
+        d.split("== Initial Plan ==")[0].split("\n\n")[0]
+        for i, d in _sql_executions(spark)
+        if i > last
+    ]
+    assert sum(t.count("MapInArrow") for t in final_trees) == 1
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryTableScan" not in plan
+    assert "MapInArrow" not in plan

@@ -97,12 +97,48 @@ def test_numpy_long_kernel_matches_python(data, seed):
 
 
 def test_minhash_slots_np():
-    h0 = np.array([12345, X.M64, 0, 2**63], dtype=np.uint64)
-    mat = X.minhash_slots_np(h0, 16)
-    for r, h in enumerate(h0):
-        inner = X.hash_long(int(h))
+    """The slot fold: per segment and slot, the signed min of
+    hash_int(i, hash_long(h)) over the segment's shingle hashes."""
+    h0 = np.array([12345, X.M64, 0, 2**63, 7, 2**63 - 1], dtype=np.uint64)
+    starts = np.array([0, 1, 4], dtype=np.int64)  # [0] [1, 2, 3] [4, 5]
+    sig = X.minhash_slots_np(h0, starts, 16)
+    assert sig.shape == (3, 16) and sig.dtype == np.int64
+    ends = [*starts[1:], len(h0)]
+    for r, (a, b) in enumerate(zip(starts, ends)):
         for i in range(16):
-            assert int(mat[r, i]) == X.hash_int(i, inner)
+            want = min(
+                X.to_signed(X.hash_int(i, X.hash_long(int(h)))) for h in h0[a:b]
+            )
+            assert int(sig[r, i]) == want
+
+
+def test_minhash_kernel_memory_is_per_shingle():
+    """The signature kernel never builds the (shingles × slots) matrix:
+    on 1,000 docs × 300 tokens (298k shingles, whose uint64 matrix alone
+    is 145 MiB) its tracemalloc peak stays under 64 MiB, and the rows it
+    returns equal the scalar reference."""
+    import tracemalloc
+
+    from webx.dedup import _minhash_sigs_np
+
+    rng = np.random.default_rng(7)
+    arrs = [
+        rng.integers(-(2**63), 2**63 - 1, size=300, dtype=np.int64)
+        for _ in range(1000)
+    ]
+    tracemalloc.start()
+    try:
+        sig = _minhash_sigs_np(arrs, 64, 3)
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert sig.shape == (1000, 64)
+    assert peak < 64 * 2**20, f"peak {peak / 2**20:.1f} MiB"
+    for r in (0, 999):
+        shingles = [_fold(arrs[r][j : j + 3].tolist()) for j in range(298)]
+        inner = [X.hash_long(h) for h in shingles]
+        want = [min(X.to_signed(X.hash_int(i, h)) for h in inner) for i in range(64)]
+        assert sig[r].tolist() == want
 
 
 def _py_token_hashes(text) -> list:

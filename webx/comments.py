@@ -66,10 +66,7 @@ POS_TOKENS = frozenset(
 )
 
 _CONTAINERS = b"div|section|ol|ul|aside|article"
-# cheap per-document probe: any vocabulary word at all
-_PROBE_RE = re.compile(
-    rb"comment|review|discussion|replies|responses", re.I
-)
+_PROBE_WORDS = (b"comment", b"review", b"discussion", b"replies", b"responses")
 _ISLANDS = (
     rb"<!--.*?(?:--\s*>|\Z)|<!\[CDATA\[.*?\]\]>"
     rb"|<(script|style|textarea|iframe|template)(?:\s[^>]*)?>.*?</\1(?:\s[^>]*)?>"
@@ -85,6 +82,15 @@ _NAME_STOP = frozenset(b" \t\r\n\f\v=/\"'")
 _ALNUM = frozenset(
     b"abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789"
 )
+
+
+def _mentions_vocab(html: bytes) -> bool:
+    """Cheap per-document probe: any vocabulary word at all, case-blind.
+    ``bytes.lower`` folds ASCII only, as ``re.I`` does for a bytes
+    pattern, so five substring scans of the lowered page decide what one
+    case-insensitive alternation search would, several times faster."""
+    low = html.lower()
+    return any(w in low for w in _PROBE_WORDS)
 
 
 def _hits_comment_vocab(attrs: bytes) -> bool:
@@ -164,7 +170,7 @@ def comment_regions(html: bytes) -> Tuple[Tuple[int, int], ...]:
     """Byte ranges of comment-container CONTENT (open tag end → matching
     close tag start), depth-tracked per container name, island-aware,
     nested regions coalesced into the outermost."""
-    if _PROBE_RE.search(html) is None:
+    if not _mentions_vocab(html):
         return ()
     out: List[Tuple[int, int]] = []
     pos = 0

@@ -449,25 +449,15 @@ def lm_perplexity(
     )
 
 
-def c4_clean(
-    docs: DataFrame,
+def c4_cols(
     text_col: str = "text",
     min_words_per_line: int = 5,
     min_lines: int = 3,
-) -> DataFrame:
-    """The C4 cleaning rules (Raffel et al. 2020 §2.2) as one pure-codegen
-    transform: keep only lines that end in a terminal punctuation mark
-    (. ! ? ") AND contain at least ``min_words_per_line`` words; flag the
-    page for removal when fewer than ``min_lines`` lines survive, or the
-    page contains '{' (code) or the phrase 'lorem ipsum' (placeholder
-    boilerplate). Returns (doc_id, text, n_lines, n_kept, keep) with
-    ``text`` rebuilt from the surviving lines in original order.
-
-    No shuffle, no Python: split → list filter → rejoin, one row in, one
-    row out — the shape that streams at any corpus size. (C4's remaining
-    rule, corpus-wide three-sentence-span dedup, is the separate
-    ``paragraph_dedup`` operator — it is the only rule needing a
-    shuffle.)"""
+) -> dict:
+    """The C4 cleaning rules as named column expressions (text, n_lines,
+    n_kept, keep): ``c4_clean`` selects them, and a cascade cleans its
+    own frame in place with ``docs.filter(c["keep"]).withColumn("text",
+    c["text"])``; ``keep`` reads the uncleaned text, so filter first."""
     lines = F.transform(
         F.split(F.coalesce(F.col(text_col), F.lit("")), "\n"), F.trim
     )
@@ -482,13 +472,31 @@ def c4_clean(
         & ~low.contains("lorem ipsum")
         & ~low.contains("{")
     )
-    return docs.select(
-        "doc_id",
-        F.array_join(kept, "\n").alias("text"),
-        F.size(lines).alias("n_lines"),
-        n_kept.alias("n_kept"),
-        keep.alias("keep"),
-    )
+    return {
+        "text": F.array_join(kept, "\n"),
+        "n_lines": F.size(lines),
+        "n_kept": n_kept,
+        "keep": keep,
+    }
+
+
+def c4_clean(docs: DataFrame, **rules) -> DataFrame:
+    """The C4 cleaning rules (Raffel et al. 2020 §2.2) as one pure-codegen
+    transform: keep only lines that end in a terminal punctuation mark
+    (. ! ? ") AND contain at least ``min_words_per_line`` words; flag the
+    page for removal when fewer than ``min_lines`` lines survive, or the
+    page contains '{' (code) or the phrase 'lorem ipsum' (placeholder
+    boilerplate). Returns (doc_id, text, n_lines, n_kept, keep) with
+    ``text`` rebuilt from the surviving lines in original order; the
+    rules are ``c4_cols``' keyword arguments.
+
+    No shuffle, no Python: split → list filter → rejoin, one row in, one
+    row out — the shape that streams at any corpus size. (C4's remaining
+    rule, corpus-wide three-sentence-span dedup, is the separate
+    ``paragraph_dedup`` operator — it is the only rule needing a
+    shuffle.)"""
+    cols = c4_cols(**rules)
+    return docs.select("doc_id", *(c.alias(n) for n, c in cols.items()))
 
 
 def chunk_windows(

@@ -154,17 +154,17 @@ def minhash_signatures(
     its token hashes (NULL text folds none).
 
     The token hashes are one narrow JVM projection (``_token_hashes``);
-    the shingle folds and the n_hashes-slot rehash+min fold run as one
-    vectorized uint64 matrix op per Arrow batch inside ``mapInPandas``.
-    The Catalyst ``aggregate`` fold this replaced was the bench's biggest
-    line item (15.4s of 48.5s at sf0.1); the kernel is checked against a
-    plain-Python reference built on the scalar webx.xxh64 functions
-    (tests/test_xxh64.py). One narrow pass, no shuffle."""
+    the shingle folds and the rehash+min fold run as vectorized uint64
+    numpy passes per Arrow batch inside ``mapInPandas``, one pass per
+    slot over the batch's shingles, so a task holds O(shingles) memory
+    (``xxh64.minhash_slots_np``). The Catalyst ``aggregate`` fold this
+    replaced was the bench's biggest line item (15.4s of 48.5s at
+    sf0.1); the kernel is checked against a plain-Python reference built
+    on the scalar webx.xxh64 functions (tests/test_xxh64.py). One narrow
+    pass, no shuffle."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
-
-    from webx import xxh64 as X
 
     # JVM side stays SMALL on purpose: just per-token xxhash64. The big
     # expression trees (window folds, 64-slot rehash) generate huge
@@ -192,18 +192,25 @@ def minhash_signatures(
             if not arrs:
                 yield pd.DataFrame({"doc_id": p["doc_id"][:0], "sig": []})
                 continue
-            h0 = _shingle_hashes_np(arrs, k)
-            counts = np.array(
-                [max(len(a) - k + 1, 1) if len(a) else 1 for a in arrs],
-                dtype=np.int64,
-            )
-            mat = X.minhash_slots_np(h0, n_hashes).view(np.int64)
-            offsets = np.zeros(len(counts), dtype=np.int64)
-            np.cumsum(counts[:-1], out=offsets[1:])
-            sig = np.minimum.reduceat(mat, offsets, axis=0)
+            sig = _minhash_sigs_np(arrs, n_hashes, k)
             yield pd.DataFrame({"doc_id": p["doc_id"], "sig": list(sig)})
 
     return src.mapInPandas(fn, schema=schema)
+
+
+def _minhash_sigs_np(arrs, n_hashes: int, k: int):
+    """Per-row int64 token-hash arrays → (len(arrs), n_hashes) int64
+    signatures: the shingle folds, then the slot-at-a-time min fold
+    (``xxh64.minhash_slots_np``). Every row has at least one shingle."""
+    import numpy as np
+
+    from webx import xxh64 as X
+
+    h0 = _shingle_hashes_np(arrs, k)
+    counts = np.array([max(len(a) - k + 1, 1) for a in arrs], dtype=np.int64)
+    starts = np.zeros(len(counts), dtype=np.int64)
+    np.cumsum(counts[:-1], out=starts[1:])
+    return X.minhash_slots_np(h0, starts, n_hashes)
 
 
 def _shingle_hashes_np(arrs, k: int):
@@ -429,18 +436,18 @@ def minhash_neardup(
     shingle_k: int = 3,
     threshold: float = 0.7,
     max_bucket: int | None = DEFAULT_MAX_BUCKET,
-    persist_candidates: bool = True,
 ) -> DataFrame:
     """Full MinHash→LSH→verify pipeline → (id_a, id_b, jaccard).
 
     The candidate-pair set is tiny relative to the corpus but its lineage
     contains the whole signature+banding computation; the verify stage
-    references it twice (id prefilter + join input), so by default it is
+    references it twice (id prefilter + join input), so it is
     materialized once via ``localCheckpoint(eager=False)``. That call is
     not lazy under AQE: building the checkpoint's RDD finalizes the
-    adaptive plan, which runs every upstream shuffle stage right away (in
-    the curate funnel: 6 Spark jobs, which also materialize the funnel's
-    persisted input); only the last stage waits for the first action.
+    adaptive plan, which runs every upstream shuffle stage right away;
+    only the last stage waits for the first action. (Feeding ``docs``
+    from a checkpoint of its own keeps those stages off ``docs``'
+    lineage: the curate funnel checkpoints its survivor set first.)
     Blocks are released by the ContextCleaner when the DataFrame is
     garbage-collected, so long-lived drivers running many queries don't
     accumulate pinned cache. (On a real cluster where executor loss must
@@ -449,8 +456,7 @@ def minhash_neardup(
     rows_per_band = n_hashes // bands
     sigs = minhash_signatures(docs, n_hashes, shingle_k)
     pairs = lsh_candidate_pairs(sigs, bands, rows_per_band, max_bucket)
-    if persist_candidates:
-        pairs = pairs.localCheckpoint(eager=False)
+    pairs = pairs.localCheckpoint(eager=False)
     return jaccard_verify(docs, pairs, shingle_k, threshold)
 
 

@@ -70,10 +70,11 @@ def quality_score(docs: DataFrame) -> DataFrame:
     )
 
 
-def _lang_pred(text_col) -> "F.Column":
+def lang_pred(text_col) -> "F.Column":
     """Stopword-count language prediction over one text expression —
-    shared by the document- and paragraph-level operators so the scoring
-    can never drift between them."""
+    shared by the document- and paragraph-level operators and by
+    in-place language gates (``docs.filter(lang_pred(...).isin(...))``)
+    so the scoring can never drift between them."""
     toks = F.transform(
         F.split(F.trim(F.coalesce(text_col, F.lit(""))), WS_SPLIT),
         lambda w: F.lower(w),
@@ -100,7 +101,7 @@ def lang_id(docs: DataFrame) -> DataFrame:
     pure column expressions, no shuffle, no Python — is what matters at
     scale.)
     """
-    return docs.select("doc_id", _lang_pred(F.col("text")).alias("pred_lang"))
+    return docs.select("doc_id", lang_pred(F.col("text")).alias("pred_lang"))
 
 
 def lang_id_paragraphs(docs: DataFrame, col: str = "text") -> DataFrame:
@@ -116,26 +117,23 @@ def lang_id_paragraphs(docs: DataFrame, col: str = "text") -> DataFrame:
         ).alias("para_idx", "para"),
     )
     return paras.select(
-        "doc_id", "para_idx", _lang_pred(F.col("para")).alias("pred_lang")
+        "doc_id", "para_idx", lang_pred(F.col("para")).alias("pred_lang")
     )
 
 
-def quality_filter(
-    docs: DataFrame,
+def quality_cols(
     min_tokens: int = 50,
     max_tokens: int = 100_000,
     min_mean_word_len: float = 3.0,
     max_mean_word_len: float = 10.0,
     max_symbol_ratio: float = 0.1,
     min_stopword_frac: float = 0.03,
-) -> DataFrame:
-    """Gopher-style document quality gate (the published web-corpus
-    heuristics: token-count bounds, mean-word-length band, symbol-to-token
-    ratio, stopword fraction) as pure column expressions → one row per doc
-    with each flag plus the final ``keep``.
-
-    Integer/ratio formulas are frozen for the SQL oracle; thresholds are
-    explicit arguments so goldens reproduce from config alone."""
+) -> dict:
+    """The Gopher quality gate over ``text`` as named column expressions
+    (n_tokens, mean_word_len, ok_len, ok_word, ok_sym, ok_stop, keep):
+    ``quality_filter`` selects them, and a cascade gates its own frame
+    in place with ``docs.filter(quality_cols(...)["keep"])`` instead of
+    joining the flags back by doc_id."""
     toks = _tokens()
     n_tokens = F.size(toks)
     sum_word_len = F.aggregate(
@@ -151,16 +149,46 @@ def quality_filter(
     ok_word = (mean_word_len >= min_mean_word_len) & (mean_word_len <= max_mean_word_len)
     ok_sym = (n_symbols / F.greatest(n_tokens, F.lit(1))) <= max_symbol_ratio
     ok_stop = (n_stop / F.greatest(n_tokens, F.lit(1))) >= min_stopword_frac
-    return docs.select(
-        "doc_id",
-        n_tokens.alias("n_tokens"),
-        mean_word_len.alias("mean_word_len"),
-        ok_len.alias("ok_len"),
-        ok_word.alias("ok_word"),
-        ok_sym.alias("ok_sym"),
-        ok_stop.alias("ok_stop"),
-        (ok_len & ok_word & ok_sym & ok_stop).alias("keep"),
+    return {
+        "n_tokens": n_tokens,
+        "mean_word_len": mean_word_len,
+        "ok_len": ok_len,
+        "ok_word": ok_word,
+        "ok_sym": ok_sym,
+        "ok_stop": ok_stop,
+        "keep": ok_len & ok_word & ok_sym & ok_stop,
+    }
+
+
+def quality_filter(docs: DataFrame, **thresholds) -> DataFrame:
+    """Gopher-style document quality gate (the published web-corpus
+    heuristics: token-count bounds, mean-word-length band, symbol-to-token
+    ratio, stopword fraction) as pure column expressions → one row per doc
+    with each flag plus the final ``keep``.
+
+    Integer/ratio formulas are frozen for the SQL oracle; the thresholds
+    are ``quality_cols``' keyword arguments, explicit so goldens
+    reproduce from config alone."""
+    cols = quality_cols(**thresholds)
+    return docs.select("doc_id", *(c.alias(n) for n, c in cols.items()))
+
+
+def _lines():
+    # the non-blank trimmed lines of ``text``
+    return F.filter(
+        F.transform(F.split(F.coalesce(F.col("text"), F.lit("")), "\n"), F.trim),
+        lambda ln: ln != "",
     )
+
+
+def dup_line_frac():
+    """Duplicate-line fraction of ``text`` (1 - distinct / non-blank
+    lines; 0 without lines): row-local, so a gate on it filters in place."""
+    lines = _lines()
+    n_lines = F.size(lines)
+    return F.when(
+        n_lines > 0, 1.0 - F.size(F.array_distinct(lines)) / n_lines.cast("double")
+    ).otherwise(0.0)
 
 
 def repetition_stats(docs: DataFrame) -> DataFrame:
@@ -170,19 +198,14 @@ def repetition_stats(docs: DataFrame) -> DataFrame:
 
     The heavy-hitter count is RELATIONAL, not a per-row O(n²) lambda:
     explode bigrams → two-phase count per (doc, bigram) → max per doc →
-    join back. All codegen; scales to arbitrarily long documents."""
-    lines = F.filter(
-        F.transform(F.split(F.coalesce(F.col("text"), F.lit("")), "\n"), F.trim),
-        lambda ln: ln != "",
-    )
-    n_lines = F.size(lines)
-    n_distinct = F.size(F.array_distinct(lines))
+    join back. All codegen; scales to arbitrarily long documents. The
+    duplicate-line fraction is row-local (``dup_line_frac``)."""
     toks = _tokens()
     n = F.size(toks)
     stats = docs.select(
         "doc_id",
-        n_lines.alias("n_lines"),
-        n_distinct.alias("n_distinct"),
+        F.size(_lines()).alias("n_lines"),
+        dup_line_frac().alias("dup_line_frac"),
         n.alias("n_toks"),
     )
     bigrams = F.when(
@@ -202,13 +225,8 @@ def repetition_stats(docs: DataFrame) -> DataFrame:
     j = stats.join(top, "doc_id", "left")
     return j.select(
         "doc_id",
-        F.col("n_lines").cast("int").alias("n_lines"),
-        (
-            F.when(
-                F.col("n_lines") > 0,
-                1.0 - F.col("n_distinct") / F.col("n_lines").cast("double"),
-            ).otherwise(0.0)
-        ).alias("dup_line_frac"),
+        "n_lines",
+        "dup_line_frac",
         (
             F.when(
                 F.col("n_toks") >= 2,
@@ -218,11 +236,17 @@ def repetition_stats(docs: DataFrame) -> DataFrame:
     )
 
 
-def fingerprint(docs: DataFrame) -> DataFrame:
-    """(doc_id, fp) — md5 of the lower-cased whitespace-normalized text;
-    the exact-dedup key and cross-run document identity."""
+def fingerprint_col():
+    """md5 of the lower-cased whitespace-normalized ``text``: the
+    exact-dedup key, usable in place (``Window.partitionBy``)."""
     norm = F.trim(F.regexp_replace(F.lower(F.col("text")), WS_SPLIT, " "))
-    return docs.select("doc_id", F.md5(F.encode(norm, "UTF-8")).alias("fp"))
+    return F.md5(F.encode(norm, "UTF-8"))
+
+
+def fingerprint(docs: DataFrame) -> DataFrame:
+    """(doc_id, fp) — ``fingerprint_col``; the exact-dedup key and
+    cross-run document identity."""
+    return docs.select("doc_id", fingerprint_col().alias("fp"))
 
 
 def tfidf_topk(docs: DataFrame, k: int = 5) -> DataFrame:

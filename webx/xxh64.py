@@ -156,12 +156,20 @@ def hash_int_np(v: np.ndarray, seed) -> np.ndarray:
         return _np_fmix(h)
 
 
-def minhash_slots_np(h0: np.ndarray, n_hashes: int) -> np.ndarray:
-    """Per-slot rehash used by the MinHash signature: Spark's
-    ``xxhash64(h, i)`` = hash_int(i, seed=hash_long(h, 42)) for slot
-    i in 0..n_hashes-1 (i is IntegerType: 4-byte path). ``h0`` is a flat
-    uint64 array of shingle hashes; returns an (len(h0), n_hashes)
-    uint64 matrix."""
+def minhash_slots_np(h0: np.ndarray, starts: np.ndarray, n_hashes: int) -> np.ndarray:
+    """MinHash signatures by a per-slot fold: row r, slot i is the signed
+    min of Spark's ``xxhash64(h, i)`` = hash_int(i, seed=hash_long(h, 42))
+    (i is IntegerType: 4-byte path) over the shingle hashes ``h`` of
+    segment r. ``h0`` is a flat uint64 array of shingle hashes and
+    ``starts`` the first index of each non-empty segment; returns a
+    (len(starts), n_hashes) int64 matrix.
+
+    One slot at a time: hash_long runs once, then each slot is one
+    hash_int pass and one ``np.minimum.reduceat``, so the working set is
+    a few len(h0) vectors, never the (len(h0), n_hashes) matrix."""
     inner = hash_long_np(h0, np.uint64(SPARK_SEED))  # slot-independent
-    slots = np.arange(n_hashes, dtype=np.uint64)
-    return hash_int_np(slots[None, :], inner[:, None])
+    sig = np.empty((len(starts), n_hashes), dtype=np.int64)
+    for i in range(n_hashes):
+        slot = hash_int_np(np.uint64(i), inner).view(np.int64)
+        np.minimum.reduceat(slot, starts, out=sig[:, i])
+    return sig
